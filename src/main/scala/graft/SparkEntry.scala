@@ -262,7 +262,7 @@ object SparkEntry {
     "q_top_customers_per_segment" -> ((s, dir) => {
       val w = Window.partitionBy(col("c_mktsegment"))
         .orderBy(col("c_acctbal").desc, col("c_custkey"))
-      fanOut(t(s, dir, "customer"))
+      t(s, dir, "customer")
         .withColumn("rnk", row_number().over(w).cast("long"))
         .filter(col("rnk") <= 3)
         .select(col("c_mktsegment"), col("rnk"), col("c_custkey"), col("c_name"), col("c_acctbal"))
@@ -1100,7 +1100,7 @@ object SparkEntry {
     // The fused xxhash64-family kernel stays the pure-Spark scale path
     // (WordNgramHashesExpr, pinned by SimHashSpec).
     "dedup_simhash" -> ((s, dir) => {
-      SimHash.nearDupPairsHashed(fanOut(t(s, dir, "documents")), "doc_id",
+      SimHash.nearDupPairsHashed(t(s, dir, "documents"), "doc_id",
         TextFunctions.wordBigramHashes60(col("text")), maxDist = 8)
         .withColumn("hamming", col("hamming").cast("long"))
         .orderBy(col("id_a"), col("id_b"))
@@ -1113,7 +1113,7 @@ object SparkEntry {
     // posting-list join → df-cap → overlap filter (WinnowExpr's fused
     // rolling-hash family stays the pure-Spark scale path, WinnowSpec).
     "dedup_winnow" -> ((s, dir) => {
-      WinnowOverlap.pairsFromFingerprints(fanOut(t(s, dir, "documents")), "doc_id",
+      WinnowOverlap.pairsFromFingerprints(t(s, dir, "documents"), "doc_id",
         TextFunctions.winnowedFingerprints60(col("text"), k = 5, w = 8),
         minShared = 3, maxDocFreq = 50L)
         // this corpus's background similarity puts unrelated pairs at
@@ -1192,7 +1192,7 @@ object SparkEntry {
       // instead would multi-evaluate the kernel per conjunct (see
       // RepetitionGateExpr)
       val st = TextFunctions.repetitionStats(col("text"))
-      fanOut(t(s, dir, "documents"))
+      t(s, dir, "documents")
         .filter(CorpusPipeline.repetitionGate(col("text")))
         .select(col("doc_id"),
           st.getField("word_cnt").cast("long").as("word_cnt"),
@@ -1474,7 +1474,7 @@ object SparkEntry {
     // dedup → split → decontaminate → mixture (minhash stage off so the
     // whole composition stays exactly oracle-expressible)
     "corpus_prepare" -> ((s, dir) => {
-      CorpusPipeline.prepare(fanOut(t(s, dir, "documents")),
+      CorpusPipeline.prepare(t(s, dir, "documents"),
         CorpusPipeline.Config(
           nearDupThreshold = None,
           mixtureRates = Map("src0" -> 1.0, "src1" -> 0.5),
@@ -1709,8 +1709,8 @@ object SparkEntry {
     // 8 hot lines strip at sf0.01 with df cap 2; LineDedupSpec pins the
     // operator on genuinely multi-line fixtures
     "doc_strip_boilerplate" -> ((s, dir) => {
-      val docs = fanOut(t(s, dir, "documents")
-        .select(col("doc_id"), regexp_replace(col("text"), " the ", "\n").as("text")))
+      val docs = t(s, dir, "documents")
+        .select(col("doc_id"), regexp_replace(col("text"), " the ", "\n").as("text"))
       LineDedup.stripBoilerplate(docs, "doc_id", col("text"), maxDocFreq = 2L)
         .orderBy(col("doc_id"))
     }),
@@ -2297,7 +2297,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
         .withColumn("text", expr(htmlInjectSql))
         .withColumn("url", expr(urlInjectSql))
-      CorpusPipeline.prepare(fanOut(docs), CorpusPipeline.Config(
+      CorpusPipeline.prepare(docs, CorpusPipeline.Config(
         stripHtml = true, nfcNormalize = true,
         urlCol = Some("url"), blockedHosts = urlBlocklist,
         nearDupThreshold = None, decontamThreshold = None))
@@ -2317,7 +2317,7 @@ object SparkEntry {
       val standing = docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)
       val incoming = docs.filter(pmod(col("doc_id"), lit(5L)) === 0L)
       val (accepted, _) = CorpusPipeline.prepareIncremental(
-        fanOut(incoming), standing,
+        incoming, standing,
         CorpusPipeline.Config(nearDupThreshold = None, decontamThreshold = None))
       accepted.select(col("doc_id"), col("split")).orderBy(col("doc_id"))
     }),
@@ -2385,24 +2385,20 @@ object SparkEntry {
     // the PRUNED-PROBE side-file path, oracle-checked: same two batches,
     // with batch 1 pre-seeded through the per-batch sink so the gate's one
     // freeze sees a NON-empty corpus, and sideFileMinRows=0 forcing that
-    // freeze to write the prefix-partitioned keys / sigs / banded side
-    // files — batch 2 then gates through the pruned probes:
-    // driver-collected bloom-positive keys and candidate ids pushed as
-    // partition + In filters into the side scans
-    // (CorpusPipeline.FrozenCorpus). The BANDED probe set (batch rows ×
-    // bands bucket values) exceeds the r19 profitability break-even at
-    // fixture scale, so that one stage routes to the cached frame by
-    // design (prunedBandedProfitable); SideFilePruningSpec pins both
-    // routes. Admissions are cadence- and
+    // freeze to write the prefix-partitioned keys / sigs side files —
+    // batch 2 then gates through the pruned probes: driver-collected
+    // bloom-positive keys and candidate ids pushed as partition + In
+    // filters into the side scans (CorpusPipeline.FrozenCorpus); bucket
+    // probes join the cached banded frame. Admissions are cadence- and
     // path-invariant by contract, so the SAME DuckDB replay must
     // hash-match; a pruning bug that dropped or re-admitted anything
     // would mismatch here. Geometry deliberately minimal for a fixture
     // that pays unamortized side-file costs on a tiny corpus: one-batch
-    // refresh window, 4 prefix partitions. numHashes stays at the default
-    // 64 (16 bands of 4): a 32-hash trim was measured at 35 s standalone
-    // vs ~7 s with 64 — width-2 bands square the per-band collision
-    // probability on real-text shingles, and the candidate-pair explosion
-    // in the estimate/verify stages dwarfs the saved hashing.
+    // refresh window. numHashes stays at the default 64 (16 bands of 4):
+    // a 32-hash trim was measured at 35 s standalone vs ~7 s with 64 —
+    // width-2 bands square the per-band collision probability on
+    // real-text shingles, and the candidate-pair explosion in the
+    // estimate/verify stages dwarfs the saved hashing.
     "ingest_frozen_sidefiles" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val cfg = CorpusPipeline.Config(
@@ -2412,8 +2408,7 @@ object SparkEntry {
       val b2 = docs.filter(pmod(col("doc_id"), lit(3L)) =!= 0L)
       graft.streaming.CorpusIngestSink.processBatch(s, tmp, b1, cfg)
       val gate = new graft.streaming.CorpusIngestSink.FrozenGate(
-        tmp, cfg, refreshEvery = 1, sideFiles = true,
-        sideFileMinRows = 0L, sideFilePartitions = 4)
+        tmp, cfg, refreshEvery = 1, sideFileMinRows = 0L)
       try gate.processBatch(b2)
       finally gate.close()
       val out = graft.core.Checkpoints.localize(

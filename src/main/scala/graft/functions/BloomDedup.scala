@@ -29,11 +29,12 @@ import graft.functions.expressions.BloomMightContainExpr
   * candidate, accepting fpp false drops) — the CCNet-scale trade, and
   * being stateless it runs under Structured Streaming unchanged.
   *
-  * 100 TB posture: bits scale with the CORPUS KEY COUNT, not bytes — 1e9
-  * keys at 1% fpp ≈ 1.2 GiB, the practical broadcast ceiling; beyond that,
-  * partition the key space (one filter per key range, probe routes by the
-  * same ranging) or relax fpp. The filter build is one keys-only pass over
-  * the corpus; nothing here ever shuffles corpus rows.
+  * 100 TB posture: the filter is MONOLITHIC and its bits scale with the
+  * CORPUS KEY COUNT, not bytes — about 1.2 bytes per key at 1% fpp (1e9
+  * keys ≈ 1.2 GiB, the practical broadcast ceiling). Sharding the key
+  * space waits for a workload above ~250M keys that can measure it. The
+  * filter build is one keys-only pass over the corpus; nothing here ever
+  * shuffles corpus rows.
   */
 object BloomDedup {
 
@@ -100,83 +101,6 @@ object BloomDedup {
       graft.functions.expressions.BloomMightContainBcastExpr(
         ExpressionUtils.expression(key.cast("long")), filterBcast))
 
-  /** KEY-SPACE-SHARDED filter build: one filter per shard class
-    * `floorMod(key, shards)`, so no single driver/executor object ever
-    * holds the whole corpus's bits (a monolithic filter is ~1.2 GB at the
-    * documented ~1e9-key partition point; each shard here stays at
-    * totalBits / shards). The build routes keys to their shard with an
-    * EXACT partitioner (not hash-of-hash — every reduce task then builds
-    * exactly one shard's filter and holds only its bits) and each key is
-    * inserted into exactly the filter its probe will consult, so probe
-    * semantics match a monolithic filter's: no false negatives, per-shard
-    * fpp as configured. Cost: one keys-only shuffle of 8-byte keys per
-    * build — the same posture as the engine's other keys-only exchanges,
-    * and the price of NOT materializing full-filter zeros on every task
-    * the way a treeAggregate of filter arrays would.
-    *
-    * Null keys are excluded, mirroring `stat.bloomFilter`'s aggregate
-    * (probes are null-propagating; callers coalesce).
-    */
-  def buildShardedLongNonEmpty(df: DataFrame, key: Column, expectedItems: Long,
-                               fpp: Double, shards: Int): Array[BloomFilter] = {
-    require(shards >= 1, "at least one shard")
-    if (shards == 1)
-      return Array(buildLongNonEmpty(df, key, expectedItems, fpp))
-    val perShard = math.max(1L, (expectedItems + shards - 1) / shards)
-    val keyed = df.select(key.cast("long").as("__bloom_key"))
-      .filter(col("__bloom_key").isNotNull)
-    import org.apache.spark.sql.Encoders
-    val routed = keyed.as(Encoders.scalaLong).rdd
-      .map(k => (java.lang.Math.floorMod(k, shards.toLong).toInt, k))
-      .partitionBy(new org.apache.spark.Partitioner {
-        override def numPartitions: Int = shards
-        override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-      })
-    val built = routed.mapPartitionsWithIndex { (shard, it) =>
-      val f = BloomFilter.create(perShard, fpp)
-      it.foreach { case (_, k) => f.putLong(k) }
-      Iterator((shard, f))
-    }.collect()
-    val out = Array.fill(shards)(null: BloomFilter)
-    built.foreach { case (i, f) => out(i) = f }
-    // partitions with no keys still yield a (correctly empty) filter from
-    // the mapPartitions above; this guard is for a missing partition only
-    (0 until shards).foreach(i =>
-      if (out(i) == null) out(i) = BloomFilter.create(perShard, fpp))
-    out
-  }
-
-  /** Broadcast each shard separately — executors fetch (Torrent) and
-    * deserialize only the shards their rows probe. Pair with
-    * [[mightContainSharded]]; unpersist each handle on release.
-    */
-  def broadcastShards(spark: org.apache.spark.sql.SparkSession,
-                      filters: Array[BloomFilter])
-      : Array[org.apache.spark.broadcast.Broadcast[Array[Byte]]] = {
-    val handles = filters.map { f =>
-      val out = new ByteArrayOutputStream()
-      f.writeTo(out)
-      val bytes = out.toByteArray
-      (spark.sparkContext.broadcast(bytes), bytes.length.toLong)
-    }
-    // residency ledger: group = shard-0's broadcast id; sizes let a
-    // harness report resident bytes = Σ touched-shard sizes
-    graft.functions.expressions.ShardedBloomRuntime.registerGroup(
-      handles(0)._1.id, handles.map(_._2))
-    handles.map(_._1)
-  }
-
-  /** Membership probe over the sharded handles — routes by the build's
-    * floorMod, deserializes at most the probed shards per generated-class
-    * instance ([[graft.functions.expressions.BloomMightContainShardedExpr]]).
-    */
-  def mightContainSharded(
-      handles: Array[org.apache.spark.broadcast.Broadcast[Array[Byte]]],
-      key: Column): Column =
-    ExpressionUtils.column(
-      graft.functions.expressions.BloomMightContainShardedExpr(
-        ExpressionUtils.expression(key.cast("long")), handles))
-
   /** EXACT new-key detection: Bloom prefilter + exact anti-join on the
     * candidate sliver only. Output = incoming rows whose `keyCol` does not
     * occur in `corpus` — bit-identical to the plain anti-join, minus the
@@ -190,17 +114,15 @@ object BloomDedup {
     */
   def newKeysExact(incoming: DataFrame, corpus: DataFrame, keyCol: String,
                    filter: => BloomFilter,
-                   filterBcast: Option[org.apache.spark.broadcast.Broadcast[Array[Byte]]] = None,
-                   shardedBcast: Option[Array[org.apache.spark.broadcast.Broadcast[Array[Byte]]]] = None)
+                   filterBcast: Option[org.apache.spark.broadcast.Broadcast[Array[Byte]]] = None)
       : DataFrame = {
     // NULL keys: the probe is null-propagating, so an un-coalesced split
     // would fail BOTH branch predicates and the row would silently vanish.
     // The plain anti-join this must stay bit-identical to KEEPS null-key
     // rows (null never equals any corpus key), so they route to the
     // definite-new branch.
-    val probe = shardedBcast.map(mightContainSharded(_, col(keyCol)))
-      .getOrElse(filterBcast.fold(mightContain(filter, col(keyCol)))(
-        mightContainBroadcast(_, col(keyCol))))
+    val probe = filterBcast.fold(mightContain(filter, col(keyCol)))(
+      mightContainBroadcast(_, col(keyCol)))
     val flagged = incoming.withColumn("__might", coalesce(probe, lit(false)))
     val definiteNew = flagged.filter(!col("__might")).drop("__might")
     val candidates = flagged.filter(col("__might")).drop("__might")
@@ -228,12 +150,10 @@ object BloomDedup {
                          corpusKeysFor: Seq[Any] => Option[DataFrame],
                          corpusKeys: => DataFrame, keyCol: String,
                          filter: => BloomFilter, cap: Int = 8192,
-                         filterBcast: Option[org.apache.spark.broadcast.Broadcast[Array[Byte]]] = None,
-                         shardedBcast: Option[Array[org.apache.spark.broadcast.Broadcast[Array[Byte]]]] = None)
+                         filterBcast: Option[org.apache.spark.broadcast.Broadcast[Array[Byte]]] = None)
       : DataFrame = {
-    val probe = shardedBcast.map(mightContainSharded(_, col(keyCol)))
-      .getOrElse(filterBcast.fold(mightContain(filter, col(keyCol)))(
-        mightContainBroadcast(_, col(keyCol))))
+    val probe = filterBcast.fold(mightContain(filter, col(keyCol)))(
+      mightContainBroadcast(_, col(keyCol)))
     val flagged = incoming.withColumn("__might", coalesce(probe, lit(false)))
     val definiteNew = flagged.filter(!col("__might")).drop("__might")
     val candidates = flagged.filter(col("__might")).drop("__might")

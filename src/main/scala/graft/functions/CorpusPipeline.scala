@@ -463,12 +463,10 @@ object CorpusPipeline {
       slim: DataFrame,
       /** corpus rows at freeze time */
       val rows: Long,
-      /** MONOLITHIC Bloom filter over the frozen exact-dedup keys; None
-        * when the freeze sharded the key space ([[bloomShardsBcast]]) —
-        * no single object then holds the whole corpus's bits, which is
-        * the point of sharding
+      /** Bloom filter over the frozen exact-dedup keys (probe via
+        * [[bloomBcast]] where possible)
         */
-      private[functions] val bloomMono: Option[org.apache.spark.util.sketch.BloomFilter],
+      val bloom: org.apache.spark.util.sketch.BloomFilter,
       withSignatures: Boolean,
       withEmbeddings: Boolean,
       /** banded (__id, __band, __bucket) frame of the frozen signatures,
@@ -498,16 +496,18 @@ object CorpusPipeline {
         */
       val bandedMaxNonHot: Option[Long] = None,
       /** directory holding the freeze-time SIDE FILES (`keys/` sorted by
-        * __ck, `sigs/` sorted by __id, `banded/` sorted by __bucket; small
-        * parquet row groups) — present when the freeze wrote them. They
-        * are the PRUNED-PROBE fast path: a gated batch's probe sets
-        * (bloom-positive keys, touched band buckets, candidate ids) are
+        * __ck, `sigs/` sorted by __id; small parquet row groups) — present
+        * when the freeze wrote them. They are the PRUNED-PROBE fast path: a
+        * gated batch's probe sets (bloom-positive keys, candidate ids) are
         * driver-collected and pushed as In filters into these sorted
         * scans, so per-batch corpus-side IO is bounded by the PROBES
-        * (row-group statistics skip everything else), not the corpus —
-        * the property that decouples steady-state batch cost from corpus
-        * size. The cached frames stay authoritative as the fallback for
-        * over-cap probe sets.
+        * (row-group statistics skip everything else), not the corpus. The
+        * cached frames stay authoritative as the fallback for over-cap
+        * probe sets. Bucket probes always join the cached [[bandedSlim]]:
+        * a pruned read costs at least one row group (~10k banded rows) per
+        * probe, and a batch probes ~16 uniform buckets per doc, so it beats
+        * the resident frame only above ~10k corpus docs per batch doc
+        * (~10M docs for a 1000-doc batch).
         */
       private[functions] val sideDir: Option[String] = None,
       /** the Bloom filter's serialized bytes as a BROADCAST handle: probes
@@ -516,30 +516,15 @@ object CorpusPipeline {
         * re-ship per stage per batch); unpersisted on [[release]]
         */
       val bloomBcast: Option[org.apache.spark.broadcast.Broadcast[Array[Byte]]] = None,
-      /** prefix-partition count of the keys/banded side files (`__pfx =
-        * pmod(value, sidePfx)` directory column). Directory-level
-        * partition pruning evaluates an In set EXACTLY at listing time
-        * regardless of its size — the first pruning stage that cannot
-        * silently degrade the way parquet's >threshold In-to-range
-        * row-group rewrite does over uniform-hash domains. 0 = the
-        * unpartitioned layout (sigs always; a legacy keys/banded dir).
+      /** prefix-partition count of the keys side file (`__pfx =
+        * pmod(value, sidePfx)` directory column; set whenever [[sideDir]]
+        * is). Directory-level partition pruning evaluates an In set
+        * EXACTLY at listing time regardless of its size — the first
+        * pruning stage that cannot silently degrade the way parquet's
+        * >threshold In-to-range row-group rewrite does over uniform-hash
+        * domains.
         */
-      private[functions] val sidePfx: Int = 0,
-      /** KEY-SPACE-SHARDED Bloom filter: one broadcast handle per
-        * `floorMod(key, n)` shard class, present when the freeze sharded
-        * ([[freezeCorpus]]'s `bloomShardCount`, or auto above the
-        * monolithic-filter partition point). Executors fetch/deserialize
-        * only the shards their rows probe — per-executor resident filter
-        * bytes are bounded by shardBytes × touched shards, closing the
-        * last gate component that was O(corpus) in one JVM object.
-        */
-      val bloomShardsBcast: Option[Array[org.apache.spark.broadcast.Broadcast[Array[Byte]]]] = None) {
-    /** the monolithic filter (probe via [[bloomBcast]] where possible);
-      * defined iff the freeze did NOT shard the key space
-      */
-    def bloom: org.apache.spark.util.sketch.BloomFilter =
-      bloomMono.getOrElse(throw new IllegalStateException(
-        "sharded freeze holds no monolithic Bloom filter — probe via bloomShardsBcast"))
+      private[functions] val sidePfx: Int = 0) {
     /** max probe values inlined into one pruned side-file read; above it
       * callers fall back to the cached frames (the In filter's literal
       * set and the per-row-group evaluation stay bounded)
@@ -579,8 +564,7 @@ object CorpusPipeline {
       * row-group-statistics dependence at any probe-set size.
       */
     private def prunedPfx(sub: String, keyName: String, probes: Seq[Any]): Option[DataFrame] =
-      if (sidePfx <= 0) pruned(sub, keyName, probes)
-      else if (sideDir.isEmpty || probes.size > sideProbeCap) None
+      if (sideDir.isEmpty || probes.size > sideProbeCap) None
       else if (probes.exists(p => !p.isInstanceOf[java.lang.Number])) None
       else {
         val pfx = probes.iterator
@@ -601,28 +585,6 @@ object CorpusPipeline {
       */
     def prunedSigs(probes: Seq[Any]): Option[DataFrame] =
       pruned("sigs", "__id", probes)
-    /** frozen banded rows restricted to the given bucket values, or None */
-    def prunedBanded(probes: Seq[Any]): Option[DataFrame] =
-      prunedPfx("banded", "__bucket", probes)
-    /** [[prunedBanded]] only when the prune can actually WIN: every probe
-      * reads at least its row group, and bucket values are uniform hashes,
-      * so once probes × rowGroupRows reaches the banded row count the
-      * "pruned" read IS a full disk scan of the side file plus a listing —
-      * strictly worse than the resident cached frame it replaces. Measured
-      * (r19 crossover, 1000-doc batches × 16 bands ≈ 15k distinct bucket
-      * probes): steady batches read the ENTIRE banded side file — 994 MB
-      * per batch at 4M docs, 1967 MB at 8M — i.e. the read bytes DOUBLED
-      * with the corpus instead of staying ∝ probes. The pruned read's
-      * asymptotic cost is probes × rowGroupBytes (corpus-decoupled), so it
-      * pays exactly when that is below the banded rows; the estimate uses
-      * the banded writer's ~128 KB row groups at ~13 B/row (~10k rows).
-      * Probe-count-driven and corpus-size-driven — no cluster-shape
-      * constant involved.
-      */
-    def prunedBandedProfitable(probes: Seq[Any]): Option[DataFrame] =
-      if (probes.size.toLong * CorpusPipeline.BandedRowGroupRows >=
-            rows * bandedBands) None
-      else prunedBanded(probes)
     /** whether the pruned-probe fast path is available at all */
     def hasSideFiles: Boolean = sideDir.isDefined
     /** the frozen banded frame + hot set, when frozen `withBanded` */
@@ -656,13 +618,6 @@ object CorpusPipeline {
       // re-fetches instead of crashing (unpersist, deliberately not
       // destroy — same contract as the cached frames)
       bloomBcast.foreach(_.unpersist(blocking = false))
-      bloomShardsBcast.foreach { h =>
-        h.foreach(_.unpersist(blocking = false))
-        // drop the JVM-wide deserialized copies too (local mode: driver and
-        // executor share the JVM; cluster executors drop theirs when the
-        // unpersisted broadcast blocks are re-requested — never, post-close)
-        graft.functions.expressions.ShardedBloomRuntime.clear(h(0).id)
-      }
     }
   }
 
@@ -672,23 +627,14 @@ object CorpusPipeline {
     * frame, build the Bloom filter from the cached keys. Day-0 (empty
     * corpus) gets an explicitly empty filter — Spark's `stat.bloomFilter`
     * NPEs on zero rows, and every probe of the empty filter correctly
-    * answers "proven new".
+    * answers "proven new". The filter is monolithic (the [[BloomDedup]]
+    * posture note).
+    *
+    * `withBanded` also persists the banded signature frame and its hot
+    * set. `sideFileDir` writes the `keys/` and `sigs/` side files once the
+    * corpus holds at least `sideFileMinRows` rows; `keys/` is split into
+    * P = clamp(rows / 500k, 8, 1024) `__pfx` directories.
     */
-  /** Keys per Bloom shard above which a freeze auto-shards the filter's
-    * key space: 2.5e8 keys ≈ 300 MB of bits at 1% fpp — comfortably under
-    * the ~1.2 GB-at-1e9-keys monolithic cliff, and never reached by the
-    * local fixtures (auto stays monolithic below 250M corpus rows, so the
-    * bench path is byte-identical; `bloomShardCount` pins it for tests
-    * and scale runs).
-    */
-  private[graft] val shardAutoKeys: Long = 250000000L
-
-  /** estimated rows per banded side-file row group (~128 KB blocks at
-    * ~13 B/row) — the [[FrozenCorpus.prunedBandedProfitable]] break-even
-    * constant
-    */
-  private[functions] val BandedRowGroupRows: Long = 10000L
-
   def freezeCorpus(standingCorpus: DataFrame, cfg: Config = Config(),
                    withSignatures: Boolean = true, numHashes: Int = 64,
                    bloomFpp: Double = 0.01,
@@ -696,9 +642,7 @@ object CorpusPipeline {
                    withBanded: Boolean = false, bands: Int = 16,
                    maxBucketSize: Long = 4096L,
                    sideFileDir: Option[String] = None,
-                   sideFileMinRows: Long = 200000L,
-                   sideFilePartitions: Int = 0,
-                   bloomShardCount: Int = 0): FrozenCorpus = {
+                   sideFileMinRows: Long = 200000L): FrozenCorpus = {
     require(!withBanded || withSignatures,
       "banded freeze state derives from signatures")
     val text = col(cfg.textCol)
@@ -735,31 +679,13 @@ object CorpusPipeline {
       .localCheckpoint()
     try {
       val rows = slim.count() // cheap: counts the checkpointed blocks
-      // the Bloom prefilter: monolithic below the shard point, KEY-SPACE
-      // SHARDED above it (or when the caller pins a shard count) — a
-      // monolithic filter is one driver/executor object that grows with
-      // the corpus (~1.2 GB at 1e9 keys / 1% fpp), the documented last
-      // O(corpus)-in-one-JVM-object gate component; sharding bounds every
-      // single filter object at ~shardAutoKeys bits and lets executors
-      // fetch only the shards their rows probe
-      val shards =
-        if (rows == 0L) 1
-        else if (bloomShardCount > 0) bloomShardCount
-        else math.max(1L, (rows + shardAutoKeys - 1) / shardAutoKeys).toInt
-      val (bloomOpt, bloomBcOpt, shardsBcOpt) =
-        if (shards > 1) {
-          val built = BloomDedup.buildShardedLongNonEmpty(
-            slim, col("__ck"), rows, bloomFpp, shards)
-          (None, None, Some(BloomDedup.broadcastShards(slim.sparkSession, built)))
-        } else {
-          val bloom =
-            if (rows == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, bloomFpp)
-            else BloomDedup.buildLongNonEmpty(slim, col("__ck"), rows, bloomFpp)
-          // broadcast BEFORE the banded block: were it built after, a
-          // broadcast failure would leak the banded cache and the
-          // localized hot set (only slim rides the outer catch)
-          (Some(bloom), Some(BloomDedup.broadcastFilter(slim.sparkSession, bloom)), None)
-        }
+      val bloom =
+        if (rows == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, bloomFpp)
+        else BloomDedup.buildLongNonEmpty(slim, col("__ck"), rows, bloomFpp)
+      // broadcast BEFORE the banded block: were it built after, a
+      // broadcast failure would leak the banded cache and the localized
+      // hot set (only slim rides the outer catch)
+      val bloomBc = BloomDedup.broadcastFilter(slim.sparkSession, bloom)
       val (bnd, hot, maxNonHot) =
         if (!withBanded) (None, None, None)
         else {
@@ -796,17 +722,17 @@ object CorpusPipeline {
             case t: Throwable => banded.unpersist(blocking = false); throw t
           }
         }
-      // SIDE FILES: sorted, small-row-group copies of the frozen keys /
-      // signatures / banded rows, written once per refresh so every gated
-      // batch can read them PRUNED to its probe set. Written only above
-      // the row threshold: below it the cached frames are faster than any
-      // fixed job overhead (the same crossover argument as the gate
-      // itself). Cost: three write jobs off the already-cached frames,
-      // amortized over the refresh window.
+      // SIDE FILES: sorted, small-row-group copies of the frozen keys and
+      // signatures, written once per refresh so every gated batch can read
+      // them PRUNED to its probe set. Written only above the row
+      // threshold: below it the cached frames are faster than any fixed
+      // job overhead (the same crossover argument as the gate itself).
+      // Cost: two write jobs off the already-cached frame, amortized over
+      // the refresh window.
       //
       // TWO pruning stages (r18, re-derived from Spark 4.1.2 bytecode —
       // see the [[FrozenCorpus.pruned]] note):
-      //   1. keys/banded carry a `__pfx = pmod(value, P)` DIRECTORY
+      //   1. keys carry a `__pfx = pmod(value, P)` DIRECTORY
       //      partition — partition pruning evaluates the probe In set
       //      exactly at listing time, any size, no statistics involved,
       //      bounding even the LISTING and footer reads by the probes'
@@ -831,16 +757,13 @@ object CorpusPipeline {
             // P scales with the corpus so directories stay coarse enough
             // to list cheaply but fine enough that a steady batch's probe
             // set touches a strict subset of them
-            val p =
-              if (sideFilePartitions > 0) sideFilePartitions
-              else math.max(8L, math.min(1024L, rows / 500000L)).toInt
-            def pfxOf(c: Column): Column = pmod(c, lit(p.toLong)).cast("int")
+            val p = math.max(8L, math.min(1024L, rows / 500000L)).toInt
             // HASH repartition on __pfx + sort-within-partitions, NOT
             // repartitionByRange: range partitioning's boundary sampling
             // was a measured super-linear term in the freeze; each pfx
             // class lands whole in one task, so every directory gets ~one
             // file, internally sorted for stage-2 row-group pruning
-            slim.select(col("__ck"), pfxOf(col("__ck")).as("__pfx"))
+            slim.select(col("__ck"), pmod(col("__ck"), lit(p.toLong)).cast("int").as("__pfx"))
               .repartition(p, col("__pfx"))
               .sortWithinPartitions(col("__pfx"), col("__ck"))
               .write.option(blockOpt, blockSz).partitionBy("__pfx")
@@ -854,21 +777,11 @@ object CorpusPipeline {
                 .sortWithinPartitions(col("__id"))
                 .write.option(blockOpt, blockSz)
                 .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir + "/sigs")
-            // banded rows are ~20 B wide and probed by UNIFORM bucket
-            // hashes: finer row groups (~6k rows) than the other side
-            // files keep the per-probe read floor small
-            bnd.foreach(_.withColumn("__pfx", pfxOf(col("__bucket")))
-              .repartition(p, col("__pfx"))
-              .sortWithinPartitions(col("__pfx"), col("__bucket"))
-              .write.option(blockOpt, (128L << 10).toString)
-              .option("parquet.page.size", (64L << 10).toString)
-              .partitionBy("__pfx")
-              .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir + "/banded"))
             (Some(dir), p)
           }
-        new FrozenCorpus(slim, rows, bloomOpt, withSignatures, embeddings.isDefined,
+        new FrozenCorpus(slim, rows, bloom, withSignatures, embeddings.isDefined,
           bnd, hot, bands, numHashes, maxBucketSize, maxNonHot, side,
-          bloomBcOpt, pfxParts, shardsBcOpt)
+          Some(bloomBc), pfxParts)
       } catch {
         // a failed side write (or constructor) must not leak the banded
         // cache, the localized hot set, or the broadcast filter (slim's
@@ -876,8 +789,7 @@ object CorpusPipeline {
         case t: Throwable =>
           bnd.foreach(_.unpersist(blocking = false))
           hot.foreach(graft.core.Checkpoints.release)
-          bloomBcOpt.foreach(_.unpersist(blocking = false))
-          shardsBcOpt.foreach(_.foreach(_.unpersist(blocking = false)))
+          bloomBc.unpersist(blocking = false)
           throw t
       }
     } catch {
@@ -944,12 +856,10 @@ object CorpusPipeline {
           cached += keyed
           BloomDedup.newKeysExactPruned(keyed, frozen.prunedKeys,
             frozen.keys, "__ck", frozen.bloom,
-            filterBcast = frozen.bloomBcast,
-            shardedBcast = frozen.bloomShardsBcast)
+            filterBcast = frozen.bloomBcast)
         } else BloomDedup.newKeysExact(
           prepared.withColumn("__ck", key), frozen.keys, "__ck", frozen.bloom,
-          filterBcast = frozen.bloomBcast,
-          shardedBcast = frozen.bloomShardsBcast)
+          filterBcast = frozen.bloomBcast)
       // exactNew feeds several plan branches downstream (both sides of the
       // against-corpus signature funnel, the exact-verify shingle scan, the
       // final anti-join), and each would otherwise re-derive the ENTIRE
@@ -980,9 +890,6 @@ object CorpusPipeline {
               deltaBanded = extraBanded,
               deltaBucketCounts = extraBucketCounts,
               frozenMaxNonHot = frozen.bandedMaxNonHot,
-              prunedBandedFor =
-                if (frozen.hasSideFiles) Some(frozen.prunedBandedProfitable _)
-                else None,
               prunedSigsFor =
                 if (frozen.hasSideFiles) Some(frozen.prunedSigs _) else None)
           case _ =>

@@ -33,13 +33,6 @@ object MinHashLsh {
     */
   private val CandidateIdPushdownCap = 8192
 
-  /** Max distinct batch bucket values driver-collected for the pruned
-    * frozen-banded probe (matches FrozenCorpus.sideProbeCap — the pruned
-    * read itself refuses larger sets); above it the funnel streams the
-    * cached banded frame as before.
-    */
-  private val BucketProbeCap = 1 << 16
-
   /** Distinct values of `colNames` read DRIVER-SIDE from an
     * already-localized survivor frame — zero Spark jobs: after
     * [[Checkpoints.localize]] the frame is a LocalRelation whose rows sit
@@ -341,27 +334,13 @@ object MinHashLsh {
       leftDocs: => DataFrame, right: DataFrame, idCol: String,
       shingleHashes: Column, numHashes: Int, bands: Int, threshold: Double,
       minBands: Int, maxBucketSize: Long,
-      prunedBandedFor: Option[Seq[Any] => Option[DataFrame]] = None,
       prunedSigsFor: Option[Seq[Any] => Option[DataFrame]] = None): DataFrame = {
     val spark = frozenBanded.sparkSession
     // the delta's banded rows: caller-precomputed (driver-built at fold
     // time, zero jobs) when available, else derived from the delta sigs
     val blD = deltaBanded.orElse(deltaSigs.map(d => bandedFrame(d, bands, numHashes)))
     val br0 = bandedFrame(sr, bands, numHashes)
-    // PRUNED frozen banding: the batch's touched bucket values are a small
-    // driver-collectable set (≤ rows × bands), and the candidate join only
-    // ever matches frozen rows in THOSE buckets — so when the freeze wrote
-    // a bucket-sorted side file, read it pruned to the probe set instead
-    // of streaming the whole cached banded frame through the join. One
-    // extra small job (the probe collect, off the already-persisted batch
-    // signatures); identical candidates by construction.
-    val frozenBandedEff = prunedBandedFor.flatMap { f =>
-      val probes = br0.select(col("__bucket")).distinct()
-        .limit(BucketProbeCap + 1).collect()
-      if (probes.length > BucketProbeCap) None
-      else f(probes.map(_.get(0)).toSeq)
-    }.getOrElse(frozenBanded)
-    val bl0 = blD.fold(frozenBandedEff)(frozenBandedEff.unionByName(_))
+    val bl0 = blD.fold(frozenBanded)(frozenBanded.unionByName(_))
     val (bl, br, releaseHot) =
       if (maxBucketSize <= 0L) (bl0, br0, () => ())
       else {
@@ -384,12 +363,7 @@ object MinHashLsh {
               val touched = spark.createDataFrame(suspects.toSeq.map {
                 case ((b, bkt), dc) => (b, bkt, dc)
               }).toDF("__band", "__bucket", "__dc")
-              // suspect bucket values are driver-resident — probe the
-              // side file pruned to exactly them when available
-              val crossingSource = prunedBandedFor.flatMap(f =>
-                f(suspects.keysIterator.map(_._2).toSeq.distinct))
-                .getOrElse(frozenBanded)
-              val fCnt = crossingSource.join(
+              val fCnt = frozenBanded.join(
                   touched.select("__band", "__bucket"),
                   Seq("__band", "__bucket"), "left_semi")
                 .groupBy(col("__band"), col("__bucket"))
@@ -570,16 +544,17 @@ object MinHashLsh {
                                  deltaBanded: Option[DataFrame] = None,
                                  deltaBucketCounts: Option[Map[(Int, Long), Long]] = None,
                                  frozenMaxNonHot: Option[Long] = None,
-                                 prunedBandedFor: Option[Seq[Any] => Option[DataFrame]] = None,
                                  prunedSigsFor: Option[Seq[Any] => Option[DataFrame]] = None)
       : DataFrame = {
     val sr = signatureFrame(right, idCol, shingleHashes, numHashes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bipartiteCoreFrozenBanded(frozenSigs, frozenBanded, frozenHot, deltaSigs,
+    // the hot-set localize runs BEFORE the tail's release point: a failure
+    // there must still drop the batch signatures
+    try bipartiteCoreFrozenBanded(frozenSigs, frozenBanded, frozenHot, deltaSigs,
       deltaBanded, deltaBucketCounts, frozenMaxNonHot,
       sr, () => sr.unpersist(false), leftDocs, right, idCol, shingleHashes,
-      numHashes, bands, threshold, minBands, maxBucketSize,
-      prunedBandedFor, prunedSigsFor)
+      numHashes, bands, threshold, minBands, maxBucketSize, prunedSigsFor)
+    catch { case t: Throwable => sr.unpersist(false); throw t }
   }
 
   /** [[dedupAgainstPrecomputed]] over frozen banded state — the ingest
@@ -596,7 +571,6 @@ object MinHashLsh {
                                deltaBanded: Option[DataFrame] = None,
                                deltaBucketCounts: Option[Map[(Int, Long), Long]] = None,
                                frozenMaxNonHot: Option[Long] = None,
-                               prunedBandedFor: Option[Seq[Any] => Option[DataFrame]] = None,
                                prunedSigsFor: Option[Seq[Any] => Option[DataFrame]] = None)
       : DataFrame = {
     val dupIds = bipartitePairsFrozenBanded(frozenSigs, frozenBanded,
@@ -604,7 +578,7 @@ object MinHashLsh {
         numHashes, bands, threshold, maxBucketSize = maxBucketSize,
         deltaBanded = deltaBanded, deltaBucketCounts = deltaBucketCounts,
         frozenMaxNonHot = frozenMaxNonHot,
-        prunedBandedFor = prunedBandedFor, prunedSigsFor = prunedSigsFor)
+        prunedSigsFor = prunedSigsFor)
       .select(col("id_right").as(idCol)).distinct()
     incoming.join(dupIds, Seq(idCol), "left_anti")
   }

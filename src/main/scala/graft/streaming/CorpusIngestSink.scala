@@ -373,34 +373,18 @@ object CorpusIngestSink {
                          semanticAgainstThreshold: Option[Double] = None,
                          onExternalWrite: ExternalWriterPolicy = ExternalWriterPolicy.Refresh,
                          foldDriverBytes: Long = DefaultFoldDriverBytes,
-                         /** write freeze-time SIDE FILES (sorted keys /
-                           * sigs / banded copies under
-                           * `<targetDir>__gatestate/`) and serve each
-                           * batch's corpus-side probes from them pruned
-                           * to the batch's own probe set — steady-state
-                           * corpus IO ∝ probes, decoupled from corpus
-                           * size ([[CorpusPipeline.FrozenCorpus]]).
+                         /** corpus rows from which the freeze writes SIDE
+                           * FILES (sorted keys / sigs copies under
+                           * `<targetDir>__gatestate/`) and serves each
+                           * batch's key and signature probes from them,
+                           * pruned to the batch's own probe set
+                           * ([[CorpusPipeline.FrozenCorpus]]). Below it the
+                           * cached frames beat any fixed per-batch job
+                           * overhead (the gate's own crossover argument
+                           * applied to its probes); `Long.MaxValue` turns
+                           * side files off.
                            */
-                         sideFiles: Boolean = true,
-                         /** corpus rows below which the freeze skips the
-                           * side files — at small corpora the cached
-                           * frames beat any fixed per-batch job overhead
-                           * (the gate's own crossover argument applied to
-                           * its probes)
-                           */
-                         sideFileMinRows: Long = 200000L,
-                         /** prefix-partition count for the keys/banded
-                           * side files; 0 = auto from corpus rows
-                           * ([[CorpusPipeline.freezeCorpus]])
-                           */
-                         sideFilePartitions: Int = 0,
-                         /** key-space shard count for the freeze's Bloom
-                           * filter; 0 = auto (monolithic until the corpus
-                           * crosses [[CorpusPipeline.shardAutoKeys]] keys,
-                           * then one ~300 MB-max filter per shard —
-                           * executors fetch only the shards they probe)
-                           */
-                         bloomShards: Int = 0) {
+                         sideFileMinRows: Long = 200000L) {
     require(refreshEvery >= 1, "refresh cadence must admit at least one batch")
     require(compactEvery >= 0, "compaction cadence is counted in refreshes; 0 disables")
     require(semanticAgainstThreshold.isEmpty || cfg.embeddings.isDefined,
@@ -566,7 +550,13 @@ object CorpusIngestSink {
       // task time per admitted batch at 400k docs). A localCheckpoint has
       // no CacheManager entry, so the append cannot invalidate it, and it
       // pins the gated snapshot the way the fold semantically requires.
-      val accepted = accepted0.localCheckpoint()
+      // The checkpoint is eager, so the whole funnel runs HERE, before the
+      // try below: a failure must release this batch's caches itself. (The
+      // failed checkpoint's own RDD is unreachable; the context's weak
+      // registry drops it once collected.)
+      val accepted =
+        try accepted0.localCheckpoint()
+        catch { case t: Throwable => releaseBatch(); throw t }
       try {
         val n = accepted.count()
         if (n > 0L) {
@@ -748,12 +738,8 @@ object CorpusIngestSink {
         // batch — the O(corpus)-shuffle-per-batch term the r16 crossover
         // measurement exposed (BENCH_VARIANCE_r16.md)
         withBanded = againstThreshold.isDefined, bands = bands,
-        sideFileDir =
-          if (sideFiles) Some(targetDir.stripSuffix("/") + "__gatestate")
-          else None,
-        sideFileMinRows = sideFileMinRows,
-        sideFilePartitions = sideFilePartitions,
-        bloomShardCount = bloomShards)
+        sideFileDir = Some(targetDir.stripSuffix("/") + "__gatestate"),
+        sideFileMinRows = sideFileMinRows)
       sinceRefresh = 0
       refreshes += 1
       // recorded AFTER the freeze materialized (freezeCorpus counts the

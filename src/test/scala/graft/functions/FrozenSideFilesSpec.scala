@@ -6,16 +6,16 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-/** Round-17 pruned-probe side files: [[CorpusPipeline.freezeCorpus]] can
-  * write sorted, small-row-group copies of the frozen keys / signatures /
-  * banded rows, and every gated batch then reads them PRUNED to its own
-  * probe set (bloom-positive keys, touched band buckets, candidate ids)
-  * via In-filter pushdown — per-batch corpus-side IO ∝ probes instead of
-  * an O(corpus) cached scan (and, for the exact stage, an O(corpus)
-  * distinct shuffle) per batch. These specs pin that the pruned paths are
-  * BIT-IDENTICAL to the cached paths, including the delta-induced
-  * hot-bucket crossing probe, and that the fallbacks engage above the
-  * probe caps.
+/** Pruned-probe side files: [[CorpusPipeline.freezeCorpus]] can write
+  * sorted, small-row-group copies of the frozen keys and signatures, and
+  * every gated batch then reads them PRUNED to its own probe set
+  * (bloom-positive keys, candidate ids) via In-filter pushdown — per-batch
+  * corpus-side IO ∝ probes instead of an O(corpus) cached scan (and, for
+  * the exact stage, an O(corpus) distinct shuffle) per batch. Bucket
+  * probes always join the cached banded frame. These specs pin that the
+  * pruned paths are BIT-IDENTICAL to the cached paths, including the
+  * delta-induced hot-bucket crossing probe, and that the fallbacks engage
+  * above the probe caps.
   */
 class FrozenSideFilesSpec extends SparkSpec {
   import spark.implicits._
@@ -68,8 +68,10 @@ class FrozenSideFilesSpec extends SparkSpec {
       sideFileDir = Some(dir + "/on"), sideFileMinRows = 0L)
     try {
       assert(side.hasSideFiles)
-      for (sub <- Seq("keys", "sigs", "banded"))
+      for (sub <- Seq("keys", "sigs"))
         assert(new java.io.File(dir + s"/on/$sub").isDirectory, s"$sub missing")
+      assert(!new java.io.File(dir + "/on/banded").exists(),
+        "bucket probes join the cached banded frame; no banded side file")
       val a = acceptedIds(plain)
       val b = acceptedIds(side)
       // doc 1 exact-dups the corpus, doc 2 near-dups it (j ≈ 0.85 ≥ 0.8)
@@ -85,8 +87,9 @@ class FrozenSideFilesSpec extends SparkSpec {
     val dir = Files.createTempDirectory("side_hot").toString
     val sh = TextFunctions.shingleHashes(col("text"), 5)
     // cap 10: 8 frozen boilerplate clones + 5 delta clones = 13 crosses —
-    // the crossing probe must run against the PRUNED side read and still
-    // produce the per-batch path's exact hot set
+    // the crossing probe runs against the cached banded frame while the
+    // estimate stage reads PRUNED sigs, and must still produce the
+    // per-batch path's exact hot set
     val frozen = CorpusPipeline.freezeCorpus(corpus, cfg, withBanded = true,
       maxBucketSize = 10L, sideFileDir = Some(dir), sideFileMinRows = 0L)
     try {
@@ -106,7 +109,6 @@ class FrozenSideFilesSpec extends SparkSpec {
         frozen.sigs.get, bnd, hot, Some(dSigs), corpusAll, incoming,
         "doc_id", sh, 64, 16, 0.8, maxBucketSize = 10L,
         frozenMaxNonHot = frozen.bandedMaxNonHot,
-        prunedBandedFor = Some(frozen.prunedBanded _),
         prunedSigsFor = Some(frozen.prunedSigs _)))
       assert(!cached.exists(_._2 == 1L) && cached.exists(_._2 == 2L),
         s"fixture drifted: crossing must mute boilerplate only, got $cached")
@@ -174,15 +176,14 @@ class FrozenSideFilesSpec extends SparkSpec {
     def run(side: Boolean): (Seq[Long], Seq[Long]) = {
       val dir = Files.createTempDirectory(s"side_gate_$side").toString
       val g = new graft.streaming.CorpusIngestSink.FrozenGate(dir, cfg,
-        refreshEvery = 2, sideFiles = side, sideFileMinRows = 0L)
+        refreshEvery = 2, sideFileMinRows = if (side) 0L else Long.MaxValue)
       try {
         val admitted = batches.map(g.processBatch)
         val ids = spark.read.parquet(dir).select("doc_id").as[Long]
           .collect().toSeq.sorted
-        if (side) {
-          val state = new java.io.File(dir + "__gatestate")
-          assert(state.isDirectory, "the gate must have written side files")
-        }
+        val state = new java.io.File(dir + "__gatestate")
+        assert(state.isDirectory == side,
+          s"side files written=${state.isDirectory}, expected $side")
         (admitted, ids)
       } finally g.close()
     }

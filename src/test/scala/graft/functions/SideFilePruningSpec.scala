@@ -9,7 +9,7 @@ import java.nio.file.Files
 
 /** Round-18: the pruned-probe side reads must ACTUALLY prune at any probe
   * size, with the mechanism pinned rather than assumed. Two findings
-  * shape these specs. (1) The keys/banded side files now carry a
+  * shape these specs. (1) The keys side file carries a
   * `__pfx = pmod(value, P)` DIRECTORY partition, and the probe read
   * pushes the probes' pfx classes as a partition-column In — evaluated
   * exactly at LISTING time, no statistics involved, so the scan's
@@ -59,8 +59,7 @@ class SideFilePruningSpec extends SparkSpec {
   test("keys side file: prefix directories prune exactly, at ANY probe-set size") {
     val dir = Files.createTempDirectory("sfp_keys").toString
     val frozen = CorpusPipeline.freezeCorpus(corpus(4000), cfg,
-      withBanded = true, sideFileDir = Some(dir), sideFileMinRows = 0L,
-      sideFilePartitions = 8)
+      withBanded = true, sideFileDir = Some(dir), sideFileMinRows = 0L)
     try {
       val keyDirs = new java.io.File(dir + "/keys").listFiles
         .filter(_.isDirectory).map(_.getName).toSeq
@@ -102,56 +101,6 @@ class SideFilePruningSpec extends SparkSpec {
       val mixed = allKeys.take(64).toSeq
       val got = frozen.prunedKeys(mixed).get.as[Long].collect().toSet
       assert(got == mixed.toSet, "pruned read must be bit-identical to the probe set")
-    } finally frozen.release()
-  }
-
-  test("banded side file: bucket probes prune directories; pruned rows equal cached rows") {
-    val dir = Files.createTempDirectory("sfp_banded").toString
-    val frozen = CorpusPipeline.freezeCorpus(corpus(2000), cfg,
-      withBanded = true, sideFileDir = Some(dir), sideFileMinRows = 0L,
-      sideFilePartitions = 8)
-    try {
-      val (bnd, _) = frozen.banded.get
-      val buckets = bnd.select("__bucket").distinct().as[Long].collect()
-      val oneClass = buckets.filter(b => java.lang.Math.floorMod(b, 8L) == 2L)
-        .take(32).toSeq
-      val pruned = frozen.prunedBanded(oneClass).get
-      val (scan, _) = scanOf(pruned)
-      assert(scan.selectedPartitions.partitionCount == 1,
-        s"one bucket class must touch one banded directory, " +
-        s"got ${scan.selectedPartitions.partitionCount}")
-      // schema and content parity with the cached banded frame
-      assert(pruned.columns.sorted.toSeq == bnd.columns.sorted.toSeq,
-        "the __pfx partition column must not leak into the pruned frame")
-      val expect = bnd.filter(col("__bucket").isin(oneClass: _*))
-        .select("__id", "__band", "__bucket").as[(Long, Int, Long)].collect().toSet
-      val got = pruned.select("__id", "__band", "__bucket")
-        .as[(Long, Int, Long)].collect().toSet
-      assert(got == expect, "pruned banded rows must equal the cached frame's")
-    } finally frozen.release()
-  }
-
-  test("banded probe reads fall back to the cached frame when the prune cannot win") {
-    // r19 crossover measurement: ~15k uniform bucket probes (1000-doc
-    // batches × 16 bands) read the ENTIRE banded side file — 994 MB/batch
-    // at 4M docs, 1967 MB at 8M, i.e. O(corpus) disk IO per batch where
-    // the resident cached frame serves the same join from memory. The
-    // profitability gate must route large probe sets to the cached frame
-    // (None) and keep the pruned read for probe sets small enough that
-    // row-group pruning actually skips data.
-    val dir = Files.createTempDirectory("sfp_profit").toString
-    val frozen = CorpusPipeline.freezeCorpus(corpus(2000), cfg,
-      withBanded = true, sideFileDir = Some(dir), sideFileMinRows = 0L,
-      sideFilePartitions = 8)
-    try {
-      val (bnd, _) = frozen.banded.get
-      val buckets = bnd.select("__bucket").distinct().as[Long].collect()
-      // 2000 docs × 16 bands = 32k banded rows; break-even at ~10k rows
-      // per probed row group → ≤3 probes profitable, 32 probes not
-      assert(frozen.prunedBandedProfitable(buckets.take(2).toSeq).isDefined,
-        "a probe set far under the row-group break-even must stay pruned")
-      assert(frozen.prunedBandedProfitable(buckets.take(32).toSeq).isEmpty,
-        "a probe set past the break-even must fall back to the cached frame")
     } finally frozen.release()
   }
 

@@ -156,4 +156,46 @@ class FrozenGateHardeningSpec extends SparkSpec {
     } finally g.close()
     assert(corpusIds(dir) == Seq(1L, 2L, 12L, 22L))
   }
+
+  test("a funnel failure on a frozen gate releases every persisted frame and cache entry") {
+    import org.apache.spark.sql.graft.CacheBridge.numCachedEntries
+    val sc = spark.sparkContext
+    // fails on exactly one marker doc. It rewrites `source`, a column no
+    // funnel projection reads, so the failure surfaces only once the
+    // batch's accepted rows materialize — after every funnel cache exists
+    val boom = org.apache.spark.sql.functions.udf { (src: String, t: String) =>
+      if (t.contains("MARKER")) throw new RuntimeException("funnel boom") else src
+    }
+    for (against <- Seq(Some(0.8), None)) {
+      val dir = Files.createTempDirectory("fg_funnelfail").toString
+      val g = new CorpusIngestSink.FrozenGate(dir, cfg, againstThreshold = against,
+        refreshEvery = 10)
+      try {
+        assert(g.processBatch(df(1L -> baseA, 2L -> baseB)) == 2L)
+        assert(g.isFrozen)
+        val rddsBefore = sc.getPersistentRDDs.keySet.toSet
+        val entriesBefore = numCachedEntries(spark)
+        // the repartition keeps the optimizer from folding the UDF into
+        // the local relation at planning time (it must fail in a task)
+        val bad = df(3L -> baseC, 4L -> s"$baseD MARKER").repartition(2)
+          .withColumn("source", boom(org.apache.spark.sql.functions.col("source"),
+            org.apache.spark.sql.functions.col("text")))
+        val e = intercept[Exception](g.processBatch(bad))
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains("funnel boom")),
+          s"unexpected failure: $e")
+        // an RDD orphaned by the failed checkpoint is unreachable and
+        // leaves the context's weak registry once collected; a PINNED
+        // leak (a cache entry, a held frame) never does
+        def leaked = { System.gc(); sc.getPersistentRDDs.keySet.toSet -- rddsBefore }
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(200)
+        assert(leaked.isEmpty,
+          s"against=$against: a failed batch must release every RDD it persisted")
+        assert(numCachedEntries(spark) == entriesBefore,
+          s"against=$against: a failed batch must drop its CacheManager entries")
+        assert(g.processBatch(df(5L -> baseC)) == 1L, "the gate keeps working")
+      } finally g.close()
+    }
+  }
 }

@@ -37,9 +37,6 @@ object FrozenGateCrossover {
     // stages — the candidate-fetch IO path the steady-state numbers
     // otherwise never touch (the default batches are shingle-disjoint)
     val nearDupEvery = args.lift(5).map(_.toInt).getOrElse(0)
-    // key-space shard count for the gate's Bloom filter (0 = auto:
-    // monolithic at these corpus sizes) — the r18 sharding A/B knob
-    val bloomShards = args.lift(6).map(_.toInt).getOrElse(0)
 
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
@@ -146,7 +143,7 @@ object FrozenGateCrossover {
         val dirF = Files.createTempDirectory("xover_frozen").toString
         seed(dirF)
         val gate = new CorpusIngestSink.FrozenGate(dirF, cfg,
-          refreshEvery = refreshEvery, bloomShards = bloomShards)
+          refreshEvery = refreshEvery)
         val perBatch = new Array[Double](nBatches)
         val perBatchMb = new Array[Double](nBatches)
         val (n, s) = timed {
@@ -159,17 +156,6 @@ object FrozenGateCrossover {
               f"read=${perBatchMb(i)}%8.1f MB admitted=$n")
             n
           }.sum finally gate.close()
-        }
-        if (bloomShards > 1) {
-          // per-executor (this JVM, local mode) resident shard ledger:
-          // which shard filters were ever deserialized and their summed
-          // bytes — the resident-bytes bound sharding promises
-          graft.functions.expressions.ShardedBloomRuntime.snapshot
-            .foreach { case (g, (res, resBytes, totBytes)) =>
-              System.err.println(f"[xover] bloom group=$g shards=$bloomShards " +
-                f"touched=${res.size} residentKB=${resBytes / 1024} " +
-                f"totalKB=${totBytes / 1024} maxShardKB=${totBytes / bloomShards / 1024}")
-            }
         }
         // steady state = batches that did NOT pay a freeze (b0 and every
         // refreshEvery-th batch re-freeze) — the corpus-size-decoupling
