@@ -20,6 +20,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     that escapes the operator holds no block-store state at all and is
   *     broadcast-joinable downstream.
   *
+  * Code that holds several such frames at once (the frozen ingest gate,
+  * the LSH funnels) does not call [[release]] itself: it registers each
+  * frame with a [[Scope]], the single owner that releases every persist,
+  * checkpoint and broadcast of a freeze or a batch in one close.
+  *
   * At cluster scale `localCheckpoint` blocks also die with their executor
   * (no replication), so frames that must survive node churn should use
   * reliable `checkpoint()` to a checkpoint dir instead; these helpers are
@@ -50,17 +55,8 @@ object Checkpoints {
     * bound is a guard rail rather than the expected path.
     */
   def localize(df: DataFrame, maxDriverRows: Long = 1L << 22): DataFrame = {
-    // optional timing/caller trace wraps the ONE shared path (a forked
-    // traced copy of the body can silently diverge — r18 advice)
-    val trace = sys.env.contains("GRAFT_TRACE_LOCALIZE")
-    val t0 = if (trace) System.nanoTime() else 0L
     val checkpointed = df.localCheckpoint()
     val n = checkpointed.count()
-    if (trace) {
-      val caller = Thread.currentThread.getStackTrace
-        .drop(2).filter(_.getClassName.startsWith("graft")).take(3).mkString(" <- ")
-      System.err.println(f"[localize] ${(System.nanoTime() - t0) / 1e6}%7.1f ms rows=$n%6d  $caller")
-    }
     if (n > maxDriverRows) return checkpointed
     val rows: java.util.List[Row] = java.util.Arrays.asList(checkpointed.collect(): _*)
     val local = df.sparkSession.createDataFrame(rows, checkpointed.schema)

@@ -69,26 +69,28 @@ object BloomDedup {
     * widened to long to mirror [[buildLong]] — both the interpreted and
     * codegen eval paths then accept any integral key type.
     */
-  def mightContain(filter: BloomFilter, key: Column): Column = {
-    val out = new ByteArrayOutputStream()
-    filter.writeTo(out)
+  def mightContain(filter: BloomFilter, key: Column): Column =
     ExpressionUtils.column(
       BloomMightContainExpr(ExpressionUtils.expression(key.cast("long")),
-        out.toByteArray))
+        filterBytes(filter)))
+
+  /** The filter's serialized bits, the form both probes ship. */
+  def filterBytes(filter: BloomFilter): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    filter.writeTo(out)
+    out.toByteArray
   }
 
   /** Serialize + broadcast a filter once, for callers that probe it across
-    * MANY queries (the frozen-corpus gate: one filter, refreshEvery
-    * batches × several stages each). Pair with [[mightContainBroadcast]];
-    * `unpersist()` the handle when the filter's owner is released.
+    * MANY queries. Pair with [[mightContainBroadcast]]; `unpersist()` the
+    * handle when the filter's owner is released. The frozen gate
+    * broadcasts [[filterBytes]] through its [[graft.core.Scope]] instead,
+    * which owns that release.
     */
   def broadcastFilter(spark: org.apache.spark.sql.SparkSession,
                       filter: BloomFilter)
-      : org.apache.spark.broadcast.Broadcast[Array[Byte]] = {
-    val out = new ByteArrayOutputStream()
-    filter.writeTo(out)
-    spark.sparkContext.broadcast(out.toByteArray)
-  }
+      : org.apache.spark.broadcast.Broadcast[Array[Byte]] =
+    spark.sparkContext.broadcast(filterBytes(filter))
 
   /** [[mightContain]] over a broadcast filter handle — identical probe
     * results; the task binary carries the handle, not the bits
@@ -144,16 +146,15 @@ object BloomDedup {
     * never matters to LEFT ANTI semantics.
     *
     * `incoming` should be cached by the caller: it feeds both branches of
-    * the split AND the sliver collect.
+    * the split AND the sliver collect. The filter arrives as a broadcast
+    * handle ([[broadcastFilter]]); its release is the caller's.
     */
   def newKeysExactPruned(incoming: DataFrame,
                          corpusKeysFor: Seq[Any] => Option[DataFrame],
                          corpusKeys: => DataFrame, keyCol: String,
-                         filter: => BloomFilter, cap: Int = 8192,
-                         filterBcast: Option[org.apache.spark.broadcast.Broadcast[Array[Byte]]] = None)
-      : DataFrame = {
-    val probe = filterBcast.fold(mightContain(filter, col(keyCol)))(
-      mightContainBroadcast(_, col(keyCol)))
+                         filterBcast: org.apache.spark.broadcast.Broadcast[Array[Byte]],
+                         cap: Int = 8192): DataFrame = {
+    val probe = mightContainBroadcast(filterBcast, col(keyCol))
     val flagged = incoming.withColumn("__might", coalesce(probe, lit(false)))
     val definiteNew = flagged.filter(!col("__might")).drop("__might")
     val candidates = flagged.filter(col("__might")).drop("__might")

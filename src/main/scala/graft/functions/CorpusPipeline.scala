@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, Scope}
 
 /** One-call training-corpus preparation: the canonical chain a 100 TB text
   * pipeline runs before tokenization, composed from the engine's oracle-
@@ -252,14 +252,12 @@ object CorpusPipeline {
     // the small dropped-id set materializes — the LSH funnel reads its
     // input from three branches (signatures, candidate shingles, anti-join)
     val deduped = cfg.nearDupThreshold.fold(exactDeduped) { th =>
-      val cached = exactDeduped
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val dupIds = try {
+      val dupIds = Scope.using { scope =>
         Checkpoints.localize(
-          MinHashLsh.nearDupPairs(cached, cfg.idCol,
+          MinHashLsh.nearDupPairs(scope.persist(exactDeduped), cfg.idCol,
               TextFunctions.charShingles(text, 5), threshold = th)
             .select(col("id_b").as(cfg.idCol)).distinct())
-      } finally cached.unpersist(false)
+      }
       exactDeduped.join(dupIds, Seq(cfg.idCol), "left_anti")
     }
 
@@ -271,14 +269,12 @@ object CorpusPipeline {
     // while the k selected ids materialize (the established lifecycle).
     val selected = cfg.dsirTarget match {
       case Some(tgt) if cfg.dsirTopK > 0 =>
-        val cached = deduped
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val keep = try {
+        val keep = Scope.using { scope =>
           Checkpoints.localize(
-            Dsir.resample(cached, cfg.idCol, text, tgt, cfg.dsirTopK,
-                cfg.dsirBuckets)
+            Dsir.resample(scope.persist(deduped), cfg.idCol, text, tgt,
+                cfg.dsirTopK, cfg.dsirBuckets)
               .select(col(cfg.idCol)))
-        } finally cached.unpersist(false)
+        }
         deduped.join(keep, Seq(cfg.idCol), "left_semi")
       case _ => deduped
     }
@@ -294,9 +290,8 @@ object CorpusPipeline {
     // then released; the final anti-join holds no cached state
     // (same lifecycle as MinHashLsh's signature cache).
     val decontaminated = cfg.decontamThreshold.fold(withSplit) { th =>
-      val cached = withSplit
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val contaminated = try {
+      val contaminated = Scope.using { scope =>
+        val cached = scope.persist(withSplit)
         Checkpoints.localize(
           NgramJaccard.bipartitePairs(
               cached.filter(col("split") === "train"),
@@ -307,7 +302,7 @@ object CorpusPipeline {
               // a full re-shuffle (round 8 measured +35% for exactly this)
               pinExchange = false)
             .select(col("id_left").as(cfg.idCol)).distinct())
-      } finally cached.unpersist(false)
+      }
       withSplit.join(contaminated, Seq(cfg.idCol), "left_anti")
     }
 
@@ -320,17 +315,16 @@ object CorpusPipeline {
     // while the (tiny) contaminated-id set localizes, then released.
     val semDecontaminated = (cfg.embeddings, cfg.semanticDecontamThreshold) match {
       case (Some(embFrame), Some(th)) =>
-        val slim = decontaminated.select(id, col("split"))
-          .join(embFrame.select(col(cfg.idCol), col(cfg.embCol)), cfg.idCol)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val contaminated = try {
+        val contaminated = Scope.using { scope =>
+          val slim = scope.persist(decontaminated.select(id, col("split"))
+            .join(embFrame.select(col(cfg.idCol), col(cfg.embCol)), cfg.idCol))
           Checkpoints.localize(
             VectorSimilarity.bipartiteThresholdLsh(
                 slim.filter(col("split") === "train"),
                 slim.filter(col("split") === "test"),
                 th, cfg.embeddingDim, idCol = cfg.idCol, vecCol = cfg.embCol)
               .select(col("id_left").as(cfg.idCol)).distinct())
-        } finally slim.unpersist(false)
+        }
         decontaminated.join(contaminated, Seq(cfg.idCol), "left_anti")
       case _ => decontaminated
     }
@@ -347,12 +341,11 @@ object CorpusPipeline {
         val src = col(cfg.sourceCol)
         val inMix = semDecontaminated
           .filter(src.isin(cfg.mixtureTargetWeights.keySet.toSeq: _*))
-        val cached = inMix
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val rates = try {
-          Sampling.mixtureWeights(Sampling.tokensBySource(cached, src, tok),
+        val rates = Scope.using { scope =>
+          Sampling.mixtureWeights(
+            Sampling.tokensBySource(scope.persist(inMix), src, tok),
             cfg.mixtureTargetWeights, budget)
-        } finally cached.unpersist(false)
+        }
         Sampling.mixtureSample(inMix, id, src, rates, defaultRate = 0.0)
       case _ if cfg.mixtureRates.nonEmpty =>
         Sampling.mixtureSample(semDecontaminated, id, col(cfg.sourceCol),
@@ -384,13 +377,14 @@ object CorpusPipeline {
     * banded signature pass — its text never moves; each stage is the
     * already-bounded primitive it names.
     *
-    * CACHE LIFETIME: the funnel persists two frames the returned frames
-    * reference, and THIS convenience wrapper discards the release handle —
-    * one corpus-keys-sized cache entry outlives every call. Fine for a
-    * one-shot batch job whose session ends; a repeated/batch-loop caller
-    * (an ingest service, a test harness, anything calling per micro-batch)
-    * must use [[prepareIncrementalManaged]] and invoke the handle once the
-    * returned frames have materialized.
+    * CACHE LIFETIME: the returned frames reference the call's frozen
+    * corpus state and batch caches, and THIS convenience wrapper discards
+    * the release handle — a corpus-keys-sized checkpoint outlives every
+    * call. Fine for a one-shot batch job whose session ends; a
+    * repeated/batch-loop caller (an ingest service, a test harness,
+    * anything calling per micro-batch) must use
+    * [[prepareIncrementalManaged]] and invoke the handle once the returned
+    * frames have materialized.
     */
   def prepareIncremental(newDocs: DataFrame, standingCorpus: DataFrame,
                          cfg: Config = Config(),
@@ -403,16 +397,12 @@ object CorpusPipeline {
   }
 
   /** [[prepareIncremental]] with an explicit cache-release handle — the
-    * [[graft.operators.PageRank.runManaged]] pattern. The funnel persists
-    * two frames (the corpus's 8-byte key projection and the batch's
-    * accepted-candidate rows) that the RETURNED frames reference; a
-    * long-lived ingest service must release them once `accepted`/`audit`
-    * have materialized, or one corpus-keys-sized entry accumulates per
-    * batch. `release()` unpersists them AT THE DATASET LEVEL — going
-    * through Spark's CacheManager, which also removes the cached-plan
-    * entries; a raw RDD-level unpersist would leave those entries alive and
-    * later structurally-identical reads (the next batch's scan of the same
-    * corpus path) would be rewritten to the STALE cached snapshot.
+    * [[graft.operators.PageRank.runManaged]] pattern. One [[Scope]] owns
+    * everything the RETURNED frames reference: the frozen corpus and the
+    * batch funnel's persisted frames. A long-lived ingest service must call
+    * `release()` once `accepted`/`audit` have materialized, or one
+    * corpus-keys-sized checkpoint accumulates per batch. A failure inside
+    * this call closes the scope before it propagates.
     */
   def prepareIncrementalManaged(newDocs: DataFrame, standingCorpus: DataFrame,
                                 cfg: Config = Config(),
@@ -429,8 +419,9 @@ object CorpusPipeline {
     val frozen = freezeCorpus(standingCorpus, cfg,
       withSignatures = againstThreshold.isDefined, numHashes, bloomFpp,
       embeddings = if (semanticAgainstThreshold.isDefined) cfg.embeddings else None)
-    try {
-      val (accepted, releaseBatch) = prepareIncrementalFrozen(
+    Scope.closeOnFailure { scope =>
+      scope.onClose(frozen.release())
+      val accepted = prepareIncrementalFrozen(scope,
         newDocs, frozen, standingCorpus, cfg, againstThreshold, numHashes, bands,
         semanticAgainstThreshold = semanticAgainstThreshold)
 
@@ -440,9 +431,7 @@ object CorpusPipeline {
       val audit = graft.operators.SnapshotDiff
         .diff(standingCorpus, composed, cfg.idCol, TextFunctions.fingerprint(text))
         .groupBy(col("status")).agg(count(lit(1)).cast("long").as("n"))
-      (accepted, audit, () => { releaseBatch(); frozen.release() })
-    } catch {
-      case t: Throwable => frozen.release(); throw t
+      (accepted, audit, () => scope.close())
     }
   }
 
@@ -450,9 +439,9 @@ object CorpusPipeline {
     * 8-byte exact-dedup keys, the MinHash signature frame (when near-dup
     * gating is on), and the Bloom prefilter over the keys — everything the
     * incremental gate needs from the corpus EXCEPT candidate-verify text.
-    * One persisted slim frame backs both projections, built in a SINGLE
-    * corpus scan; `release()` drops it (Dataset-level unpersist — the
-    * CacheManager rule [[prepareIncrementalManaged]] documents).
+    * One localCheckpointed slim frame backs both projections, built in a
+    * SINGLE corpus scan. The freeze's [[Scope]] owns it, the Bloom
+    * broadcast and the banded cache; `release()` closes that scope.
     *
     * This is the freeze-and-refresh device for streaming ingest: freeze
     * once, gate many batches against (frozen + admitted-delta) state, and
@@ -460,6 +449,7 @@ object CorpusPipeline {
     * ⌈K/N⌉ ([[graft.streaming.CorpusIngestSink.FrozenGate]]).
     */
   final class FrozenCorpus private[functions] (
+      scope: Scope,
       slim: DataFrame,
       /** corpus rows at freeze time */
       val rows: Long,
@@ -467,6 +457,12 @@ object CorpusPipeline {
         * [[bloomBcast]] where possible)
         */
       val bloom: org.apache.spark.util.sketch.BloomFilter,
+      /** the Bloom filter's serialized bytes as a BROADCAST handle: probes
+        * built from it ship the handle in the task binary, not the bits
+        * (~1.2 MB per million keys at 1% fpp — plan-embedded bytes would
+        * re-ship per stage per batch); unpersisted on [[release]]
+        */
+      val bloomBcast: org.apache.spark.broadcast.Broadcast[Array[Byte]],
       withSignatures: Boolean,
       withEmbeddings: Boolean,
       /** banded (__id, __band, __bucket) frame of the frozen signatures,
@@ -510,12 +506,6 @@ object CorpusPipeline {
         * (~10M docs for a 1000-doc batch).
         */
       private[functions] val sideDir: Option[String] = None,
-      /** the Bloom filter's serialized bytes as a BROADCAST handle: probes
-        * built from it ship the handle in the task binary, not the bits
-        * (~1.2 MB per million keys at 1% fpp — plan-embedded bytes would
-        * re-ship per stage per batch); unpersisted on [[release]]
-        */
-      val bloomBcast: Option[org.apache.spark.broadcast.Broadcast[Array[Byte]]] = None,
       /** prefix-partition count of the keys side file (`__pfx =
         * pmod(value, sidePfx)` directory column; set whenever [[sideDir]]
         * is). Directory-level partition pruning evaluates an In set
@@ -604,27 +594,14 @@ object CorpusPipeline {
       if (withEmbeddings)
         Some(slim.select(col("__id"), col("__emb")).filter(col("__emb").isNotNull))
       else None
-    def release(): Unit = {
-      // slim is a localCheckpoint (no CacheManager entry — Dataset.unpersist
-      // would no-op); free its blocks at the RDD level
-      graft.core.Checkpoints.release(slim)
-      bandedSlim.foreach(_.unpersist(blocking = false))
-      // the hot set is normally a driver-local relation (release no-ops),
-      // but a pathological freeze (most buckets hot) can leave it as a
-      // lineage-truncated checkpoint whose blocks must not outlive the gate
-      bandedHot.foreach(graft.core.Checkpoints.release)
-      // executor copies die now; the driver-side value stays reachable
-      // until this FrozenCorpus is dropped, so a straggling lazy consumer
-      // re-fetches instead of crashing (unpersist, deliberately not
-      // destroy — same contract as the cached frames)
-      bloomBcast.foreach(_.unpersist(blocking = false))
-    }
+    /** Release every freeze resource (idempotent). */
+    def release(): Unit = scope.close()
   }
 
   /** Freeze a standing corpus's gate state in ONE scan: project
     * (id, exact-key, signature) together — plus the embedding via one
-    * keyed left join when the semantic arm is on — persist the slim
-    * frame, build the Bloom filter from the cached keys. Day-0 (empty
+    * keyed left join when the semantic arm is on — localCheckpoint the
+    * slim frame, build the Bloom filter from the checkpointed keys. Day-0 (empty
     * corpus) gets an explicitly empty filter — Spark's `stat.bloomFilter`
     * NPEs on zero rows, and every probe of the empty filter correctly
     * answers "proven new". The filter is monolithic (the [[BloomDedup]]
@@ -673,53 +650,46 @@ object CorpusPipeline {
     // mid-window. Blocks die with their executor; a lost block fails the
     // batch and the next one re-freezes (same recovery story as the delta
     // checkpoint parts).
-    val slim = embeddings.fold(base)(e => base.join(
+    // Everything below registers with ONE scope, owned by the returned
+    // FrozenCorpus; any failure closes it.
+    Scope.closeOnFailure { scope =>
+      val slim = scope.checkpoint(embeddings.fold(base)(e => base.join(
         e.select(col(cfg.idCol).as("__id"), col(cfg.embCol).as("__emb")),
-        Seq("__id"), "left"))
-      .localCheckpoint()
-    try {
+        Seq("__id"), "left")))
       val rows = slim.count() // cheap: counts the checkpointed blocks
       val bloom =
         if (rows == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, bloomFpp)
         else BloomDedup.buildLongNonEmpty(slim, col("__ck"), rows, bloomFpp)
-      // broadcast BEFORE the banded block: were it built after, a
-      // broadcast failure would leak the banded cache and the localized
-      // hot set (only slim rides the outer catch)
-      val bloomBc = BloomDedup.broadcastFilter(slim.sparkSession, bloom)
+      val bloomBc = scope.broadcast(slim.sparkSession, BloomDedup.filterBytes(bloom))
       val (bnd, hot, maxNonHot) =
         if (!withBanded) (None, None, None)
         else {
           // the refresh-amortized banding: explode once, persist; the hot
           // set's groupBy shuffle (the per-batch cost center the frozen
           // gate removes) runs here, once per refresh, and materializes
-          // the banded cache as a side effect. Failure releases both via
-          // the outer catch (bandedSlim rides the same guard as slim).
+          // the banded cache as a side effect.
           // persist stays correct here: banded's plan reads slim's
           // CHECKPOINT (a LogicalRDD, no file-source path), so
           // refreshByPath cannot match this cache entry, and the columnar
           // cache format keeps the 16×-exploded frame ~3× smaller than
           // row-format checkpoint blocks would be
-          val banded = MinHashLsh.bandedFrame(
-              slim.select(col("__id"), col("__sig")).filter(col("__sig").isNotNull),
-              bands, numHashes)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val occ = banded.groupBy(col("__band"), col("__bucket"))
-              .agg(count(lit(1)).as("__bsz"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              val hotLocal = graft.core.Checkpoints.localize(
-                occ.filter(col("__bsz") > maxBucketSize)
-                  .select(col("__band"), col("__bucket")))
-              val nonHotMax = occ.filter(col("__bsz") <= maxBucketSize)
-                .agg(max(col("__bsz"))).head() match {
-                case r if r.isNullAt(0) => 0L // every bucket hot (or none)
-                case r => r.getLong(0)
-              }
-              (Some(banded), Some(hotLocal), Some(nonHotMax))
-            } finally occ.unpersist(blocking = false)
-          } catch {
-            case t: Throwable => banded.unpersist(blocking = false); throw t
+          val banded = scope.persist(MinHashLsh.bandedFrame(
+            slim.select(col("__id"), col("__sig")).filter(col("__sig").isNotNull),
+            bands, numHashes))
+          // the occupancy feeds two actions, then dies with a local scope
+          // (the freeze's would hold it as long as the banded cache)
+          Scope.using { tmp =>
+            val occ = tmp.persist(banded.groupBy(col("__band"), col("__bucket"))
+              .agg(count(lit(1)).as("__bsz")))
+            val hotLocal = scope.localize(
+              occ.filter(col("__bsz") > maxBucketSize)
+                .select(col("__band"), col("__bucket")))
+            val nonHotMax = occ.filter(col("__bsz") <= maxBucketSize)
+              .agg(max(col("__bsz"))).head() match {
+              case r if r.isNullAt(0) => 0L // every bucket hot (or none)
+              case r => r.getLong(0)
+            }
+            (Some(banded), Some(hotLocal), Some(nonHotMax))
           }
         }
       // SIDE FILES: sorted, small-row-group copies of the frozen keys and
@@ -747,56 +717,40 @@ object CorpusPipeline {
       // Together: a probe touches its pfx directory, and inside it only
       // the row groups whose range holds its value — per-batch side IO
       // ∝ probes × rowGroupRows, independent of corpus size.
-      try {
-        val (side, pfxParts) =
-          if (sideFileDir.isEmpty || rows == 0L || rows < sideFileMinRows) (None, 0)
-          else {
-            val dir = sideFileDir.get
-            val blockOpt = "parquet.block.size"
-            val blockSz = (1L << 20).toString // ~50k narrow rows per group
-            // P scales with the corpus so directories stay coarse enough
-            // to list cheaply but fine enough that a steady batch's probe
-            // set touches a strict subset of them
-            val p = math.max(8L, math.min(1024L, rows / 500000L)).toInt
-            // HASH repartition on __pfx + sort-within-partitions, NOT
-            // repartitionByRange: range partitioning's boundary sampling
-            // was a measured super-linear term in the freeze; each pfx
-            // class lands whole in one task, so every directory gets ~one
-            // file, internally sorted for stage-2 row-group pruning
-            slim.select(col("__ck"), pmod(col("__ck"), lit(p.toLong)).cast("int").as("__pfx"))
-              .repartition(p, col("__pfx"))
-              .sortWithinPartitions(col("__pfx"), col("__ck"))
-              .write.option(blockOpt, blockSz).partitionBy("__pfx")
-              .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir + "/keys")
-            // sigs stay UNPARTITIONED: ids are caller-typed (strings
-            // included, no driver-replicable pfx), and candidate ids are
-            // append-ordered so the id-sorted groups already prune tightly
-            if (withSignatures)
-              slim.select(col("__id"), col("__sig")).filter(col("__sig").isNotNull)
-                .repartition(math.max(4L, math.min(256L, rows / 4000000L)).toInt, col("__id"))
-                .sortWithinPartitions(col("__id"))
-                .write.option(blockOpt, blockSz)
-                .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir + "/sigs")
-            (Some(dir), p)
-          }
-        new FrozenCorpus(slim, rows, bloom, withSignatures, embeddings.isDefined,
-          bnd, hot, bands, numHashes, maxBucketSize, maxNonHot, side,
-          Some(bloomBc), pfxParts)
-      } catch {
-        // a failed side write (or constructor) must not leak the banded
-        // cache, the localized hot set, or the broadcast filter (slim's
-        // own unpersist rides the outer catch)
-        case t: Throwable =>
-          bnd.foreach(_.unpersist(blocking = false))
-          hot.foreach(graft.core.Checkpoints.release)
-          bloomBc.unpersist(blocking = false)
-          throw t
-      }
-    } catch {
-      // the count and the filter build are real actions — a transient
-      // failure there must not pin corpus-keys-sized checkpoint blocks
-      // nobody holds a handle to
-      case t: Throwable => graft.core.Checkpoints.release(slim); throw t
+      val (side, pfxParts) =
+        if (sideFileDir.isEmpty || rows == 0L || rows < sideFileMinRows) (None, 0)
+        else {
+          val dir = sideFileDir.get
+          val blockOpt = "parquet.block.size"
+          val blockSz = (1L << 20).toString // ~50k narrow rows per group
+          // P scales with the corpus so directories stay coarse enough
+          // to list cheaply but fine enough that a steady batch's probe
+          // set touches a strict subset of them
+          val p = math.max(8L, math.min(1024L, rows / 500000L)).toInt
+          // HASH repartition on __pfx + sort-within-partitions, NOT
+          // repartitionByRange: range partitioning's boundary sampling
+          // was a measured super-linear term in the freeze; each pfx
+          // class lands whole in one task, so every directory gets ~one
+          // file, internally sorted for stage-2 row-group pruning
+          slim.select(col("__ck"), pmod(col("__ck"), lit(p.toLong)).cast("int").as("__pfx"))
+            .repartition(p, col("__pfx"))
+            .sortWithinPartitions(col("__pfx"), col("__ck"))
+            .write.option(blockOpt, blockSz).partitionBy("__pfx")
+            .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir + "/keys")
+          // sigs stay UNPARTITIONED: ids are caller-typed (strings
+          // included, no driver-replicable pfx), and candidate ids are
+          // append-ordered so the id-sorted groups already prune tightly
+          if (withSignatures)
+            slim.select(col("__id"), col("__sig")).filter(col("__sig").isNotNull)
+              .repartition(math.max(4L, math.min(256L, rows / 4000000L)).toInt, col("__id"))
+              .sortWithinPartitions(col("__id"))
+              .write.option(blockOpt, blockSz)
+              .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir + "/sigs")
+          (Some(dir), p)
+        }
+      new FrozenCorpus(scope, slim, rows, bloom, bloomBc, withSignatures,
+        embeddings.isDefined, bnd, hot, bands, numHashes, maxBucketSize,
+        maxNonHot, side, pfxParts)
     }
   }
 
@@ -816,10 +770,12 @@ object CorpusPipeline {
     * re-freezing every batch — the equality [[graft.streaming]]'s
     * FrozenGateSpec pins — because frozen + delta IS the corpus.
     *
-    * Returns (accepted, release) — release drops this call's own caches
-    * (the batch's candidate frame), not the frozen state.
+    * Returns `accepted`. The batch's own persisted frames register with
+    * the caller's `scope`, which must stay open until `accepted` has
+    * materialized; the frozen state is not the scope's.
     */
-  def prepareIncrementalFrozen(newDocs: DataFrame, frozen: FrozenCorpus,
+  def prepareIncrementalFrozen(scope: Scope,
+                               newDocs: DataFrame, frozen: FrozenCorpus,
                                corpusDocs: => DataFrame,
                                cfg: Config = Config(),
                                againstThreshold: Option[Double] = Some(0.8),
@@ -830,101 +786,91 @@ object CorpusPipeline {
                                extraEmbs: Option[DataFrame] = None,
                                extraBanded: Option[DataFrame] = None,
                                extraBucketCounts: Option[Map[(Int, Long), Long]] = None)
-      : (DataFrame, () => Unit) = {
+      : DataFrame = {
     val text = col(cfg.textCol)
     val key = TextFunctions.md5Hash60(TextFunctions.normalized(text))
-    val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    def releaseAll(): Unit = cached.foreach(_.unpersist(blocking = false))
-    try {
-      // 1. in-batch preparation
-      val prepared = prepare(newDocs, cfg)
+    // 1. in-batch preparation
+    val prepared = prepare(newDocs, cfg)
 
-      // 2. exact dedup: Bloom split + sliver join against the FROZEN keys
-      // first (the filter covers exactly those), then a plain anti-join
-      // against the small delta — a delta row is never "proven new" by the
-      // frozen filter's fast path because that path skips only the frozen
-      // join, not this one. With freeze-time side files the sliver's keys
-      // are driver-collected and pushed into the key-sorted side scan —
-      // the exact check then reads ∝ sliver, never a corpus-keys pass.
-      val afterFrozen =
-        if (frozen.hasSideFiles) {
-          // the keyed batch feeds the split's two branches AND the sliver
-          // collect — persist the slim projection so none re-derives the
-          // in-batch prepare chain (BloomDedup.newKeysExact's plan note)
-          val keyed = prepared.withColumn("__ck", key)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          cached += keyed
-          BloomDedup.newKeysExactPruned(keyed, frozen.prunedKeys,
-            frozen.keys, "__ck", frozen.bloom,
-            filterBcast = frozen.bloomBcast)
-        } else BloomDedup.newKeysExact(
-          prepared.withColumn("__ck", key), frozen.keys, "__ck", frozen.bloom,
-          filterBcast = frozen.bloomBcast)
-      // exactNew feeds several plan branches downstream (both sides of the
-      // against-corpus signature funnel, the exact-verify shingle scan, the
-      // final anti-join), and each would otherwise re-derive the ENTIRE
-      // in-batch prepare chain from the raw scan (measured 1.6× on the warm
-      // pipeline at sf0.1). Persisted, not localized: it carries the
-      // batch's surviving TEXT rows, which must not land on the driver.
-      val exactNew = extraKeys.fold(afterFrozen)(dk =>
-          afterFrozen.join(dk.select(col("__ck")).distinct(), Seq("__ck"), "left_anti"))
-        .drop("__ck")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cached += exactNew
+    // 2. exact dedup: Bloom split + sliver join against the FROZEN keys
+    // first (the filter covers exactly those), then a plain anti-join
+    // against the small delta — a delta row is never "proven new" by the
+    // frozen filter's fast path because that path skips only the frozen
+    // join, not this one. With freeze-time side files the sliver's keys
+    // are driver-collected and pushed into the key-sorted side scan —
+    // the exact check then reads ∝ sliver, never a corpus-keys pass.
+    val afterFrozen =
+      if (frozen.hasSideFiles) {
+        // the keyed batch feeds the split's two branches AND the sliver
+        // collect — persist the slim projection so none re-derives the
+        // in-batch prepare chain (BloomDedup.newKeysExact's plan note)
+        val keyed = scope.persist(prepared.withColumn("__ck", key))
+        BloomDedup.newKeysExactPruned(keyed, frozen.prunedKeys,
+          frozen.keys, "__ck", frozen.bloomBcast)
+      } else BloomDedup.newKeysExact(
+        prepared.withColumn("__ck", key), frozen.keys, "__ck", frozen.bloom,
+        filterBcast = Some(frozen.bloomBcast))
+    // exactNew feeds several plan branches downstream (both sides of the
+    // against-corpus signature funnel, the exact-verify shingle scan, the
+    // final anti-join), and each would otherwise re-derive the ENTIRE
+    // in-batch prepare chain from the raw scan (measured 1.6× on the warm
+    // pipeline at sf0.1). Persisted, not localized: it carries the
+    // batch's surviving TEXT rows, which must not land on the driver.
+    val exactNew = scope.persist(extraKeys.fold(afterFrozen)(dk =>
+        afterFrozen.join(dk.select(col("__ck")).distinct(), Seq("__ck"), "left_anti"))
+      .drop("__ck"))
 
-      // 3. near-dup against frozen signatures ∪ delta signatures — through
-      // the frozen BANDED state when the freeze carried it (per-batch
-      // corpus-side work becomes cached probes; the banding explode and
-      // hot-bucket shuffle were paid once at freeze), identical admissions
-      // either way
-      val lexAccepted = againstThreshold.fold(exactNew) { th =>
-        val corpusSigs = frozen.sigs.getOrElse(throw new IllegalStateException(
-          "near-dup gating requested but the corpus was frozen without signatures"))
-        frozen.banded match {
-          case Some((bnd, hot)) if frozen.bandedBands == bands &&
-              frozen.bandedNumHashes == numHashes =>
-            MinHashLsh.dedupAgainstFrozenBanded(corpusSigs, bnd, hot,
-              extraSigs, corpusDocs, exactNew, cfg.idCol,
-              TextFunctions.shingleHashes(text, 5), numHashes, bands, th,
-              maxBucketSize = frozen.bandedMaxBucketSize,
-              deltaBanded = extraBanded,
-              deltaBucketCounts = extraBucketCounts,
-              frozenMaxNonHot = frozen.bandedMaxNonHot,
-              prunedSigsFor =
-                if (frozen.hasSideFiles) Some(frozen.prunedSigs _) else None)
-          case _ =>
-            val allSigs = extraSigs.fold(corpusSigs)(d => corpusSigs.unionByName(d))
-            MinHashLsh.dedupAgainstPrecomputed(allSigs, corpusDocs, exactNew,
-              cfg.idCol, TextFunctions.shingleHashes(text, 5), numHashes, bands, th)
-        }
+    // 3. near-dup against frozen signatures ∪ delta signatures — through
+    // the frozen BANDED state when the freeze carried it (per-batch
+    // corpus-side work becomes cached probes; the banding explode and
+    // hot-bucket shuffle were paid once at freeze), identical admissions
+    // either way
+    val lexAccepted = againstThreshold.fold(exactNew) { th =>
+      val corpusSigs = frozen.sigs.getOrElse(throw new IllegalStateException(
+        "near-dup gating requested but the corpus was frozen without signatures"))
+      val sh = TextFunctions.shingleHashes(text, 5)
+      val pairs = frozen.banded match {
+        case Some((bnd, hot)) if frozen.bandedBands == bands &&
+            frozen.bandedNumHashes == numHashes =>
+          MinHashLsh.bipartitePairsFrozenBanded(corpusSigs, bnd, hot,
+            extraSigs, corpusDocs, exactNew, cfg.idCol, sh, numHashes, bands, th,
+            maxBucketSize = frozen.bandedMaxBucketSize,
+            deltaBanded = extraBanded,
+            deltaBucketCounts = extraBucketCounts,
+            frozenMaxNonHot = frozen.bandedMaxNonHot,
+            prunedSigsFor =
+              if (frozen.hasSideFiles) Some(frozen.prunedSigs _) else None)
+        case _ =>
+          MinHashLsh.bipartitePairsPrecomputedLeft(
+            extraSigs.fold(corpusSigs)(corpusSigs.unionByName(_)), corpusDocs,
+            exactNew, cfg.idCol, sh, numHashes, bands, th)
       }
+      exactNew.join(pairs.select(col("id_right").as(cfg.idCol)).distinct(),
+        Seq(cfg.idCol), "left_anti")
+    }
 
-      // 4. SEMANTIC near-dup against frozen embeddings ∪ delta embeddings —
-      // the paraphrase arm the lexical funnel can't see (same motivation as
-      // the train/test semantic decontamination stage). Batch rows join
-      // their embeddings from cfg.embeddings by id; rows without one are
-      // invisible to this arm on both sides, by design. LSH-prefiltered
-      // threshold join (bipartiteThresholdLsh) — candidates from cross-side
-      // bucket collisions only, exact cosine verifies, miss probability
-      // ~9e-8 per qualifying pair at the defaults.
-      val accepted = semanticAgainstThreshold.fold(lexAccepted) { th =>
-        val corpusEmb = frozen.embs.getOrElse(throw new IllegalStateException(
-          "semantic gating requested but the corpus was frozen without embeddings"))
-        val embFrame = cfg.embeddings.getOrElse(throw new IllegalStateException(
-          "semantic gating requires cfg.embeddings for the batch side"))
-        val allEmb = extraEmbs.fold(corpusEmb)(d => corpusEmb.unionByName(d))
-        val batchEmb = lexAccepted.select(col(cfg.idCol).as("__id"))
-          .join(embFrame.select(col(cfg.idCol).as("__id"),
-            col(cfg.embCol).as("__emb")), "__id")
-        val dupIds = VectorSimilarity.bipartiteThresholdLsh(
-            allEmb, batchEmb, th, cfg.embeddingDim,
-            idCol = "__id", vecCol = "__emb")
-          .select(col("id_right").as(cfg.idCol)).distinct()
-        lexAccepted.join(dupIds, Seq(cfg.idCol), "left_anti")
-      }
-      (accepted, () => releaseAll())
-    } catch {
-      case t: Throwable => releaseAll(); throw t
+    // 4. SEMANTIC near-dup against frozen embeddings ∪ delta embeddings —
+    // the paraphrase arm the lexical funnel can't see (same motivation as
+    // the train/test semantic decontamination stage). Batch rows join
+    // their embeddings from cfg.embeddings by id; rows without one are
+    // invisible to this arm on both sides, by design. LSH-prefiltered
+    // threshold join (bipartiteThresholdLsh) — candidates from cross-side
+    // bucket collisions only, exact cosine verifies, miss probability
+    // ~9e-8 per qualifying pair at the defaults.
+    semanticAgainstThreshold.fold(lexAccepted) { th =>
+      val corpusEmb = frozen.embs.getOrElse(throw new IllegalStateException(
+        "semantic gating requested but the corpus was frozen without embeddings"))
+      val embFrame = cfg.embeddings.getOrElse(throw new IllegalStateException(
+        "semantic gating requires cfg.embeddings for the batch side"))
+      val allEmb = extraEmbs.fold(corpusEmb)(d => corpusEmb.unionByName(d))
+      val batchEmb = lexAccepted.select(col(cfg.idCol).as("__id"))
+        .join(embFrame.select(col(cfg.idCol).as("__id"),
+          col(cfg.embCol).as("__emb")), "__id")
+      val dupIds = VectorSimilarity.bipartiteThresholdLsh(
+          allEmb, batchEmb, th, cfg.embeddingDim,
+          idCol = "__id", vecCol = "__emb")
+        .select(col("id_right").as(cfg.idCol)).distinct()
+      lexAccepted.join(dupIds, Seq(cfg.idCol), "left_anti")
     }
   }
 }

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, Scope}
 import graft.functions.expressions.MinHashSignatureExpr
 
 /** MinHash + LSH near-duplicate detection at corpus scale.
@@ -109,10 +109,10 @@ object MinHashLsh {
     * Resource lifecycle: the signature frame feeds three plan branches
     * (banding + both sides of the estimate join), so it is persisted for the
     * duration of the candidate search — ~0.5 KB/doc, ~50 GB cluster-wide for
-    * a 100M-doc corpus — then explicitly unpersisted once the (small)
-    * estimate-survivor set has been materialized into a driver-local
-    * relation ([[graft.core.Checkpoints.localize]], scratch blocks freed
-    * before return).
+    * a 100M-doc corpus — and released by the call's [[graft.core.Scope]]
+    * once the (small) estimate-survivor set has been materialized into a
+    * driver-local relation ([[graft.core.Checkpoints.localize]], scratch
+    * blocks freed before return).
     * The returned frame therefore holds no cached state: downstream actions
     * re-read only the candidate documents' shingles (semi-join pushdown),
     * never the full corpus. The call does eager work proportional to
@@ -137,13 +137,12 @@ object MinHashLsh {
                          maxBucketSize: Long = 4096L): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    val sigs = df
-      .select(col(idCol).as("__id"), signatureOfHashes(shingleHashes, numHashes).as("__sig"))
-      // null shingle arrays never produced exploded rows in the aggregate
-      // formulation; keep those documents out of the banding here too
-      .filter(col("__sig").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val estimated = {
+    val estimated = Scope.using { scope =>
+      val sigs = scope.persist(df
+        .select(col(idCol).as("__id"), signatureOfHashes(shingleHashes, numHashes).as("__sig"))
+        // null shingle arrays never produced exploded rows in the aggregate
+        // formulation; keep those documents out of the banding here too
+        .filter(col("__sig").isNotNull))
       val banded0 = sigs.select(col("__id"),
         posexplode(bandBuckets(col("__sig"), bands, r)).as(Seq("__band", "__bucket")))
       // Hot-bucket guard: a bucket of B documents emits B²/2 candidate rows,
@@ -185,8 +184,7 @@ object MinHashLsh {
       // call; `localize` hands back a driver-local relation with ZERO
       // block-store footprint (checkpoint blocks freed before return),
       // falling back to a plain checkpoint only above its 4M-pair guard
-      try Checkpoints.localize(survivors)
-      finally sigs.unpersist(false)
+      Checkpoints.localize(survivors)
     }
     // Exact verification touches only candidate documents: the id
     // restriction lands ON THE SCAN as a pushed IN filter when the
@@ -224,16 +222,13 @@ object MinHashLsh {
   def bipartitePairsHashed(left: DataFrame, right: DataFrame, idCol: String,
                            shingleHashes: Column, numHashes: Int = 64,
                            bands: Int = 16, threshold: Double = 0.8,
-                           minBands: Int = 2, maxBucketSize: Long = 4096L): DataFrame = {
-    val sl = signatureFrame(left, idCol, shingleHashes, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sr = signatureFrame(right, idCol, shingleHashes, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bipartiteCore(sl, sr,
-      () => { sl.unpersist(false); sr.unpersist(false) },
-      left, right, idCol, shingleHashes, numHashes, bands, threshold,
-      minBands, maxBucketSize)
-  }
+                           minBands: Int = 2, maxBucketSize: Long = 4096L): DataFrame =
+    Scope.using { scope =>
+      val sl = scope.persist(signatureFrame(left, idCol, shingleHashes, numHashes))
+      val sr = scope.persist(signatureFrame(right, idCol, shingleHashes, numHashes))
+      bipartiteCore(scope, sl, sr, left, right, idCol, shingleHashes,
+        numHashes, bands, threshold, minBands, maxBucketSize)
+    }
 
   /** The signature projection [[bipartitePairsHashed]] builds internally:
     * (`__id`, `__sig`) with null-signature documents dropped. Exposed so a
@@ -262,13 +257,12 @@ object MinHashLsh {
                                     shingleHashes: Column, numHashes: Int = 64,
                                     bands: Int = 16, threshold: Double = 0.8,
                                     minBands: Int = 2,
-                                    maxBucketSize: Long = 4096L): DataFrame = {
-    val sr = signatureFrame(right, idCol, shingleHashes, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bipartiteCore(leftSigs, sr, () => sr.unpersist(false),
-      leftDocs, right, idCol, shingleHashes, numHashes, bands, threshold,
-      minBands, maxBucketSize)
-  }
+                                    maxBucketSize: Long = 4096L): DataFrame =
+    Scope.using { scope =>
+      val sr = scope.persist(signatureFrame(right, idCol, shingleHashes, numHashes))
+      bipartiteCore(scope, leftSigs, sr, leftDocs, right, idCol, shingleHashes,
+        numHashes, bands, threshold, minBands, maxBucketSize)
+    }
 
   /** The banded (id, band, bucket) frame of a [[signatureFrame]]-shaped
     * sigs frame — 16× row expansion, narrow columns. Freezable: computing
@@ -293,8 +287,8 @@ object MinHashLsh {
       .filter(col("__bsz") > cap)
       .select(col("__band"), col("__bucket"))
 
-  private def bipartiteCore(sl: DataFrame, sr: DataFrame,
-                            releaseSigs: () => Unit, leftDocs: => DataFrame,
+  private def bipartiteCore(scope: Scope, sl: DataFrame, sr: DataFrame,
+                            leftDocs: => DataFrame,
                             right: DataFrame, idCol: String,
                             shingleHashes: Column, numHashes: Int, bands: Int,
                             threshold: Double, minBands: Int,
@@ -309,7 +303,7 @@ object MinHashLsh {
         (bl0.join(hot, Seq("__band", "__bucket"), "left_anti"),
          br0.join(hot, Seq("__band", "__bucket"), "left_anti"))
       }
-    bipartiteTail(bl, br, sl, sr, releaseSigs, leftDocs, right, idCol,
+    bipartiteTail(scope, bl, br, sl, sr, leftDocs, right, idCol,
       shingleHashes, numHashes, threshold, minBands, bands)
   }
 
@@ -325,12 +319,12 @@ object MinHashLsh {
     * the per-batch path at any cadence (FrozenGateSpec pins the equality;
     * `MinHashLshSpec` pins the hot-bucket crossing case).
     */
-  private def bipartiteCoreFrozenBanded(
+  private def bipartiteCoreFrozenBanded(scope: Scope,
       slFrozen: DataFrame, frozenBanded: DataFrame, frozenHot: DataFrame,
       deltaSigs: Option[DataFrame], deltaBanded: Option[DataFrame],
       deltaBucketCounts: Option[Map[(Int, Long), Long]],
       frozenMaxNonHot: Option[Long],
-      sr: DataFrame, releaseSigs: () => Unit,
+      sr: DataFrame,
       leftDocs: => DataFrame, right: DataFrame, idCol: String,
       shingleHashes: Column, numHashes: Int, bands: Int, threshold: Double,
       minBands: Int, maxBucketSize: Long,
@@ -341,8 +335,8 @@ object MinHashLsh {
     val blD = deltaBanded.orElse(deltaSigs.map(d => bandedFrame(d, bands, numHashes)))
     val br0 = bandedFrame(sr, bands, numHashes)
     val bl0 = blD.fold(frozenBanded)(frozenBanded.unionByName(_))
-    val (bl, br, releaseHot) =
-      if (maxBucketSize <= 0L) (bl0, br0, () => ())
+    val (bl, br) =
+      if (maxBucketSize <= 0L) (bl0, br0)
       else {
         // buckets hot over frozen ∪ delta = {frozen count > cap} ∪
         // {delta-touched: frozen + delta count > cap} — the second term is
@@ -387,19 +381,17 @@ object MinHashLsh {
         // ONE action: the full hot set is tiny (pathological buckets only),
         // so localize it — both anti-joins then broadcast a precomputed
         // LocalRelation instead of re-running the crossing/count subplans
-        // once per consuming join (measured 2× the whole funnel's cost)
-        val hot = Checkpoints.localize(
+        // once per consuming join (measured 2× the whole funnel's cost).
+        // Above localize's row guard (pathological corpora where most
+        // buckets are hot) the scope releases the fallback checkpoint; the
+        // hot frame is fully consumed by bipartiteTail's eager survivor
+        // materialization, and the frame it RETURNS references only the
+        // localized survivors and the candidate text scans.
+        val hot = scope.localize(
           crossing.fold(frozenHot)(frozenHot.union(_))
             .union(hotBucketsOf(br0, maxBucketSize)).distinct())
         (bl0.join(hot, Seq("__band", "__bucket"), "left_anti"),
-         br0.join(hot, Seq("__band", "__bucket"), "left_anti"),
-         // localize falls back to a bare localCheckpoint above its row
-         // guard (pathological corpora where most buckets are hot) — those
-         // blocks must die with this call, not with the session. The hot
-         // frame is fully consumed by bipartiteTail's eager survivor
-         // materialization; the frame it RETURNS references only the
-         // localized survivors and the candidate text scans.
-         () => Checkpoints.release(hot))
+         br0.join(hot, Seq("__band", "__bucket"), "left_anti"))
       }
     val sl = deltaSigs.fold(slFrozen)(slFrozen.unionByName(_))
     // the estimate stage's corpus-side sigs, pruned to the candidate ids
@@ -407,16 +399,18 @@ object MinHashLsh {
     // always in one of the two)
     val slSelect = prunedSigsFor.map(f => (ids: Seq[Any]) =>
       f(ids).map(fp => deltaSigs.fold(fp)(fp.unionByName(_))))
-    try bipartiteTail(bl, br, sl, sr, releaseSigs, leftDocs, right, idCol,
+    bipartiteTail(scope, bl, br, sl, sr, leftDocs, right, idCol,
       shingleHashes, numHashes, threshold, minBands, bands, slSelect)
-    finally releaseHot()
   }
 
   /** The funnel's shared tail: banded collision candidates → signature-
     * agreement estimate → exact-Jaccard verify with candidate-id pushdown.
+    * Scratch frames register with the caller's `scope`; the returned frame
+    * references only the localized survivors and the text sources, so the
+    * scope may close as soon as this returns.
     */
-  private def bipartiteTail(bl: DataFrame, br: DataFrame, sl: DataFrame,
-                            sr: DataFrame, releaseSigs: () => Unit,
+  private def bipartiteTail(scope: Scope, bl: DataFrame, br: DataFrame,
+                            sl: DataFrame, sr: DataFrame,
                             leftDocs: => DataFrame, right: DataFrame,
                             idCol: String, shingleHashes: Column,
                             numHashes: Int, threshold: Double,
@@ -437,11 +431,9 @@ object MinHashLsh {
       // estimate stage then reads ∝ candidates instead of streaming the
       // whole cached sig frame through the join. One extra action; the
       // over-cap / checkpoint-fallback path keeps the full sl join.
-      var candLocal: Option[DataFrame] = None
       val (candEff, slEff) = slSelect match {
         case Some(f) =>
-          val cl = Checkpoints.localize(cand)
-          candLocal = Some(cl)
+          val cl = scope.localize(cand)
           val pruned = localizedIds(cl, Seq("id_left"), CandidateIdPushdownCap)
             .flatMap(f)
           (cl, pruned.getOrElse(sl))
@@ -455,8 +447,7 @@ object MinHashLsh {
             .cast("double") / numHashes)
         .filter(col("__est") >= threshold - 0.2)
         .select(col("id_left"), col("id_right"))
-      try Checkpoints.localize(survivors)
-      finally { releaseSigs(); candLocal.foreach(Checkpoints.release) }
+      Checkpoints.localize(survivors)
     }
     // No estimate survivors → return the (empty) result WITHOUT evaluating
     // `leftDocs`: even constructing the verify join would touch the left
@@ -507,21 +498,6 @@ object MinHashLsh {
     incoming.join(dupIds, Seq(idCol), "left_anti")
   }
 
-  /** [[dedupAgainst]] with the existing corpus supplied as precomputed
-    * signatures plus a lazy text source — the frozen-corpus ingest shape
-    * ([[bipartitePairsPrecomputedLeft]] for the funnel mechanics). Same
-    * output as [[dedupAgainst]] when the signatures match the corpus.
-    */
-  def dedupAgainstPrecomputed(existingSigs: DataFrame, existingDocs: => DataFrame,
-                              incoming: DataFrame, idCol: String,
-                              shingleHashes: Column, numHashes: Int = 64,
-                              bands: Int = 16, threshold: Double = 0.8): DataFrame = {
-    val dupIds = bipartitePairsPrecomputedLeft(existingSigs, existingDocs,
-        incoming, idCol, shingleHashes, numHashes, bands, threshold)
-      .select(col("id_right").as(idCol)).distinct()
-    incoming.join(dupIds, Seq(idCol), "left_anti")
-  }
-
   /** [[bipartitePairsPrecomputedLeft]] with the corpus side's BANDED frame
     * and hot-bucket set also precomputed (one banding explode + one
     * hot-bucket shuffle per REFRESH instead of per batch — the per-batch
@@ -545,43 +521,14 @@ object MinHashLsh {
                                  deltaBucketCounts: Option[Map[(Int, Long), Long]] = None,
                                  frozenMaxNonHot: Option[Long] = None,
                                  prunedSigsFor: Option[Seq[Any] => Option[DataFrame]] = None)
-      : DataFrame = {
-    val sr = signatureFrame(right, idCol, shingleHashes, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the hot-set localize runs BEFORE the tail's release point: a failure
-    // there must still drop the batch signatures
-    try bipartiteCoreFrozenBanded(frozenSigs, frozenBanded, frozenHot, deltaSigs,
-      deltaBanded, deltaBucketCounts, frozenMaxNonHot,
-      sr, () => sr.unpersist(false), leftDocs, right, idCol, shingleHashes,
-      numHashes, bands, threshold, minBands, maxBucketSize, prunedSigsFor)
-    catch { case t: Throwable => sr.unpersist(false); throw t }
-  }
-
-  /** [[dedupAgainstPrecomputed]] over frozen banded state — the ingest
-    * gate's steady-state path ([[bipartitePairsFrozenBanded]]).
-    */
-  def dedupAgainstFrozenBanded(frozenSigs: DataFrame, frozenBanded: DataFrame,
-                               frozenHot: DataFrame,
-                               deltaSigs: Option[DataFrame],
-                               existingDocs: => DataFrame, incoming: DataFrame,
-                               idCol: String, shingleHashes: Column,
-                               numHashes: Int = 64, bands: Int = 16,
-                               threshold: Double = 0.8,
-                               maxBucketSize: Long = 4096L,
-                               deltaBanded: Option[DataFrame] = None,
-                               deltaBucketCounts: Option[Map[(Int, Long), Long]] = None,
-                               frozenMaxNonHot: Option[Long] = None,
-                               prunedSigsFor: Option[Seq[Any] => Option[DataFrame]] = None)
-      : DataFrame = {
-    val dupIds = bipartitePairsFrozenBanded(frozenSigs, frozenBanded,
-        frozenHot, deltaSigs, existingDocs, incoming, idCol, shingleHashes,
-        numHashes, bands, threshold, maxBucketSize = maxBucketSize,
-        deltaBanded = deltaBanded, deltaBucketCounts = deltaBucketCounts,
-        frozenMaxNonHot = frozenMaxNonHot,
-        prunedSigsFor = prunedSigsFor)
-      .select(col("id_right").as(idCol)).distinct()
-    incoming.join(dupIds, Seq(idCol), "left_anti")
-  }
+      : DataFrame =
+    Scope.using { scope =>
+      val sr = scope.persist(signatureFrame(right, idCol, shingleHashes, numHashes))
+      bipartiteCoreFrozenBanded(scope, frozenSigs, frozenBanded, frozenHot,
+        deltaSigs, deltaBanded, deltaBucketCounts, frozenMaxNonHot, sr,
+        leftDocs, right, idCol, shingleHashes, numHashes, bands, threshold,
+        minBands, maxBucketSize, prunedSigsFor)
+    }
 
   /** Dedup a corpus by near-duplicate clustering: drop every document that
     * has a near-dup with a smaller id (cheap transitive-lite survivor rule —

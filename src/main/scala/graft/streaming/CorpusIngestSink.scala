@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Scope
 import graft.functions.CorpusPipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
@@ -18,25 +19,21 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * replay-idempotence property `CorpusPipelineSpec` pins at the batch
   * level. Either way the corpus ends correct.
   *
-  * Cache lifecycle: [[CorpusPipeline.prepareIncrementalManaged]] holds the
-  * frozen corpus state as a lineage-truncated localCheckpoint (r19: any
-  * CacheManager-registered plan that READS the target path is invalidated
-  * by the sink's own appends via refreshByPath — see [[CorpusPipeline.freezeCorpus]])
-  * plus per-call cached frames, and hands back a release handle; the sink
-  * invokes it once the batch's write has committed, so state is flat
-  * across any number of micro-batches (spec-asserted). Cached-PLAN frames
-  * release through Dataset.unpersist (CacheManager — the entries die with
-  * the blocks); checkpointed frames through Checkpoints.release. Scoped to
-  * this call's own frames, never a global cache diff, so concurrent
-  * queries on the same session are untouched.
+  * Resource lifecycle: every persist, localCheckpoint and broadcast the
+  * gate creates has ONE owner, a [[graft.core.Scope]], which releases it by
+  * its kind's rule. [[processBatch]] closes the scope behind
+  * [[CorpusPipeline.prepareIncrementalManaged]]'s handle once the write
+  * has committed; [[FrozenGate]] closes one per gated batch and one per
+  * refresh window. State is flat across any number of micro-batches and
+  * after any failure (spec-asserted), and a scope holds only its own
+  * call's frames, so concurrent queries on the session are untouched.
   *
-  * 100 TB posture: per batch the standing corpus contributes one keys-only
-  * scan (Bloom build) and one signature scan (the banded funnel) — its text
-  * never shuffles; everything batch-sided is bounded by the batch. For
-  * corpora where even those two scans dominate, freeze the filter and
-  * signatures between batches ([[graft.functions.BloomDedup]] /
-  * `MinHashLsh.dedupAgainst`'s own building blocks) and refresh on a cadence
-  * — the classic trade of staleness for scan count.
+  * 100 TB posture: per batch, [[processBatch]] scans the standing corpus
+  * once (keys and signatures in one fused freeze scan); its text never
+  * shuffles, and everything batch-sided is bounded by the batch. Where
+  * that scan dominates, [[FrozenGate]] freezes the gate state once per
+  * `refreshEvery` batches and gates the batches in between against the
+  * frozen state plus the admitted delta.
   */
 object CorpusIngestSink {
 
@@ -295,8 +292,8 @@ object CorpusIngestSink {
     }
   }
 
-  /** FREEZE-AND-REFRESH ingestion: the 100 TB posture [[processBatch]]'s
-    * doc promises, made real. Per-batch gating scans the standing corpus
+  /** FREEZE-AND-REFRESH ingestion, the 100 TB posture of the object doc.
+    * Per-batch gating scans the standing corpus
     * once per micro-batch (the [[CorpusPipeline.freezeCorpus]] keys+
     * signatures pass); when the corpus dwarfs the batches, that scan IS
     * the ingest cost. This gate freezes the corpus's gate state once,
@@ -422,9 +419,12 @@ object CorpusIngestSink {
     private val deltaDriverRows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     private var deltaSchema: org.apache.spark.sql.types.StructType = null
     private val deltaBandedRows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+    /** owns the frozen corpus and over-budget fold checkpoints; closed by [[close]] */
+    private val window = new Scope
     /** over-budget folds only: executor-resident localCheckpoint frames
-      * (released on close). The rare fallback — the combined delta plan
-      * grows only with THESE, never with in-budget admissions.
+      * (owned by [[window]]) that the delta unions. The rare fallback —
+      * the combined delta plan grows only with THESE, never with
+      * in-budget admissions.
       */
     private[streaming] val deltaParts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     /** the listing the gate last VALIDATED — the refresh-time snapshot
@@ -535,31 +535,28 @@ object CorpusIngestSink {
 
     private def gateAndAppend(spark: SparkSession, batch: DataFrame,
                               reGated: Boolean): Long = {
-      val (accepted0, releaseBatch) = CorpusPipeline.prepareIncrementalFrozen(
-        batch, frozen, corpusReader(spark, targetDir, batch), cfg,
-        againstThreshold, numHashes, bands, deltaKeys, deltaSigs,
-        semanticAgainstThreshold, deltaEmbs,
-        extraBanded = if (deltaDriverResident) deltaBanded else None,
-        extraBucketCounts =
-          if (deltaDriverResident) Some(deltaBucketCounts.toMap) else None)
-      // the batch's survivors feed the write AND the delta fold — and the
-      // fold runs AFTER the gate's own append, whose refreshByPath
-      // invalidates every CacheManager entry whose plan reads the target
-      // (r19: a persisted `accepted` made the post-append fold re-execute
-      // the whole gate funnel INCLUDING the corpus-side scans — ~430 s of
-      // task time per admitted batch at 400k docs). A localCheckpoint has
-      // no CacheManager entry, so the append cannot invalidate it, and it
-      // pins the gated snapshot the way the fold semantically requires.
-      // The checkpoint is eager, so the whole funnel runs HERE, before the
-      // try below: a failure must release this batch's caches itself. (The
-      // failed checkpoint's own RDD is unreachable; the context's weak
-      // registry drops it once collected.)
-      val accepted =
-        try accepted0.localCheckpoint()
-        catch { case t: Throwable => releaseBatch(); throw t }
-      try {
+      // one scope owns this attempt's funnel frames and survivors; a
+      // re-gate (None) recurses only after it has closed
+      val admitted: Option[Long] = Scope.using { scope =>
+        // the batch's survivors feed the write AND the delta fold — and
+        // the fold runs AFTER the gate's own append, whose refreshByPath
+        // invalidates every CacheManager entry whose plan reads the target
+        // (r19: a persisted `accepted` made the post-append fold re-execute
+        // the whole gate funnel INCLUDING the corpus-side scans — ~430 s of
+        // task time per admitted batch at 400k docs). A localCheckpoint has
+        // no CacheManager entry, so the append cannot invalidate it, and it
+        // pins the gated snapshot the way the fold semantically requires.
+        // The checkpoint is eager: the whole funnel runs here.
+        val accepted = scope.checkpoint(CorpusPipeline.prepareIncrementalFrozen(
+          scope, batch, frozen, corpusReader(spark, targetDir, batch), cfg,
+          againstThreshold, numHashes, bands, deltaKeys, deltaSigs,
+          semanticAgainstThreshold, deltaEmbs,
+          extraBanded = if (deltaDriverResident) deltaBanded else None,
+          extraBucketCounts =
+            if (deltaDriverResident) Some(deltaBucketCounts.toMap) else None))
         val n = accepted.count()
-        if (n > 0L) {
+        if (n == 0L) Some(0L)
+        else {
           preAppendTap()
           // pre-append re-check: the pre-gate fingerprint check and this
           // append are not atomic, and a co-write landing BETWEEN them used
@@ -574,140 +571,146 @@ object CorpusIngestSink {
           // listing plus own files, never this one, so the NEXT batch's
           // pre-gate check detects it.
           val preEntries = listingEntries(spark, targetDir)
-          if (onExternalWrite != ExternalWriterPolicy.Ignore) {
+          val stale = onExternalWrite != ExternalWriterPolicy.Ignore && {
             val (topFp, nestedFp) = fingerprintsOf(preEntries)
             if (nestedFp != expectedNestedFingerprint)
               throw nestedWriteError("between gate and append")
-            if (topFp != expectedFingerprint && !reGated) {
-              externalWriteDetected(spark, batch, "between gate and append")
-              // release THIS attempt's caches before re-gating (the
-              // enclosing finally would only run after the retry returns,
-              // overlapping two attempts' cached frames; both releases
-              // are idempotent unpersists, so the finally stays harmless)
-              releaseBatch()
-              graft.core.Checkpoints.release(accepted)
-              return gateAndAppend(spark, batch, reGated = true)
-            }
+            topFp != expectedFingerprint && !reGated
           }
-          // sized append off the already-counted cache ([[appendFiles]]):
-          // per-partition files would decay the corpus the freeze re-reads
-          accepted.coalesce(appendFiles(n))
-            .write.mode(SaveMode.Append).parquet(targetDir)
-          // next expected = the last VALIDATED listing ∪ the files this
-          // append added (post-append names not in the pre-append
-          // listing). Using the validated base — not preEntries — keeps a
-          // co-write that landed between a Refresh-policy re-freeze and
-          // this (re-gated, check-skipped) append OUT of the expected
-          // set, so the next batch's pre-gate check detects and absorbs
-          // it. An external file landing DURING the append itself is
-          // still misattributed as our own (the one remaining blind
-          // window); an in-place MODIFICATION of a validated file is
-          // still caught, because the expected set keeps the validated
-          // attributes for pre-existing names.
-          val preNames = preEntries.iterator.map(_._1).toSet
-          val ownEntries = expectedEntries ++
-            listingEntries(spark, targetDir).filterNot(e => preNames(e._1))
-          try {
-          // delta fold: ONE localized projection carries the admitted
-          // rows' exact keys, signatures, and (when the semantic arm is
-          // on) embeddings together — key/sig/emb frames are then free
-          // column slices of the same local relation, so the per-batch
-          // bookkeeping is a single localCheckpoint job, not three (the
-          // fixed-overhead term that dominates the gate below the
-          // corpus-size crossover; see the FrozenGate scaladoc)
-          import org.apache.spark.sql.functions.{col => c}
-          val text = c(cfg.textCol)
-          val sigExpr = graft.functions.MinHashLsh.signatureOfHashes(
-            graft.functions.TextFunctions.shingleHashes(text, 5), numHashes)
-          val nullArr = org.apache.spark.sql.functions.lit(null)
-            .cast("array<bigint>")
-          val base = accepted.select(c(cfg.idCol).as("__id"),
-            graft.functions.TextFunctions.md5Hash60(
-              graft.functions.TextFunctions.normalized(text)).as("__ck"),
-            (if (againstThreshold.isDefined) sigExpr else nullArr).as("__sig"),
-            // the row's band buckets ride the same projection — the
-            // driver-side delta banding below costs zero extra jobs
-            (if (againstThreshold.isDefined)
-               graft.functions.MinHashLsh.bandBuckets(sigExpr, bands,
-                 numHashes / bands)
-             else nullArr).as("__bb"))
-          val withEmb =
-            if (semanticAgainstThreshold.isDefined)
-              base.join(cfg.embeddings.get.select(c(cfg.idCol).as("__id"),
-                c(cfg.embCol).as("__emb")), Seq("__id"), "left")
-            else base
-          // `accepted` is persisted and already counted, so when the batch
-          // is driver-safe the fold is ONE collect off the cache into a
-          // local relation. The collect guard is BYTE-aware, not row-count:
-          // a collected row costs rowShell + ~32 B per boxed signature/
-          // embedding element ([[estimatedDeltaRowBytes]]), so the cap is
-          // foldDriverBytes (default 256 MB) over that width — ~120k rows
-          // with a 64-hash signature, ~10k with a dim-768 embedding
-          // attached. Above it the fold stays executor-resident as an
-          // eager localCheckpoint (lineage-truncated for the same
-          // mutated-target reason, released through deltaParts on close).
-          val maxFoldRows = foldCollectMaxRows(foldDriverBytes,
-            againstThreshold.isDefined, numHashes,
-            semanticAgainstThreshold.isDefined, cfg.embeddingDim, bands)
-          val folded = foldTap(withEmb)
-          val collected = if (n <= maxFoldRows) folded.collect() else null
-          if (collected != null) {
-            if (deltaSchema == null) deltaSchema = folded.schema
-            deltaDriverRows ++= collected
-            if (deltaDriverResident && againstThreshold.isDefined) {
-              // driver-side banding of the admitted rows: the collected
-              // __bb arrays become (id, band, bucket) rows plus an exact
-              // per-bucket occupancy map — the funnel uses the map to
-              // prove most batches cannot push any bucket over the hot cap
-              // and to probe frozen counts for exactly the touched buckets
-              // when one might
-              val idIdx = folded.schema.fieldIndex("__id")
-              val bbIdx = folded.schema.fieldIndex("__bb")
-              collected.foreach { r =>
-                if (!r.isNullAt(bbIdx)) {
-                  val bb = r.getSeq[Long](bbIdx)
-                  var b = 0
-                  while (b < bb.length) {
-                    deltaBandedRows += org.apache.spark.sql.Row(r.get(idIdx), b, bb(b))
-                    val k = (b, bb(b))
-                    deltaBucketCounts.update(k, deltaBucketCounts.getOrElse(k, 0L) + 1L)
-                    b += 1
-                  }
+          if (stale) {
+            externalWriteDetected(spark, batch, "between gate and append")
+            None
+          } else {
+            appendAndFold(spark, accepted, n, preEntries)
+            Some(n)
+          }
+        }
+      }
+      admitted match {
+        case None => gateAndAppend(spark, batch, reGated = true)
+        case Some(n) =>
+          sinceRefresh += 1
+          GraftMetrics.inc(GraftMetrics.IngestBatches)
+          GraftMetrics.inc(GraftMetrics.IngestRowsAdmitted, n)
+          n
+      }
+    }
+
+    /** Append the `n` checkpointed survivors and fold them into the delta;
+      * `preEntries` is the listing validated just before the append.
+      */
+    private def appendAndFold(spark: SparkSession, accepted: DataFrame, n: Long,
+                              preEntries: Seq[(String, Long, Long)]): Unit = {
+      // sized append off the already-counted cache ([[appendFiles]]):
+      // per-partition files would decay the corpus the freeze re-reads
+      accepted.coalesce(appendFiles(n))
+        .write.mode(SaveMode.Append).parquet(targetDir)
+      // next expected = the last VALIDATED listing ∪ the files this
+      // append added (post-append names not in the pre-append
+      // listing). Using the validated base — not preEntries — keeps a
+      // co-write that landed between a Refresh-policy re-freeze and
+      // this (re-gated, check-skipped) append OUT of the expected
+      // set, so the next batch's pre-gate check detects and absorbs
+      // it. An external file landing DURING the append itself is
+      // still misattributed as our own (the one remaining blind
+      // window); an in-place MODIFICATION of a validated file is
+      // still caught, because the expected set keeps the validated
+      // attributes for pre-existing names.
+      val preNames = preEntries.iterator.map(_._1).toSet
+      val ownEntries = expectedEntries ++
+        listingEntries(spark, targetDir).filterNot(e => preNames(e._1))
+      try {
+        // delta fold: ONE localized projection carries the admitted
+        // rows' exact keys, signatures, and (when the semantic arm is
+        // on) embeddings together — key/sig/emb frames are then free
+        // column slices of the same local relation, so the per-batch
+        // bookkeeping is a single localCheckpoint job, not three (the
+        // fixed-overhead term that dominates the gate below the
+        // corpus-size crossover; see the FrozenGate scaladoc)
+        import org.apache.spark.sql.functions.{col => c}
+        val text = c(cfg.textCol)
+        val sigExpr = graft.functions.MinHashLsh.signatureOfHashes(
+          graft.functions.TextFunctions.shingleHashes(text, 5), numHashes)
+        val nullArr = org.apache.spark.sql.functions.lit(null)
+          .cast("array<bigint>")
+        val base = accepted.select(c(cfg.idCol).as("__id"),
+          graft.functions.TextFunctions.md5Hash60(
+            graft.functions.TextFunctions.normalized(text)).as("__ck"),
+          (if (againstThreshold.isDefined) sigExpr else nullArr).as("__sig"),
+          // the row's band buckets ride the same projection — the
+          // driver-side delta banding below costs zero extra jobs
+          (if (againstThreshold.isDefined)
+             graft.functions.MinHashLsh.bandBuckets(sigExpr, bands,
+               numHashes / bands)
+           else nullArr).as("__bb"))
+        val withEmb =
+          if (semanticAgainstThreshold.isDefined)
+            base.join(cfg.embeddings.get.select(c(cfg.idCol).as("__id"),
+              c(cfg.embCol).as("__emb")), Seq("__id"), "left")
+          else base
+        // `accepted` is checkpointed and already counted, so when the
+        // batch is driver-safe the fold is ONE collect off its blocks into
+        // a local relation. The collect guard is BYTE-aware, not row-count:
+        // a collected row costs rowShell + ~32 B per boxed signature/
+        // embedding element ([[estimatedDeltaRowBytes]]), so the cap is
+        // foldDriverBytes (default 256 MB) over that width — ~120k rows
+        // with a 64-hash signature, ~10k with a dim-768 embedding
+        // attached. Above it the fold stays executor-resident as an
+        // eager localCheckpoint (lineage-truncated for the same
+        // mutated-target reason) owned by the refresh-window scope.
+        val maxFoldRows = foldCollectMaxRows(foldDriverBytes,
+          againstThreshold.isDefined, numHashes,
+          semanticAgainstThreshold.isDefined, cfg.embeddingDim, bands)
+        val folded = foldTap(withEmb)
+        val collected = if (n <= maxFoldRows) folded.collect() else null
+        if (collected != null) {
+          if (deltaSchema == null) deltaSchema = folded.schema
+          deltaDriverRows ++= collected
+          if (deltaDriverResident && againstThreshold.isDefined) {
+            // driver-side banding of the admitted rows: the collected
+            // __bb arrays become (id, band, bucket) rows plus an exact
+            // per-bucket occupancy map — the funnel uses the map to
+            // prove most batches cannot push any bucket over the hot cap
+            // and to probe frozen counts for exactly the touched buckets
+            // when one might
+            val idIdx = folded.schema.fieldIndex("__id")
+            val bbIdx = folded.schema.fieldIndex("__bb")
+            collected.foreach { r =>
+              if (!r.isNullAt(bbIdx)) {
+                val bb = r.getSeq[Long](bbIdx)
+                var b = 0
+                while (b < bb.length) {
+                  deltaBandedRows += org.apache.spark.sql.Row(r.get(idIdx), b, bb(b))
+                  val k = (b, bb(b))
+                  deltaBucketCounts.update(k, deltaBucketCounts.getOrElse(k, 0L) + 1L)
+                  b += 1
                 }
               }
             }
-          } else {
-            // a checkpointed fold means the delta is no longer fully
-            // driver-resident: drop the driver-side banding state and let
-            // the funnel re-derive delta banding from the sig frames
-            deltaParts += folded.localCheckpoint()
-            deltaDriverResident = false
-            deltaBandedRows.clear()
-            deltaBucketCounts.clear()
           }
-          rebuildDelta(spark)
-          // the append itself moved the listing — own writes must not trip
-          // the external-writer check on the next batch
-          setExpected(ownEntries)
-          } catch {
-            case t: Throwable =>
-              // the append COMMITTED but the delta didn't absorb it:
-              // frozen + delta is now behind the target, and a retry
-              // through this same instance would see its own rows as
-              // proven-new and append duplicates. Drop all gate state —
-              // the next batch re-freezes from the target, restoring
-              // replay idempotence for in-instance retries.
-              close()
-              throw t
-          }
+        } else {
+          // a checkpointed fold means the delta is no longer fully
+          // driver-resident: drop the driver-side banding state and let
+          // the funnel re-derive delta banding from the sig frames
+          deltaParts += window.checkpoint(folded)
+          deltaDriverResident = false
+          deltaBandedRows.clear()
+          deltaBucketCounts.clear()
         }
-        sinceRefresh += 1
-        GraftMetrics.inc(GraftMetrics.IngestBatches)
-        GraftMetrics.inc(GraftMetrics.IngestRowsAdmitted, n)
-        n
-      } finally {
-        releaseBatch()
-        graft.core.Checkpoints.release(accepted)
+        rebuildDelta(spark)
+        // the append itself moved the listing — own writes must not trip
+        // the external-writer check on the next batch
+        setExpected(ownEntries)
+      } catch {
+        case t: Throwable =>
+          // the append COMMITTED but the delta didn't absorb it:
+          // frozen + delta is now behind the target, and a retry
+          // through this same instance would see its own rows as
+          // proven-new and append duplicates. Drop all gate state —
+          // the next batch re-freezes from the target, restoring
+          // replay idempotence for in-instance retries.
+          close()
+          throw t
       }
     }
 
@@ -728,7 +731,7 @@ object CorpusIngestSink {
         compact(spark, targetDir, compactPartitions)
         GraftMetrics.inc(GraftMetrics.IngestCompactions)
       }
-      frozen = CorpusPipeline.freezeCorpus(
+      val fresh = CorpusPipeline.freezeCorpus(
         corpusReader(spark, targetDir, schemaDonor), cfg,
         withSignatures = againstThreshold.isDefined, numHashes, bloomFpp,
         embeddings =
@@ -740,6 +743,8 @@ object CorpusIngestSink {
         withBanded = againstThreshold.isDefined, bands = bands,
         sideFileDir = Some(targetDir.stripSuffix("/") + "__gatestate"),
         sideFileMinRows = sideFileMinRows)
+      window.onClose(fresh.release())
+      frozen = fresh
       sinceRefresh = 0
       refreshes += 1
       // recorded AFTER the freeze materialized (freezeCorpus counts the
@@ -754,8 +759,7 @@ object CorpusIngestSink {
       * next batch, so close() mid-stream is safe (just wasteful).
       */
     def close(): Unit = {
-      if (frozen != null) { frozen.release(); frozen = null }
-      deltaParts.foreach(graft.core.Checkpoints.release)
+      frozen = null
       deltaParts.clear()
       deltaKeys = None
       deltaSigs = None
@@ -766,6 +770,7 @@ object CorpusIngestSink {
       deltaSchema = null
       deltaBucketCounts.clear()
       deltaDriverResident = true
+      window.close()
     }
   }
 }

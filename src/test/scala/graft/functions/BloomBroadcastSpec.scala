@@ -45,14 +45,15 @@ class BloomBroadcastSpec extends SparkSpec {
       nearDupThreshold = None, decontamThreshold = None)
     val frozen = CorpusPipeline.freezeCorpus(corpus, cfg, withBanded = true)
     try {
-      assert(frozen.bloomBcast.isDefined, "every freeze must broadcast its filter")
+      assert(frozen.bloomBcast.value.nonEmpty, "every freeze must broadcast its filter")
       val batch = (Seq(1L -> corpus.collect()(0).getString(1)) ++
         Seq(900L -> "a completely novel document that matches nothing in the corpus"))
         .map { case (id, tx) => (id, tx, "web") }.toDF("doc_id", "text", "source")
-      val (accepted, release) = CorpusPipeline.prepareIncrementalFrozen(
-        batch, frozen, corpus, cfg, Some(0.8))
-      try assert(accepted.select("doc_id").as[Long].collect().toSeq == Seq(900L))
-      finally release()
+      graft.core.Scope.using { scope =>
+        val accepted = CorpusPipeline.prepareIncrementalFrozen(
+          scope, batch, frozen, corpus, cfg, Some(0.8))
+        assert(accepted.select("doc_id").as[Long].collect().toSeq == Seq(900L))
+      }
     } finally frozen.release()
   }
 }

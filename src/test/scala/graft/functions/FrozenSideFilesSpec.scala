@@ -46,10 +46,11 @@ class FrozenSideFilesSpec extends SparkSpec {
   private def acceptedIds(frozen: CorpusPipeline.FrozenCorpus,
                           extraKeys: Option[DataFrame] = None,
                           extraSigs: Option[DataFrame] = None): Seq[Long] = {
-    val (accepted, release) = CorpusPipeline.prepareIncrementalFrozen(
-      batch, frozen, corpus, cfg, Some(0.8), 64, 16, extraKeys, extraSigs)
-    try accepted.select("doc_id").as[Long].collect().toSeq.sorted
-    finally release()
+    graft.core.Scope.using { scope =>
+      CorpusPipeline.prepareIncrementalFrozen(scope,
+        batch, frozen, corpus, cfg, Some(0.8), 64, 16, extraKeys, extraSigs)
+        .select("doc_id").as[Long].collect().toSeq.sorted
+    }
   }
 
   test("side files are written above the row threshold, skipped below, and prune bit-identically") {
@@ -121,6 +122,7 @@ class FrozenSideFilesSpec extends SparkSpec {
     val corpusKeys = spark.range(1000)
       .select(xxhash64(col("id")).as("__ck"))
     val bloom = BloomDedup.buildLong(corpusKeys, col("__ck"), 1000L, 0.01)
+    val bcast = BloomDedup.broadcastFilter(spark, bloom)
     // incoming: 100 true duplicates + 100 novel keys
     val incoming = corpusKeys.limit(100)
       .unionByName(spark.range(5000, 5100).select(xxhash64(col("id") * 7 + 1).as("__ck")))
@@ -132,14 +134,15 @@ class FrozenSideFilesSpec extends SparkSpec {
       Some(corpusKeys.filter(col("__ck").isin(ks: _*)))
     }
     val pruned = BloomDedup.newKeysExactPruned(incoming, keysFor, corpusKeys,
-      "__ck", bloom).as[Long].collect().sorted.toSeq
+      "__ck", bcast).as[Long].collect().sorted.toSeq
     assert(pruned == expected, "pruned exact stage must match the plain one")
     assert(probed.exists(n => n >= 100 && n <= 200),
       s"the probe set must be the bloom-positive sliver, got $probed")
     // cap 0 → every sliver is over-cap → the pruned read must NOT be asked
     probed = None
     val fallback = BloomDedup.newKeysExactPruned(incoming, keysFor, corpusKeys,
-      "__ck", bloom, cap = 0).as[Long].collect().sorted.toSeq
+      "__ck", bcast, cap = 0).as[Long].collect().sorted.toSeq
+    bcast.unpersist(blocking = false)
     assert(fallback == expected && probed.isEmpty,
       "over-cap slivers must fall back to the corpus-keys join")
   }
@@ -156,10 +159,11 @@ class FrozenSideFilesSpec extends SparkSpec {
       sideFileDir = Some(dir), sideFileMinRows = 0L)
     try {
       def run(f: CorpusPipeline.FrozenCorpus): Seq[String] = {
-        val (accepted, release) = CorpusPipeline.prepareIncrementalFrozen(
-          sBatch, f, sCorpus, sCfg, Some(0.8))
-        try accepted.select("doc_key").as[String].collect().toSeq.sorted
-        finally release()
+        graft.core.Scope.using { scope =>
+          CorpusPipeline.prepareIncrementalFrozen(scope,
+            sBatch, f, sCorpus, sCfg, Some(0.8))
+            .select("doc_key").as[String].collect().toSeq.sorted
+        }
       }
       val a = run(plain)
       assert(a == Seq("x2"), s"fixture drifted: $a")

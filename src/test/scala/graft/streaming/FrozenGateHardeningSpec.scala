@@ -12,6 +12,8 @@ import java.nio.file.Files
   * delta-fold collect guard (driver heap, not row count), external-writer
   * detection between refreshes, and gate invalidation when the fold fails
   * AFTER a committed append (replay idempotence for reused instances).
+  * The fault-injection table is the gate's leak check: a failure at each
+  * action boundary must leave no persisted RDD or cache entry behind.
   */
 class FrozenGateHardeningSpec extends SparkSpec {
   import spark.implicits._
@@ -195,6 +197,109 @@ class FrozenGateHardeningSpec extends SparkSpec {
         assert(numCachedEntries(spark) == entriesBefore,
           s"against=$against: a failed batch must drop its CacheManager entries")
         assert(g.processBatch(df(5L -> baseC)) == 1L, "the gate keeps working")
+      } finally g.close()
+    }
+  }
+
+  private def copyDir(src: String): String = {
+    import scala.jdk.CollectionConverters._
+    val from = java.nio.file.Paths.get(src)
+    val to = Files.createTempDirectory("fg_fault_copy")
+    val walk = Files.walk(from)
+    try walk.iterator().asScala.foreach { p =>
+      val t = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    } finally walk.close()
+    to.toString
+  }
+
+  test("a failure at each gate action boundary releases everything; the gate then admits like a fresh one") {
+    import org.apache.spark.sql.functions.{col, udf}
+    import org.apache.spark.sql.graft.CacheBridge.numCachedEntries
+    val sc = spark.sparkContext
+    val scanBoom = udf { (t: String) =>
+      if (t != null) throw new RuntimeException("injected: freeze scan") else t
+    }
+    val markerBoom = udf { (src: String, t: String) =>
+      if (t.contains("MARKER")) throw new RuntimeException("injected: funnel") else src
+    }
+    var failScan = false
+    val reader: (org.apache.spark.sql.SparkSession, String, DataFrame) => DataFrame =
+      (s, d, donor) => {
+        val corpus = CorpusIngestSink.standingOf(s, d, donor)
+        if (failScan) corpus.withColumn("text", scanBoom(col("text"))) else corpus
+      }
+    def squat(dir: String) = java.nio.file.Paths.get(dir.stripSuffix("/") + "__gatestate")
+    // (boundary, gate already frozen before the failing call, side files
+    // on, arm, disarm, failing batch, expected message)
+    type Arm = (CorpusIngestSink.FrozenGate, String) => Unit
+    val plain = df(4L -> baseD)
+    // the repartition keeps the optimizer from folding the UDF into the
+    // local relation at planning time (it must fail in a task)
+    val marked = df(4L -> baseD, 8L -> s"$baseC MARKER").repartition(2)
+      .withColumn("source", markerBoom(col("source"), col("text")))
+    val cases: Seq[(String, Boolean, Boolean, Arm, Arm, DataFrame, Option[String])] = Seq(
+      ("freeze scan", false, false,
+        (_, _) => failScan = true, (_, _) => failScan = false,
+        plain, Some("injected: freeze scan")),
+      ("side-file write", false, true,
+        (_, d) => Files.write(squat(d), "squat".getBytes),
+        (_, d) => Files.delete(squat(d)),
+        plain, None),
+      ("funnel", true, false, (_, _) => (), (_, _) => (),
+        marked, Some("injected: funnel")),
+      ("fold", false, false,
+        (g, _) => g.foldTap = _ => throw new RuntimeException("injected: fold"),
+        (g, _) => g.foldTap = identity,
+        plain, Some("injected: fold")),
+      ("pre-append window", true, false,
+        (g, _) => g.preAppendTap = () => throw new RuntimeException("injected: pre-append"),
+        (g, _) => g.preAppendTap = () => (),
+        plain, Some("injected: pre-append")))
+
+    for ((boundary, warm, sideFiles, arm, disarm, failing, message) <- cases) {
+      val dir = Files.createTempDirectory("fg_fault").toString
+      def gate(d: String) = new CorpusIngestSink.FrozenGate(d, cfg, refreshEvery = 10,
+        corpusReader = reader,
+        sideFileMinRows = if (sideFiles) 0L else Long.MaxValue)
+      val seed = gate(dir)
+      try assert(seed.processBatch(df(1L -> baseA, 2L -> baseB)) == 2L)
+      finally seed.close()
+      val g = gate(dir)
+      try {
+        if (warm) assert(g.processBatch(df(3L -> baseC)) == 1L)
+        val rddsBefore = sc.getPersistentRDDs.keySet.toSet
+        val entriesBefore = numCachedEntries(spark)
+        arm(g, dir)
+        val e = intercept[Exception](g.processBatch(failing))
+        message.foreach { m =>
+          assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(t => String.valueOf(t.getMessage).contains(m)),
+            s"$boundary: unexpected failure $e")
+        }
+        disarm(g, dir)
+        // an RDD orphaned by a failed checkpoint is unreachable and leaves
+        // the context's weak registry once collected; a PINNED leak never
+        def leaked = { System.gc(); sc.getPersistentRDDs.keySet.toSet -- rddsBefore }
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(200)
+        assert(leaked.isEmpty, s"$boundary: the failed batch left persisted RDDs")
+        assert(numCachedEntries(spark) == entriesBefore,
+          s"$boundary: the failed batch left CacheManager entries")
+        // the next batch on this instance admits what a fresh gate over the
+        // same corpus admits: 5 duplicates the seed, 6 the failed batch's
+        // doc (admitted only where the failure struck after the append)
+        val next = df(5L -> baseA, 6L -> baseD,
+          7L -> "a final batch document about fault injection at action boundaries")
+        val copy = copyDir(dir)
+        val fresh = gate(copy)
+        try {
+          val expected = fresh.processBatch(next)
+          assert(expected >= 1L, s"$boundary: fixture drifted")
+          assert(g.processBatch(next) == expected,
+            s"$boundary: the gate must admit what a fresh gate admits")
+          assert(corpusIds(dir) == corpusIds(copy), s"$boundary: corpora diverged")
+        } finally fresh.close()
       } finally g.close()
     }
   }
