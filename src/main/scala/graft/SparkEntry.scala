@@ -2394,11 +2394,7 @@ object SparkEntry {
     // hash-match; a pruning bug that dropped or re-admitted anything
     // would mismatch here. Geometry deliberately minimal for a fixture
     // that pays unamortized side-file costs on a tiny corpus: one-batch
-    // refresh window. numHashes stays at the default 64 (16 bands of 4):
-    // a 32-hash trim was measured at 35 s standalone vs ~7 s with 64 —
-    // width-2 bands square the per-band collision probability on
-    // real-text shingles, and the candidate-pair explosion in the
-    // estimate/verify stages dwarfs the saved hashing.
+    // refresh window (the signature is CorpusPipeline.GateGeometry's).
     "ingest_frozen_sidefiles" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val cfg = CorpusPipeline.Config(

@@ -141,6 +141,43 @@ object CorpusPipeline {
       c4LineRules: Boolean = false,
       gopherQuality: Option[GopherQuality.Thresholds] = None)
 
+  /** The frozen ingest gate's one MinHash/Bloom geometry. A standing
+    * similarity index is valid only under one fixed signature scheme, so
+    * every site that builds or probes gate state reads it here: the freeze
+    * ([[freezeCorpus]]), the funnel ([[prepareIncrementalFrozen]]), the
+    * [[graft.streaming.CorpusIngestSink.FrozenGate]] delta fold and
+    * [[prepare]]'s Bloom probe; prepare's in-batch near-dup stage shares
+    * the shingle width. 64 hashes in 16 bands of 4: a 32-hash trim
+    * was measured at 35 s vs ~7 s on the `ingest_frozen_sidefiles` fixture,
+    * because width-2 bands square the per-band collision probability on
+    * real-text shingles and the candidate pairs dwarf the saved hashing.
+    */
+  object GateGeometry {
+    /** character shingle width of every gate signature */
+    val ShingleWidth: Int = 5
+    /** MinHash signature width */
+    val NumHashes: Int = 64
+    /** LSH bands; `NumHashes / Bands` signature rows per band */
+    val Bands: Int = 16
+    /** false-positive rate of the Bloom filter over the exact keys */
+    val BloomFpp: Double = 0.01
+    /** bucket occupancy above which a (band, bucket) is hot and muted */
+    val MaxBucketSize: Long = 4096L
+
+    /** exact-dedup key of a document: `md5Hash60(normalized(text))` */
+    def key(text: Column): Column =
+      TextFunctions.md5Hash60(TextFunctions.normalized(text))
+    /** hashed [[ShingleWidth]]-char shingles, the signature's input */
+    def shingles(text: Column): Column =
+      TextFunctions.shingleHashes(text, ShingleWidth)
+    /** the [[NumHashes]]-wide MinHash signature of a document */
+    def signature(text: Column): Column =
+      MinHashLsh.signatureOfHashes(shingles(text), NumHashes)
+    /** per-band bucket keys of a [[signature]] */
+    def bandBuckets(sig: Column): Column =
+      MinHashLsh.bandBuckets(sig, Bands, NumHashes / Bands)
+  }
+
   /** Fused numeric quality gate ([[expressions.QualityGateExpr]]: one
     * stats pass + band checks in a single boolean). Prefer this in
     * filters — a filter over the stats struct multi-evaluates the kernel
@@ -239,8 +276,7 @@ object CorpusPipeline {
     // filter's fpp of false drops (BloomDedup.newKeysExact is the exact
     // alternative when an anti-join is affordable)
     val quality = cfg.dedupAgainstBloom.fold(qualityPreBloom)(bf =>
-      qualityPreBloom.filter(!BloomDedup.mightContain(bf,
-        TextFunctions.md5Hash60(TextFunctions.normalized(text)))))
+      qualityPreBloom.filter(!BloomDedup.mightContain(bf, GateGeometry.key(text))))
 
     // 2. fingerprint dedup keep-first: min id per md5(normalized text)
     val fp = TextFunctions.fingerprint(text)
@@ -255,7 +291,7 @@ object CorpusPipeline {
       val dupIds = Scope.using { scope =>
         Checkpoints.localize(
           MinHashLsh.nearDupPairs(scope.persist(exactDeduped), cfg.idCol,
-              TextFunctions.charShingles(text, 5), threshold = th)
+              TextFunctions.charShingles(text, GateGeometry.ShingleWidth), threshold = th)
             .select(col("id_b").as(cfg.idCol)).distinct())
       }
       exactDeduped.join(dupIds, Seq(cfg.idCol), "left_anti")
@@ -372,6 +408,9 @@ object CorpusPipeline {
     *      `added`, the corpus as `unchanged` — the regression check an
     *      ingest round commits next to its output).
     *
+    * Every signature, band split, Bloom fpp and hot-bucket cap is
+    * [[GateGeometry]]'s.
+    *
     * Returns (accepted rows, audit). Scale posture: the corpus contributes
     * one keys-only filter-build pass, one distinct-key sliver join, and the
     * banded signature pass — its text never moves; each stage is the
@@ -388,11 +427,10 @@ object CorpusPipeline {
     */
   def prepareIncremental(newDocs: DataFrame, standingCorpus: DataFrame,
                          cfg: Config = Config(),
-                         againstThreshold: Option[Double] = Some(0.8),
-                         numHashes: Int = 64, bands: Int = 16,
-                         bloomFpp: Double = 0.01): (DataFrame, DataFrame) = {
+                         againstThreshold: Option[Double] = Some(0.8))
+      : (DataFrame, DataFrame) = {
     val (accepted, audit, _) = prepareIncrementalManaged(newDocs, standingCorpus,
-      cfg, againstThreshold, numHashes, bands, bloomFpp)
+      cfg, againstThreshold)
     (accepted, audit)
   }
 
@@ -402,13 +440,12 @@ object CorpusPipeline {
     * batch funnel's persisted frames. A long-lived ingest service must call
     * `release()` once `accepted`/`audit` have materialized, or one
     * corpus-keys-sized checkpoint accumulates per batch. A failure inside
-    * this call closes the scope before it propagates.
+    * this call closes the scope before it propagates. The freeze is made
+    * without banding, under [[GateGeometry]].
     */
   def prepareIncrementalManaged(newDocs: DataFrame, standingCorpus: DataFrame,
                                 cfg: Config = Config(),
                                 againstThreshold: Option[Double] = Some(0.8),
-                                numHashes: Int = 64, bands: Int = 16,
-                                bloomFpp: Double = 0.01,
                                 semanticAgainstThreshold: Option[Double] = None)
       : (DataFrame, DataFrame, () => Unit) = {
     val text = col(cfg.textCol)
@@ -417,12 +454,12 @@ object CorpusPipeline {
     // key projection and the funnel's signature pass each re-read the
     // corpus — two scans per call)
     val frozen = freezeCorpus(standingCorpus, cfg,
-      withSignatures = againstThreshold.isDefined, numHashes, bloomFpp,
+      withSignatures = againstThreshold.isDefined,
       embeddings = if (semanticAgainstThreshold.isDefined) cfg.embeddings else None)
     Scope.closeOnFailure { scope =>
       scope.onClose(frozen.release())
       val accepted = prepareIncrementalFrozen(scope,
-        newDocs, frozen, standingCorpus, cfg, againstThreshold, numHashes, bands,
+        newDocs, frozen, standingCorpus, cfg, againstThreshold,
         semanticAgainstThreshold = semanticAgainstThreshold)
 
       // ingest audit: old corpus vs composed corpus, per-status counts
@@ -440,8 +477,9 @@ object CorpusPipeline {
     * gating is on), and the Bloom prefilter over the keys — everything the
     * incremental gate needs from the corpus EXCEPT candidate-verify text.
     * One localCheckpointed slim frame backs both projections, built in a
-    * SINGLE corpus scan. The freeze's [[Scope]] owns it, the Bloom
-    * broadcast and the banded cache; `release()` closes that scope.
+    * SINGLE corpus scan, under the one [[GateGeometry]]. The freeze's
+    * [[Scope]] owns it, the Bloom broadcast and the banded cache;
+    * `release()` closes that scope.
     *
     * This is the freeze-and-refresh device for streaming ingest: freeze
     * once, gate many batches against (frozen + admitted-delta) state, and
@@ -474,17 +512,6 @@ object CorpusPipeline {
       private[functions] val bandedSlim: Option[DataFrame] = None,
       /** hot (band, bucket) pairs of the frozen banding, driver-localized */
       private[functions] val bandedHot: Option[DataFrame] = None,
-      /** band count the frozen banding was built with */
-      val bandedBands: Int = 16,
-      /** signature width the freeze was built with — the frozen-banded
-        * dispatch checks it alongside [[bandedBands]], because a caller
-        * gating with a different numHashes would get silently inconsistent
-        * bucket semantics between the cached frozen banding and the
-        * batch-side banded frame
-        */
-      val bandedNumHashes: Int = 64,
-      /** hot-bucket occupancy cap the frozen hot set was built with */
-      val bandedMaxBucketSize: Long = 4096L,
       /** max occupancy among the frozen side's NON-hot buckets — lets the
         * gate prove a delta cannot push any bucket over the cap
         * (maxDeltaOccupancy + this ≤ cap) and skip the per-batch count
@@ -607,26 +634,24 @@ object CorpusPipeline {
     * answers "proven new". The filter is monolithic (the [[BloomDedup]]
     * posture note).
     *
-    * `withBanded` also persists the banded signature frame and its hot
-    * set. `sideFileDir` writes the `keys/` and `sigs/` side files once the
+    * Keys, signatures, the Bloom fpp, the banding and the hot-bucket cap
+    * all come from [[GateGeometry]]. `withBanded` also persists the banded
+    * signature frame and its hot set. `sideFileDir` writes the `keys/` and `sigs/` side files once the
     * corpus holds at least `sideFileMinRows` rows; `keys/` is split into
     * P = clamp(rows / 500k, 8, 1024) `__pfx` directories.
     */
   def freezeCorpus(standingCorpus: DataFrame, cfg: Config = Config(),
-                   withSignatures: Boolean = true, numHashes: Int = 64,
-                   bloomFpp: Double = 0.01,
+                   withSignatures: Boolean = true,
                    embeddings: Option[DataFrame] = None,
-                   withBanded: Boolean = false, bands: Int = 16,
-                   maxBucketSize: Long = 4096L,
+                   withBanded: Boolean = false,
                    sideFileDir: Option[String] = None,
                    sideFileMinRows: Long = 200000L): FrozenCorpus = {
     require(!withBanded || withSignatures,
       "banded freeze state derives from signatures")
+    import GateGeometry._
     val text = col(cfg.textCol)
-    val key = TextFunctions.md5Hash60(TextFunctions.normalized(text))
     val sig =
-      if (withSignatures)
-        MinHashLsh.signatureOfHashes(TextFunctions.shingleHashes(text, 5), numHashes)
+      if (withSignatures) signature(text)
       else lit(null).cast("array<bigint>")
     // NO parallelism floor on the freeze scan: an interleaved min-of-2 A/B
     // (r19) measured FanOut(standingCorpus) at 1.29× on ingest_lifecycle
@@ -635,7 +660,7 @@ object CorpusPipeline {
     // serialized md5/minhash pass saves at micro-corpus scale, and at
     // warehouse scale the scan already plans more partitions than cores.
     val base = standingCorpus
-      .select(col(cfg.idCol).as("__id"), key.as("__ck"), sig.as("__sig"))
+      .select(col(cfg.idCol).as("__id"), key(text).as("__ck"), sig.as("__sig"))
     // LOCALCHECKPOINT, not persist — and not for lineage reasons: a
     // persisted plan that READS the corpus path is registered with the
     // CacheManager, and Spark's own parquet INSERT into that path calls
@@ -658,8 +683,8 @@ object CorpusPipeline {
         Seq("__id"), "left")))
       val rows = slim.count() // cheap: counts the checkpointed blocks
       val bloom =
-        if (rows == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, bloomFpp)
-        else BloomDedup.buildLongNonEmpty(slim, col("__ck"), rows, bloomFpp)
+        if (rows == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, BloomFpp)
+        else BloomDedup.buildLongNonEmpty(slim, col("__ck"), rows, BloomFpp)
       val bloomBc = scope.broadcast(slim.sparkSession, BloomDedup.filterBytes(bloom))
       val (bnd, hot, maxNonHot) =
         if (!withBanded) (None, None, None)
@@ -675,16 +700,16 @@ object CorpusPipeline {
           // row-format checkpoint blocks would be
           val banded = scope.persist(MinHashLsh.bandedFrame(
             slim.select(col("__id"), col("__sig")).filter(col("__sig").isNotNull),
-            bands, numHashes))
+            Bands, NumHashes))
           // the occupancy feeds two actions, then dies with a local scope
           // (the freeze's would hold it as long as the banded cache)
           Scope.using { tmp =>
             val occ = tmp.persist(banded.groupBy(col("__band"), col("__bucket"))
               .agg(count(lit(1)).as("__bsz")))
             val hotLocal = scope.localize(
-              occ.filter(col("__bsz") > maxBucketSize)
+              occ.filter(col("__bsz") > MaxBucketSize)
                 .select(col("__band"), col("__bucket")))
-            val nonHotMax = occ.filter(col("__bsz") <= maxBucketSize)
+            val nonHotMax = occ.filter(col("__bsz") <= MaxBucketSize)
               .agg(max(col("__bsz"))).head() match {
               case r if r.isNullAt(0) => 0L // every bucket hot (or none)
               case r => r.getLong(0)
@@ -749,8 +774,7 @@ object CorpusPipeline {
           (Some(dir), p)
         }
       new FrozenCorpus(scope, slim, rows, bloom, bloomBc, withSignatures,
-        embeddings.isDefined, bnd, hot, bands, numHashes, maxBucketSize,
-        maxNonHot, side, pfxParts)
+        embeddings.isDefined, bnd, hot, maxNonHot, side, pfxParts)
     }
   }
 
@@ -770,6 +794,10 @@ object CorpusPipeline {
     * re-freezing every batch — the equality [[graft.streaming]]'s
     * FrozenGateSpec pins — because frozen + delta IS the corpus.
     *
+    * The funnel's geometry is [[GateGeometry]]'s, the one the freeze used,
+    * so a banded freeze always takes the frozen-banded path; a freeze made
+    * without banding ([[prepareIncrementalManaged]]) takes the plain one.
+    *
     * Returns `accepted`. The batch's own persisted frames register with
     * the caller's `scope`, which must stay open until `accepted` has
     * materialized; the frozen state is not the scope's.
@@ -779,7 +807,6 @@ object CorpusPipeline {
                                corpusDocs: => DataFrame,
                                cfg: Config = Config(),
                                againstThreshold: Option[Double] = Some(0.8),
-                               numHashes: Int = 64, bands: Int = 16,
                                extraKeys: Option[DataFrame] = None,
                                extraSigs: Option[DataFrame] = None,
                                semanticAgainstThreshold: Option[Double] = None,
@@ -787,8 +814,8 @@ object CorpusPipeline {
                                extraBanded: Option[DataFrame] = None,
                                extraBucketCounts: Option[Map[(Int, Long), Long]] = None)
       : DataFrame = {
+    import GateGeometry._
     val text = col(cfg.textCol)
-    val key = TextFunctions.md5Hash60(TextFunctions.normalized(text))
     // 1. in-batch preparation
     val prepared = prepare(newDocs, cfg)
 
@@ -804,11 +831,11 @@ object CorpusPipeline {
         // the keyed batch feeds the split's two branches AND the sliver
         // collect — persist the slim projection so none re-derives the
         // in-batch prepare chain (BloomDedup.newKeysExact's plan note)
-        val keyed = scope.persist(prepared.withColumn("__ck", key))
+        val keyed = scope.persist(prepared.withColumn("__ck", key(text)))
         BloomDedup.newKeysExactPruned(keyed, frozen.prunedKeys,
           frozen.keys, "__ck", frozen.bloomBcast)
       } else BloomDedup.newKeysExact(
-        prepared.withColumn("__ck", key), frozen.keys, "__ck", frozen.bloom,
+        prepared.withColumn("__ck", key(text)), frozen.keys, "__ck", frozen.bloom,
         filterBcast = Some(frozen.bloomBcast))
     // exactNew feeds several plan branches downstream (both sides of the
     // against-corpus signature funnel, the exact-verify shingle scan, the
@@ -828,13 +855,12 @@ object CorpusPipeline {
     val lexAccepted = againstThreshold.fold(exactNew) { th =>
       val corpusSigs = frozen.sigs.getOrElse(throw new IllegalStateException(
         "near-dup gating requested but the corpus was frozen without signatures"))
-      val sh = TextFunctions.shingleHashes(text, 5)
+      val sh = shingles(text)
       val pairs = frozen.banded match {
-        case Some((bnd, hot)) if frozen.bandedBands == bands &&
-            frozen.bandedNumHashes == numHashes =>
+        case Some((bnd, hot)) =>
           MinHashLsh.bipartitePairsFrozenBanded(corpusSigs, bnd, hot,
-            extraSigs, corpusDocs, exactNew, cfg.idCol, sh, numHashes, bands, th,
-            maxBucketSize = frozen.bandedMaxBucketSize,
+            extraSigs, corpusDocs, exactNew, cfg.idCol, sh, NumHashes, Bands, th,
+            maxBucketSize = MaxBucketSize,
             deltaBanded = extraBanded,
             deltaBucketCounts = extraBucketCounts,
             frozenMaxNonHot = frozen.bandedMaxNonHot,
@@ -843,7 +869,8 @@ object CorpusPipeline {
         case _ =>
           MinHashLsh.bipartitePairsPrecomputedLeft(
             extraSigs.fold(corpusSigs)(corpusSigs.unionByName(_)), corpusDocs,
-            exactNew, cfg.idCol, sh, numHashes, bands, th)
+            exactNew, cfg.idCol, sh, NumHashes, Bands, th,
+            maxBucketSize = MaxBucketSize)
       }
       exactNew.join(pairs.select(col("id_right").as(cfg.idCol)).distinct(),
         Seq(cfg.idCol), "left_anti")

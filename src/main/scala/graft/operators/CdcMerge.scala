@@ -14,7 +14,13 @@ import org.apache.spark.sql.types.StructType
 sealed trait MergeDialect {
   /** Column name carrying the monotonically increasing version. */
   def versionColumn: String
-  /** Predicate on a source row marking it a delete (tombstone). */
+  /** Predicate on a source row marking it a delete (tombstone). Never
+    * NULL: a NULL marker is NOT a delete, for every dialect and every
+    * caller — the merge, the overwrite backfill's tombstone filter and a
+    * view's first batch. A three-valued predicate would make
+    * `filter(!isDelete)` drop a NULL-marker row, and inside the merge
+    * `filter(!(present && NULL))` would drop the matched TARGET row too.
+    */
   def isDelete(s: String => Column): Column
   /** Columns that order rows within a merge key, newest first. */
   def versionOrder(s: String => Column): Seq[Column] = Seq(s(versionColumn))
@@ -33,7 +39,8 @@ sealed trait MergeDialect {
 case object MsSqlCtDialect extends MergeDialect {
   val operationColumn = "SYS_CHANGE_OPERATION"
   override val versionColumn = "SYS_CHANGE_VERSION"
-  override def isDelete(s: String => Column): Column = s(operationColumn) === "D"
+  override def isDelete(s: String => Column): Column =
+    coalesce(s(operationColumn) === "D", lit(false))
   override def essentialColumns: Seq[String] = Seq(versionColumn, operationColumn)
 }
 
@@ -142,13 +149,9 @@ object CdcMerge {
 
     val sPresent = coalesce(sc("__s_present"), lit(false))
     val tPresent = coalesce(tc("__t_present"), lit(false))
-    // NULL delete marker = NOT a delete, for every dialect: a batch that
-    // genuinely lacks the marker column gets it NULL-backfilled by
-    // alignTo, and an un-coalesced NULL here would make the tombstone
-    // filter below three-valued — filter(!(true && NULL)) = NULL drops
-    // the matched TARGET row too, silent data loss on every key the
-    // batch touches
-    val del = coalesce(dialect.isDelete(sc), lit(false))
+    // a batch that lacks the marker column gets it NULL-backfilled by
+    // alignTo; isDelete is null-safe, so that reads as "not a delete"
+    val del = dialect.isDelete(sc)
     val newer = dialect.versionOrder(sc).zip(dialect.versionOrder(tc))
       .map { case (sv, tv) => sv > tv }
       .reduce(_ || _) // single version column in all three dialects
@@ -161,16 +164,5 @@ object CdcMerge {
       .select(outSchema.fieldNames.toSeq.map { c =>
         when(takeSource, sc(c)).otherwise(tc(c)).as(c)
       }: _*)
-  }
-
-  /** One-call merge of a raw (not yet deduplicated) change batch: windowed
-    * dedup-latest then version-guarded apply — the staging + merge pipeline
-    * stages fused into one plan with a single key exchange.
-    */
-  def mergeBatch(target: DataFrame, rawChanges: DataFrame, keyCol: String,
-                 dialect: MergeDialect, tieBreakers: Seq[Column] = Nil): DataFrame = {
-    val latest = Dedup.latestByKey(rawChanges, col(keyCol),
-      dialect.versionOrder(col), tieBreakers)
-    applyChanges(target, latest, keyCol, dialect)
   }
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.core.SchemaEvolution
 import graft.operators.{CdcMerge, MergeDialect}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -73,14 +72,8 @@ final class BucketedTarget(spark: SparkSession, val tableName: String,
     * merge plan reads the live table while the staged write materializes
     * it (see [[overwrite]]).
     */
-  def merge(changes: DataFrame, dialect: MergeDialect): Unit = {
-    val current = read()
-    val evolved = SchemaEvolution.evolve(current.schema, changes.schema)
-    val merged = CdcMerge.applyChanges(
-      CdcMerge.alignTo(current, evolved), CdcMerge.alignTo(changes, evolved),
-      keyColumn, dialect)
-    overwrite(merged)
-  }
+  def merge(changes: DataFrame, dialect: MergeDialect): Unit =
+    overwrite(CdcMerge.applyChanges(read(), changes, keyColumn, dialect))
 }
 
 /** Plan inspection helpers for shuffle accounting in tests and tuning. */

@@ -1,13 +1,10 @@
 package graft.streaming
 
-import graft.core.{RetryPolicy, SchemaEvolution, Watermark, WatermarkStore}
-import graft.operators.{CdcMerge, Dedup, FieldFilter, MergeDialect,
-  MergeSqlBuilder, MergeSqlExecutor, MsSqlCtDialect, SynapseLinkDialect,
-  UpsertBlobDialect}
+import graft.core.{RetryPolicy, Watermark, WatermarkStore}
+import graft.operators.{CdcMerge, Dedup, FieldFilter, MergeDialect}
 import graft.sources.{BlobListingSource, BlobSourceConfig}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
 
 /** The per-batch CDC pipeline: field filter → dedup-latest → schema evolve →
   * version-guarded merge → commit → watermark update → every-Nth maintenance.
@@ -19,6 +16,9 @@ import org.apache.spark.sql.types.StructType
   * identical, but each stage is a declarative DataFrame transform that
   * Catalyst fuses — dedup + merge execute with a single exchange on the merge
   * key instead of the reference's staging-table round trip through Trino.
+  * The merge has one route, [[CdcMerge.applyChanges]]; the rendered
+  * `MERGE INTO` text ([[graft.operators.MergeSqlBuilder]]) is the catalog
+  * SQL surface, checked against it by [[graft.operators.MergeSqlExecutor]].
   */
 final case class PipelineConfig(
     keyColumn: String = "ARCANE_MERGE_KEY",
@@ -28,10 +28,6 @@ final case class PipelineConfig(
     maintenanceEvery: Int = 10,             // run maintenance every Nth batch
     snapshotsToKeep: Int = 3,
     targetPartitions: Option[Int] = None,   // clamp files per commit
-    mergeViaSql: Boolean = false,           // route the merge through the
-                                            // rendered MERGE INTO text
-                                            // (MergeSqlBuilder→MergeSqlExecutor)
-                                            // instead of the DataFrame dialect
     // Admission gate: expectations evaluated against every incoming batch
     // BEFORE filtering/dedup/merge (one extra 1-row aggregation per batch).
     // On violation: "fail" stops the stream (operator intervenes — the
@@ -145,38 +141,15 @@ final class CdcPipeline(spark: SparkSession, dialect: MergeDialect,
       }
     }
 
-    // P1/P2 field filtering (columns prune into the scan). The protected
-    // set includes EVERY column the dialect's merge reads — version AND
-    // delete marker (dialect.essentialColumns): stripping the marker would
-    // NULL-backfill it downstream and silently misroute the whole batch
-    val protectedCols =
-      cfg.essentialColumns ++ (cfg.keyColumn +: dialect.essentialColumns)
-    val filtered0 =
-      if (cfg.includeColumns.nonEmpty)
-        FieldFilter.include(changes, cfg.includeColumns, protectedCols)
-      else changes
-    val filtered =
-      if (cfg.excludeColumns.nonEmpty)
-        FieldFilter.exclude(filtered0, cfg.excludeColumns, protectedCols)
-      else filtered0
-
-    // M1 dedup-latest inside the batch
-    val latest = Dedup.latestByKey(filtered, col(cfg.keyColumn),
+    // M1 dedup-latest inside the field-filtered batch
+    val latest = Dedup.latestByKey(filterFields(changes), col(cfg.keyColumn),
       dialect.versionOrder(col), tieBreakers)
 
-    // X6 additive schema evolution: target gains batch-only columns
-    val current = target.read(Some(latest.schema))
-    val evolved = SchemaEvolution.evolve(current.schema, latest.schema)
-
-    // M2-M4 version-guarded merge, then snapshot commit
+    // X6 additive schema evolution + M2-M4 version-guarded merge (both in
+    // applyChanges: the target gains batch-only columns), then commit
     val t0 = System.currentTimeMillis()
-    val merged =
-      if (cfg.mergeViaSql)
-        sqlMergedState(CdcMerge.alignTo(current, evolved),
-          CdcMerge.alignTo(latest, evolved), evolved)
-      else CdcMerge.applyChanges(
-        CdcMerge.alignTo(current, evolved), CdcMerge.alignTo(latest, evolved),
-        cfg.keyColumn, dialect)
+    val merged = CdcMerge.applyChanges(target.read(Some(latest.schema)), latest,
+      cfg.keyColumn, dialect)
     target.commit(merged, cfg.targetPartitions)
     GraftMetrics.gauge(GraftMetrics.MergeDuration, System.currentTimeMillis() - t0)
 
@@ -194,44 +167,22 @@ final class CdcPipeline(spark: SparkSession, dialect: MergeDialect,
     }
   }
 
-  // JVM-global, NOT per-instance: temp views are SESSION-scoped, and two
-  // pipelines sharing one SparkSession (a normal one-pipeline-per-target
-  // deployment) would both start a per-instance counter at 1 and
-  // createOrReplaceTempView over each other's views mid-merge
-  private def sqlMergeSeq = CdcPipeline.sqlMergeSeq
-
-  /** The reference's Trino hop, end to end: render the dialect's `MERGE
-    * INTO` text ([[MergeSqlBuilder]]), have Spark parse it and
-    * [[MergeSqlExecutor]] execute it against temp views over the same two
-    * aligned sides the DataFrame dialect would join, and return the merged
-    * target state for the snapshot commit. On a deployment with a
-    * transactional catalog the identical string goes to `spark.sql(...)`
-    * directly (ref services/merging/JdbcMergeServiceClient.scala:62-91).
-    *
-    * The temp views are dropped as soon as the statement is ANALYZED (the
-    * resolved plan retains their subtrees); nothing is materialized here —
-    * the single full-outer-join plan executes lazily inside the commit,
-    * same shape and shuffle count as [[CdcMerge.applyChanges]].
+  /** P1/P2 field filtering (columns prune into the scan), the pipeline's
+    * first stage after the admission gates. The protected set includes
+    * EVERY column the dialect's merge reads — version AND delete marker
+    * (dialect.essentialColumns): stripping the marker would NULL-backfill
+    * it downstream and silently misroute the whole batch.
     */
-  private def sqlMergedState(targetState: DataFrame, latest: DataFrame,
-                             evolved: StructType): DataFrame = {
-    val n = sqlMergeSeq.incrementAndGet()
-    val tv = s"__graft_merge_tgt_$n"
-    val sv = s"__graft_merge_src_$n"
-    targetState.createOrReplaceTempView(tv)
-    latest.createOrReplaceTempView(sv)
-    try {
-      val columns = evolved.fieldNames.toSeq
-      val sql = dialect match {
-        case MsSqlCtDialect   => MergeSqlBuilder.mssqlCt(tv, sv, columns, cfg.keyColumn)
-        case SynapseLinkDialect => MergeSqlBuilder.synapseLink(tv, sv, columns, cfg.keyColumn)
-        case UpsertBlobDialect  => MergeSqlBuilder.upsertBlob(tv, sv, columns, cfg.keyColumn)
-      }
-      MergeSqlExecutor.merged(spark, sql)
-    } finally {
-      spark.catalog.dropTempView(tv)
-      spark.catalog.dropTempView(sv)
-    }
+  def filterFields(changes: DataFrame): DataFrame = {
+    val protectedCols =
+      cfg.essentialColumns ++ (cfg.keyColumn +: dialect.essentialColumns)
+    val included =
+      if (cfg.includeColumns.nonEmpty)
+        FieldFilter.include(changes, cfg.includeColumns, protectedCols)
+      else changes
+    if (cfg.excludeColumns.nonEmpty)
+      FieldFilter.exclude(included, cfg.excludeColumns, protectedCols)
+    else included
   }
 
   /** Continuous poll loop over a blob-listing source: the reference's T1
@@ -264,37 +215,26 @@ final class CdcPipeline(spark: SparkSession, dialect: MergeDialect,
   }
 }
 
-object CdcPipeline {
-  // see the instance-side note: one counter per JVM so concurrent pipelines
-  // on one session can never mint the same __graft_merge_* view name
-  private val sqlMergeSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-}
-
 /** Backfill entry points (reference §2.10): one-shot catch-up jobs that reuse
   * the same dedup + merge operators.
   */
 object Backfill {
 
-  /** Backfill MERGE (B1): one big changeset through dedup + merge +
-    * watermark, no maintenance.
+  /** Backfill MERGE (B1): one big changeset through the normal pipeline
+    * ([[CdcPipeline.runBatch]] under `cfg`: field filter, dedup, merge,
+    * retried watermark commit), with maintenance off.
     */
   def merge(target: ParquetTarget, targetName: String, changes: DataFrame,
-            keyColumn: String, dialect: MergeDialect, watermark: Watermark,
-            watermarks: WatermarkStore): Unit = {
-    val latest = Dedup.latestByKey(changes, col(keyColumn), dialect.versionOrder(col))
-    val current = target.read(Some(latest.schema))
-    val evolved = SchemaEvolution.evolve(current.schema, latest.schema)
-    val merged = CdcMerge.applyChanges(
-      CdcMerge.alignTo(current, evolved), CdcMerge.alignTo(latest, evolved),
-      keyColumn, dialect)
-    target.commit(merged)
-    watermarks.set(targetName, watermark)
-  }
+            cfg: PipelineConfig, dialect: MergeDialect, watermark: Watermark,
+            watermarks: WatermarkStore): Unit =
+    new CdcPipeline(changes.sparkSession, dialect, cfg.copy(maintenanceEvery = 0),
+      watermarks).runBatch(target, targetName, changes, watermark)
 
   /** Backfill OVERWRITE (B2): dedup + tombstone-filter the full source, then
     * replace the target in one commit (the CREATE OR REPLACE swap). Spark's
     * partitioned read replaces the reference's shard tables; resumability
-    * collapses to job retry because the swap is atomic.
+    * collapses to job retry because the swap is atomic. A config-driven
+    * caller field-filters `full` first ([[CdcPipeline.filterFields]]).
     */
   def overwrite(target: ParquetTarget, targetName: String, full: DataFrame,
                 keyColumn: String, dialect: MergeDialect, watermark: Watermark,

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.core.Scope
 import graft.functions.CorpusPipeline
+import graft.functions.CorpusPipeline.GateGeometry
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Streaming corpus ingestion with the day-2 dedup gate: each micro-batch
@@ -70,18 +71,19 @@ object CorpusIngestSink {
     * materializes GenericRows whose array elements are BOXED, so a
     * signature/embedding element costs ~32 B on the heap (16 B box +
     * 8 B ref + amortized array/Seq headers), not its 8 B columnar width —
-    * a numHashes=64 signature is ~2 KB and a dim-768 embedding ~25 KB,
-    * which is why a row-count cap alone (r15's 2²² rows) was a driver-OOM
-    * hazard the moment the semantic arm widened the row.
+    * a [[GateGeometry]] 64-hash signature is ~2 KB and a dim-768 embedding
+    * ~25 KB, which is why a row-count cap alone (r15's 2²² rows) was a
+    * driver-OOM hazard the moment the semantic arm widened the row.
     */
   private[streaming] def estimatedDeltaRowBytes(
-      withSignatures: Boolean, numHashes: Int,
-      withEmbeddings: Boolean, embeddingDim: Int, bands: Int = 16): Long = {
+      withSignatures: Boolean, withEmbeddings: Boolean, embeddingDim: Int): Long = {
     val rowShell = 64L // GenericRow + field refs + boxed id/key
     // a signature row also carries its band-bucket array (one long per
     // band), collected in the same fold so the delta's banding and bucket
     // occupancy stay driver-resident without extra jobs
-    val sig = if (withSignatures) 96L + 32L * (numHashes + bands) else 8L
+    val sig =
+      if (withSignatures) 96L + 32L * (GateGeometry.NumHashes + GateGeometry.Bands)
+      else 8L
     val emb = if (withEmbeddings) 48L + 32L * embeddingDim else 0L
     rowShell + sig + emb
   }
@@ -92,11 +94,10 @@ object CorpusIngestSink {
     * the width estimate doesn't model).
     */
   private[streaming] def foldCollectMaxRows(
-      foldDriverBytes: Long, withSignatures: Boolean, numHashes: Int,
-      withEmbeddings: Boolean, embeddingDim: Int, bands: Int = 16): Long =
+      foldDriverBytes: Long, withSignatures: Boolean,
+      withEmbeddings: Boolean, embeddingDim: Int): Long =
     math.min(1L << 22, math.max(1L, foldDriverBytes /
-      estimatedDeltaRowBytes(withSignatures, numHashes, withEmbeddings,
-        embeddingDim, bands)))
+      estimatedDeltaRowBytes(withSignatures, withEmbeddings, embeddingDim)))
 
   /** The corpus directory's data-file listing — (relative path, length,
     * mtime) of every `.parquet` file, RECURSIVE: `spark.read.parquet` does
@@ -348,6 +349,9 @@ object CorpusIngestSink {
     * that crossover, use [[processBatch]] (which since r15 also runs a
     * single fused freeze scan per batch).
     *
+    * The MinHash/Bloom geometry of the freeze, the funnel and the delta
+    * fold is the one constant [[CorpusPipeline.GateGeometry]].
+    *
     * Not thread-safe (one gate per sink, the foreachBatch execution
     * model); `close()` releases all frozen + delta state.
     *
@@ -361,8 +365,6 @@ object CorpusIngestSink {
                          cfg: CorpusPipeline.Config = CorpusPipeline.Config(),
                          againstThreshold: Option[Double] = Some(0.8),
                          refreshEvery: Int = 8,
-                         numHashes: Int = 64, bands: Int = 16,
-                         bloomFpp: Double = 0.01,
                          corpusReader: (SparkSession, String, DataFrame) => DataFrame =
                            (s, dir, donor) => standingOf(s, dir, donor),
                          compactEvery: Int = 0,
@@ -549,7 +551,7 @@ object CorpusIngestSink {
         // The checkpoint is eager: the whole funnel runs here.
         val accepted = scope.checkpoint(CorpusPipeline.prepareIncrementalFrozen(
           scope, batch, frozen, corpusReader(spark, targetDir, batch), cfg,
-          againstThreshold, numHashes, bands, deltaKeys, deltaSigs,
+          againstThreshold, deltaKeys, deltaSigs,
           semanticAgainstThreshold, deltaEmbs,
           extraBanded = if (deltaDriverResident) deltaBanded else None,
           extraBucketCounts =
@@ -629,19 +631,15 @@ object CorpusIngestSink {
         // corpus-size crossover; see the FrozenGate scaladoc)
         import org.apache.spark.sql.functions.{col => c}
         val text = c(cfg.textCol)
-        val sigExpr = graft.functions.MinHashLsh.signatureOfHashes(
-          graft.functions.TextFunctions.shingleHashes(text, 5), numHashes)
+        val sigExpr = GateGeometry.signature(text)
         val nullArr = org.apache.spark.sql.functions.lit(null)
           .cast("array<bigint>")
         val base = accepted.select(c(cfg.idCol).as("__id"),
-          graft.functions.TextFunctions.md5Hash60(
-            graft.functions.TextFunctions.normalized(text)).as("__ck"),
+          GateGeometry.key(text).as("__ck"),
           (if (againstThreshold.isDefined) sigExpr else nullArr).as("__sig"),
           // the row's band buckets ride the same projection — the
           // driver-side delta banding below costs zero extra jobs
-          (if (againstThreshold.isDefined)
-             graft.functions.MinHashLsh.bandBuckets(sigExpr, bands,
-               numHashes / bands)
+          (if (againstThreshold.isDefined) GateGeometry.bandBuckets(sigExpr)
            else nullArr).as("__bb"))
         val withEmb =
           if (semanticAgainstThreshold.isDefined)
@@ -659,8 +657,8 @@ object CorpusIngestSink {
         // eager localCheckpoint (lineage-truncated for the same
         // mutated-target reason) owned by the refresh-window scope.
         val maxFoldRows = foldCollectMaxRows(foldDriverBytes,
-          againstThreshold.isDefined, numHashes,
-          semanticAgainstThreshold.isDefined, cfg.embeddingDim, bands)
+          againstThreshold.isDefined, semanticAgainstThreshold.isDefined,
+          cfg.embeddingDim)
         val folded = foldTap(withEmb)
         val collected = if (n <= maxFoldRows) folded.collect() else null
         if (collected != null) {
@@ -733,14 +731,14 @@ object CorpusIngestSink {
       }
       val fresh = CorpusPipeline.freezeCorpus(
         corpusReader(spark, targetDir, schemaDonor), cfg,
-        withSignatures = againstThreshold.isDefined, numHashes, bloomFpp,
+        withSignatures = againstThreshold.isDefined,
         embeddings =
           if (semanticAgainstThreshold.isDefined) cfg.embeddings else None,
         // banded freeze state: the corpus-side banding explode + hot-bucket
         // shuffle amortize over the refresh window instead of recurring per
         // batch — the O(corpus)-shuffle-per-batch term the r16 crossover
         // measurement exposed (BENCH_VARIANCE_r16.md)
-        withBanded = againstThreshold.isDefined, bands = bands,
+        withBanded = againstThreshold.isDefined,
         sideFileDir = Some(targetDir.stripSuffix("/") + "__gatestate"),
         sideFileMinRows = sideFileMinRows)
       window.onClose(fresh.release())

@@ -126,8 +126,10 @@ object StreamRunner {
     (pipeline, target, wms)
   }
 
-  /** Run per spec: backfill=merge → one catch-up batch; streaming → poll
-    * loop (maxPolls bounds it for tests; production passes MaxValue).
+  /** Run per spec: backfill → one catch-up batch through the spec's field
+    * filter (merge: the pipeline without maintenance; overwrite: filtered,
+    * then swapped in); streaming → poll loop (maxPolls bounds it for tests;
+    * production passes MaxValue).
     */
   def run(spark: SparkSession, spec: StreamSpec, maxPolls: Int = Int.MaxValue,
           pollIntervalMs: Long = 1000): Unit = {
@@ -136,10 +138,10 @@ object StreamRunner {
       graft.sources.BlobListingSource.nextBatch(spark, spec.source, None).foreach {
         case (batch, wm) => spec.backfillBehavior match {
           case "overwrite" =>
-            Backfill.overwrite(target, spec.streamId, batch, spec.keyColumn,
-              spec.dialect, wm, wms)
+            Backfill.overwrite(target, spec.streamId, pipeline.filterFields(batch),
+              spec.keyColumn, spec.dialect, wm, wms)
           case _ =>
-            Backfill.merge(target, spec.streamId, batch, spec.keyColumn,
+            Backfill.merge(target, spec.streamId, batch, spec.pipelineConfig,
               spec.dialect, wm, wms)
         }
       }

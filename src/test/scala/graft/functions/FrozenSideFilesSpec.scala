@@ -48,7 +48,7 @@ class FrozenSideFilesSpec extends SparkSpec {
                           extraSigs: Option[DataFrame] = None): Seq[Long] = {
     graft.core.Scope.using { scope =>
       CorpusPipeline.prepareIncrementalFrozen(scope,
-        batch, frozen, corpus, cfg, Some(0.8), 64, 16, extraKeys, extraSigs)
+        batch, frozen, corpus, cfg, Some(0.8), extraKeys, extraSigs)
         .select("doc_id").as[Long].collect().toSeq.sorted
     }
   }
@@ -90,9 +90,12 @@ class FrozenSideFilesSpec extends SparkSpec {
     // cap 10: 8 frozen boilerplate clones + 5 delta clones = 13 crosses —
     // the crossing probe runs against the cached banded frame while the
     // estimate stage reads PRUNED sigs, and must still produce the
-    // per-batch path's exact hot set
+    // per-batch path's exact hot set. The freeze's own cap is the gate
+    // geometry's 4096; no frozen bucket holds more than 8 rows, so its hot
+    // set (empty) and max non-hot occupancy (8) equal those of a cap-10
+    // freeze
     val frozen = CorpusPipeline.freezeCorpus(corpus, cfg, withBanded = true,
-      maxBucketSize = 10L, sideFileDir = Some(dir), sideFileMinRows = 0L)
+      sideFileDir = Some(dir), sideFileMinRows = 0L)
     try {
       val delta = docs((200L until 205L).map(_ -> boilerText): _*)
       val dSigs = MinHashLsh.signatureFrame(delta, "doc_id", sh, 64)
@@ -100,6 +103,8 @@ class FrozenSideFilesSpec extends SparkSpec {
       val incoming = docs(1L -> (boilerText + " appended"),
         2L -> (uniqueText + " appended"), 3L -> freshText)
       val (bnd, hot) = frozen.banded.get
+      assert(hot.isEmpty && frozen.bandedMaxNonHot.contains(8L),
+        "fixture drifted: the freeze must equal a cap-10 freeze")
       def pairsOf(df: DataFrame): Set[(Long, Long)] =
         df.select("id_left", "id_right").as[(Long, Long)].collect().toSet
       val cached = pairsOf(MinHashLsh.bipartitePairsFrozenBanded(

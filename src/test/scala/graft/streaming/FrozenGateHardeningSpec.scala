@@ -37,20 +37,20 @@ class FrozenGateHardeningSpec extends SparkSpec {
     import CorpusIngestSink.{estimatedDeltaRowBytes, foldCollectMaxRows, DefaultFoldDriverBytes}
     // a dim-768 embedding costs ~25 KB boxed on the driver — the row-width
     // estimate must grow with it, and the cap must shrink accordingly
-    val slim = estimatedDeltaRowBytes(withSignatures = true, numHashes = 64,
+    val slim = estimatedDeltaRowBytes(withSignatures = true,
       withEmbeddings = false, embeddingDim = 768)
-    val wide = estimatedDeltaRowBytes(withSignatures = true, numHashes = 64,
+    val wide = estimatedDeltaRowBytes(withSignatures = true,
       withEmbeddings = true, embeddingDim = 768)
     assert(wide - slim >= 768L * 32, "embedding width must be priced per boxed element")
-    val capSlim = foldCollectMaxRows(DefaultFoldDriverBytes, true, 64, false, 768)
-    val capWide = foldCollectMaxRows(DefaultFoldDriverBytes, true, 64, true, 768)
+    val capSlim = foldCollectMaxRows(DefaultFoldDriverBytes, true, false, 768)
+    val capWide = foldCollectMaxRows(DefaultFoldDriverBytes, true, true, 768)
     assert(capSlim * slim <= DefaultFoldDriverBytes &&
       capWide * wide <= DefaultFoldDriverBytes, "cap × width must fit the budget")
     assert(capWide * 10 < capSlim,
       s"the semantic arm must shrink the cap ~width-proportionally ($capWide vs $capSlim)")
     // guard rails: never below one row, never above the legacy 2^22 rows
-    assert(foldCollectMaxRows(1L, true, 64, true, 1 << 20) == 1L)
-    assert(foldCollectMaxRows(Long.MaxValue / 4, false, 64, false, 0) == (1L << 22))
+    assert(foldCollectMaxRows(1L, true, true, 1 << 20) == 1L)
+    assert(foldCollectMaxRows(Long.MaxValue / 4, false, false, 0) == (1L << 22))
   }
 
   test("oversized batches fold executor-side (localCheckpoint), never a driver collect") {

@@ -162,53 +162,41 @@ class CdcPipelineE2eSpec extends SparkSpec {
     assert(wms.get("t").exists(_.version >= wm1.version))
   }
 
-  test("mergeViaSql pipeline: MergeSqlBuilder→MergeSqlExecutor e2e equals the DataFrame path") {
-    // same two-batch blob stream through both merge routes — the rendered
-    // MERGE INTO text (parsed + executed) must land the identical target
-    // state the CdcMerge DataFrame dialect lands (the reference's Trino hop,
-    // JdbcMergeServiceClient.scala:62-91, closed end to end)
+  test("two-batch blob stream lands the upserted state") {
     val srcDir = Files.createTempDirectory("blobsrc_sql").toString
     val cfg = BlobSourceConfig(srcDir, "parquet", pkColumns = Seq("id"))
-
-    final case class Route(viaSql: Boolean) {
-      val wms = new InMemoryWatermarkStore
-      val target = new ParquetTarget(spark, Files.createTempDirectory("tgt_sql").toString)
-      val pipeline = new CdcPipeline(spark, UpsertBlobDialect,
-        PipelineConfig(maintenanceEvery = 0, mergeViaSql = viaSql), wms)
-      def consume(): Unit =
-        BlobListingSource.nextBatch(spark, cfg, wms.get("t")).foreach {
-          case (batch, wm) => pipeline.runBatch(target, "t", batch, wm)
-        }
-      def state: Map[Long, String] =
-        target.read().select("id", "payload").as[(Long, String)].collect().toMap
-    }
-    val df = Route(viaSql = false)
-    val sql = Route(viaSql = true)
+    val wms = new InMemoryWatermarkStore
+    val target = new ParquetTarget(spark, Files.createTempDirectory("tgt_sql").toString)
+    val pipeline = new CdcPipeline(spark, UpsertBlobDialect,
+      PipelineConfig(maintenanceEvery = 0), wms)
+    def consume(): Unit =
+      BlobListingSource.nextBatch(spark, cfg, wms.get("t")).foreach {
+        case (batch, wm) => pipeline.runBatch(target, "t", batch, wm)
+      }
+    def state: Map[Long, String] =
+      target.read().select("id", "payload").as[(Long, String)].collect().toMap
 
     Seq((1L, "v1"), (2L, "v1")).toDF("id", "payload")
       .write.mode(SaveMode.Append).parquet(srcDir)
-    df.consume(); sql.consume()
-    assert(sql.state == df.state && df.state.sizeIs == 2)
+    consume()
+    assert(state.sizeIs == 2)
 
     Thread.sleep(1100) // distinct mtime second for batch 2
     Seq((1L, "v2"), (3L, "v1")).toDF("id", "payload")
       .write.mode(SaveMode.Append).parquet(srcDir)
-    df.consume(); sql.consume()
-    assert(sql.state == df.state, "SQL MERGE route diverges from the DataFrame route")
-    assert(df.state == Map(1L -> "v2", 2L -> "v1", 3L -> "v1"))
+    consume()
+    assert(state == Map(1L -> "v2", 2L -> "v1", 3L -> "v1"))
   }
 
-  test("two mergeViaSql pipelines share one SparkSession without view-name collisions") {
-    // temp views are SESSION-scoped: with per-instance view counters two
-    // pipelines both start at n=1 and createOrReplaceTempView over each
-    // other's __graft_merge_* views mid-merge — the counter is JVM-global
-    // (CdcPipeline companion) exactly so concurrent batches can't collide
+  test("two pipelines share one SparkSession safely") {
+    // two pipelines on one session, merging concurrently, each land only
+    // their own source's rows
     val dirs = Seq.fill(2)(Files.createTempDirectory("blobsrc_two").toString)
     val routes = dirs.map { d =>
       val wms = new InMemoryWatermarkStore
       val target = new ParquetTarget(spark, Files.createTempDirectory("tgt_two").toString)
       val pipeline = new CdcPipeline(spark, UpsertBlobDialect,
-        PipelineConfig(maintenanceEvery = 0, mergeViaSql = true), wms)
+        PipelineConfig(maintenanceEvery = 0), wms)
       (d, wms, target, pipeline)
     }
     Seq((1L, "a1"), (2L, "a2")).toDF("id", "payload")
@@ -228,12 +216,12 @@ class CdcPipelineE2eSpec extends SparkSpec {
     assert(s1 == Map(1L -> "b1", 3L -> "b3"), s"pipeline 1 landed $s1")
   }
 
-  test("mergeViaSql handles soft deletes and schema evolution like the DataFrame path") {
-    def state(viaSql: Boolean): Seq[String] = {
+  test("pipeline applies soft deletes and evolution") {
+    val landed = {
       val wms = new InMemoryWatermarkStore
       val target = new ParquetTarget(spark, Files.createTempDirectory("tgt_sd").toString)
       val pipeline = new CdcPipeline(spark, graft.operators.SynapseLinkDialect,
-        PipelineConfig(maintenanceEvery = 0, mergeViaSql = viaSql), wms)
+        PipelineConfig(maintenanceEvery = 0), wms)
       val b1 = Seq(
         ("k1", 1L, false, "a"), ("k2", 1L, false, "b"), ("k3", 1L, false, "c")
       ).toDF("ARCANE_MERGE_KEY", "versionnumber", "IsDelete", "v")
@@ -248,11 +236,8 @@ class CdcPipelineE2eSpec extends SparkSpec {
         .select("ARCANE_MERGE_KEY", "versionnumber", "IsDelete", "v", "extra")
         .orderBy("ARCANE_MERGE_KEY").collect().map(_.toString).toSeq
     }
-    val viaDf = state(viaSql = false)
-    val viaSql = state(viaSql = true)
-    assert(viaSql == viaDf, "soft-delete/evolution parity")
-    assert(viaDf.exists(_.contains("k4")) && !viaDf.exists(_.contains("k2")))
-    assert(viaDf.exists(r => r.contains("k3") && r.contains("c")), "stale update ignored")
+    assert(landed.exists(_.contains("k4")) && !landed.exists(_.contains("k2")))
+    assert(landed.exists(r => r.contains("k3") && r.contains("c")), "stale update ignored")
   }
 
   test("field filtering can never strip the dialect's delete-marker column") {
@@ -332,6 +317,33 @@ class CdcPipelineE2eSpec extends SparkSpec {
       graft.operators.SynapseLinkDialect, Watermark.blob(1L), wms)
     val keys = target.read().select("ARCANE_MERGE_KEY").as[String].collect().toSet
     assert(keys == Set("k1", "k3")) // k2 tombstoned, k1 deduped to latest
+  }
+
+  test("a NULL MSSQL-CT marker is not a delete on the backfill and view paths") {
+    import graft.operators.MsSqlCtDialect
+    // row 2's SYS_CHANGE_OPERATION is NULL: not a delete, so every path
+    // keeps it; row 3 is a real delete
+    val rows = Seq[(Long, String, Long, Long, String)](
+      (1L, "g", 5L, 1L, "I"), (2L, "g", 7L, 1L, null), (3L, "g", 9L, 1L, "D"))
+      .toDF("id", "grp", "amount", "SYS_CHANGE_VERSION", "SYS_CHANGE_OPERATION")
+    def tgt() = new ParquetTarget(spark, Files.createTempDirectory("tgt_null").toString)
+    def ids(t: ParquetTarget) = t.read().select("id").as[Long].collect().toSet
+    val wms = new InMemoryWatermarkStore
+
+    val overwritten = tgt()
+    Backfill.overwrite(overwritten, "o", rows, "id", MsSqlCtDialect, Watermark.blob(1L), wms)
+    assert(ids(overwritten) == Set(1L, 2L), "overwrite backfill")
+
+    val merged = tgt()
+    Backfill.merge(merged, "m", rows, PipelineConfig(keyColumn = "id"),
+      MsSqlCtDialect, Watermark.blob(1L), wms)
+    assert(ids(merged) == Set(1L, 2L), "merge backfill onto an empty target")
+
+    val (view, state) = (tgt(), tgt())
+    ViewSink.processBatch(view, state, rows, "id", MsSqlCtDialect, Seq("grp"), "amount")
+    assert(ids(state) == Set(1L, 2L), "first view batch")
+    assert(view.read().select("cnt", "sum_value").as[(Long, Long)].collect().toSeq ==
+      Seq((2L, 12L)), "the view aggregates the kept rows")
   }
 }
 

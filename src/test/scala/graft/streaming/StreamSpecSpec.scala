@@ -94,4 +94,24 @@ class StreamSpecSpec extends SparkSpec {
     // dedup-latest by merge key: duplicate id=1 rows collapse to one
     assert(target.read().select("id").distinct().count() == 2)
   }
+
+  test("config-driven backfill applies the spec's field filter") {
+    for (behavior <- Seq("merge", "overwrite")) {
+      val srcDir = Files.createTempDirectory(s"cfg_src_$behavior").toString
+      val tgtDir = Files.createTempDirectory(s"cfg_tgt_$behavior").toString
+      val wmDir = Files.createTempDirectory(s"cfg_wm_$behavior").toString
+      Seq((1L, "a", "dbg1"), (2L, "b", "dbg2")).toDF("id", "v", "raw_debug")
+        .write.mode(SaveMode.Append).parquet(srcDir)
+      val json = specJson(srcDir, tgtDir, wmDir, backfill = true)
+        .replace(""""maintenance"""", """"fieldFilter": {"exclude": ["raw_debug"]},
+          |"maintenance"""".stripMargin)
+      val spec = StreamSpec.fromJson(json).copy(backfillBehavior = behavior)
+      assert(spec.excludeColumns == Seq("raw_debug"))
+      StreamRunner.run(spark, spec)
+      val target = new ParquetTarget(spark, tgtDir)
+      assert(!target.read().columns.contains("raw_debug"),
+        s"$behavior backfill kept an excluded column: ${target.read().columns.mkString(",")}")
+      assert(target.read().select("id").as[Long].collect().toSet == Set(1L, 2L), behavior)
+    }
+  }
 }
