@@ -190,6 +190,32 @@ object SparkEntry {
 
   private val mergeOutCols = Seq("user_id", "event_id", "event_type", "value")
 
+  /** Ingest-fixture scaffolding: runs `body` against a fresh temp corpus
+    * directory and returns the corpus's (doc_id, split), ordered. The
+    * emitted projection is small, so it is localized first and the
+    * directory, with its `__gatestate` side files, is deleted NOW instead
+    * of orphaning one temp tree per execution under min-of-N bench or
+    * repeated verify runs.
+    */
+  private def withTempCorpus(s: SparkSession, prefix: String)
+                            (body: String => Unit): DataFrame = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+    try {
+      body(tmp)
+      graft.core.Checkpoints.localize(
+        s.read.parquet(tmp).select(col("doc_id"), col("split")))
+        .orderBy(col("doc_id"))
+    } finally for (d <- Seq(tmp, tmp + "__gatestate")) {
+      val root = java.nio.file.Paths.get(d)
+      if (java.nio.file.Files.exists(root)) {
+        val walk = java.nio.file.Files.walk(root)
+        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(f => java.nio.file.Files.deleteIfExists(f))
+        finally walk.close()
+      }
+    }
+  }
+
   /** One per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -2137,11 +2163,11 @@ object SparkEntry {
     // incremental-ingest dedup with a Bloom prefilter: the standing corpus
     // (80% of docs by the doc_id%5 split) is summarized into a Bloom
     // filter over normalized-text fingerprints; incoming docs (the other
-    // 20%) probe it map-side, and only might-contain candidates enter the
-    // exact anti-join — the result is bit-identical to the plain anti-join
-    // (the filter only removes work), so the oracle replays it as NOT
-    // EXISTS. The filter's no-false-negative / fpp contracts are pinned in
-    // BloomDedupSpec.
+    // 20%) probe its broadcast map-side, and only might-contain candidates
+    // enter the exact anti-join — the result is bit-identical to the plain
+    // anti-join (the filter only removes work), so the oracle replays it as
+    // NOT EXISTS. The filter's no-false-negative / fpp contracts are pinned
+    // in BloomDedupSpec.
     "dedup_incremental_bloom" -> ((s, dir) => {
       val fp = t(s, dir, "documents")
         .select(col("doc_id"),
@@ -2150,7 +2176,8 @@ object SparkEntry {
       val incoming = fp.filter(pmod(col("doc_id"), lit(5L)) === 0L)
       val filter = BloomDedup.buildLong(corpus, col("fp"),
         expectedItems = math.max(corpus.count(), 1L), fpp = 0.01)
-      BloomDedup.newKeysExact(incoming, corpus, "fp", filter)
+      BloomDedup.newKeysExact(incoming, corpus, "fp",
+        BloomDedup.broadcastFilter(s, filter))
         .select(col("doc_id"), col("fp"))
         .orderBy(col("doc_id"))
     }),
@@ -2316,10 +2343,14 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val standing = docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0L)
       val incoming = docs.filter(pmod(col("doc_id"), lit(5L)) === 0L)
-      val (accepted, _) = CorpusPipeline.prepareIncremental(
+      val (accepted, _, release) = CorpusPipeline.prepareIncrementalManaged(
         incoming, standing,
         CorpusPipeline.Config(nearDupThreshold = None, decontamThreshold = None))
-      accepted.select(col("doc_id"), col("split")).orderBy(col("doc_id"))
+      val out =
+        try graft.core.Checkpoints.localize(
+          accepted.select(col("doc_id"), col("split")))
+        finally release()
+      out.orderBy(col("doc_id"))
     }),
 
     // streaming-ingest LIFECYCLE, content-checked like schema_evolution/m2:
@@ -2334,22 +2365,12 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val cfg = CorpusPipeline.Config(
         nearDupThreshold = None, decontamThreshold = None)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ingest_q").toString
       val b1 = docs.filter(pmod(col("doc_id"), lit(3L)) === 0L)
       val b2 = docs.filter(pmod(col("doc_id"), lit(3L)) =!= 0L)
-      graft.streaming.CorpusIngestSink.processBatch(s, tmp, b1, cfg)
-      graft.streaming.CorpusIngestSink.processBatch(s, tmp, b2, cfg)
-      // the emitted frame is the (small) id+split projection — localize it
-      // so the scratch corpus can be deleted NOW instead of orphaning one
-      // temp tree per execution under min-of-N bench / repeated verify runs
-      val out = graft.core.Checkpoints.localize(
-        s.read.parquet(tmp).select(col("doc_id"), col("split")))
-      val root = java.nio.file.Paths.get(tmp)
-      val walk = java.nio.file.Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-      out.orderBy(col("doc_id"))
+      withTempCorpus(s, "graft_ingest_q") { tmp =>
+        graft.streaming.CorpusIngestSink.processBatch(s, tmp, b1, cfg)
+        graft.streaming.CorpusIngestSink.processBatch(s, tmp, b2, cfg)
+      }
     }),
 
     // the FROZEN ingest gate, oracle-checked: same two batches as
@@ -2365,21 +2386,14 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val cfg = CorpusPipeline.Config(
         nearDupThreshold = None, decontamThreshold = None)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ingest_fq").toString
       val b1 = docs.filter(pmod(col("doc_id"), lit(3L)) === 0L)
       val b2 = docs.filter(pmod(col("doc_id"), lit(3L)) =!= 0L)
-      val gate = new graft.streaming.CorpusIngestSink.FrozenGate(
-        tmp, cfg, refreshEvery = 2)
-      try { gate.processBatch(b1); gate.processBatch(b2) }
-      finally gate.close()
-      val out = graft.core.Checkpoints.localize(
-        s.read.parquet(tmp).select(col("doc_id"), col("split")))
-      val root = java.nio.file.Paths.get(tmp)
-      val walk = java.nio.file.Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-      out.orderBy(col("doc_id"))
+      withTempCorpus(s, "graft_ingest_fq") { tmp =>
+        val gate = new graft.streaming.CorpusIngestSink.FrozenGate(
+          tmp, cfg, refreshEvery = 2)
+        try { gate.processBatch(b1); gate.processBatch(b2) }
+        finally gate.close()
+      }
     }),
 
     // the PRUNED-PROBE side-file path, oracle-checked: same two batches,
@@ -2399,26 +2413,15 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val cfg = CorpusPipeline.Config(
         nearDupThreshold = None, decontamThreshold = None)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ingest_sf").toString
       val b1 = docs.filter(pmod(col("doc_id"), lit(3L)) === 0L)
       val b2 = docs.filter(pmod(col("doc_id"), lit(3L)) =!= 0L)
-      graft.streaming.CorpusIngestSink.processBatch(s, tmp, b1, cfg)
-      val gate = new graft.streaming.CorpusIngestSink.FrozenGate(
-        tmp, cfg, refreshEvery = 1, sideFileMinRows = 0L)
-      try gate.processBatch(b2)
-      finally gate.close()
-      val out = graft.core.Checkpoints.localize(
-        s.read.parquet(tmp).select(col("doc_id"), col("split")))
-      for (d <- Seq(tmp, tmp + "__gatestate")) {
-        val root = java.nio.file.Paths.get(d)
-        if (java.nio.file.Files.exists(root)) {
-          val walk = java.nio.file.Files.walk(root)
-          try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(f => java.nio.file.Files.deleteIfExists(f))
-          finally walk.close()
-        }
+      withTempCorpus(s, "graft_ingest_sf") { tmp =>
+        graft.streaming.CorpusIngestSink.processBatch(s, tmp, b1, cfg)
+        val gate = new graft.streaming.CorpusIngestSink.FrozenGate(
+          tmp, cfg, refreshEvery = 1, sideFileMinRows = 0L)
+        try gate.processBatch(b2)
+        finally gate.close()
       }
-      out.orderBy(col("doc_id"))
     }),
 
     // EXTERNAL-WRITER detection, oracle-checked: batch 1 seeds the corpus
@@ -2436,26 +2439,19 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val cfg = CorpusPipeline.Config(
         nearDupThreshold = None, decontamThreshold = None)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ingest_xw").toString
       val b1 = docs.filter(pmod(col("doc_id"), lit(3L)) === 0L)
       val ext = docs.filter(pmod(col("doc_id"), lit(3L)) === 1L)
         .withColumn("split", lit("train"))
       val b2 = docs.filter(pmod(col("doc_id"), lit(3L)) === 2L)
-      val gate = new graft.streaming.CorpusIngestSink.FrozenGate(
-        tmp, cfg, refreshEvery = 3)
-      try {
-        gate.processBatch(b1)
-        ext.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(tmp)
-        gate.processBatch(b2)
-      } finally gate.close()
-      val out = graft.core.Checkpoints.localize(
-        s.read.parquet(tmp).select(col("doc_id"), col("split")))
-      val root = java.nio.file.Paths.get(tmp)
-      val walk = java.nio.file.Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally walk.close()
-      out.orderBy(col("doc_id"))
+      withTempCorpus(s, "graft_ingest_xw") { tmp =>
+        val gate = new graft.streaming.CorpusIngestSink.FrozenGate(
+          tmp, cfg, refreshEvery = 3)
+        try {
+          gate.processBatch(b1)
+          ext.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(tmp)
+          gate.processBatch(b2)
+        } finally gate.close()
+      }
     }),
 
     // the SEMANTIC arm of the ingest gate: day-2 batch (doc_id%5==0)

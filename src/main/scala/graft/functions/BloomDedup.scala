@@ -81,11 +81,13 @@ object BloomDedup {
     out.toByteArray
   }
 
-  /** Serialize + broadcast a filter once, for callers that probe it across
-    * MANY queries. Pair with [[mightContainBroadcast]]; `unpersist()` the
-    * handle when the filter's owner is released. The frozen gate
-    * broadcasts [[filterBytes]] through its [[graft.core.Scope]] instead,
-    * which owns that release.
+  /** Serialize + broadcast a filter once — the form [[newKeysExact]],
+    * [[newKeysExactPruned]] and [[mightContainBroadcast]] probe. The caller
+    * owns the handle: `unpersist()` it once the probing frames have
+    * materialized (a dropped handle is reclaimed by Spark's ContextCleaner
+    * when it is garbage-collected). The frozen gate broadcasts
+    * [[filterBytes]] through its [[graft.core.Scope]] instead, which owns
+    * that release.
     */
   def broadcastFilter(spark: org.apache.spark.sql.SparkSession,
                       filter: BloomFilter)
@@ -108,6 +110,10 @@ object BloomDedup {
     * occur in `corpus` — bit-identical to the plain anti-join, minus the
     * shuffle of every definitely-new incoming row.
     *
+    * The filter arrives as a broadcast handle ([[broadcastFilter]]), the
+    * one form both exact variants take; the task binary carries the
+    * handle, not the bits, and its release is the caller's.
+    *
     * Plan note: the union's two branches each read `incoming`, so a caller
     * whose incoming frame is expensive to derive should pass a slim
     * cached/localCheckpointed (id, key) projection (the engine's standard
@@ -115,16 +121,14 @@ object BloomDedup {
     * either way.
     */
   def newKeysExact(incoming: DataFrame, corpus: DataFrame, keyCol: String,
-                   filter: => BloomFilter,
-                   filterBcast: Option[org.apache.spark.broadcast.Broadcast[Array[Byte]]] = None)
+                   filter: org.apache.spark.broadcast.Broadcast[Array[Byte]])
       : DataFrame = {
     // NULL keys: the probe is null-propagating, so an un-coalesced split
     // would fail BOTH branch predicates and the row would silently vanish.
     // The plain anti-join this must stay bit-identical to KEEPS null-key
     // rows (null never equals any corpus key), so they route to the
     // definite-new branch.
-    val probe = filterBcast.fold(mightContain(filter, col(keyCol)))(
-      mightContainBroadcast(_, col(keyCol)))
+    val probe = mightContainBroadcast(filter, col(keyCol))
     val flagged = incoming.withColumn("__might", coalesce(probe, lit(false)))
     val definiteNew = flagged.filter(!col("__might")).drop("__might")
     val candidates = flagged.filter(col("__might")).drop("__might")
@@ -146,15 +150,15 @@ object BloomDedup {
     * never matters to LEFT ANTI semantics.
     *
     * `incoming` should be cached by the caller: it feeds both branches of
-    * the split AND the sliver collect. The filter arrives as a broadcast
-    * handle ([[broadcastFilter]]); its release is the caller's.
+    * the split AND the sliver collect. The filter arrives as in
+    * [[newKeysExact]].
     */
   def newKeysExactPruned(incoming: DataFrame,
                          corpusKeysFor: Seq[Any] => Option[DataFrame],
                          corpusKeys: => DataFrame, keyCol: String,
-                         filterBcast: org.apache.spark.broadcast.Broadcast[Array[Byte]],
+                         filter: org.apache.spark.broadcast.Broadcast[Array[Byte]],
                          cap: Int = 8192): DataFrame = {
-    val probe = mightContainBroadcast(filterBcast, col(keyCol))
+    val probe = mightContainBroadcast(filter, col(keyCol))
     val flagged = incoming.withColumn("__might", coalesce(probe, lit(false)))
     val definiteNew = flagged.filter(!col("__might")).drop("__might")
     val candidates = flagged.filter(col("__might")).drop("__might")

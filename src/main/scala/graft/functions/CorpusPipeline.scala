@@ -411,37 +411,19 @@ object CorpusPipeline {
     * Every signature, band split, Bloom fpp and hot-bucket cap is
     * [[GateGeometry]]'s.
     *
-    * Returns (accepted rows, audit). Scale posture: the corpus contributes
-    * one keys-only filter-build pass, one distinct-key sliver join, and the
-    * banded signature pass — its text never moves; each stage is the
-    * already-bounded primitive it names.
+    * Returns (accepted rows, audit, release). Scale posture: the corpus
+    * contributes one keys-only filter-build pass, one distinct-key sliver
+    * join, and the banded signature pass — its text never moves; each
+    * stage is the already-bounded primitive it names.
     *
-    * CACHE LIFETIME: the returned frames reference the call's frozen
-    * corpus state and batch caches, and THIS convenience wrapper discards
-    * the release handle — a corpus-keys-sized checkpoint outlives every
-    * call. Fine for a one-shot batch job whose session ends; a
-    * repeated/batch-loop caller (an ingest service, a test harness,
-    * anything calling per micro-batch) must use
-    * [[prepareIncrementalManaged]] and invoke the handle once the returned
-    * frames have materialized.
-    */
-  def prepareIncremental(newDocs: DataFrame, standingCorpus: DataFrame,
-                         cfg: Config = Config(),
-                         againstThreshold: Option[Double] = Some(0.8))
-      : (DataFrame, DataFrame) = {
-    val (accepted, audit, _) = prepareIncrementalManaged(newDocs, standingCorpus,
-      cfg, againstThreshold)
-    (accepted, audit)
-  }
-
-  /** [[prepareIncremental]] with an explicit cache-release handle — the
-    * [[graft.operators.PageRank.runManaged]] pattern. One [[Scope]] owns
-    * everything the RETURNED frames reference: the frozen corpus and the
-    * batch funnel's persisted frames. A long-lived ingest service must call
-    * `release()` once `accepted`/`audit` have materialized, or one
-    * corpus-keys-sized checkpoint accumulates per batch. A failure inside
-    * this call closes the scope before it propagates. The freeze is made
-    * without banding, under [[GateGeometry]].
+    * CACHE LIFETIME — the [[graft.operators.PageRank.runManaged]] pattern:
+    * one [[Scope]] owns everything the RETURNED frames reference, the
+    * frozen corpus and the batch funnel's persisted frames. Call
+    * `release()` once `accepted`/`audit` have materialized (localize what
+    * must outlive it), or one corpus-keys-sized checkpoint, the Bloom
+    * broadcast and the persisted batch frames stay pinned per call. A
+    * failure inside this call closes the scope before it propagates. The
+    * freeze is made without banding, under [[GateGeometry]].
     */
   def prepareIncrementalManaged(newDocs: DataFrame, standingCorpus: DataFrame,
                                 cfg: Config = Config(),
@@ -477,9 +459,10 @@ object CorpusPipeline {
     * gating is on), and the Bloom prefilter over the keys — everything the
     * incremental gate needs from the corpus EXCEPT candidate-verify text.
     * One localCheckpointed slim frame backs both projections, built in a
-    * SINGLE corpus scan, under the one [[GateGeometry]]. The freeze's
-    * [[Scope]] owns it, the Bloom broadcast and the banded cache;
-    * `release()` closes that scope.
+    * SINGLE corpus scan, under the one [[GateGeometry]]. The Bloom filter
+    * exists only as its broadcast ([[bloomBcast]]); no driver copy of its
+    * bits outlives the freeze. The freeze's [[Scope]] owns the slim frame,
+    * the broadcast and the banded cache; `release()` closes that scope.
     *
     * This is the freeze-and-refresh device for streaming ingest: freeze
     * once, gate many batches against (frozen + admitted-delta) state, and
@@ -491,14 +474,11 @@ object CorpusPipeline {
       slim: DataFrame,
       /** corpus rows at freeze time */
       val rows: Long,
-      /** Bloom filter over the frozen exact-dedup keys (probe via
-        * [[bloomBcast]] where possible)
-        */
-      val bloom: org.apache.spark.util.sketch.BloomFilter,
-      /** the Bloom filter's serialized bytes as a BROADCAST handle: probes
-        * built from it ship the handle in the task binary, not the bits
-        * (~1.2 MB per million keys at 1% fpp — plan-embedded bytes would
-        * re-ship per stage per batch); unpersisted on [[release]]
+      /** the Bloom filter over the frozen exact-dedup keys, serialized
+        * and BROADCAST — its only form: probes ship the handle in the task
+        * binary, not the bits (~1.2 MB per million keys at 1% fpp —
+        * plan-embedded bytes would re-ship per stage per batch);
+        * unpersisted on [[release]]
         */
       val bloomBcast: org.apache.spark.broadcast.Broadcast[Array[Byte]],
       withSignatures: Boolean,
@@ -628,11 +608,12 @@ object CorpusPipeline {
   /** Freeze a standing corpus's gate state in ONE scan: project
     * (id, exact-key, signature) together — plus the embedding via one
     * keyed left join when the semantic arm is on — localCheckpoint the
-    * slim frame, build the Bloom filter from the checkpointed keys. Day-0 (empty
-    * corpus) gets an explicitly empty filter — Spark's `stat.bloomFilter`
-    * NPEs on zero rows, and every probe of the empty filter correctly
-    * answers "proven new". The filter is monolithic (the [[BloomDedup]]
-    * posture note).
+    * slim frame, build the Bloom filter from the checkpointed keys and
+    * broadcast its bytes (the driver filter is garbage once serialized).
+    * Day-0 (empty corpus) gets an explicitly empty filter — Spark's
+    * `stat.bloomFilter` NPEs on zero rows, and every probe of the empty
+    * filter correctly answers "proven new". The filter is monolithic (the
+    * [[BloomDedup]] posture note).
     *
     * Keys, signatures, the Bloom fpp, the banding and the hot-bucket cap
     * all come from [[GateGeometry]]. `withBanded` also persists the banded
@@ -682,10 +663,9 @@ object CorpusPipeline {
         e.select(col(cfg.idCol).as("__id"), col(cfg.embCol).as("__emb")),
         Seq("__id"), "left")))
       val rows = slim.count() // cheap: counts the checkpointed blocks
-      val bloom =
+      val bloomBc = scope.broadcast(slim.sparkSession, BloomDedup.filterBytes(
         if (rows == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, BloomFpp)
-        else BloomDedup.buildLongNonEmpty(slim, col("__ck"), rows, BloomFpp)
-      val bloomBc = scope.broadcast(slim.sparkSession, BloomDedup.filterBytes(bloom))
+        else BloomDedup.buildLongNonEmpty(slim, col("__ck"), rows, BloomFpp)))
       val (bnd, hot, maxNonHot) =
         if (!withBanded) (None, None, None)
         else {
@@ -773,9 +753,36 @@ object CorpusPipeline {
               .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir + "/sigs")
           (Some(dir), p)
         }
-      new FrozenCorpus(scope, slim, rows, bloom, bloomBc, withSignatures,
+      new FrozenCorpus(scope, slim, rows, bloomBc, withSignatures,
         embeddings.isDefined, bnd, hot, maxNonHot, side, pfxParts)
     }
+  }
+
+  /** The admitted DELTA's one frame: the projection a frozen gate folds
+    * each admitted batch into, and the only shape
+    * [[prepareIncrementalFrozen]] reads a delta in. Columns:
+    *   - `__id` — the document id;
+    *   - `__ck` — its [[GateGeometry.key]];
+    *   - `__sig` — its [[GateGeometry.signature]], null unless
+    *     `withSignatures`;
+    *   - `__bb` — that signature's [[GateGeometry.bandBuckets]] (band b's
+    *     bucket at position b), null unless `withSignatures`;
+    *   - `__emb` — the row's vector from `embeddings` (keyed by
+    *     `cfg.idCol`, left-joined; null for rows without one), present only
+    *     when `embeddings` is given.
+    */
+  private[graft] def deltaProjection(admitted: DataFrame, cfg: Config,
+                                     withSignatures: Boolean,
+                                     embeddings: Option[DataFrame]): DataFrame = {
+    import GateGeometry._
+    val text = col(cfg.textCol)
+    val sig = signature(text)
+    val nullArr = lit(null).cast("array<bigint>")
+    val base = admitted.select(col(cfg.idCol).as("__id"), key(text).as("__ck"),
+      (if (withSignatures) sig else nullArr).as("__sig"),
+      (if (withSignatures) bandBuckets(sig) else nullArr).as("__bb"))
+    embeddings.fold(base)(e => base.join(e.select(col(cfg.idCol).as("__id"),
+      col(cfg.embCol).as("__emb")), Seq("__id"), "left"))
   }
 
   /** The day-2 gate against FROZEN corpus state: in-batch [[prepare]],
@@ -785,11 +792,16 @@ object CorpusPipeline {
     * scanned, so a whole micro-batch can gate without touching corpus
     * storage.
     *
-    * `extraKeys` / `extraSigs` are the DELTA admitted since the freeze
-    * (caller-managed frames in the same shapes): rows the Bloom filter
-    * proves new against the FROZEN corpus may still duplicate the delta,
-    * so the exact stage anti-joins the delta keys after the frozen split,
-    * and the delta signatures ride into the near-dup funnel's corpus side.
+    * `delta` is the corpus rows admitted since the freeze, as ONE
+    * [[deltaProjection]] frame; every delta slice the gate needs is a
+    * projection of it (keys `__ck`; the non-null `__sig`/`__emb` rows; the
+    * banded rows `posexplode(__bb)`, so banding the delta runs no job of
+    * its own). Rows the Bloom filter proves new against the FROZEN corpus
+    * may still duplicate the delta, so the exact stage anti-joins the
+    * delta keys after the frozen split, and the delta signatures ride into
+    * the near-dup funnel's corpus side. `deltaBucketCounts`, when the
+    * caller knows it, is the delta's exact (band, bucket) occupancy; the
+    * banded funnel then probes frozen counts for suspect buckets only.
     * With the delta maintained faithfully, admissions are IDENTICAL to
     * re-freezing every batch — the equality [[graft.streaming]]'s
     * FrozenGateSpec pins — because frozen + delta IS the corpus.
@@ -807,15 +819,14 @@ object CorpusPipeline {
                                corpusDocs: => DataFrame,
                                cfg: Config = Config(),
                                againstThreshold: Option[Double] = Some(0.8),
-                               extraKeys: Option[DataFrame] = None,
-                               extraSigs: Option[DataFrame] = None,
                                semanticAgainstThreshold: Option[Double] = None,
-                               extraEmbs: Option[DataFrame] = None,
-                               extraBanded: Option[DataFrame] = None,
-                               extraBucketCounts: Option[Map[(Int, Long), Long]] = None)
+                               delta: Option[DataFrame] = None,
+                               deltaBucketCounts: Option[Map[(Int, Long), Long]] = None)
       : DataFrame = {
     import GateGeometry._
     val text = col(cfg.textCol)
+    def deltaNonNull(c: String) =
+      delta.map(_.select(col("__id"), col(c)).filter(col(c).isNotNull))
     // 1. in-batch preparation
     val prepared = prepare(newDocs, cfg)
 
@@ -835,16 +846,15 @@ object CorpusPipeline {
         BloomDedup.newKeysExactPruned(keyed, frozen.prunedKeys,
           frozen.keys, "__ck", frozen.bloomBcast)
       } else BloomDedup.newKeysExact(
-        prepared.withColumn("__ck", key(text)), frozen.keys, "__ck", frozen.bloom,
-        filterBcast = Some(frozen.bloomBcast))
+        prepared.withColumn("__ck", key(text)), frozen.keys, "__ck", frozen.bloomBcast)
     // exactNew feeds several plan branches downstream (both sides of the
     // against-corpus signature funnel, the exact-verify shingle scan, the
     // final anti-join), and each would otherwise re-derive the ENTIRE
     // in-batch prepare chain from the raw scan (measured 1.6× on the warm
     // pipeline at sf0.1). Persisted, not localized: it carries the
     // batch's surviving TEXT rows, which must not land on the driver.
-    val exactNew = scope.persist(extraKeys.fold(afterFrozen)(dk =>
-        afterFrozen.join(dk.select(col("__ck")).distinct(), Seq("__ck"), "left_anti"))
+    val exactNew = scope.persist(delta.fold(afterFrozen)(d =>
+        afterFrozen.join(d.select(col("__ck")).distinct(), Seq("__ck"), "left_anti"))
       .drop("__ck"))
 
     // 3. near-dup against frozen signatures ∪ delta signatures — through
@@ -856,19 +866,21 @@ object CorpusPipeline {
       val corpusSigs = frozen.sigs.getOrElse(throw new IllegalStateException(
         "near-dup gating requested but the corpus was frozen without signatures"))
       val sh = shingles(text)
+      val deltaSigs = deltaNonNull("__sig")
       val pairs = frozen.banded match {
         case Some((bnd, hot)) =>
           MinHashLsh.bipartitePairsFrozenBanded(corpusSigs, bnd, hot,
-            extraSigs, corpusDocs, exactNew, cfg.idCol, sh, NumHashes, Bands, th,
+            deltaSigs, corpusDocs, exactNew, cfg.idCol, sh, NumHashes, Bands, th,
             maxBucketSize = MaxBucketSize,
-            deltaBanded = extraBanded,
-            deltaBucketCounts = extraBucketCounts,
+            deltaBanded = delta.map(_.select(col("__id"),
+              posexplode(col("__bb")).as(Seq("__band", "__bucket")))),
+            deltaBucketCounts = deltaBucketCounts,
             frozenMaxNonHot = frozen.bandedMaxNonHot,
             prunedSigsFor =
               if (frozen.hasSideFiles) Some(frozen.prunedSigs _) else None)
         case _ =>
           MinHashLsh.bipartitePairsPrecomputedLeft(
-            extraSigs.fold(corpusSigs)(corpusSigs.unionByName(_)), corpusDocs,
+            deltaSigs.fold(corpusSigs)(corpusSigs.unionByName(_)), corpusDocs,
             exactNew, cfg.idCol, sh, NumHashes, Bands, th,
             maxBucketSize = MaxBucketSize)
       }
@@ -889,7 +901,7 @@ object CorpusPipeline {
         "semantic gating requested but the corpus was frozen without embeddings"))
       val embFrame = cfg.embeddings.getOrElse(throw new IllegalStateException(
         "semantic gating requires cfg.embeddings for the batch side"))
-      val allEmb = extraEmbs.fold(corpusEmb)(d => corpusEmb.unionByName(d))
+      val allEmb = deltaNonNull("__emb").fold(corpusEmb)(corpusEmb.unionByName(_))
       val batchEmb = lexAccepted.select(col(cfg.idCol).as("__id"))
         .join(embFrame.select(col(cfg.idCol).as("__id"),
           col(cfg.embCol).as("__emb")), "__id")

@@ -330,8 +330,9 @@ object MinHashLsh {
       minBands: Int, maxBucketSize: Long,
       prunedSigsFor: Option[Seq[Any] => Option[DataFrame]] = None): DataFrame = {
     val spark = frozenBanded.sparkSession
-    // the delta's banded rows: caller-precomputed (driver-built at fold
-    // time, zero jobs) when available, else derived from the delta sigs
+    // the delta's banded rows: caller-supplied (the frozen gate explodes
+    // the band buckets its fold already collected, zero jobs) when given,
+    // else derived from the delta sigs
     val blD = deltaBanded.orElse(deltaSigs.map(d => bandedFrame(d, bands, numHashes)))
     val br0 = bandedFrame(sr, bands, numHashes)
     val bl0 = blD.fold(frozenBanded)(frozenBanded.unionByName(_))

@@ -6,7 +6,7 @@ import graft.functions.CorpusPipeline.GateGeometry
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Streaming corpus ingestion with the day-2 dedup gate: each micro-batch
-  * runs [[CorpusPipeline.prepareIncremental]] against the CURRENT standing
+  * runs [[CorpusPipeline.prepareIncrementalManaged]] against the CURRENT standing
   * corpus (the target directory itself) and appends only the survivors —
   * the streaming face of the batch ingest funnel (in-batch prepare, exact
   * against-corpus dedup behind the Bloom prefilter, near-dup LSH gate).
@@ -58,29 +58,35 @@ object CorpusIngestSink {
     case object Ignore extends ExternalWriterPolicy
   }
 
-  /** Driver-heap budget (bytes) for one delta fold's `collect()` — the
-    * [[FrozenGate]] folds each admitted batch's keys/signatures/embeddings
-    * into a driver-local relation only while the COLLECTED rows fit this
-    * budget; larger batches stay executor-resident as a localCheckpoint.
+  /** Driver-heap budget (bytes) for the delta rows a [[FrozenGate]]
+    * collects over one REFRESH WINDOW: a fold collects an admitted batch
+    * into the driver-local delta only while the rows the window has
+    * already collected plus the batch's fit this budget; a batch that
+    * would overfill it stays executor-resident as a localCheckpoint.
     * 256 MB: small next to any realistic driver heap, large enough that
     * the steady-state regime (batch ≪ corpus) never takes the fallback.
     */
   private[streaming] val DefaultFoldDriverBytes: Long = 256L << 20
 
-  /** Estimated DRIVER bytes for one collected delta row. `collect()`
-    * materializes GenericRows whose array elements are BOXED, so a
-    * signature/embedding element costs ~32 B on the heap (16 B box +
-    * 8 B ref + amortized array/Seq headers), not its 8 B columnar width —
-    * a [[GateGeometry]] 64-hash signature is ~2 KB and a dim-768 embedding
-    * ~25 KB, which is why a row-count cap alone (r15's 2²² rows) was a
-    * driver-OOM hazard the moment the semantic arm widened the row.
+  /** Estimated DRIVER bytes for one collected delta row — the
+    * [[CorpusPipeline.deltaProjection]] row the gate keeps for the whole
+    * refresh window: id, exact key, signature, band buckets and, with the
+    * semantic arm, the embedding. `collect()` materializes GenericRows
+    * whose array elements are BOXED, so a signature/bucket/embedding
+    * element costs ~32 B on the heap (16 B box + 8 B ref + amortized
+    * array/Seq headers), not its 8 B columnar width — a [[GateGeometry]]
+    * 64-hash signature is ~2 KB and a dim-768 embedding ~25 KB, which is
+    * why a row-count cap alone (r15's 2²² rows) was a driver-OOM hazard
+    * the moment the semantic arm widened the row. Not priced: the delta's
+    * bucket-occupancy map, at most [[GateGeometry.Bands]] entries per row
+    * and fewer where rows share buckets.
     */
   private[streaming] def estimatedDeltaRowBytes(
       withSignatures: Boolean, withEmbeddings: Boolean, embeddingDim: Int): Long = {
     val rowShell = 64L // GenericRow + field refs + boxed id/key
     // a signature row also carries its band-bucket array (one long per
     // band), collected in the same fold so the delta's banding and bucket
-    // occupancy stay driver-resident without extra jobs
+    // occupancy need no extra job
     val sig =
       if (withSignatures) 96L + 32L * (GateGeometry.NumHashes + GateGeometry.Bands)
       else 8L
@@ -303,10 +309,11 @@ object CorpusIngestSink {
     *
     * The staleness trade costs NOTHING here, because the only writer of
     * the corpus is this gate: rows admitted since the freeze are folded
-    * into a DELTA (their exact keys and MinHash signatures, localized via
-    * [[graft.core.Checkpoints.localize]] so no lineage can silently
-    * recompute against a mutated target — above the row guard the frames
-    * stay as lineage-truncated checkpoints for the same reason), and every
+    * into ONE DELTA frame ([[CorpusPipeline.deltaProjection]]: exact key,
+    * MinHash signature, band buckets, and the embedding for the semantic
+    * arm), collected to the driver so no lineage can silently recompute
+    * against a mutated target — past the window's driver budget a fold
+    * stays a lineage-truncated checkpoint for the same reason — and every
     * batch gates against frozen + delta, which IS the current corpus. So
     * admissions are bit-identical to per-batch re-freezing at ANY cadence
     * (`FrozenGateSpec` pins equality and the scan count). Candidate
@@ -338,8 +345,8 @@ object CorpusIngestSink {
     *
     * WHEN TO USE — the trade is scan avoidance vs fixed bookkeeping: per
     * admitted batch the gate pays one extra collect job (the delta fold;
-    * driver-resident rows rebuild into ONE LocalRelation per side, so the
-    * gate plan stays flat across the refresh window), and in exchange
+    * driver-resident rows rebuild into ONE LocalRelation, so the gate plan
+    * stays flat across the refresh window), and in exchange
     * skips the per-batch corpus scan. Measured at sf0.1/local[32] (corpus ≈ 4k
     * docs) the bookkeeping DOMINATES — per-batch gating is ~2× faster —
     * because scanning a few thousand cached rows is cheaper than any
@@ -393,34 +400,32 @@ object CorpusIngestSink {
     private var frozen: CorpusPipeline.FrozenCorpus = null
     private var sinceRefresh = 0
     private var refreshes = 0L
-    private[streaming] var deltaKeys: Option[DataFrame] = None
-    private[streaming] var deltaSigs: Option[DataFrame] = None
-    private[streaming] var deltaEmbs: Option[DataFrame] = None
-    /** the delta's banded rows, built DRIVER-SIDE at fold time (the fold's
-      * collect already carries each row's band buckets) — zero extra jobs,
-      * and the funnel's hot-bucket check gets exact per-bucket delta
-      * occupancy without ever re-banding the delta distributively
+    /** The admitted DELTA since the freeze, as ONE frame in the
+      * [[CorpusPipeline.deltaProjection]] shape (`__id`, `__ck`, `__sig`,
+      * `__bb`, optional `__emb`): the driver-resident rows as exactly one
+      * LocalRelation, with any over-budget checkpoint [[deltaParts]]
+      * unioned behind it. The funnel derives every slice it needs (keys,
+      * signatures, embeddings, banded rows) from it. None before the first
+      * admission of a refresh window.
       */
-    private[streaming] var deltaBanded: Option[DataFrame] = None
-    private val deltaBucketCounts = scala.collection.mutable.HashMap.empty[(Int, Long), Long]
-    /** false once any fold took the checkpoint path (delta no longer fully
-      * driver-resident) — the funnel then falls back to plan-derived
-      * delta banding until the next refresh
+    private[streaming] var delta: Option[DataFrame] = None
+    /** exact (band, bucket) occupancy of the delta, counted from the
+      * collected `__bb` arrays; None once any fold of the window
+      * checkpointed, and the funnel then counts the delta's buckets itself
       */
-    private var deltaDriverResident = true
-    /** The driver-resident delta: every in-budget fold's collected rows,
-      * accumulated across the refresh window and REBUILT into exactly ONE
-      * LocalRelation per side after each fold (the rows are already on the
-      * driver — concatenating arrays is free next to the collect that
-      * produced them). A `unionByName` chain of per-batch LocalRelations
-      * would instead serialize refreshEvery LocalTableScans into EVERY job
-      * that touches the gate — plan weight and task-serialization cost
-      * linear in the refresh window, a driver/scheduler tax at long
-      * windows. `FrozenGateFlatDeltaSpec` pins the one-scan shape.
+    private var deltaBucketCounts: Option[Map[(Int, Long), Long]] = Some(Map.empty)
+    /** Every in-budget fold's collected rows, accumulated across the
+      * refresh window and REBUILT into exactly ONE LocalRelation after each
+      * fold (the rows are already on the driver — concatenating arrays is
+      * free next to the collect that produced them). A `unionByName` chain
+      * of per-batch LocalRelations would instead serialize refreshEvery
+      * LocalTableScans into EVERY job that touches the gate — plan weight
+      * and task-serialization cost linear in the refresh window, a
+      * driver/scheduler tax at long windows. `FrozenGateFlatDeltaSpec` pins
+      * the one-scan shape.
       */
     private val deltaDriverRows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     private var deltaSchema: org.apache.spark.sql.types.StructType = null
-    private val deltaBandedRows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     /** owns the frozen corpus and over-budget fold checkpoints; closed by [[close]] */
     private val window = new Scope
     /** over-budget folds only: executor-resident localCheckpoint frames
@@ -458,38 +463,17 @@ object CorpusIngestSink {
     private[streaming] var preAppendTap: () => Unit = () => ()
     private[streaming] def isFrozen: Boolean = frozen != null
 
-    /** Rebuild the combined delta frames after a fold: the driver-resident
-      * rows become exactly ONE LocalRelation (each side a column slice of
-      * it), regardless of how many batches the refresh window admitted;
-      * over-budget checkpointed parts (the rare fallback) union behind it.
+    /** Rebuild [[delta]] after a fold: the driver-resident rows become
+      * exactly ONE LocalRelation, regardless of how many batches the
+      * refresh window admitted; over-budget checkpointed parts (the rare
+      * fallback) union behind it.
       */
     private def rebuildDelta(spark: SparkSession): Unit = {
-      import org.apache.spark.sql.functions.{col => c}
-      val local: Option[DataFrame] =
+      val local =
         if (deltaDriverRows.isEmpty) None
         else Some(spark.createDataFrame(
           java.util.Arrays.asList(deltaDriverRows.toArray: _*), deltaSchema))
-      val all = (local.toSeq ++ deltaParts).reduceOption(_.unionByName(_))
-      deltaKeys = all.map(_.select(c("__ck")))
-      deltaSigs =
-        if (againstThreshold.isDefined)
-          all.map(_.select(c("__id"), c("__sig")).filter(c("__sig").isNotNull))
-        else None
-      deltaEmbs =
-        if (semanticAgainstThreshold.isDefined)
-          all.map(_.select(c("__id"), c("__emb")).filter(c("__emb").isNotNull))
-        else None
-      deltaBanded =
-        if (deltaDriverResident && deltaBandedRows.nonEmpty) {
-          val bandedSchema = org.apache.spark.sql.types.StructType(Seq(
-            deltaSchema("__id").copy(name = "__id"),
-            org.apache.spark.sql.types.StructField("__band",
-              org.apache.spark.sql.types.IntegerType, nullable = false),
-            org.apache.spark.sql.types.StructField("__bucket",
-              org.apache.spark.sql.types.LongType, nullable = false)))
-          Some(spark.createDataFrame(
-            java.util.Arrays.asList(deltaBandedRows.toArray: _*), bandedSchema))
-        } else None
+      delta = (local.toSeq ++ deltaParts).reduceOption(_.unionByName(_))
     }
 
     /** Gate one micro-batch against frozen + delta state, append survivors,
@@ -551,11 +535,7 @@ object CorpusIngestSink {
         // The checkpoint is eager: the whole funnel runs here.
         val accepted = scope.checkpoint(CorpusPipeline.prepareIncrementalFrozen(
           scope, batch, frozen, corpusReader(spark, targetDir, batch), cfg,
-          againstThreshold, deltaKeys, deltaSigs,
-          semanticAgainstThreshold, deltaEmbs,
-          extraBanded = if (deltaDriverResident) deltaBanded else None,
-          extraBucketCounts =
-            if (deltaDriverResident) Some(deltaBucketCounts.toMap) else None))
+          againstThreshold, semanticAgainstThreshold, delta, deltaBucketCounts))
         val n = accepted.count()
         if (n == 0L) Some(0L)
         else {
@@ -622,78 +602,49 @@ object CorpusIngestSink {
       val ownEntries = expectedEntries ++
         listingEntries(spark, targetDir).filterNot(e => preNames(e._1))
       try {
-        // delta fold: ONE localized projection carries the admitted
-        // rows' exact keys, signatures, and (when the semantic arm is
-        // on) embeddings together — key/sig/emb frames are then free
-        // column slices of the same local relation, so the per-batch
-        // bookkeeping is a single localCheckpoint job, not three (the
-        // fixed-overhead term that dominates the gate below the
-        // corpus-size crossover; see the FrozenGate scaladoc)
-        import org.apache.spark.sql.functions.{col => c}
-        val text = c(cfg.textCol)
-        val sigExpr = GateGeometry.signature(text)
-        val nullArr = org.apache.spark.sql.functions.lit(null)
-          .cast("array<bigint>")
-        val base = accepted.select(c(cfg.idCol).as("__id"),
-          GateGeometry.key(text).as("__ck"),
-          (if (againstThreshold.isDefined) sigExpr else nullArr).as("__sig"),
-          // the row's band buckets ride the same projection — the
-          // driver-side delta banding below costs zero extra jobs
-          (if (againstThreshold.isDefined) GateGeometry.bandBuckets(sigExpr)
-           else nullArr).as("__bb"))
-        val withEmb =
-          if (semanticAgainstThreshold.isDefined)
-            base.join(cfg.embeddings.get.select(c(cfg.idCol).as("__id"),
-              c(cfg.embCol).as("__emb")), Seq("__id"), "left")
-          else base
-        // `accepted` is checkpointed and already counted, so when the
-        // batch is driver-safe the fold is ONE collect off its blocks into
-        // a local relation. The collect guard is BYTE-aware, not row-count:
+        // delta fold: ONE projection carries the admitted rows' exact
+        // keys, signatures, band buckets and (when the semantic arm is on)
+        // embeddings together — every delta slice the funnel reads is a
+        // column projection of it, so the per-batch bookkeeping is a
+        // single collect job, not one per slice (the fixed-overhead term
+        // that dominates the gate below the corpus-size crossover; see
+        // the FrozenGate scaladoc)
+        val folded = foldTap(CorpusPipeline.deltaProjection(accepted, cfg,
+          withSignatures = againstThreshold.isDefined,
+          embeddings = if (semanticAgainstThreshold.isDefined) cfg.embeddings else None))
+        // `accepted` is checkpointed and already counted, so while the
+        // window's driver-resident delta fits the budget the fold is ONE
+        // collect off its blocks. The guard is BYTE-aware, not row-count:
         // a collected row costs rowShell + ~32 B per boxed signature/
         // embedding element ([[estimatedDeltaRowBytes]]), so the cap is
         // foldDriverBytes (default 256 MB) over that width — ~120k rows
         // with a 64-hash signature, ~10k with a dim-768 embedding
-        // attached. Above it the fold stays executor-resident as an
-        // eager localCheckpoint (lineage-truncated for the same
-        // mutated-target reason) owned by the refresh-window scope.
+        // attached — and it bounds the rows collected across the whole
+        // refresh window, this batch's n included. Past it the fold stays
+        // executor-resident as an eager localCheckpoint
+        // (lineage-truncated for the same mutated-target reason) owned by
+        // the refresh-window scope.
         val maxFoldRows = foldCollectMaxRows(foldDriverBytes,
           againstThreshold.isDefined, semanticAgainstThreshold.isDefined,
           cfg.embeddingDim)
-        val folded = foldTap(withEmb)
-        val collected = if (n <= maxFoldRows) folded.collect() else null
-        if (collected != null) {
+        if (deltaDriverRows.size + n <= maxFoldRows) {
+          val collected = folded.collect()
           if (deltaSchema == null) deltaSchema = folded.schema
           deltaDriverRows ++= collected
-          if (deltaDriverResident && againstThreshold.isDefined) {
-            // driver-side banding of the admitted rows: the collected
-            // __bb arrays become (id, band, bucket) rows plus an exact
-            // per-bucket occupancy map — the funnel uses the map to
-            // prove most batches cannot push any bucket over the hot cap
-            // and to probe frozen counts for exactly the touched buckets
-            // when one might
-            val idIdx = folded.schema.fieldIndex("__id")
-            val bbIdx = folded.schema.fieldIndex("__bb")
-            collected.foreach { r =>
-              if (!r.isNullAt(bbIdx)) {
-                val bb = r.getSeq[Long](bbIdx)
-                var b = 0
-                while (b < bb.length) {
-                  deltaBandedRows += org.apache.spark.sql.Row(r.get(idIdx), b, bb(b))
-                  val k = (b, bb(b))
-                  deltaBucketCounts.update(k, deltaBucketCounts.getOrElse(k, 0L) + 1L)
-                  b += 1
-                }
-              }
-            }
-          }
+          // the collected __bb arrays give the delta's exact per-bucket
+          // occupancy — the funnel uses it to prove most batches cannot
+          // push any bucket over the hot cap, and to probe frozen counts
+          // for exactly the suspect buckets when one might
+          val bbIdx = deltaSchema.fieldIndex("__bb")
+          deltaBucketCounts = deltaBucketCounts.map(counts =>
+            collected.iterator.filterNot(_.isNullAt(bbIdx))
+              .flatMap(_.getSeq[Long](bbIdx).iterator.zipWithIndex)
+              .foldLeft(counts) { case (m, (bucket, band)) =>
+                m.updated((band, bucket), m.getOrElse((band, bucket), 0L) + 1L)
+              })
         } else {
-          // a checkpointed fold means the delta is no longer fully
-          // driver-resident: drop the driver-side banding state and let
-          // the funnel re-derive delta banding from the sig frames
           deltaParts += window.checkpoint(folded)
-          deltaDriverResident = false
-          deltaBandedRows.clear()
-          deltaBucketCounts.clear()
+          deltaBucketCounts = None
         }
         rebuildDelta(spark)
         // the append itself moved the listing — own writes must not trip
@@ -759,15 +710,10 @@ object CorpusIngestSink {
     def close(): Unit = {
       frozen = null
       deltaParts.clear()
-      deltaKeys = None
-      deltaSigs = None
-      deltaEmbs = None
-      deltaBanded = None
+      delta = None
       deltaDriverRows.clear()
-      deltaBandedRows.clear()
       deltaSchema = null
-      deltaBucketCounts.clear()
-      deltaDriverResident = true
+      deltaBucketCounts = Some(Map.empty)
       window.close()
     }
   }

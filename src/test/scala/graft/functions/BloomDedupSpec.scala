@@ -18,6 +18,7 @@ class BloomDedupSpec extends SparkSpec {
   private lazy val incoming = fp.filter(pmod($"doc_id", lit(5L)) === 0L).cache()
   private lazy val filter =
     BloomDedup.buildLong(corpus, $"fp", math.max(corpus.count(), 1L), 0.01)
+  private lazy val filterBcast = BloomDedup.broadcastFilter(spark, filter)
 
   test("no false negatives: every inserted key probes true, exhaustively") {
     val missed = corpus
@@ -46,7 +47,7 @@ class BloomDedupSpec extends SparkSpec {
   }
 
   test("exact mode is bit-identical to the plain anti-join") {
-    val viaBloom = BloomDedup.newKeysExact(incoming, corpus, "fp", filter)
+    val viaBloom = BloomDedup.newKeysExact(incoming, corpus, "fp", filterBcast)
       .select($"doc_id").as[Long].collect().sorted.toSeq
     val plain = incoming.join(corpus.select($"fp").distinct(), Seq("fp"), "left_anti")
       .select($"doc_id").as[Long].collect().sorted.toSeq
@@ -54,7 +55,7 @@ class BloomDedupSpec extends SparkSpec {
   }
 
   test("probabilistic mode: survivors ⊆ exact survivors; no true dup survives; bounded loss") {
-    val exact = BloomDedup.newKeysExact(incoming, corpus, "fp", filter)
+    val exact = BloomDedup.newKeysExact(incoming, corpus, "fp", filterBcast)
       .select($"doc_id").as[Long].collect().toSet
     val prob = BloomDedup.newKeysProbabilistic(incoming, "fp", filter)
       .select($"doc_id").as[Long].collect().toSet
@@ -75,8 +76,10 @@ class BloomDedupSpec extends SparkSpec {
     val f = BloomDedup.buildLong(corpusK, $"k", 2L, 0.01)
     val in = Seq((10L, Some(1L)), (11L, Some(99L)), (12L, Option.empty[Long]))
       .toDF("id", "k")
-    val exact = BloomDedup.newKeysExact(in, corpusK, "k", f)
+    val fBcast = BloomDedup.broadcastFilter(spark, f)
+    val exact = BloomDedup.newKeysExact(in, corpusK, "k", fBcast)
       .select($"id").as[Long].collect().toSet
+    fBcast.unpersist(blocking = false)
     val plain = in.join(corpusK.select($"k").distinct(), Seq("k"), "left_anti")
       .select($"id").as[Long].collect().toSet
     assert(exact == plain && exact.contains(12L),

@@ -220,28 +220,31 @@ class CorpusPipelineSpec extends SparkSpec {
     val standing = docs.filter(pmod($"doc_id", lit(5L)) =!= 0L)
     val incoming = docs.filter(pmod($"doc_id", lit(5L)) === 0L)
     val cfg = CorpusPipeline.Config(nearDupThreshold = None, decontamThreshold = None)
-    val (accepted, audit) = CorpusPipeline.prepareIncremental(incoming, standing, cfg)
-    val acceptedIds = accepted.select("doc_id").as[Long].collect().toSet
+    val (accepted, audit, release) =
+      CorpusPipeline.prepareIncrementalManaged(incoming, standing, cfg)
+    try {
+      val acceptedIds = accepted.select("doc_id").as[Long].collect().toSet
 
-    // manual composition: prepare -> plain exact anti-join -> bipartite drop
-    val prepared = CorpusPipeline.prepare(incoming, cfg)
-    val key = TextFunctions.md5Hash60(TextFunctions.normalized($"text"))
-    val exact = prepared.withColumn("__k", key)
-      .join(standing.select(key.as("__k")).distinct(), Seq("__k"), "left_anti")
-      .drop("__k")
-    val manual = MinHashLsh.dedupAgainst(standing, exact, "doc_id",
-        TextFunctions.shingleHashes($"text", 5), 64, 16, 0.8)
-      .select("doc_id").as[Long].collect().toSet
-    assert(acceptedIds == manual,
-      "the one-call composition must equal its manual stage chain")
-    // the against-corpus stages actually dropped something here
-    assert(acceptedIds.size < prepared.count())
+      // manual composition: prepare -> plain exact anti-join -> bipartite drop
+      val prepared = CorpusPipeline.prepare(incoming, cfg)
+      val key = TextFunctions.md5Hash60(TextFunctions.normalized($"text"))
+      val exact = prepared.withColumn("__k", key)
+        .join(standing.select(key.as("__k")).distinct(), Seq("__k"), "left_anti")
+        .drop("__k")
+      val manual = MinHashLsh.dedupAgainst(standing, exact, "doc_id",
+          TextFunctions.shingleHashes($"text", 5), 64, 16, 0.8)
+        .select("doc_id").as[Long].collect().toSet
+      assert(acceptedIds == manual,
+        "the one-call composition must equal its manual stage chain")
+      // the against-corpus stages actually dropped something here
+      assert(acceptedIds.size < prepared.count())
 
-    // audit: every accepted row is 'added', the corpus itself 'unchanged'
-    val counts = audit.as[(String, Long)].collect().toMap
-    assert(counts.keySet == Set("added", "unchanged"))
-    assert(counts("added") == acceptedIds.size.toLong)
-    assert(counts("unchanged") == standing.count())
+      // audit: every accepted row is 'added', the corpus itself 'unchanged'
+      val counts = audit.as[(String, Long)].collect().toMap
+      assert(counts.keySet == Set("added", "unchanged"))
+      assert(counts("added") == acceptedIds.size.toLong)
+      assert(counts("unchanged") == standing.count())
+    } finally release()
   }
 
   test("prepareIncremental is idempotent: re-ingesting accepted rows admits nothing") {
@@ -256,12 +259,18 @@ class CorpusPipelineSpec extends SparkSpec {
     val standing = docs.filter(pmod($"doc_id", lit(5L)) =!= 0L)
     val incoming = docs.filter(pmod($"doc_id", lit(5L)) === 0L)
     val cfg = CorpusPipeline.Config(nearDupThreshold = None, decontamThreshold = None)
-    val (accepted, _) = CorpusPipeline.prepareIncremental(incoming, standing, cfg)
-    assert(accepted.count() > 0, "fixture must admit rows for the replay to mean anything")
-    val grown = standing.unionByName(
-      accepted.select(standing.columns.map(col): _*))
-    val (replayed, _) = CorpusPipeline.prepareIncremental(incoming, grown, cfg)
-    assert(replayed.count() == 0,
-      "replaying an ingested batch against the grown corpus must admit nothing")
+    val (accepted, _, release) =
+      CorpusPipeline.prepareIncrementalManaged(incoming, standing, cfg)
+    // the grown corpus reads `accepted`, so its frames outlive the replay
+    try {
+      assert(accepted.count() > 0, "fixture must admit rows for the replay to mean anything")
+      val grown = standing.unionByName(
+        accepted.select(standing.columns.map(col): _*))
+      val (replayed, _, releaseReplay) =
+        CorpusPipeline.prepareIncrementalManaged(incoming, grown, cfg)
+      try assert(replayed.count() == 0,
+        "replaying an ingested batch against the grown corpus must admit nothing")
+      finally releaseReplay()
+    } finally release()
   }
 }

@@ -43,12 +43,10 @@ class FrozenSideFilesSpec extends SparkSpec {
     2L -> (uniqueText + " appended"),
     3L -> freshText)
 
-  private def acceptedIds(frozen: CorpusPipeline.FrozenCorpus,
-                          extraKeys: Option[DataFrame] = None,
-                          extraSigs: Option[DataFrame] = None): Seq[Long] = {
+  private def acceptedIds(frozen: CorpusPipeline.FrozenCorpus): Seq[Long] = {
     graft.core.Scope.using { scope =>
       CorpusPipeline.prepareIncrementalFrozen(scope,
-        batch, frozen, corpus, cfg, Some(0.8), extraKeys, extraSigs)
+        batch, frozen, corpus, cfg, Some(0.8))
         .select("doc_id").as[Long].collect().toSeq.sorted
     }
   }
@@ -131,7 +129,7 @@ class FrozenSideFilesSpec extends SparkSpec {
     // incoming: 100 true duplicates + 100 novel keys
     val incoming = corpusKeys.limit(100)
       .unionByName(spark.range(5000, 5100).select(xxhash64(col("id") * 7 + 1).as("__ck")))
-    val expected = BloomDedup.newKeysExact(incoming, corpusKeys, "__ck", bloom)
+    val expected = BloomDedup.newKeysExact(incoming, corpusKeys, "__ck", bcast)
       .as[Long].collect().sorted.toSeq
     var probed: Option[Int] = None
     val keysFor: Seq[Any] => Option[DataFrame] = ks => {

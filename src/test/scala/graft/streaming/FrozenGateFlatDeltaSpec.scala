@@ -12,8 +12,8 @@ import java.nio.file.Files
 /** Round-17 FrozenGate hardening:
   *
   *   1. the delta fold FLATTENS — driver-resident rows rebuild into exactly
-  *      ONE LocalRelation per delta side after every fold, so the gate plan
-  *      (and every job's serialized task closure) stays constant-size
+  *      ONE LocalRelation (the one delta frame) after every fold, so the
+  *      gate plan (and every job's serialized task closure) stays constant-size
   *      across the refresh window instead of growing one LocalTableScan
   *      per admitted batch;
   *   2. the mid-batch external-writer TOCTOU window is closed — the gate
@@ -58,16 +58,14 @@ class FrozenGateFlatDeltaSpec extends SparkSpec {
     val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 8)
     try {
       // six admitted batches inside one refresh window — the pre-flatten
-      // delta would now carry six LocalTableScans per side
+      // delta would now carry six LocalTableScans
       texts.zipWithIndex.foreach { case (tx, i) =>
         assert(g.processBatch(df((i + 1).toLong -> tx)) == 1L)
       }
-      for (delta <- Seq(g.deltaKeys, g.deltaSigs, g.deltaBanded)) {
-        val (locals, rdds) = leafCounts(delta.get.queryExecution.optimizedPlan)
-        assert(locals == 1 && rdds == 0,
-          s"a fully driver-resident delta must be ONE LocalRelation " +
-          s"(got $locals local + $rdds checkpointed after 6 admissions)")
-      }
+      val (locals, rdds) = leafCounts(g.delta.get.queryExecution.optimizedPlan)
+      assert(locals == 1 && rdds == 0,
+        s"a fully driver-resident delta must be ONE LocalRelation " +
+        s"(got $locals local + $rdds checkpointed after 6 admissions)")
       // and the flattened state is the real one: a re-presented duplicate
       // of every admitted batch is gated by the delta, not re-admitted
       texts.zipWithIndex.foreach { case (tx, i) =>

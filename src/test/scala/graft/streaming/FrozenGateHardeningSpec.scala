@@ -87,6 +87,32 @@ class FrozenGateHardeningSpec extends SparkSpec {
       "closed gates must release checkpointed delta blocks")
   }
 
+  test("the fold's driver budget covers the refresh window, not one batch") {
+    // room for 3 collected rows: batch 1's 2 rows fit, but batch 2's 2 more
+    // would leave 4 driver-resident rows in the window — that fold must
+    // checkpoint even though each batch alone fits the cap
+    val budget = 3 * CorpusIngestSink.estimatedDeltaRowBytes(
+      withSignatures = true, withEmbeddings = false, embeddingDim = 64)
+    // batch 2's doc 10 and batch 3's doc 20 are exact dups gated by the
+    // driver-resident rows and the checkpointed part respectively
+    val batches = Seq(df(1L -> baseA, 2L -> baseB),
+      df(10L -> baseA, 11L -> baseC, 12L -> baseD), df(20L -> baseC))
+    def run(budget: Long): (Seq[Long], Int) = {
+      val dir = Files.createTempDirectory("fg_window_budget").toString
+      val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 8,
+        foldDriverBytes = budget)
+      try (batches.map(g.processBatch), g.deltaParts.size)
+      finally g.close()
+    }
+    val (aTight, partsTight) = run(budget)
+    val (aDefault, partsDefault) = run(CorpusIngestSink.DefaultFoldDriverBytes)
+    assert(aTight == Seq(2L, 2L, 0L) && aTight == aDefault,
+      s"the window budget must not change admissions ($aTight vs $aDefault)")
+    assert(partsTight == 1,
+      s"the fold that would overfill the window's budget must checkpoint (parts: $partsTight)")
+    assert(partsDefault == 0)
+  }
+
   test("external writer between refreshes: detected, re-frozen, duplicates gated (default policy)") {
     val dir = Files.createTempDirectory("fg_ext_refresh").toString
     val extBefore = GraftMetrics.counter(GraftMetrics.IngestExternalWrites)

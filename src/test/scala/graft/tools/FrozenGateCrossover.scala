@@ -3,7 +3,7 @@ package graft.tools
 import graft.functions.CorpusPipeline
 import graft.streaming.CorpusIngestSink
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 import java.nio.file.Files
 
@@ -38,15 +38,7 @@ object FrozenGateCrossover {
     // otherwise never touch (the default batches are shingle-disjoint)
     val nearDupEvery = args.lift(5).map(_.toInt).getOrElse(0)
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // READ-BYTES instrumentation (r18, for the pruning-∝-probes claim):
     // sums file-scan input bytes across tasks; the per-batch window reads
