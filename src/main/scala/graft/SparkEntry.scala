@@ -2428,13 +2428,13 @@ object SparkEntry {
     // through the frozen gate (refreshEvery=3 — absent interference ONE
     // freeze would cover everything), then a co-writer appends raw rows
     // (doc_id%3==1, unprepared, split='train') directly to the target
-    // BETWEEN batches. The gate must detect the listing change
-    // (ExternalWriterPolicy.Refresh, the default) and re-freeze, so batch 2
+    // BETWEEN batches. The gate must detect the listing change and
+    // re-freeze (its one external-writer behaviour), so batch 2
     // (doc_id%3==2) gates against batch 1's survivors ∪ the co-written
     // rows. DuckDB replays exactly that corpus; under the r15 blind spot
-    // (Ignore) the co-writer's exact/near duplicates in batch 2 would be
-    // re-admitted and the content hash would mismatch — the detection is
-    // what the oracle checks, not just the spec.
+    // (no listing check) the co-writer's exact/near duplicates in batch 2
+    // would be re-admitted and the content hash would mismatch — the
+    // detection is what the oracle checks, not just the spec.
     "ingest_external_writer" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val cfg = CorpusPipeline.Config(

@@ -24,10 +24,8 @@ final case class PipelineConfig(
     keyColumn: String = "ARCANE_MERGE_KEY",
     includeColumns: Seq[String] = Nil,      // empty = all
     excludeColumns: Seq[String] = Nil,
-    essentialColumns: Seq[String] = Nil,
     maintenanceEvery: Int = 10,             // run maintenance every Nth batch
     snapshotsToKeep: Int = 3,
-    targetPartitions: Option[Int] = None,   // clamp files per commit
     // Admission gate: expectations evaluated against every incoming batch
     // BEFORE filtering/dedup/merge (one extra 1-row aggregation per batch).
     // On violation: "fail" stops the stream (operator intervenes — the
@@ -64,28 +62,16 @@ final class CdcPipeline(spark: SparkSession, dialect: MergeDialect,
   require(Set("fail", "skip").contains(cfg.onExpectationFailure),
     s"onExpectationFailure must be 'fail' or 'skip', got '${cfg.onExpectationFailure}'")
 
-  // every retried transient failure surfaces in the metrics, composing with
-  // whatever hook the caller installed (reference logs its retry schedule)
-  private val retry: RetryPolicy = retry0.copy(onRetry = (a, t) => {
-    retry0.onRetry(a, t)
-    GraftMetrics.inc(GraftMetrics.RetryAttempts)
-  })
+  private val retry: RetryPolicy = CdcPipeline.counted(retry0)
 
   @volatile private var batchCount: Long = 0L
 
-  // Watermark commits go to an external store (table property / catalog);
-  // a transient failure AFTER a successful merge must not kill the stream —
-  // the merge is version-guarded, but restarting re-pulls and re-merges the
-  // whole batch for nothing (ref JdbcMergeServiceClient.scala:38-58).
-  private def commitWatermark(targetName: String, wm: Watermark): Unit = {
-    retry(watermarks.set(targetName, wm))
-    GraftMetrics.inc(GraftMetrics.WatermarkUpdates)
-    GraftMetrics.gauge(GraftMetrics.WatermarkAge, wm.ageMillis(System.currentTimeMillis()))
-  }
+  private def commitWatermark(targetName: String, wm: Watermark): Unit =
+    CdcPipeline.commitWatermark(watermarks, retry, targetName, wm)
 
   /** Run one micro-batch through the full stage chain against a target.
     * The batch is persisted for the duration: the chain takes several
-    * actions (emptiness probe, merge, commit) and an unpersisted streaming
+    * actions (row count, merge, commit) and an unpersisted streaming
     * batch would re-pull the source — for a JDBC CDC feed that means
     * re-querying the database per action.
     */
@@ -99,11 +85,12 @@ final class CdcPipeline(spark: SparkSession, dialect: MergeDialect,
   private def runBatchInner(target: ParquetTarget, targetName: String, changes: DataFrame,
                             watermark: Watermark, tieBreakers: Seq[Column]): Unit = {
     // T11 empty-batch short-circuit: commit only the watermark.
-    if (changes.isEmpty) {
+    val n = changes.count()
+    if (n == 0L) {
       commitWatermark(targetName, watermark)
       return
     }
-    GraftMetrics.inc(GraftMetrics.RowsIncoming, changes.count())
+    GraftMetrics.inc(GraftMetrics.RowsIncoming, n)
 
     // drift watch BEFORE any gate: the signal is about what the source
     // sent, not about what survives admission
@@ -150,7 +137,7 @@ final class CdcPipeline(spark: SparkSession, dialect: MergeDialect,
     val t0 = System.currentTimeMillis()
     val merged = CdcMerge.applyChanges(target.read(Some(latest.schema)), latest,
       cfg.keyColumn, dialect)
-    target.commit(merged, cfg.targetPartitions)
+    target.commit(merged)
     GraftMetrics.gauge(GraftMetrics.MergeDuration, System.currentTimeMillis() - t0)
 
     // T3 watermark commit AFTER the merge — replay-safe via version guards
@@ -174,8 +161,7 @@ final class CdcPipeline(spark: SparkSession, dialect: MergeDialect,
     * it downstream and silently misroute the whole batch.
     */
   def filterFields(changes: DataFrame): DataFrame = {
-    val protectedCols =
-      cfg.essentialColumns ++ (cfg.keyColumn +: dialect.essentialColumns)
+    val protectedCols = cfg.keyColumn +: dialect.essentialColumns
     val included =
       if (cfg.includeColumns.nonEmpty)
         FieldFilter.include(changes, cfg.includeColumns, protectedCols)
@@ -215,6 +201,32 @@ final class CdcPipeline(spark: SparkSession, dialect: MergeDialect,
   }
 }
 
+object CdcPipeline {
+
+  /** `retry` with every retried transient failure counted in the metrics,
+    * composed with whatever hook the caller installed (the reference logs
+    * its retry schedule).
+    */
+  private[streaming] def counted(retry: RetryPolicy): RetryPolicy =
+    retry.copy(onRetry = (a, t) => {
+      retry.onRetry(a, t)
+      GraftMetrics.inc(GraftMetrics.RetryAttempts)
+    })
+
+  /** The one watermark commit of every write path. Watermark commits go
+    * to an external store (table property / catalog); a transient failure
+    * AFTER a successful merge or overwrite must not kill the job — the
+    * write is already durable, and restarting re-pulls and re-writes the
+    * whole batch for nothing (ref JdbcMergeServiceClient.scala:38-58).
+    */
+  private[streaming] def commitWatermark(watermarks: WatermarkStore, retry: RetryPolicy,
+                                         targetName: String, wm: Watermark): Unit = {
+    retry(watermarks.set(targetName, wm))
+    GraftMetrics.inc(GraftMetrics.WatermarkUpdates)
+    GraftMetrics.gauge(GraftMetrics.WatermarkAge, wm.ageMillis(System.currentTimeMillis()))
+  }
+}
+
 /** Backfill entry points (reference §2.10): one-shot catch-up jobs that reuse
   * the same dedup + merge operators.
   */
@@ -234,7 +246,9 @@ object Backfill {
     * replace the target in one commit (the CREATE OR REPLACE swap). Spark's
     * partitioned read replaces the reference's shard tables; resumability
     * collapses to job retry because the swap is atomic. A config-driven
-    * caller field-filters `full` first ([[CdcPipeline.filterFields]]).
+    * caller field-filters `full` first ([[CdcPipeline.filterFields]]). The
+    * watermark commit is retried under the default policy, as on the merge
+    * path.
     */
   def overwrite(target: ParquetTarget, targetName: String, full: DataFrame,
                 keyColumn: String, dialect: MergeDialect, watermark: Watermark,
@@ -242,6 +256,7 @@ object Backfill {
     val latest = Dedup.latestByKey(full, col(keyColumn), dialect.versionOrder(col))
     val live = latest.filter(!dialect.isDelete(col))
     target.commit(live)
-    watermarks.set(targetName, watermark)
+    CdcPipeline.commitWatermark(watermarks, CdcPipeline.counted(RetryPolicy()), targetName,
+      watermark)
   }
 }

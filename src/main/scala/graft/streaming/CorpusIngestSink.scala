@@ -38,26 +38,6 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object CorpusIngestSink {
 
-  /** What a [[FrozenGate]] does when it detects that some OTHER writer
-    * changed the corpus directory between refreshes (the gate's frozen
-    * state would silently ignore the co-written rows and re-admit their
-    * duplicates).
-    */
-  sealed trait ExternalWriterPolicy
-  object ExternalWriterPolicy {
-    /** Force an immediate re-freeze from the target (default): the batch
-      * gates against the co-written rows at the cost of one extra corpus
-      * scan. Counted under `arcane.stream.ingest.external_writes`.
-      */
-    case object Refresh extends ExternalWriterPolicy
-    /** Fail loudly — for deployments where a co-writer is a bug. */
-    case object Fail extends ExternalWriterPolicy
-    /** Pre-r16 behavior: trust the single-writer contract, skip the
-      * per-batch listing. The documented blind spot, now opt-in.
-      */
-    case object Ignore extends ExternalWriterPolicy
-  }
-
   /** Driver-heap budget (bytes) for the delta rows a [[FrozenGate]]
     * collects over one REFRESH WINDOW: a fold collects an admitted batch
     * into the driver-local delta only while the rows the window has
@@ -112,12 +92,12 @@ object CorpusIngestSink {
     * change the listing too. One FS metadata call, no data read.
     */
   private[streaming] def listingEntries(spark: SparkSession, dir: String)
-      : Seq[(String, Long, Long)] = {
+      : Set[(String, Long, Long)] = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return Seq.empty
+    if (!fs.exists(path)) return Set.empty
     val base = fs.makeQualified(path).toString
-    val out = Seq.newBuilder[(String, Long, Long)]
+    val out = Set.newBuilder[(String, Long, Long)]
     val it = fs.listFiles(path, true)
     while (it.hasNext) {
       val s = it.next()
@@ -127,8 +107,8 @@ object CorpusIngestSink {
       // COMPONENT starting with `_` or `.` is invisible to the corpus
       // read — a concurrent committer's in-flight `_temporary/**` or
       // `.spark-staging-*` files (or stale residue of an aborted job)
-      // must not fingerprint as an external write, let alone escalate to
-      // the unsurvivable-nested error while a co-writer is mid-commit
+      // must not count as an external write, let alone escalate to the
+      // unsurvivable-nested error while a co-writer is mid-commit
       if (p.endsWith(".parquet") &&
           !rel.split('/').exists(c => c.startsWith("_") || c.startsWith(".")))
         out += ((rel, s.getLen, s.getModificationTime))
@@ -136,31 +116,17 @@ object CorpusIngestSink {
     out.result()
   }
 
-  /** Order-independent fingerprint of a [[listingEntries]] listing. */
-  private[streaming] def fingerprintOf(entries: Seq[(String, Long, Long)]): Long = {
-    val sorted = entries.sortBy(_._1)
-    scala.util.hashing.MurmurHash3.orderedHash(sorted).toLong ^
-      (sorted.size.toLong << 32)
-  }
-
   /** True for a listing entry that sits in a SUBDIRECTORY of the corpus
-    * dir. Nested files get their own fingerprint because they are not a
+    * dir. Nested files are compared on their own because they are not a
     * survivable co-write: with plain subdirectories Spark's parquet read
     * silently IGNORES the nested files (a re-freeze would still miss
     * them), and with partition-style (`k=v`) subdirectories partition
     * discovery reads ONLY the nested files and DROPS the gate's own
     * top-level data (empirically checked on Spark 4.1). Neither can be
-    * absorbed by a refresh, so a nested change throws under any policy
-    * except Ignore.
+    * absorbed by a refresh, so a nested change always throws.
     */
   private[streaming] def isNested(relPath: String): Boolean =
     relPath.count(_ == '/') > 1
-
-  /** (top-level fingerprint, nested fingerprint) of a listing. */
-  private[streaming] def fingerprintsOf(entries: Seq[(String, Long, Long)]): (Long, Long) = {
-    val (nested, top) = entries.partition(e => isNested(e._1))
-    (fingerprintOf(top), fingerprintOf(nested))
-  }
 
   /** Output-file sizing for one admitted batch's append: the survivor
     * frame carries its gate pipeline's partitioning (cores-wide once the
@@ -240,6 +206,14 @@ object CorpusIngestSink {
     * owns the directory (the FrozenGate/foreachBatch execution model);
     * rename is atomic on HDFS/local — object stores should compact through
     * their catalog instead.
+    *
+    * Maintenance is its own call, not a cadence on the writer: a caller
+    * compacts between batches whenever it chooses. A live [[FrozenGate]]
+    * needs no option for it — compaction rewrites every top-level file, so
+    * the gate's next listing check sees the change and re-freezes from the
+    * compacted layout. Counted under `arcane.stream.ingest.compactions`;
+    * the live gate's re-freeze also counts one
+    * `arcane.stream.ingest.external_writes`.
     */
   def compact(spark: SparkSession, targetDir: String, partitions: Int): Unit = {
     require(partitions >= 1, "compaction needs at least one output file")
@@ -261,6 +235,7 @@ object CorpusIngestSink {
     if (!fs.rename(staged, live))
       throw new java.io.IOException(s"compaction swap: cannot promote $staged")
     fs.delete(retired, true)
+    GraftMetrics.inc(GraftMetrics.IngestCompactions)
   }
 
   /** Roll an interrupted [[compact]] swap forward. Windows:
@@ -321,27 +296,30 @@ object CorpusIngestSink {
     * estimate survivors, and only the candidate rows' shingles
     * ([[graft.functions.MinHashLsh.bipartitePairsPrecomputedLeft]]'s
     * zero-candidate short-circuit never touches storage at all). An
-    * EXTERNAL writer appending to the target between refreshes is the one
-    * thing the frozen STATE cannot see — so the gate fingerprints the
-    * target's RECURSIVE file listing (relative path/length/mtime, one
-    * metadata call) at every freeze, re-checks it before each gated batch
-    * AND immediately before each own append (closing the gate-to-append
-    * race: a mid-batch co-write re-freezes and re-gates the batch under
-    * Refresh, throws under Fail), and derives the next expected value
-    * from the last VALIDATED listing plus the files the append added —
-    * so even a co-write landing inside a re-gated attempt's skipped
-    * re-check is caught by the next batch. On a
-    * TOP-LEVEL mismatch it re-freezes (default) or fails, per
-    * [[ExternalWriterPolicy]]; a co-write landing in a SUBDIRECTORY
-    * throws under every policy except Ignore, because no re-freeze can
-    * absorb it ([[isNested]] — the corpus read either ignores nested
-    * files or, for partition-style ones, drops the top-level data).
-    * Two documented blind windows remain: a writer that bypasses the
-    * listing entirely (an in-place same-size same-mtime overwrite), and a
-    * NEW external file landing during the gate's own append
-    * (indistinguishable from the append's own files until the next
-    * scheduled refresh) — co-writers needing stronger guarantees need
+    * EXTERNAL writer changing the target between refreshes is the one
+    * thing the frozen STATE cannot see — so the gate records the target's
+    * RECURSIVE file listing (relative path/length/mtime, one metadata
+    * call) at every freeze, and compares the current listing with it
+    * before each gated batch AND immediately before each own append
+    * (closing the gate-to-append race). The next expected listing is the
+    * last VALIDATED one plus the files the append added — so even a
+    * co-write landing inside a re-gated attempt's skipped re-check is
+    * caught by the next batch. The gate has one behaviour on a change:
+    * a TOP-LEVEL difference (a new, removed or rewritten file) counts
+    * `arcane.stream.ingest.external_writes` and re-freezes — mid-batch it
+    * also re-gates the batch — while a change in a SUBDIRECTORY throws,
+    * because no re-freeze can absorb it ([[isNested]] — the corpus read
+    * either ignores nested files or, for partition-style ones, drops the
+    * top-level data). Two documented blind windows remain: a writer that
+    * bypasses the listing entirely (an in-place same-size same-mtime
+    * overwrite), and a NEW external file landing during the gate's own
+    * append (indistinguishable from the append's own files until the
+    * next scheduled refresh) — co-writers needing stronger guarantees need
     * per-batch gating.
+    *
+    * Compaction is an explicit call, [[compact]], made between batches:
+    * it rewrites every top-level file, so the listing check above re-freezes
+    * the gate from the compacted layout.
     *
     * WHEN TO USE — the trade is scan avoidance vs fixed bookkeeping: per
     * admitted batch the gate pays one extra collect job (the delta fold;
@@ -372,13 +350,7 @@ object CorpusIngestSink {
                          cfg: CorpusPipeline.Config = CorpusPipeline.Config(),
                          againstThreshold: Option[Double] = Some(0.8),
                          refreshEvery: Int = 8,
-                         corpusReader: (SparkSession, String, DataFrame) => DataFrame =
-                           (s, dir, donor) => standingOf(s, dir, donor),
-                         compactEvery: Int = 0,
-                         compactPartitions: Int = 8,
                          semanticAgainstThreshold: Option[Double] = None,
-                         onExternalWrite: ExternalWriterPolicy = ExternalWriterPolicy.Refresh,
-                         foldDriverBytes: Long = DefaultFoldDriverBytes,
                          /** corpus rows from which the freeze writes SIDE
                            * FILES (sorted keys / sigs copies under
                            * `<targetDir>__gatestate/`) and serves each
@@ -392,14 +364,11 @@ object CorpusIngestSink {
                            */
                          sideFileMinRows: Long = 200000L) {
     require(refreshEvery >= 1, "refresh cadence must admit at least one batch")
-    require(compactEvery >= 0, "compaction cadence is counted in refreshes; 0 disables")
     require(semanticAgainstThreshold.isEmpty || cfg.embeddings.isDefined,
       "the semantic arm needs cfg.embeddings (id-keyed vectors) on both sides")
-    require(foldDriverBytes >= 1L, "the delta fold needs a positive driver-byte budget")
 
     private var frozen: CorpusPipeline.FrozenCorpus = null
     private var sinceRefresh = 0
-    private var refreshes = 0L
     /** The admitted DELTA since the freeze, as ONE frame in the
       * [[CorpusPipeline.deltaProjection]] shape (`__id`, `__ck`, `__sig`,
       * `__bb`, optional `__emb`): the driver-resident rows as exactly one
@@ -435,23 +404,16 @@ object CorpusIngestSink {
       */
     private[streaming] val deltaParts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     /** the listing the gate last VALIDATED — the refresh-time snapshot
-      * plus the files its own appends added since. The expected
-      * fingerprints derive from THESE entries, never from a raw
-      * pre-append listing: on a re-gated attempt the pre-append listing
-      * may already contain a second co-writer's files, and folding them
-      * into "expected" would absorb that write until the scheduled
-      * refresh (the r17 advisory's blind window) — kept outside, the
-      * NEXT batch's pre-gate check detects it
+      * plus the files its own appends added since. Detection compares the
+      * current listing with THIS set, never with a raw pre-append
+      * listing: on a re-gated attempt the pre-append listing may already
+      * contain a second co-writer's files, and folding them into
+      * "expected" would absorb that write until the scheduled refresh
+      * (the r17 advisory's blind window) — kept outside, the NEXT batch's
+      * pre-gate check detects it. A set comparison is exact: no hash can
+      * collide, and each file's length and mtime still take part
       */
-    private var expectedEntries: Seq[(String, Long, Long)] = Seq.empty
-    private var expectedFingerprint = 0L
-    private var expectedNestedFingerprint = 0L
-    private def setExpected(entries: Seq[(String, Long, Long)]): Unit = {
-      expectedEntries = entries
-      val fps = fingerprintsOf(entries)
-      expectedFingerprint = fps._1
-      expectedNestedFingerprint = fps._2
-    }
+    private var expectedEntries: Set[(String, Long, Long)] = Set.empty
     /** Test seam: applied to the delta projection right before it is
       * materialized, so specs can inject a fold-stage failure and pin the
       * recovery contract (gate invalidation after a committed append).
@@ -461,7 +423,28 @@ object CorpusIngestSink {
       * re-check — i.e. inside the gate-to-append window that check closes.
       */
     private[streaming] var preAppendTap: () => Unit = () => ()
+    /** Test seam: the driver-byte budget of one refresh window's delta
+      * fold ([[foldCollectMaxRows]]), so specs can force the
+      * executor-resident fallback.
+      */
+    private[streaming] var foldDriverBytes: Long = DefaultFoldDriverBytes
+    /** Test seam: how the gate reads the standing corpus (its freeze and
+      * its candidate verify), so specs can count or fail corpus reads.
+      */
+    private[streaming] var corpusReader: (SparkSession, String, DataFrame) => DataFrame =
+      standingOf
     private[streaming] def isFrozen: Boolean = frozen != null
+
+    /** True when `current` differs from the validated listing at top
+      * level; a change in a subdirectory throws [[nestedWriteError]].
+      */
+    private def listingChanged(current: Set[(String, Long, Long)], when: String): Boolean =
+      current != expectedEntries && {
+        val nested = (e: (String, Long, Long)) => isNested(e._1)
+        if (current.filter(nested) != expectedEntries.filter(nested))
+          throw nestedWriteError(when)
+        true
+      }
 
     /** Rebuild [[delta]] after a fold: the driver-resident rows become
       * exactly ONE LocalRelation, regardless of how many batches the
@@ -482,35 +465,23 @@ object CorpusIngestSink {
     def processBatch(batch: DataFrame): Long = {
       val spark = batch.sparkSession
       if (frozen == null || sinceRefresh >= refreshEvery) refresh(spark, batch)
-      else if (onExternalWrite != ExternalWriterPolicy.Ignore) {
-        val (topFp, nestedFp) = fingerprintsOf(listingEntries(spark, targetDir))
-        if (nestedFp != expectedNestedFingerprint)
-          throw nestedWriteError("since the last freeze")
-        if (topFp != expectedFingerprint) {
-          // somebody else wrote the corpus since the freeze: frozen + delta
-          // no longer IS the corpus, and gating against it would re-admit
-          // the co-writer's duplicates
-          externalWriteDetected(spark, batch, "since the last freeze")
-        }
+      else if (listingChanged(listingEntries(spark, targetDir), "since the last freeze")) {
+        // somebody else wrote the corpus since the freeze: frozen + delta
+        // no longer IS the corpus, and gating against it would re-admit
+        // the co-writer's duplicates
+        externalWriteDetected(spark, batch)
       }
       gateAndAppend(spark, batch, reGated = false)
     }
 
-    private def externalWriteDetected(spark: SparkSession, batch: DataFrame,
-                                      when: String): Unit = onExternalWrite match {
-      case ExternalWriterPolicy.Fail => throw new IllegalStateException(
-        s"external writer detected under $targetDir $when; FrozenGate " +
-        "admissions would ignore the co-written rows (set " +
-        "onExternalWrite=Refresh to re-freeze instead)")
-      case _ =>
-        GraftMetrics.inc(GraftMetrics.IngestExternalWrites)
-        refresh(spark, batch)
+    private def externalWriteDetected(spark: SparkSession, batch: DataFrame): Unit = {
+      GraftMetrics.inc(GraftMetrics.IngestExternalWrites)
+      refresh(spark, batch)
     }
 
     /** A nested co-write is detected but NOT survivable ([[isNested]]):
-      * a re-freeze reads the same broken layout, so Refresh cannot help —
-      * every policy except Ignore escalates to this error until an
-      * operator reconciles the directory.
+      * a re-freeze reads the same broken layout, so the gate escalates to
+      * this error until an operator reconciles the directory.
       */
     private def nestedWriteError(when: String) = new IllegalStateException(
       s"external writer landed files in a SUBDIRECTORY of $targetDir $when; " +
@@ -540,27 +511,21 @@ object CorpusIngestSink {
         if (n == 0L) Some(0L)
         else {
           preAppendTap()
-          // pre-append re-check: the pre-gate fingerprint check and this
+          // pre-append re-check: the pre-gate listing check and this
           // append are not atomic, and a co-write landing BETWEEN them used
-          // to be absorbed into the post-append expected fingerprint —
+          // to be absorbed into the post-append expected listing —
           // detected by nothing until the scheduled refresh (the r16
           // verdict's TOCTOU finding). Re-checking against a listing taken
           // immediately before the append shrinks the blind window to the
           // append itself; on mismatch the batch's admissions are stale, so
-          // Refresh re-freezes and re-gates THIS batch once (Fail throws).
-          // A second mid-batch race in the same batch proceeds — but the
-          // expected value below is derived from the last VALIDATED
-          // listing plus own files, never this one, so the NEXT batch's
-          // pre-gate check detects it.
+          // the gate re-freezes and re-gates THIS batch once. A second
+          // mid-batch race in the same batch proceeds — but the expected
+          // listing below is derived from the last VALIDATED listing plus
+          // own files, never this one, so the NEXT batch's pre-gate check
+          // detects it.
           val preEntries = listingEntries(spark, targetDir)
-          val stale = onExternalWrite != ExternalWriterPolicy.Ignore && {
-            val (topFp, nestedFp) = fingerprintsOf(preEntries)
-            if (nestedFp != expectedNestedFingerprint)
-              throw nestedWriteError("between gate and append")
-            topFp != expectedFingerprint && !reGated
-          }
-          if (stale) {
-            externalWriteDetected(spark, batch, "between gate and append")
+          if (listingChanged(preEntries, "between gate and append") && !reGated) {
+            externalWriteDetected(spark, batch)
             None
           } else {
             appendAndFold(spark, accepted, n, preEntries)
@@ -582,7 +547,7 @@ object CorpusIngestSink {
       * `preEntries` is the listing validated just before the append.
       */
     private def appendAndFold(spark: SparkSession, accepted: DataFrame, n: Long,
-                              preEntries: Seq[(String, Long, Long)]): Unit = {
+                              preEntries: Set[(String, Long, Long)]): Unit = {
       // sized append off the already-counted cache ([[appendFiles]]):
       // per-partition files would decay the corpus the freeze re-reads
       accepted.coalesce(appendFiles(n))
@@ -590,7 +555,7 @@ object CorpusIngestSink {
       // next expected = the last VALIDATED listing ∪ the files this
       // append added (post-append names not in the pre-append
       // listing). Using the validated base — not preEntries — keeps a
-      // co-write that landed between a Refresh-policy re-freeze and
+      // co-write that landed between a mid-batch re-freeze and
       // this (re-gated, check-skipped) append OUT of the expected
       // set, so the next batch's pre-gate check detects and absorbs
       // it. An external file landing DURING the append itself is
@@ -649,7 +614,7 @@ object CorpusIngestSink {
         rebuildDelta(spark)
         // the append itself moved the listing — own writes must not trip
         // the external-writer check on the next batch
-        setExpected(ownEntries)
+        expectedEntries = ownEntries
       } catch {
         case t: Throwable =>
           // the append COMMITTED but the delta didn't absorb it:
@@ -671,15 +636,6 @@ object CorpusIngestSink {
 
     private def refresh(spark: SparkSession, schemaDonor: DataFrame): Unit = {
       close()
-      // compaction sits at the refresh boundary ON PURPOSE: no frozen frame
-      // is alive, so no cached plan pins the pre-compaction file listing,
-      // and the freeze right after reads the compacted layout — the
-      // small-file decay of thousands of appends is paid down exactly when
-      // the corpus is re-scanned anyway
-      if (compactEvery > 0 && refreshes > 0 && refreshes % compactEvery == 0) {
-        compact(spark, targetDir, compactPartitions)
-        GraftMetrics.inc(GraftMetrics.IngestCompactions)
-      }
       val fresh = CorpusPipeline.freezeCorpus(
         corpusReader(spark, targetDir, schemaDonor), cfg,
         withSignatures = againstThreshold.isDefined,
@@ -695,11 +651,10 @@ object CorpusIngestSink {
       window.onClose(fresh.release())
       frozen = fresh
       sinceRefresh = 0
-      refreshes += 1
       // recorded AFTER the freeze materialized (freezeCorpus counts the
       // slim frame eagerly): a writer landing between the scan and this
       // listing is a benign race — the next batch's check catches it
-      setExpected(listingEntries(spark, targetDir))
+      expectedEntries = listingEntries(spark, targetDir)
       GraftMetrics.inc(GraftMetrics.IngestFreezes)
       GraftMetrics.gauge(GraftMetrics.IngestCorpusRows, frozen.rows)
     }

@@ -57,6 +57,8 @@ object GraftMetrics {
   val IngestFreezes = "arcane.stream.ingest.freezes"
   val IngestCompactions = "arcane.stream.ingest.compactions"
   val IngestCorpusRows = "arcane.stream.ingest.corpus_rows"
+  // a top-level listing change the gate did not write; a compaction run
+  // under a live gate counts here too
   val IngestExternalWrites = "arcane.stream.ingest.external_writes"
 }
 

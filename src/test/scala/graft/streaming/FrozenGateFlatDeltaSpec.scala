@@ -17,16 +17,18 @@ import java.nio.file.Files
   *      across the refresh window instead of growing one LocalTableScan
   *      per admitted batch;
   *   2. the mid-batch external-writer TOCTOU window is closed — the gate
-  *      re-checks the listing fingerprint immediately BEFORE its own
-  *      append (a co-write landing between the pre-gate check and the
-  *      append used to be absorbed into the expected fingerprint and never
-  *      detected until the scheduled refresh), and derives the expected
-  *      value from the last VALIDATED listing plus the files the append
-  *      added (r18) — so a co-write landing during the FOLD, or inside a
-  *      re-gated attempt's skipped re-check, is caught by the next batch;
-  *   3. the listing fingerprint is RECURSIVE — a co-writer landing rows in
-  *      a subdirectory changes what partition discovery reads, and must
-  *      trip the check like a top-level append.
+  *      re-checks the listing immediately BEFORE its own append (a
+  *      co-write landing between the pre-gate check and the append used
+  *      to be absorbed into the expected listing and never detected until
+  *      the scheduled refresh), and derives the expected listing from the
+  *      last VALIDATED one plus the files the append added (r18) — so a
+  *      co-write landing during the FOLD, or inside a re-gated attempt's
+  *      skipped re-check, is caught by the next batch;
+  *   3. the listing is RECURSIVE — a co-writer landing rows in a
+  *      subdirectory changes what partition discovery reads, and must trip
+  *      the check like a top-level append;
+  *   4. the listing is compared entry by entry — a validated file rewritten
+  *      in place under its own name is a change like any other.
   */
 class FrozenGateFlatDeltaSpec extends SparkSpec {
   import spark.implicits._
@@ -122,24 +124,6 @@ class FrozenGateFlatDeltaSpec extends SparkSpec {
       "the co-written duplicate must not land twice")
   }
 
-  test("co-write between gate and append: Fail policy throws mid-batch") {
-    val dir = Files.createTempDirectory("fg_toctou_fail").toString
-    val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 10,
-      onExternalWrite = CorpusIngestSink.ExternalWriterPolicy.Fail)
-    try {
-      assert(g.processBatch(df(1L -> texts(0))) == 1L)
-      g.preAppendTap = () => {
-        g.preAppendTap = () => ()
-        df(100L -> texts(1)).withColumn("split",
-          org.apache.spark.sql.functions.lit("train"))
-          .write.mode(SaveMode.Append).parquet(dir)
-      }
-      val e = intercept[IllegalStateException](g.processBatch(df(30L -> texts(1))))
-      assert(e.getMessage.contains("between gate and append"))
-    } finally g.close()
-    assert(corpusIds(dir) == Seq(1L, 100L), "the stale batch must not have appended")
-  }
-
   test("co-write during the fold is detected by the NEXT batch, not the next refresh") {
     val dir = Files.createTempDirectory("fg_toctou_fold").toString
     val extBefore = GraftMetrics.counter(GraftMetrics.IngestExternalWrites)
@@ -166,13 +150,55 @@ class FrozenGateFlatDeltaSpec extends SparkSpec {
     assert(corpusIds(dir) == Seq(1L, 10L, 100L))
   }
 
+  test("a validated file rewritten in place under its own name is detected and re-frozen") {
+    // no file is added or removed — only a validated file's length (and
+    // mtime) change. The entry-by-entry listing comparison must see it,
+    // re-freeze, and gate the next batch against the rewritten content.
+    val dir = Files.createTempDirectory("fg_rewrite").toString
+    val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 10)
+    try {
+      assert(g.processBatch(df(1L -> texts(0))) == 1L)
+      val file = new java.io.File(dir).listFiles
+        .filter(_.getName.endsWith(".parquet")).head
+      val scratch = Files.createTempDirectory("fg_rewrite_scratch").toString + "/out"
+      spark.read.parquet(file.getPath)
+        .unionByName(df(100L -> texts(1)).withColumn("split",
+          org.apache.spark.sql.functions.lit("train")), allowMissingColumns = true)
+        .coalesce(1).write.parquet(scratch)
+      val rewritten = new java.io.File(scratch).listFiles
+        .filter(_.getName.endsWith(".parquet")).head
+      val lengthBefore = file.length
+      Files.copy(rewritten.toPath, file.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      // the old checksum would fail the corpus read of the new bytes
+      Files.deleteIfExists(java.nio.file.Paths.get(dir, s".${file.getName}.crc"))
+      assert(file.length != lengthBefore, "fixture: the rewrite must change the length")
+      assert(corpusIds(dir) == Seq(1L, 100L))
+
+      // doc 30 duplicates the rewritten-in row: a fresh gate over the same
+      // corpus drops it and admits doc 31
+      val next = df(30L -> texts(1), 31L -> texts(2))
+      val copy = FrozenGateHardeningSpec.copyDir(dir)
+      val fresh = new CorpusIngestSink.FrozenGate(copy, cfg, refreshEvery = 10)
+      val expected = try fresh.processBatch(next) finally fresh.close()
+      assert(expected == 1L, s"fixture drifted: $expected")
+      val extBefore = GraftMetrics.counter(GraftMetrics.IngestExternalWrites)
+      assert(g.processBatch(next) == expected,
+        "the gate must admit what a fresh gate over the rewritten corpus admits")
+      assert(GraftMetrics.counter(GraftMetrics.IngestExternalWrites) - extBefore == 1L,
+        "the in-place rewrite must count as one external write")
+      assert(corpusIds(dir) == corpusIds(copy))
+    } finally g.close()
+    assert(corpusIds(dir) == Seq(1L, 31L, 100L))
+  }
+
   test("co-write landing in a SUBDIRECTORY throws loudly — a re-freeze cannot absorb it") {
     // nested co-writes are NOT survivable: Spark's corpus read IGNORES
     // plain subdirectories (a re-freeze would still miss the rows and
     // re-admit their duplicates — the pre-r17 silent blind spot), and a
     // partition-style subdirectory makes partition discovery DROP the
-    // gate's own top-level files. The recursive fingerprint detects the
-    // change and escalates under every policy except Ignore.
+    // gate's own top-level files. The recursive listing detects the
+    // change and always escalates.
     val dir = Files.createTempDirectory("fg_nested").toString
     val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 10)
     try {
@@ -197,15 +223,14 @@ class FrozenGateFlatDeltaSpec extends SparkSpec {
   test("committer scratch files (_temporary, .staging) are invisible to the fingerprint") {
     // a CONCURRENT committer's in-flight state is data files under
     // hidden (`_`/`.`-prefixed) paths — Spark's corpus read ignores every
-    // one of them, so the fingerprint must too. The pre-r18 recursive
+    // one of them, so the listing must too. The pre-r18 recursive
     // listing classified them as an UNSURVIVABLE nested co-write and
-    // threw under every policy except Ignore, turning a transient
-    // mid-commit state (or stale `_temporary` residue of an aborted job)
-    // into a hard failure.
+    // threw, turning a transient mid-commit state (or stale `_temporary`
+    // residue of an aborted job) into a hard failure.
     val dir = Files.createTempDirectory("fg_hidden").toString
     val freezesBefore = GraftMetrics.counter(GraftMetrics.IngestFreezes)
-    val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 10,
-      onExternalWrite = CorpusIngestSink.ExternalWriterPolicy.Fail)
+    val extBefore = GraftMetrics.counter(GraftMetrics.IngestExternalWrites)
+    val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 10)
     try {
       assert(g.processBatch(df(1L -> texts(0))) == 1L)
       val part = new java.io.File(dir).listFiles
@@ -223,9 +248,10 @@ class FrozenGateFlatDeltaSpec extends SparkSpec {
       plant("_temporary/9/task_000/part-junk.parquet")
       plant(".spark-staging-9/part-junk.parquet")
       plant("._hidden-top.parquet")
-      // Fail policy: ANY detection throws — gating straight through is
-      // the assertion, and no re-freeze may be spent on scratch files
+      // no detection may fire and no re-freeze may be spent on scratch files
       assert(g.processBatch(df(2L -> texts(2))) == 1L)
+      assert(GraftMetrics.counter(GraftMetrics.IngestExternalWrites) == extBefore,
+        "hidden paths must not count as an external write")
       assert(GraftMetrics.counter(GraftMetrics.IngestFreezes) - freezesBefore == 1L,
         "hidden paths must not trigger a refresh")
     } finally g.close()

@@ -62,8 +62,8 @@ class FrozenGateHardeningSpec extends SparkSpec {
       df(10L -> baseA, 12L -> baseC, 13L -> baseD))
     def run(budget: Long): (Seq[Long], Seq[Long], Seq[Boolean]) = {
       val dir = Files.createTempDirectory(s"fg_bytes_$budget").toString
-      val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 8,
-        foldDriverBytes = budget)
+      val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 8)
+      g.foldDriverBytes = budget
       try {
         val admitted = batches.map(g.processBatch)
         val localized = g.deltaParts.toSeq.map(_.queryExecution.analyzed match {
@@ -99,8 +99,8 @@ class FrozenGateHardeningSpec extends SparkSpec {
       df(10L -> baseA, 11L -> baseC, 12L -> baseD), df(20L -> baseC))
     def run(budget: Long): (Seq[Long], Int) = {
       val dir = Files.createTempDirectory("fg_window_budget").toString
-      val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 8,
-        foldDriverBytes = budget)
+      val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 8)
+      g.foldDriverBytes = budget
       try (batches.map(g.processBatch), g.deltaParts.size)
       finally g.close()
     }
@@ -132,34 +132,6 @@ class FrozenGateHardeningSpec extends SparkSpec {
       assert(GraftMetrics.counter(GraftMetrics.IngestExternalWrites) - extBefore == 1L)
     } finally g.close()
     assert(corpusIds(dir) == Seq(1L, 2L, 40L, 100L))
-  }
-
-  test("external writer: Fail policy throws, Ignore policy documents the blind spot") {
-    val dirF = Files.createTempDirectory("fg_ext_fail").toString
-    val gF = new CorpusIngestSink.FrozenGate(dirF, cfg, refreshEvery = 10,
-      onExternalWrite = CorpusIngestSink.ExternalWriterPolicy.Fail)
-    try {
-      assert(gF.processBatch(df(1L -> baseA)) == 1L)
-      df(100L -> baseC).withColumn("split",
-        org.apache.spark.sql.functions.lit("train"))
-        .write.mode(SaveMode.Append).parquet(dirF)
-      val e = intercept[IllegalStateException](gF.processBatch(df(30L -> baseC)))
-      assert(e.getMessage.contains("external writer"))
-    } finally gF.close()
-
-    // Ignore = pre-r16 behavior: the co-written duplicate IS re-admitted —
-    // exactly the hazard the default policy exists to close
-    val dirI = Files.createTempDirectory("fg_ext_ignore").toString
-    val gI = new CorpusIngestSink.FrozenGate(dirI, cfg, refreshEvery = 10,
-      onExternalWrite = CorpusIngestSink.ExternalWriterPolicy.Ignore)
-    try {
-      assert(gI.processBatch(df(1L -> baseA)) == 1L)
-      df(100L -> baseC).withColumn("split",
-        org.apache.spark.sql.functions.lit("train"))
-        .write.mode(SaveMode.Append).parquet(dirI)
-      assert(gI.processBatch(df(30L -> baseC)) == 1L,
-        "Ignore must reproduce the documented blind spot (duplicate admitted)")
-    } finally gI.close()
   }
 
   test("fold failure after a committed append invalidates the gate; replay admits nothing") {
@@ -227,18 +199,6 @@ class FrozenGateHardeningSpec extends SparkSpec {
     }
   }
 
-  private def copyDir(src: String): String = {
-    import scala.jdk.CollectionConverters._
-    val from = java.nio.file.Paths.get(src)
-    val to = Files.createTempDirectory("fg_fault_copy")
-    val walk = Files.walk(from)
-    try walk.iterator().asScala.foreach { p =>
-      val t = to.resolve(from.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
-    } finally walk.close()
-    to.toString
-  }
-
   test("a failure at each gate action boundary releases everything; the gate then admits like a fresh one") {
     import org.apache.spark.sql.functions.{col, udf}
     import org.apache.spark.sql.graft.CacheBridge.numCachedEntries
@@ -285,9 +245,12 @@ class FrozenGateHardeningSpec extends SparkSpec {
 
     for ((boundary, warm, sideFiles, arm, disarm, failing, message) <- cases) {
       val dir = Files.createTempDirectory("fg_fault").toString
-      def gate(d: String) = new CorpusIngestSink.FrozenGate(d, cfg, refreshEvery = 10,
-        corpusReader = reader,
-        sideFileMinRows = if (sideFiles) 0L else Long.MaxValue)
+      def gate(d: String) = {
+        val g = new CorpusIngestSink.FrozenGate(d, cfg, refreshEvery = 10,
+          sideFileMinRows = if (sideFiles) 0L else Long.MaxValue)
+        g.corpusReader = reader
+        g
+      }
       val seed = gate(dir)
       try assert(seed.processBatch(df(1L -> baseA, 2L -> baseB)) == 2L)
       finally seed.close()
@@ -317,7 +280,7 @@ class FrozenGateHardeningSpec extends SparkSpec {
         // doc (admitted only where the failure struck after the append)
         val next = df(5L -> baseA, 6L -> baseD,
           7L -> "a final batch document about fault injection at action boundaries")
-        val copy = copyDir(dir)
+        val copy = FrozenGateHardeningSpec.copyDir(dir)
         val fresh = gate(copy)
         try {
           val expected = fresh.processBatch(next)
@@ -328,5 +291,20 @@ class FrozenGateHardeningSpec extends SparkSpec {
         } finally fresh.close()
       } finally g.close()
     }
+  }
+}
+
+object FrozenGateHardeningSpec {
+  /** A copy of a corpus directory, for a fresh gate to admit against. */
+  def copyDir(src: String): String = {
+    import scala.jdk.CollectionConverters._
+    val from = java.nio.file.Paths.get(src)
+    val to = Files.createTempDirectory("fg_fault_copy")
+    val walk = Files.walk(from)
+    try walk.iterator().asScala.foreach { p =>
+      val t = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    } finally walk.close()
+    to.toString
   }
 }

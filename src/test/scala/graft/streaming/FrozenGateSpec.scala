@@ -93,8 +93,8 @@ class FrozenGateSpec extends SparkSpec {
       val counting = (s: SparkSession, d: String, donor: DataFrame) => {
         reads += 1; CorpusIngestSink.standingOf(s, d, donor)
       }
-      val g = new CorpusIngestSink.FrozenGate(dir, cfg,
-        refreshEvery = refreshEvery, corpusReader = counting)
+      val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = refreshEvery)
+      g.corpusReader = counting
       val admitted = try six.map(g.processBatch) finally g.close()
       (admitted, reads, dir)
     }
@@ -124,8 +124,8 @@ class FrozenGateSpec extends SparkSpec {
     val counting = (s: SparkSession, d: String, donor: DataFrame) => {
       reads += 1; CorpusIngestSink.standingOf(s, d, donor)
     }
-    val g = new CorpusIngestSink.FrozenGate(dir, cfg,
-      refreshEvery = 10, corpusReader = counting)
+    val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 10)
+    g.corpusReader = counting
     try {
       assert(g.processBatch(batches.head) == 2L)
       assert(reads == 1L, "day-0 freeze is the only read")

@@ -7,8 +7,9 @@ import org.apache.hadoop.fs.Path
 import java.nio.file.Files
 
 /** Small-file compaction for the append-only ingest target: staged-swap
-  * semantics, self-healing crash windows, and cadence integration with the
-  * FrozenGate — content is invariant through all of it.
+  * semantics, self-healing crash windows, and an explicit compaction
+  * between a live FrozenGate's batches — content is invariant through all
+  * of it.
   */
 class IngestCompactionSpec extends SparkSpec {
   import spark.implicits._
@@ -93,7 +94,7 @@ class IngestCompactionSpec extends SparkSpec {
       .select("doc_id", "text").as[(Long, String)].collect().toSet == c4)
   }
 
-  test("FrozenGate compaction cadence: same admissions, bounded file count") {
+  test("an explicit compact between gated batches: same admissions, bounded files, one re-freeze") {
     // genuinely dissimilar bodies — a shared template with one digit
     // changed would be a NEAR DUP and the gate would (correctly) drop it
     val texts = Seq(
@@ -105,25 +106,45 @@ class IngestCompactionSpec extends SparkSpec {
       "sixth distinct prose describing bloom filters and banded minhash funnels",
       "seventh body covering catalyst expression codegen and whole stage fusion",
       "eighth body on broadcast thresholds salting skew and exchange reuse")
+    // batches 5-8 also re-present one of batches 1-4's texts: after the
+    // compaction those duplicates are gated by the re-frozen corpus alone
     val batches = texts.zipWithIndex.map { case (tx, i) =>
-      Seq((i * 10L + 1L, tx, "web")).toDF("doc_id", "text", "source") }
+      val dup = if (i >= 4) Seq((i * 10L + 2L, texts(i - 4), "web")) else Nil
+      (Seq((i * 10L + 1L, tx, "web")) ++ dup).toDF("doc_id", "text", "source") }
+
+    // one refresh window covers all eight batches: absent a listing
+    // change, the gate freezes exactly once
+    def counters = (GraftMetrics.counter(GraftMetrics.IngestFreezes),
+      GraftMetrics.counter(GraftMetrics.IngestExternalWrites),
+      GraftMetrics.counter(GraftMetrics.IngestCompactions))
+    def delta(a: (Long, Long, Long), b: (Long, Long, Long)) = (b._1 - a._1, b._2 - a._2, b._3 - a._3)
 
     val plain = Files.createTempDirectory("fgc_plain").toString + "/corpus"
-    val gPlain = new CorpusIngestSink.FrozenGate(plain, cfg, refreshEvery = 2)
+    val p0 = counters
+    val gPlain = new CorpusIngestSink.FrozenGate(plain, cfg, refreshEvery = 10)
     val aPlain = try batches.map(gPlain.processBatch) finally gPlain.close()
+    assert(delta(p0, counters) == ((1L, 0L, 0L)), "control: one freeze, nothing detected")
 
     val compacted = Files.createTempDirectory("fgc_comp").toString + "/corpus"
-    val gComp = new CorpusIngestSink.FrozenGate(compacted, cfg,
-      refreshEvery = 2, compactEvery = 1, compactPartitions = 2)
-    val aComp = try batches.map(gComp.processBatch) finally gComp.close()
+    val c0 = counters
+    val gComp = new CorpusIngestSink.FrozenGate(compacted, cfg, refreshEvery = 10)
+    val aComp = try {
+      val first = batches.take(4).map(gComp.processBatch)
+      CorpusIngestSink.compact(spark, compacted, partitions = 2)
+      assert(parquetFiles(compacted).size == 2, "compaction must hit the requested layout")
+      first ++ batches.drop(4).map(gComp.processBatch)
+    } finally gComp.close()
 
     assert(aPlain == Seq.fill(8)(1L), s"fixture drifted: $aPlain")
     assert(aComp == aPlain, "compaction must not change admissions")
     assert(contentOf(compacted) == contentOf(plain))
     assert(parquetFiles(plain).size >= 8, "control keeps one file per batch")
-    // refreshes at batches 1,3,5,7; compactions at refreshes 2,3,4 → the
-    // last compaction (before batch 7) leaves 2 files, batches 7-8 append 2
-    assert(parquetFiles(compacted).size <= 4,
-      s"cadence compaction must bound the file count, got ${parquetFiles(compacted).size}")
+    // the compaction leaves 2 files, batches 5-8 append one each
+    assert(parquetFiles(compacted).size <= 6,
+      s"compaction must bound the file count, got ${parquetFiles(compacted).size}")
+    // the rewritten listing is seen once, by batch 5's check: one extra
+    // freeze, counted as one external write; the compaction counts itself
+    assert(delta(c0, counters) == ((2L, 1L, 1L)),
+      s"(freezes, external writes, compactions) = ${delta(c0, counters)}")
   }
 }

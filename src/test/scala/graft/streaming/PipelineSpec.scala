@@ -305,6 +305,34 @@ class CdcPipelineE2eSpec extends SparkSpec {
       "each retried transient failure counted once")
   }
 
+  test("backfill overwrite retries a transient watermark-commit failure") {
+    import graft.core.WatermarkStore
+    val inner = new InMemoryWatermarkStore
+    var fails = 1
+    val flaky = new WatermarkStore {
+      override def get(t: String) = inner.get(t)
+      override def set(t: String, wm: Watermark): Unit = {
+        if (fails > 0) { fails -= 1; throw new java.io.IOException("blip") }
+        inner.set(t, wm)
+      }
+    }
+    val retriesBefore = GraftMetrics.counter(GraftMetrics.RetryAttempts)
+    val updatesBefore = GraftMetrics.counter(GraftMetrics.WatermarkUpdates)
+    val target = new ParquetTarget(spark, Files.createTempDirectory("tgt_ow_retry").toString)
+    val full = Seq(("k1", 1L, false, "a"), ("k2", 1L, false, "b"))
+      .toDF("ARCANE_MERGE_KEY", "versionnumber", "IsDelete", "v")
+    // the overwrite has committed when the store blips: the backfill must
+    // not fail for a commit the retry absorbs
+    val wm = Watermark.blob(7L)
+    Backfill.overwrite(target, "t", full, "ARCANE_MERGE_KEY",
+      graft.operators.SynapseLinkDialect, wm, flaky)
+    assert(inner.get("t").contains(wm), "the watermark is stored")
+    assert(target.read().count() == 2L)
+    assert(GraftMetrics.counter(GraftMetrics.RetryAttempts) == retriesBefore + 1,
+      "the retried failure is counted once")
+    assert(GraftMetrics.counter(GraftMetrics.WatermarkUpdates) == updatesBefore + 1)
+  }
+
   test("backfill overwrite: dedup + tombstone filter + swap") {
     val tgtDir = Files.createTempDirectory("tgt3").toString
     val wms = new InMemoryWatermarkStore

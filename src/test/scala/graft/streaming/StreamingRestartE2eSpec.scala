@@ -121,9 +121,10 @@ class StreamingRestartE2eSpec extends SparkSpec {
   test("frozen gate with semantic arm + compaction: kill inside a refresh window, restart converges") {
     // the full-option matrix in one run: refreshEvery=2 (so the kill after
     // batch 3 lands INSIDE a refresh window, one batch into the frozen
-    // state), compactEvery=1 (batch 3's refresh compacts the corpus before
-    // re-freezing), semantic arm on (the restart must rebuild frozen
-    // EMBEDDINGS from the target, not just keys/signatures)
+    // state), an explicit compaction at the kill point (the restarted gate
+    // freezes from the compacted corpus), semantic arm on (the restart
+    // must rebuild frozen EMBEDDINGS from the target, not just
+    // keys/signatures)
     val emb = Seq(
       (1L, Seq(1.0f, 0.1f, 0.0f, 0.0f)),
       (2L, Seq(0.0f, 1.0f, 0.0f, 0.0f)),
@@ -147,8 +148,7 @@ class StreamingRestartE2eSpec extends SparkSpec {
     val t0 = System.currentTimeMillis() - 60000
     val schema = batches.head.schema
     def gateOf(dir: String) = new CorpusIngestSink.FrozenGate(dir, scfg,
-      refreshEvery = 2, compactEvery = 1, compactPartitions = 2,
-      semanticAgainstThreshold = Some(0.8))
+      refreshEvery = 2, semanticAgainstThreshold = Some(0.8))
 
     // run A — uninterrupted
     val srcA = Files.createTempDirectory("e2e_fgsem_srcA").toString
@@ -162,7 +162,7 @@ class StreamingRestartE2eSpec extends SparkSpec {
     assert(corpusOf(dirA).map(_._1) == expected, "fixture drifted")
 
     // run B — killed one batch into the second refresh window (after
-    // batch 3: refreshes at batches 1 and 3, compaction at batch 3's)
+    // batch 3: refreshes at batches 1 and 3), then compacted
     val srcB = Files.createTempDirectory("e2e_fgsem_srcB").toString
     val dirB = Files.createTempDirectory("e2e_fgsem_B").toString
     val ckB = Files.createTempDirectory("e2e_fgsem_ckB").toString
@@ -173,6 +173,7 @@ class StreamingRestartE2eSpec extends SparkSpec {
     g1.close() // the kill: frozen state + delta gone mid-window
     assert(corpusOf(dirB).map(_._1) == Set(1L, 2L, 11L, 20L),
       "restart point must sit inside the second refresh window")
+    CorpusIngestSink.compact(spark, dirB, 2)
     addFile(srcB, "f3.parquet", batches(3), t0 + 3 * 2000L)
     val g2 = gateOf(dirB) // fresh process: re-freezes keys+sigs+embeddings
     runIngest(srcB, schema, dirB, ckB, g2.foreachBatchFn)
