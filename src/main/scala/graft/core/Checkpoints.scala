@@ -1,7 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.ActionBridge
 
 /** Lifecycle helpers for `localCheckpoint()`ed frames.
   *
@@ -15,10 +16,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   *   - [[release]] drops the blocks behind a checkpointed frame once every
   *     consumer has materialized (after which the frame must NOT be
   *     recomputed — its lineage is gone);
-  *   - [[localize]] converts a small checkpointed frame into a driver-local
-  *     relation and releases the executor blocks immediately, so the frame
-  *     that escapes the operator holds no block-store state at all and is
-  *     broadcast-joinable downstream.
+  *   - [[localize]] materializes a small frame straight into a driver-local
+  *     relation in ONE action, so the frame that escapes the operator holds
+  *     no block-store state at all and is broadcast-joinable downstream.
   *
   * Code that holds several such frames at once (the frozen ingest gate,
   * the LSH funnels) does not call [[release]] itself: it registers each
@@ -45,22 +45,18 @@ object Checkpoints {
 
   /** Materialize `df` eagerly and return it with no cluster-side state: if
     * it has at most `maxDriverRows` rows it comes back as a driver-local
-    * relation (broadcastable, zero block-store footprint) and the
-    * checkpoint blocks are released immediately; above the bound the
-    * checkpointed frame is returned as-is — bounded, documented leak in
-    * preference to an unbounded driver collect.
+    * relation (broadcastable, zero block-store footprint), collected by ONE
+    * action ([[ActionBridge.collectLocal]]); above the bound that action is
+    * cancelled once the rows it has seen pass the bound, and `df` is
+    * computed again into a `localCheckpoint` that is returned as-is — a
+    * bounded, documented leak in preference to an unbounded driver
+    * collect.
     *
     * Meant for the "small survivor set" frames iterative/funnel operators
     * emit (near-dup pairs, dropped-id sets): ∝ findings, not corpus, so the
     * bound is a guard rail rather than the expected path.
     */
-  def localize(df: DataFrame, maxDriverRows: Long = 1L << 22): DataFrame = {
-    val checkpointed = df.localCheckpoint()
-    val n = checkpointed.count()
-    if (n > maxDriverRows) return checkpointed
-    val rows: java.util.List[Row] = java.util.Arrays.asList(checkpointed.collect(): _*)
-    val local = df.sparkSession.createDataFrame(rows, checkpointed.schema)
-    release(checkpointed)
-    local
-  }
+  def localize(df: DataFrame, maxDriverRows: Long = 1L << 22): DataFrame =
+    ActionBridge.collectLocal(df, maxDriverRows)
+      .getOrElse(ActionBridge.localCheckpointCounted(df)._1)
 }

@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.ActionBridge
 import org.apache.spark.storage.StorageLevel
 
 /** The single owner of a call's cluster-side state. Every persist,
@@ -29,12 +30,22 @@ final class Scope {
   def persist(df: DataFrame): DataFrame =
     own(df.persist(StorageLevel.MEMORY_AND_DISK))(_.unpersist(blocking = false))
 
-  /** `df` eagerly localCheckpointed; must not be recomputed after close. */
-  def checkpoint(df: DataFrame): DataFrame =
-    own(df.localCheckpoint())(Checkpoints.release)
+  /** `df` eagerly localCheckpointed, with its exact row count from the
+    * same job ([[ActionBridge.localCheckpointCounted]]: no separate
+    * `count()`, and a retried task cannot inflate it); must not be
+    * recomputed after close.
+    */
+  def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val (ckpt, n) = ActionBridge.localCheckpointCounted(df)
+    (own(ckpt)(Checkpoints.release), n)
+  }
 
-  /** [[Checkpoints.localize]]; its over-bound checkpoint fallback is
-    * released on close (a local relation has nothing to release).
+  /** [[checkpointCounted]] without the count. */
+  def checkpoint(df: DataFrame): DataFrame = checkpointCounted(df)._1
+
+  /** [[Checkpoints.localize]], one action for a frame under its row guard;
+    * the over-bound checkpoint fallback is released on close (a local
+    * relation has nothing to release).
     */
   def localize(df: DataFrame): DataFrame =
     own(Checkpoints.localize(df))(Checkpoints.release)

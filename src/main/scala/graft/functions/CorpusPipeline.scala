@@ -442,7 +442,7 @@ object CorpusPipeline {
       scope.onClose(frozen.release())
       val accepted = prepareIncrementalFrozen(scope,
         newDocs, frozen, standingCorpus, cfg, againstThreshold,
-        semanticAgainstThreshold = semanticAgainstThreshold)
+        semanticAgainstThreshold = semanticAgainstThreshold).drop(GateColumns: _*)
 
       // ingest audit: old corpus vs composed corpus, per-status counts
       val composed = standingCorpus
@@ -659,10 +659,10 @@ object CorpusPipeline {
     // Everything below registers with ONE scope, owned by the returned
     // FrozenCorpus; any failure closes it.
     Scope.closeOnFailure { scope =>
-      val slim = scope.checkpoint(embeddings.fold(base)(e => base.join(
+      // the job that fills the checkpoint also counts it
+      val (slim, rows) = scope.checkpointCounted(embeddings.fold(base)(e => base.join(
         e.select(col(cfg.idCol).as("__id"), col(cfg.embCol).as("__emb")),
         Seq("__id"), "left")))
-      val rows = slim.count() // cheap: counts the checkpointed blocks
       val bloomBc = scope.broadcast(slim.sparkSession, BloomDedup.filterBytes(
         if (rows == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, BloomFpp)
         else BloomDedup.buildLongNonEmpty(slim, col("__ck"), rows, BloomFpp)))
@@ -758,9 +758,14 @@ object CorpusPipeline {
     }
   }
 
+  /** The per-doc columns [[prepareIncrementalFrozen]] adds to `accepted`. */
+  private[graft] val GateColumns: Seq[String] = Seq("__ck", "__sig")
+
   /** The admitted DELTA's one frame: the projection a frozen gate folds
     * each admitted batch into, and the only shape
-    * [[prepareIncrementalFrozen]] reads a delta in. Columns:
+    * [[prepareIncrementalFrozen]] reads a delta in. `admitted` is that
+    * function's `accepted` frame, so the key and signature are projected,
+    * not recomputed. Columns:
     *   - `__id` — the document id;
     *   - `__ck` — its [[GateGeometry.key]];
     *   - `__sig` — its [[GateGeometry.signature]], null unless
@@ -775,12 +780,10 @@ object CorpusPipeline {
                                      withSignatures: Boolean,
                                      embeddings: Option[DataFrame]): DataFrame = {
     import GateGeometry._
-    val text = col(cfg.textCol)
-    val sig = signature(text)
     val nullArr = lit(null).cast("array<bigint>")
-    val base = admitted.select(col(cfg.idCol).as("__id"), key(text).as("__ck"),
-      (if (withSignatures) sig else nullArr).as("__sig"),
-      (if (withSignatures) bandBuckets(sig) else nullArr).as("__bb"))
+    val base = admitted.select(col(cfg.idCol).as("__id"), col("__ck"),
+      (if (withSignatures) col("__sig") else nullArr).as("__sig"),
+      (if (withSignatures) bandBuckets(col("__sig")) else nullArr).as("__bb"))
     embeddings.fold(base)(e => base.join(e.select(col(cfg.idCol).as("__id"),
       col(cfg.embCol).as("__emb")), Seq("__id"), "left"))
   }
@@ -810,9 +813,15 @@ object CorpusPipeline {
     * so a banded freeze always takes the frozen-banded path; a freeze made
     * without banding ([[prepareIncrementalManaged]]) takes the plain one.
     *
-    * Returns `accepted`. The batch's own persisted frames register with
-    * the caller's `scope`, which must stay open until `accepted` has
-    * materialized; the frozen state is not the scope's.
+    * Returns `accepted`: the surviving batch rows plus `__ck`, their
+    * [[GateGeometry.key]], and — when `againstThreshold` is set — `__sig`,
+    * their [[GateGeometry.signature]], both computed once per doc while
+    * gating, in the shape [[deltaProjection]] reads. Callers that write or
+    * return the rows drop the two columns, so both names are reserved:
+    * `newDocs` must not carry a `__ck` or `__sig` column (any case), which
+    * would otherwise be overwritten here and dropped there. The batch's own persisted frames
+    * register with the caller's `scope`, which must stay open until
+    * `accepted` has materialized; the frozen state is not the scope's.
     */
   def prepareIncrementalFrozen(scope: Scope,
                                newDocs: DataFrame, frozen: FrozenCorpus,
@@ -824,6 +833,8 @@ object CorpusPipeline {
                                deltaBucketCounts: Option[Map[(Int, Long), Long]] = None)
       : DataFrame = {
     import GateGeometry._
+    require(!newDocs.columns.exists(c => GateColumns.exists(_.equalsIgnoreCase(c))),
+      s"the batch must not carry the gate's reserved columns ${GateColumns.mkString(", ")}")
     val text = col(cfg.textCol)
     def deltaNonNull(c: String) =
       delta.map(_.select(col("__id"), col(c)).filter(col(c).isNotNull))
@@ -852,10 +863,15 @@ object CorpusPipeline {
     // final anti-join), and each would otherwise re-derive the ENTIRE
     // in-batch prepare chain from the raw scan (measured 1.6× on the warm
     // pipeline at sf0.1). Persisted, not localized: it carries the
-    // batch's surviving TEXT rows, which must not land on the driver.
-    val exactNew = scope.persist(delta.fold(afterFrozen)(d =>
-        afterFrozen.join(d.select(col("__ck")).distinct(), Seq("__ck"), "left_anti"))
-      .drop("__ck"))
+    // batch's surviving TEXT rows, which must not land on the driver. It
+    // keeps the exact key and, with near-dup gating on, adds the MinHash
+    // signature: the cache fill is the one pass that signs each doc, and
+    // the funnel and the caller's delta fold read the columns back.
+    val exactNew0 = delta.fold(afterFrozen)(d =>
+      afterFrozen.join(d.select(col("__ck")).distinct(), Seq("__ck"), "left_anti"))
+    val exactNew = scope.persist(
+      if (againstThreshold.isDefined) exactNew0.withColumn("__sig", signature(text))
+      else exactNew0)
 
     // 3. near-dup against frozen signatures ∪ delta signatures — through
     // the frozen BANDED state when the freeze carried it (per-batch
@@ -867,10 +883,12 @@ object CorpusPipeline {
         "near-dup gating requested but the corpus was frozen without signatures"))
       val sh = shingles(text)
       val deltaSigs = deltaNonNull("__sig")
+      val batchSigs = exactNew.select(col(cfg.idCol).as("__id"), col("__sig"))
+        .filter(col("__sig").isNotNull)
       val pairs = frozen.banded match {
         case Some((bnd, hot)) =>
           MinHashLsh.bipartitePairsFrozenBanded(corpusSigs, bnd, hot,
-            deltaSigs, corpusDocs, exactNew, cfg.idCol, sh, NumHashes, Bands, th,
+            deltaSigs, corpusDocs, exactNew, batchSigs, cfg.idCol, sh, NumHashes, Bands, th,
             maxBucketSize = MaxBucketSize,
             deltaBanded = delta.map(_.select(col("__id"),
               posexplode(col("__bb")).as(Seq("__band", "__bucket")))),
@@ -881,7 +899,7 @@ object CorpusPipeline {
         case _ =>
           MinHashLsh.bipartitePairsPrecomputedLeft(
             deltaSigs.fold(corpusSigs)(corpusSigs.unionByName(_)), corpusDocs,
-            exactNew, cfg.idCol, sh, NumHashes, Bands, th,
+            exactNew, batchSigs, cfg.idCol, sh, NumHashes, Bands, th,
             maxBucketSize = MaxBucketSize)
       }
       exactNew.join(pairs.select(col("id_right").as(cfg.idCol)).distinct(),

@@ -111,8 +111,8 @@ object MinHashLsh {
     * duration of the candidate search — ~0.5 KB/doc, ~50 GB cluster-wide for
     * a 100M-doc corpus — and released by the call's [[graft.core.Scope]]
     * once the (small) estimate-survivor set has been materialized into a
-    * driver-local relation ([[graft.core.Checkpoints.localize]], scratch
-    * blocks freed before return).
+    * driver-local relation ([[graft.core.Checkpoints.localize]]: one
+    * collect job, no block-store state).
     * The returned frame therefore holds no cached state: downstream actions
     * re-read only the candidate documents' shingles (semi-join pushdown),
     * never the full corpus. The call does eager work proportional to
@@ -181,9 +181,9 @@ object MinHashLsh {
         .select(col("id_a"), col("id_b"))
       // materialize the survivor set (∝ near-dup pairs, tiny vs corpus) so
       // the signature cache can be released now instead of leaking past the
-      // call; `localize` hands back a driver-local relation with ZERO
-      // block-store footprint (checkpoint blocks freed before return),
-      // falling back to a plain checkpoint only above its 4M-pair guard
+      // call; `localize` collects it in ONE job into a driver-local
+      // relation with ZERO block-store footprint, falling back to a plain
+      // checkpoint only above its 4M-pair guard
       Checkpoints.localize(survivors)
     }
     // Exact verification touches only candidate documents: the id
@@ -242,25 +242,32 @@ object MinHashLsh {
     .select(col(idCol).as("__id"), signatureOfHashes(shingleHashes, numHashes).as("__sig"))
     .filter(col("__sig").isNotNull)
 
-  /** [[bipartitePairsHashed]] with a PRECOMPUTED left-side signature frame
-    * ([[signatureFrame]]-shaped; persistence caller-managed — it outlives
-    * this call by design). `leftDocs` supplies the left-side TEXT for the
-    * exact-verify stage and is evaluated only when estimate survivors
-    * exist: at zero candidates the localized empty relation propagates and
-    * the source is never scanned — the property that lets a frozen-corpus
-    * ingest gate run whole batches without touching corpus storage.
-    * Identical output to [[bipartitePairsHashed]] when `leftSigs` equals
-    * the left frame's own signatures (spec-pinned).
+  /** [[bipartitePairsHashed]] with PRECOMPUTED signature frames on both
+    * sides ([[signatureFrame]]-shaped; persistence caller-managed). The
+    * left one outlives this call by design. `rightSigs` feeds several
+    * funnel branches, so it should be cheap to re-read: the ingest gate
+    * passes a projection of its persisted batch frame, which already
+    * carries each doc's signature, so no doc is MinHashed twice.
+    * `leftDocs` supplies the left-side TEXT for the exact-verify stage and
+    * is evaluated only when estimate survivors exist: at zero candidates
+    * the localized empty relation propagates and the source is never
+    * scanned — the property that lets a frozen-corpus ingest gate run
+    * whole batches without touching corpus storage.
+    * Identical output to [[bipartitePairsHashed]] when `leftSigs` and
+    * `rightSigs` equal the two frames' own signatures (spec-pinned).
+    * Nothing checks that they do: `rightSigs` must be
+    * `signatureFrame(right, idCol, shingleHashes, numHashes)` or a frame
+    * with exactly its rows, or the funnel pairs the wrong documents.
     */
   def bipartitePairsPrecomputedLeft(leftSigs: DataFrame, leftDocs: => DataFrame,
-                                    right: DataFrame, idCol: String,
+                                    right: DataFrame, rightSigs: DataFrame,
+                                    idCol: String,
                                     shingleHashes: Column, numHashes: Int = 64,
                                     bands: Int = 16, threshold: Double = 0.8,
                                     minBands: Int = 2,
                                     maxBucketSize: Long = 4096L): DataFrame =
     Scope.using { scope =>
-      val sr = scope.persist(signatureFrame(right, idCol, shingleHashes, numHashes))
-      bipartiteCore(scope, leftSigs, sr, leftDocs, right, idCol, shingleHashes,
+      bipartiteCore(scope, leftSigs, rightSigs, leftDocs, right, idCol, shingleHashes,
         numHashes, bands, threshold, minBands, maxBucketSize)
     }
 
@@ -379,10 +386,11 @@ object MinHashLsh {
               .select(col("__band"), col("__bucket"))
           }
         }
-        // ONE action: the full hot set is tiny (pathological buckets only),
-        // so localize it — both anti-joins then broadcast a precomputed
-        // LocalRelation instead of re-running the crossing/count subplans
-        // once per consuming join (measured 2× the whole funnel's cost).
+        // ONE action, localize's single collect: the full hot set is tiny
+        // (pathological buckets only), so both anti-joins then broadcast a
+        // precomputed LocalRelation instead of re-running the
+        // crossing/count subplans once per consuming join (measured 2× the
+        // whole funnel's cost).
         // Above localize's row guard (pathological corpora where most
         // buckets are hot) the scope releases the fallback checkpoint; the
         // hot frame is fully consumed by bipartiteTail's eager survivor
@@ -430,8 +438,9 @@ object MinHashLsh {
       // file), materialize the candidate pairs first — they are bounded
       // by collisions — and push their left ids into the sig read: the
       // estimate stage then reads ∝ candidates instead of streaming the
-      // whole cached sig frame through the join. One extra action; the
-      // over-cap / checkpoint-fallback path keeps the full sl join.
+      // whole cached sig frame through the join. One extra action (the
+      // candidates' single collect job); the over-cap /
+      // checkpoint-fallback path keeps the full sl join.
       val (candEff, slEff) = slSelect match {
         case Some(f) =>
           val cl = scope.localize(cand)
@@ -499,7 +508,9 @@ object MinHashLsh {
     incoming.join(dupIds, Seq(idCol), "left_anti")
   }
 
-  /** [[bipartitePairsPrecomputedLeft]] with the corpus side's BANDED frame
+  /** [[bipartitePairsPrecomputedLeft]] (same precomputed `rightSigs`
+    * contract: `signatureFrame(right, idCol, shingleHashes, numHashes)`'s
+    * rows, unchecked) with the corpus side's BANDED frame
     * and hot-bucket set also precomputed (one banding explode + one
     * hot-bucket shuffle per REFRESH instead of per batch — the per-batch
     * corpus-side work drops from an O(corpus) groupBy shuffle to cached
@@ -514,6 +525,7 @@ object MinHashLsh {
                                  frozenHot: DataFrame,
                                  deltaSigs: Option[DataFrame],
                                  leftDocs: => DataFrame, right: DataFrame,
+                                 rightSigs: DataFrame,
                                  idCol: String, shingleHashes: Column,
                                  numHashes: Int = 64, bands: Int = 16,
                                  threshold: Double = 0.8, minBands: Int = 2,
@@ -524,9 +536,8 @@ object MinHashLsh {
                                  prunedSigsFor: Option[Seq[Any] => Option[DataFrame]] = None)
       : DataFrame =
     Scope.using { scope =>
-      val sr = scope.persist(signatureFrame(right, idCol, shingleHashes, numHashes))
       bipartiteCoreFrozenBanded(scope, frozenSigs, frozenBanded, frozenHot,
-        deltaSigs, deltaBanded, deltaBucketCounts, frozenMaxNonHot, sr,
+        deltaSigs, deltaBanded, deltaBucketCounts, frozenMaxNonHot, rightSigs,
         leftDocs, right, idCol, shingleHashes, numHashes, bands, threshold,
         minBands, maxBucketSize, prunedSigsFor)
     }

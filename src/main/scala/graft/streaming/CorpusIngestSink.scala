@@ -4,6 +4,7 @@ import graft.core.Scope
 import graft.functions.CorpusPipeline
 import graft.functions.CorpusPipeline.GateGeometry
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Streaming corpus ingestion with the day-2 dedup gate: each micro-batch
   * runs [[CorpusPipeline.prepareIncrementalManaged]] against the CURRENT standing
@@ -174,15 +175,18 @@ object CorpusIngestSink {
     * with the batch's schema before the first commit (prepare adds a
     * `split` column on write, so later reads carry it — `unionByName`
     * inside the funnel is name-based and indifferent to the extra column).
+    * With a known `schema` the read skips parquet schema inference, which
+    * is a Spark job of its own.
     */
   private[streaming] def standingOf(spark: SparkSession, targetDir: String,
-                                    batch: DataFrame): DataFrame = {
+                                    batch: DataFrame,
+                                    schema: Option[StructType] = None): DataFrame = {
     healCompaction(spark, targetDir)
     val path = new org.apache.hadoop.fs.Path(targetDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(path) && fs.listStatus(path).exists(
         s => s.isFile && s.getPath.getName.endsWith(".parquet")))
-      spark.read.parquet(targetDir)
+      schema.fold(spark.read)(spark.read.schema(_)).parquet(targetDir)
     else batch.limit(0)
   }
 
@@ -322,11 +326,17 @@ object CorpusIngestSink {
     * the gate from the compacted layout.
     *
     * WHEN TO USE — the trade is scan avoidance vs fixed bookkeeping: per
-    * admitted batch the gate pays one extra collect job (the delta fold;
-    * driver-resident rows rebuild into ONE LocalRelation, so the gate plan
-    * stays flat across the refresh window), and in exchange
-    * skips the per-batch corpus scan. Measured at sf0.1/local[32] (corpus ≈ 4k
-    * docs) the bookkeeping DOMINATES — per-batch gating is ~2× faster —
+    * admitted batch the gate pays one extra collect job (the delta fold,
+    * which collects the key and signature columns the funnel already
+    * computed instead of hashing the text again; driver-resident rows
+    * rebuild into ONE LocalRelation, so the gate plan stays flat across the
+    * refresh window), and in exchange skips the per-batch corpus scan. The
+    * rest of a steady batch's jobs are the funnel's own: each small funnel
+    * frame materializes in one collect
+    * ([[graft.core.Checkpoints.localize]]), the admitted count comes from
+    * the job that checkpoints the survivors, and the candidate-verify read
+    * reuses the schema the freeze resolved. Measured at sf0.1/local[32]
+    * (corpus ≈ 4k docs) the bookkeeping DOMINATES — per-batch gating is ~2× faster —
     * because scanning a few thousand cached rows is cheaper than any
     * fixed job overhead. The gate is for the regime it was built for:
     * standing corpus ≫ batch (millions of rows and up), where one
@@ -368,6 +378,10 @@ object CorpusIngestSink {
       "the semantic arm needs cfg.embeddings (id-keyed vectors) on both sides")
 
     private var frozen: CorpusPipeline.FrozenCorpus = null
+    /** the corpus schema the freeze resolved; candidate-verify reads reuse
+      * it instead of inferring it again every batch
+      */
+    private var corpusSchema: Option[StructType] = None
     private var sinceRefresh = 0
     /** The admitted DELTA since the freeze, as ONE frame in the
       * [[CorpusPipeline.deltaProjection]] shape (`__id`, `__ck`, `__sig`,
@@ -428,11 +442,12 @@ object CorpusIngestSink {
       * executor-resident fallback.
       */
     private[streaming] var foldDriverBytes: Long = DefaultFoldDriverBytes
-    /** Test seam: how the gate reads the standing corpus (its freeze and
-      * its candidate verify), so specs can count or fail corpus reads.
+    /** Test seam: how the gate reads the standing corpus (its freeze, with
+      * no schema, and its candidate verify, with the freeze's), so specs
+      * can count or fail corpus reads.
       */
-    private[streaming] var corpusReader: (SparkSession, String, DataFrame) => DataFrame =
-      standingOf
+    private[streaming] var corpusReader
+        : (SparkSession, String, DataFrame, Option[StructType]) => DataFrame = standingOf
     private[streaming] def isFrozen: Boolean = frozen != null
 
     /** True when `current` differs from the validated listing at top
@@ -503,11 +518,11 @@ object CorpusIngestSink {
         // task time per admitted batch at 400k docs). A localCheckpoint has
         // no CacheManager entry, so the append cannot invalidate it, and it
         // pins the gated snapshot the way the fold semantically requires.
-        // The checkpoint is eager: the whole funnel runs here.
-        val accepted = scope.checkpoint(CorpusPipeline.prepareIncrementalFrozen(
-          scope, batch, frozen, corpusReader(spark, targetDir, batch), cfg,
+        // The checkpoint is eager: the whole funnel runs here, and the job
+        // that fills it also yields the exact admitted count `n`.
+        val (accepted, n) = scope.checkpointCounted(CorpusPipeline.prepareIncrementalFrozen(
+          scope, batch, frozen, corpusReader(spark, targetDir, batch, corpusSchema), cfg,
           againstThreshold, semanticAgainstThreshold, delta, deltaBucketCounts))
-        val n = accepted.count()
         if (n == 0L) Some(0L)
         else {
           preAppendTap()
@@ -545,12 +560,14 @@ object CorpusIngestSink {
 
     /** Append the `n` checkpointed survivors and fold them into the delta;
       * `preEntries` is the listing validated just before the append.
+      * `accepted` carries the gate's per-doc key and signature columns,
+      * which the fold reads and the append leaves out.
       */
     private def appendAndFold(spark: SparkSession, accepted: DataFrame, n: Long,
                               preEntries: Set[(String, Long, Long)]): Unit = {
       // sized append off the already-counted cache ([[appendFiles]]):
       // per-partition files would decay the corpus the freeze re-reads
-      accepted.coalesce(appendFiles(n))
+      accepted.drop(CorpusPipeline.GateColumns: _*).coalesce(appendFiles(n))
         .write.mode(SaveMode.Append).parquet(targetDir)
       // next expected = the last VALIDATED listing ∪ the files this
       // append added (post-append names not in the pre-append
@@ -573,7 +590,8 @@ object CorpusIngestSink {
         // column projection of it, so the per-batch bookkeeping is a
         // single collect job, not one per slice (the fixed-overhead term
         // that dominates the gate below the corpus-size crossover; see
-        // the FrozenGate scaladoc)
+        // the FrozenGate scaladoc). The key and signature are the
+        // funnel's own columns, collected, not recomputed from the text.
         val folded = foldTap(CorpusPipeline.deltaProjection(accepted, cfg,
           withSignatures = againstThreshold.isDefined,
           embeddings = if (semanticAgainstThreshold.isDefined) cfg.embeddings else None))
@@ -636,8 +654,8 @@ object CorpusIngestSink {
 
     private def refresh(spark: SparkSession, schemaDonor: DataFrame): Unit = {
       close()
-      val fresh = CorpusPipeline.freezeCorpus(
-        corpusReader(spark, targetDir, schemaDonor), cfg,
+      val corpus = corpusReader(spark, targetDir, schemaDonor, None)
+      val fresh = CorpusPipeline.freezeCorpus(corpus, cfg,
         withSignatures = againstThreshold.isDefined,
         embeddings =
           if (semanticAgainstThreshold.isDefined) cfg.embeddings else None,
@@ -650,6 +668,7 @@ object CorpusIngestSink {
         sideFileMinRows = sideFileMinRows)
       window.onClose(fresh.release())
       frozen = fresh
+      corpusSchema = Some(corpus.schema)
       sinceRefresh = 0
       // recorded AFTER the freeze materialized (freezeCorpus counts the
       // slim frame eagerly): a writer landing between the scan and this
@@ -664,6 +683,7 @@ object CorpusIngestSink {
       */
     def close(): Unit = {
       frozen = null
+      corpusSchema = None
       deltaParts.clear()
       delta = None
       deltaDriverRows.clear()

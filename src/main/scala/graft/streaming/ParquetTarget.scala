@@ -212,11 +212,12 @@ final class ParquetTarget(spark: SparkSession, dir: String) {
       try s.iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
         .asScala_toSeq
         .map(_.getFileName.toString)
-        // strict digit match, not startsWith: an operator-made 'v_3.bak'
-        // or copy-tool leftover must be ignored, not NumberFormatException
-        // the next maintenance pass (and kill the stream with it)
+        // strict digit match, not startsWith, and only names that fit an
+        // Int: an operator-made 'v_3.bak' or a copy-tool leftover such as
+        // 'v_99999999999' must be ignored, not NumberFormatException the
+        // next maintenance pass (and kill the stream with it)
         .filter(_.matches("v_\\d+"))
-        .map(_.stripPrefix("v_").toInt)
+        .flatMap(_.stripPrefix("v_").toIntOption)
       finally s.close()
     }
 

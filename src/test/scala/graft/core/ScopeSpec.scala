@@ -30,6 +30,21 @@ class ScopeSpec extends SparkSpec {
     assert(order.size == 2)
   }
 
+  test("checkpointCounted counts the rows in the job that fills the checkpoint") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.functions.col
+    val rddsBefore = persisted
+    val scope = new Scope
+    val (ckpt, n) = scope.checkpointCounted(
+      spark.range(0, 1000, 1, 4).filter(col("id") % 7 === 0).toDF())
+    assert(n == 143L)
+    assert(ckpt.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+    assert(ckpt.as[Long].collect().toSeq.sorted == (0L until 1000L by 7L))
+    assert((persisted -- rddsBefore).size == 1, "the checkpoint holds its blocks")
+    scope.close()
+    assert(persisted == rddsBefore)
+  }
+
   test("using closes on success and on failure; closeOnFailure only on failure") {
     val rddsBefore = persisted
     val n = Scope.using(s => s.checkpoint(Seq(1, 2).toDF("x")).count())

@@ -273,4 +273,19 @@ class CorpusPipelineSpec extends SparkSpec {
       finally releaseReplay()
     } finally release()
   }
+
+  test("prepareIncremental refuses a batch that carries the gate's reserved columns") {
+    // accepted carries __ck/__sig and callers drop them, so a user column of
+    // either name would be overwritten and then silently lost
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val standing = docs.filter(pmod($"doc_id", lit(5L)) =!= 0L)
+    val incoming = docs.filter(pmod($"doc_id", lit(5L)) === 0L).withColumn("__SIG", lit(1L))
+    val cfg = CorpusPipeline.Config(nearDupThreshold = None, decontamThreshold = None)
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val e = intercept[IllegalArgumentException](
+      CorpusPipeline.prepareIncrementalManaged(incoming, standing, cfg))
+    assert(e.getMessage.contains("__sig"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before,
+      "the refused call must release the freeze it made")
+  }
 }

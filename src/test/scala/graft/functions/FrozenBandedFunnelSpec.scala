@@ -53,10 +53,10 @@ class FrozenBandedFunnelSpec extends SparkSpec {
       val corpusDocs = delta.fold(frozenDocs)(frozenDocs.unionByName(_))
       val legacy = pairsOf(MinHashLsh.bipartitePairsPrecomputedLeft(
         delta.fold(fSigs)(d => fSigs.unionByName(sigsOf(d))), corpusDocs,
-        incoming, "doc_id", sh, 64, 16, 0.8, maxBucketSize = cap))
+        incoming, sigsOf(incoming), "doc_id", sh, 64, 16, 0.8, maxBucketSize = cap))
       val frozenPath = pairsOf(MinHashLsh.bipartitePairsFrozenBanded(
         fSigs, banded, hot, delta.map(sigsOf), corpusDocs, incoming,
-        "doc_id", sh, 64, 16, 0.8, maxBucketSize = cap))
+        sigsOf(incoming), "doc_id", sh, 64, 16, 0.8, maxBucketSize = cap))
       (legacy, frozenPath)
     } finally {
       fSigs.unpersist(blocking = false)
@@ -134,10 +134,11 @@ class FrozenBandedFunnelSpec extends SparkSpec {
             case r => r.getLong(0)
           }
         val legacy = pairsOf(MinHashLsh.bipartitePairsPrecomputedLeft(
-          fSigs.unionByName(dSigs), corpusDocs, incoming, "doc_id", sh,
-          64, 16, 0.8, maxBucketSize = cap))
+          fSigs.unionByName(dSigs), corpusDocs, incoming, sigsOf(incoming),
+          "doc_id", sh, 64, 16, 0.8, maxBucketSize = cap))
         val driverPath = pairsOf(MinHashLsh.bipartitePairsFrozenBanded(
-          fSigs, banded, hot, Some(dSigs), corpusDocs, incoming, "doc_id",
+          fSigs, banded, hot, Some(dSigs), corpusDocs, incoming,
+          sigsOf(incoming), "doc_id",
           sh, 64, 16, 0.8, maxBucketSize = cap, deltaBanded = Some(dBanded),
           deltaBucketCounts = Some(dCounts),
           frozenMaxNonHot = Some(maxNonHot)))

@@ -107,10 +107,12 @@ class FrozenSideFilesSpec extends SparkSpec {
         df.select("id_left", "id_right").as[(Long, Long)].collect().toSet
       val cached = pairsOf(MinHashLsh.bipartitePairsFrozenBanded(
         frozen.sigs.get, bnd, hot, Some(dSigs), corpusAll, incoming,
+        MinHashLsh.signatureFrame(incoming, "doc_id", sh, 64),
         "doc_id", sh, 64, 16, 0.8, maxBucketSize = 10L,
         frozenMaxNonHot = frozen.bandedMaxNonHot))
       val pruned = pairsOf(MinHashLsh.bipartitePairsFrozenBanded(
         frozen.sigs.get, bnd, hot, Some(dSigs), corpusAll, incoming,
+        MinHashLsh.signatureFrame(incoming, "doc_id", sh, 64),
         "doc_id", sh, 64, 16, 0.8, maxBucketSize = 10L,
         frozenMaxNonHot = frozen.bandedMaxNonHot,
         prunedSigsFor = Some(frozen.prunedSigs _)))

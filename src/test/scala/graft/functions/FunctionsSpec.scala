@@ -136,7 +136,8 @@ class MinHashSpec extends SparkSpec {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val pairs = MinHashLsh.bipartitePairsPrecomputedLeft(sigs, corpus,
-        incoming, "doc_id", sh, numHashes = 32, bands = 8, threshold = 0.8)
+        incoming, MinHashLsh.signatureFrame(incoming, "doc_id", sh, 32),
+        "doc_id", sh, numHashes = 32, bands = 8, threshold = 0.8)
       assert(pairs.select($"id_left", $"id_right").as[(Long, Long)]
         .collect().toSet == Set((0L, 10L)))
       val plan = pairs.queryExecution.executedPlan.toString

@@ -210,9 +210,10 @@ class FrozenGateHardeningSpec extends SparkSpec {
       if (t.contains("MARKER")) throw new RuntimeException("injected: funnel") else src
     }
     var failScan = false
-    val reader: (org.apache.spark.sql.SparkSession, String, DataFrame) => DataFrame =
-      (s, d, donor) => {
-        val corpus = CorpusIngestSink.standingOf(s, d, donor)
+    val reader: (org.apache.spark.sql.SparkSession, String, DataFrame,
+        Option[org.apache.spark.sql.types.StructType]) => DataFrame =
+      (s, d, donor, schema) => {
+        val corpus = CorpusIngestSink.standingOf(s, d, donor, schema)
         if (failScan) corpus.withColumn("text", scanBoom(col("text"))) else corpus
       }
     def squat(dir: String) = java.nio.file.Paths.get(dir.stripSuffix("/") + "__gatestate")

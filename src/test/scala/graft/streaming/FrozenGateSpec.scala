@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import graft.functions.CorpusPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import java.nio.file.Files
 
@@ -90,8 +91,9 @@ class FrozenGateSpec extends SparkSpec {
     def runCounted(refreshEvery: Int): (Seq[Long], Long, String) = {
       val dir = Files.createTempDirectory(s"fg_scan_$refreshEvery").toString
       var reads = 0L
-      val counting = (s: SparkSession, d: String, donor: DataFrame) => {
-        reads += 1; CorpusIngestSink.standingOf(s, d, donor)
+      val counting = (s: SparkSession, d: String, donor: DataFrame,
+                      schema: Option[StructType]) => {
+        reads += 1; CorpusIngestSink.standingOf(s, d, donor, schema)
       }
       val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = refreshEvery)
       g.corpusReader = counting
@@ -121,8 +123,9 @@ class FrozenGateSpec extends SparkSpec {
   test("candidate verify reads the corpus only when estimate survivors exist") {
     val dir = Files.createTempDirectory("fg_verify").toString
     var reads = 0L
-    val counting = (s: SparkSession, d: String, donor: DataFrame) => {
-      reads += 1; CorpusIngestSink.standingOf(s, d, donor)
+    val counting = (s: SparkSession, d: String, donor: DataFrame,
+                    schema: Option[StructType]) => {
+      reads += 1; CorpusIngestSink.standingOf(s, d, donor, schema)
     }
     val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 10)
     g.corpusReader = counting
@@ -198,5 +201,66 @@ class FrozenGateSpec extends SparkSpec {
       q.processAllAvailable()
     } finally { q.stop(); gate.close() }
     assert(corpusOf(dir).map(_._1) == Set(1L, 2L, 12L))
+  }
+
+  test("a steady batch runs within its job budget") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.ListenerBridge
+    val dir = Files.createTempDirectory("fg_jobs").toString
+    val seed = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 10)
+    try assert(seed.processBatch(batches.head) == 2L) finally seed.close()
+    val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 10)
+    try {
+      // the freeze of {1, 2}, then 12 lands in the delta
+      assert(g.processBatch(Seq((12L, baseC, "web")).toDF("doc_id", "text", "source")) == 1L)
+      // one steady batch through every stage: an exact dup of the frozen
+      // corpus and one of the delta, a near dup of the frozen corpus (its
+      // candidate verify reads the corpus), and a fresh doc (append + fold)
+      val steady = Seq((10L, baseA, "web"), (20L, baseC, "web"),
+        (11L, baseB + " today", "web"), (22L, baseD, "web"))
+        .toDF("doc_id", "text", "source")
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      ListenerBridge.waitUntilListenerBusEmpty(spark)
+      spark.sparkContext.addSparkListener(listener)
+      val admitted = try {
+        val n = g.processBatch(steady)
+        ListenerBridge.waitUntilListenerBusEmpty(spark)
+        n
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(admitted == 1L, s"fixture drifted: $admitted")
+      // an upper bound: 21 jobs now, 31 before localize became one
+      // collect (each localize cost a checkpoint, a count and a collect,
+      // and the admitted count and the verify read's schema inference took
+      // one job each)
+      assert(jobs.get <= 21, s"a steady batch ran ${jobs.get} jobs, over its budget of 21")
+    } finally g.close()
+  }
+
+  test("the fold collects the funnel's key and signature, bit-identical to a recompute from the text") {
+    import org.apache.spark.sql.functions.col
+    import CorpusPipeline.GateGeometry
+    val dir = Files.createTempDirectory("fg_fold").toString
+    val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = 10)
+    try {
+      assert(batches.take(3).map(g.processBatch) == Seq(2L, 1L, 1L))
+      val cols = Seq("__id", "__ck", "__sig", "__bb").map(col)
+      def byId(df: DataFrame): Map[Long, (Long, Seq[Long], Seq[Long])] =
+        df.select(cols: _*).as[(Long, Long, Seq[Long], Seq[Long])].collect()
+          .map { case (id, ck, sig, bb) => id -> (ck, sig, bb) }.toMap
+      // one freeze of the empty corpus: every admitted row is in the delta
+      val folded = byId(g.delta.get)
+      val text = col("text")
+      val recomputed = byId(CorpusPipeline.deltaProjection(
+        spark.read.parquet(dir)
+          .withColumn("__ck", GateGeometry.key(text))
+          .withColumn("__sig", GateGeometry.signature(text)),
+        cfg, withSignatures = true, embeddings = None))
+      assert(folded.keySet == Set(1L, 2L, 12L, 22L))
+      assert(folded.values.forall(_._2.size == GateGeometry.NumHashes))
+      assert(folded == recomputed, "the fold must hold what the text hashes to")
+    } finally g.close()
   }
 }

@@ -36,6 +36,7 @@ class ParquetTargetSpec extends SparkSpec {
     tgt.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     Files.createDirectory(java.nio.file.Paths.get(dir, "v_00000001.bak"))
     Files.createFile(java.nio.file.Paths.get(dir, "v_old"))
+    Files.createDirectory(java.nio.file.Paths.get(dir, "v_99999999999"))
     assert(tgt.versions == Seq(1, 2))
     assert(tgt.read().count() == 2)
     tgt.expireSnapshots(keep = 1)
