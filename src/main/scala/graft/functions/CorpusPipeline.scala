@@ -809,9 +809,10 @@ object CorpusPipeline {
     * re-freezing every batch — the equality [[graft.streaming]]'s
     * FrozenGateSpec pins — because frozen + delta IS the corpus.
     *
-    * The funnel's geometry is [[GateGeometry]]'s, the one the freeze used,
-    * so a banded freeze always takes the frozen-banded path; a freeze made
-    * without banding ([[prepareIncrementalManaged]]) takes the plain one.
+    * The funnel's geometry is [[GateGeometry]]'s, the one the freeze used:
+    * a banded freeze supplies its cached banding and hot set, and a freeze
+    * made without banding ([[prepareIncrementalManaged]]) has them derived
+    * lazily for this call, through the same funnel.
     *
     * Returns `accepted`: the surviving batch rows plus `__ck`, their
     * [[GateGeometry.key]], and — when `againstThreshold` is set — `__sig`,
@@ -836,8 +837,6 @@ object CorpusPipeline {
     require(!newDocs.columns.exists(c => GateColumns.exists(_.equalsIgnoreCase(c))),
       s"the batch must not carry the gate's reserved columns ${GateColumns.mkString(", ")}")
     val text = col(cfg.textCol)
-    def deltaNonNull(c: String) =
-      delta.map(_.select(col("__id"), col(c)).filter(col(c).isNotNull))
     // 1. in-batch preparation
     val prepared = prepare(newDocs, cfg)
 
@@ -876,32 +875,24 @@ object CorpusPipeline {
     // 3. near-dup against frozen signatures ∪ delta signatures — through
     // the frozen BANDED state when the freeze carried it (per-batch
     // corpus-side work becomes cached probes; the banding explode and
-    // hot-bucket shuffle were paid once at freeze), identical admissions
-    // either way
+    // hot-bucket shuffle were paid once at freeze); a freeze without
+    // banding hands the funnel the same two frames as lazy plans, neither
+    // persisted — identical admissions either way
     val lexAccepted = againstThreshold.fold(exactNew) { th =>
       val corpusSigs = frozen.sigs.getOrElse(throw new IllegalStateException(
         "near-dup gating requested but the corpus was frozen without signatures"))
-      val sh = shingles(text)
-      val deltaSigs = deltaNonNull("__sig")
+      val (bnd, hot) = frozen.banded.getOrElse {
+        val b = MinHashLsh.bandedFrame(corpusSigs, Bands, NumHashes)
+        (b, MinHashLsh.hotBucketsOf(b, MaxBucketSize))
+      }
       val batchSigs = exactNew.select(col(cfg.idCol).as("__id"), col("__sig"))
         .filter(col("__sig").isNotNull)
-      val pairs = frozen.banded match {
-        case Some((bnd, hot)) =>
-          MinHashLsh.bipartitePairsFrozenBanded(corpusSigs, bnd, hot,
-            deltaSigs, corpusDocs, exactNew, batchSigs, cfg.idCol, sh, NumHashes, Bands, th,
-            maxBucketSize = MaxBucketSize,
-            deltaBanded = delta.map(_.select(col("__id"),
-              posexplode(col("__bb")).as(Seq("__band", "__bucket")))),
-            deltaBucketCounts = deltaBucketCounts,
-            frozenMaxNonHot = frozen.bandedMaxNonHot,
-            prunedSigsFor =
-              if (frozen.hasSideFiles) Some(frozen.prunedSigs _) else None)
-        case _ =>
-          MinHashLsh.bipartitePairsPrecomputedLeft(
-            deltaSigs.fold(corpusSigs)(corpusSigs.unionByName(_)), corpusDocs,
-            exactNew, batchSigs, cfg.idCol, sh, NumHashes, Bands, th,
-            maxBucketSize = MaxBucketSize)
-      }
+      val pairs = MinHashLsh.bipartitePairsFrozenBanded(corpusSigs, bnd, hot,
+        delta, corpusDocs, exactNew, batchSigs, cfg.idCol, shingles(text),
+        NumHashes, Bands, th, maxBucketSize = MaxBucketSize,
+        deltaBucketCounts = deltaBucketCounts,
+        frozenMaxNonHot = frozen.bandedMaxNonHot,
+        prunedSigsFor = if (frozen.hasSideFiles) Some(frozen.prunedSigs _) else None)
       exactNew.join(pairs.select(col("id_right").as(cfg.idCol)).distinct(),
         Seq(cfg.idCol), "left_anti")
     }
@@ -919,7 +910,9 @@ object CorpusPipeline {
         "semantic gating requested but the corpus was frozen without embeddings"))
       val embFrame = cfg.embeddings.getOrElse(throw new IllegalStateException(
         "semantic gating requires cfg.embeddings for the batch side"))
-      val allEmb = deltaNonNull("__emb").fold(corpusEmb)(corpusEmb.unionByName(_))
+      val allEmb = delta.map(_.select(col("__id"), col("__emb"))
+          .filter(col("__emb").isNotNull))
+        .fold(corpusEmb)(corpusEmb.unionByName(_))
       val batchEmb = lexAccepted.select(col(cfg.idCol).as("__id"))
         .join(embFrame.select(col(cfg.idCol).as("__id"),
           col(cfg.embCol).as("__emb")), "__id")

@@ -226,14 +226,16 @@ object MinHashLsh {
     Scope.using { scope =>
       val sl = scope.persist(signatureFrame(left, idCol, shingleHashes, numHashes))
       val sr = scope.persist(signatureFrame(right, idCol, shingleHashes, numHashes))
-      bipartiteCore(scope, sl, sr, left, right, idCol, shingleHashes,
-        numHashes, bands, threshold, minBands, maxBucketSize)
+      val bl = bandedFrame(sl, bands, numHashes)
+      bipartiteCore(scope, sl, bl, hotBucketsOf(bl, maxBucketSize), None, None, None,
+        sr, left, right, idCol, shingleHashes, numHashes, bands, threshold,
+        minBands, maxBucketSize, None)
     }
 
   /** The signature projection [[bipartitePairsHashed]] builds internally:
     * (`__id`, `__sig`) with null-signature documents dropped. Exposed so a
     * standing corpus's signatures can be computed ONCE (per refresh
-    * cadence) and fed to [[bipartitePairsPrecomputedLeft]] across many
+    * cadence) and fed to [[bipartitePairsFrozenBanded]] across many
     * micro-batches — the freeze-and-refresh trade of staleness for scan
     * count. Persistence is the caller's.
     */
@@ -241,35 +243,6 @@ object MinHashLsh {
                      numHashes: Int = 64): DataFrame = df
     .select(col(idCol).as("__id"), signatureOfHashes(shingleHashes, numHashes).as("__sig"))
     .filter(col("__sig").isNotNull)
-
-  /** [[bipartitePairsHashed]] with PRECOMPUTED signature frames on both
-    * sides ([[signatureFrame]]-shaped; persistence caller-managed). The
-    * left one outlives this call by design. `rightSigs` feeds several
-    * funnel branches, so it should be cheap to re-read: the ingest gate
-    * passes a projection of its persisted batch frame, which already
-    * carries each doc's signature, so no doc is MinHashed twice.
-    * `leftDocs` supplies the left-side TEXT for the exact-verify stage and
-    * is evaluated only when estimate survivors exist: at zero candidates
-    * the localized empty relation propagates and the source is never
-    * scanned — the property that lets a frozen-corpus ingest gate run
-    * whole batches without touching corpus storage.
-    * Identical output to [[bipartitePairsHashed]] when `leftSigs` and
-    * `rightSigs` equal the two frames' own signatures (spec-pinned).
-    * Nothing checks that they do: `rightSigs` must be
-    * `signatureFrame(right, idCol, shingleHashes, numHashes)` or a frame
-    * with exactly its rows, or the funnel pairs the wrong documents.
-    */
-  def bipartitePairsPrecomputedLeft(leftSigs: DataFrame, leftDocs: => DataFrame,
-                                    right: DataFrame, rightSigs: DataFrame,
-                                    idCol: String,
-                                    shingleHashes: Column, numHashes: Int = 64,
-                                    bands: Int = 16, threshold: Double = 0.8,
-                                    minBands: Int = 2,
-                                    maxBucketSize: Long = 4096L): DataFrame =
-    Scope.using { scope =>
-      bipartiteCore(scope, leftSigs, rightSigs, leftDocs, right, idCol, shingleHashes,
-        numHashes, bands, threshold, minBands, maxBucketSize)
-    }
 
   /** The banded (id, band, bucket) frame of a [[signatureFrame]]-shaped
     * sigs frame — 16× row expansion, narrow columns. Freezable: computing
@@ -294,97 +267,74 @@ object MinHashLsh {
       .filter(col("__bsz") > cap)
       .select(col("__band"), col("__bucket"))
 
-  private def bipartiteCore(scope: Scope, sl: DataFrame, sr: DataFrame,
-                            leftDocs: => DataFrame,
-                            right: DataFrame, idCol: String,
-                            shingleHashes: Column, numHashes: Int, bands: Int,
-                            threshold: Double, minBands: Int,
-                            maxBucketSize: Long): DataFrame = {
-    val bl0 = bandedFrame(sl, bands, numHashes)
-    val br0 = bandedFrame(sr, bands, numHashes)
-    val (bl, br) =
-      if (maxBucketSize <= 0L) (bl0, br0)
-      else {
-        val hot = hotBucketsOf(bl0, maxBucketSize)
-          .union(hotBucketsOf(br0, maxBucketSize)).distinct()
-        (bl0.join(hot, Seq("__band", "__bucket"), "left_anti"),
-         br0.join(hot, Seq("__band", "__bucket"), "left_anti"))
-      }
-    bipartiteTail(scope, bl, br, sl, sr, leftDocs, right, idCol,
-      shingleHashes, numHashes, threshold, minBands, bands)
-  }
-
-  /** [[bipartiteCore]] with the LEFT side's banded frame and hot-bucket
-    * set PRECOMPUTED (frozen at refresh time) plus an optional admitted
-    * DELTA: candidates come from (frozenBanded ∪ banded(delta)) ⋈ batch,
-    * and the hot set is reconstructed EXACTLY as the unfrozen path would
-    * compute it over (frozen ∪ delta) — frozen-hot pairs are static
-    * ([[hotBucketsOf]] at freeze), and the only buckets whose occupancy
-    * can have changed are those the delta touches, so the per-batch check
-    * is one broadcast-semi count over the cached frozen banding instead of
-    * a full O(corpus) groupBy shuffle. Admissions stay bit-identical to
-    * the per-batch path at any cadence (FrozenGateSpec pins the equality;
-    * `MinHashLshSpec` pins the hot-bucket crossing case).
+  /** The one bipartite core. The LEFT side arrives as its signatures, its
+    * banded frame and that frame's hot-bucket set — precomputed and cached
+    * by the frozen gate (one banding explode + hot-bucket shuffle per
+    * refresh), or lazy plans for a one-shot call — plus an optional
+    * admitted DELTA: candidates come from (leftBanded ∪ banded(delta)) ⋈
+    * right, and the hot set is reconstructed EXACTLY as it would be
+    * computed over (left ∪ delta) — left-hot pairs are `leftHot`, and the
+    * only buckets whose occupancy can have changed are those the delta
+    * touches, so the check is one broadcast-semi count over the left
+    * banding instead of a full O(corpus) groupBy shuffle. Admissions stay
+    * bit-identical to gating against (left ∪ delta) at any cadence
+    * (FrozenGateSpec pins the equality; `FrozenBandedFunnelSpec` pins the
+    * hot-bucket crossing case).
+    *
+    * `delta` carries (`__id`, `__sig`, `__bb`) rows, `__bb` being
+    * `bandBuckets(__sig, bands, numHashes / bands)` — the frozen gate's
+    * fold already holds them, so banding the delta runs no job; a row with
+    * a null `__sig` (and so a null `__bb`) takes no part.
     */
-  private def bipartiteCoreFrozenBanded(scope: Scope,
-      slFrozen: DataFrame, frozenBanded: DataFrame, frozenHot: DataFrame,
-      deltaSigs: Option[DataFrame], deltaBanded: Option[DataFrame],
+  private def bipartiteCore(scope: Scope,
+      sl0: DataFrame, leftBanded: DataFrame, leftHot: DataFrame,
+      delta: Option[DataFrame],
       deltaBucketCounts: Option[Map[(Int, Long), Long]],
-      frozenMaxNonHot: Option[Long],
+      leftMaxNonHot: Option[Long],
       sr: DataFrame,
       leftDocs: => DataFrame, right: DataFrame, idCol: String,
       shingleHashes: Column, numHashes: Int, bands: Int, threshold: Double,
       minBands: Int, maxBucketSize: Long,
-      prunedSigsFor: Option[Seq[Any] => Option[DataFrame]] = None): DataFrame = {
-    val spark = frozenBanded.sparkSession
-    // the delta's banded rows: caller-supplied (the frozen gate explodes
-    // the band buckets its fold already collected, zero jobs) when given,
-    // else derived from the delta sigs
-    val blD = deltaBanded.orElse(deltaSigs.map(d => bandedFrame(d, bands, numHashes)))
+      prunedSigsFor: Option[Seq[Any] => Option[DataFrame]]): DataFrame = {
+    val spark = leftBanded.sparkSession
+    val deltaSigs = delta.map(_.select(col("__id"), col("__sig"))
+      .filter(col("__sig").isNotNull))
+    val blD = delta.map(_.select(col("__id"),
+      posexplode(col("__bb")).as(Seq("__band", "__bucket"))))
     val br0 = bandedFrame(sr, bands, numHashes)
-    val bl0 = blD.fold(frozenBanded)(frozenBanded.unionByName(_))
+    val bl0 = blD.fold(leftBanded)(leftBanded.unionByName(_))
     val (bl, br) =
       if (maxBucketSize <= 0L) (bl0, br0)
       else {
-        // buckets hot over frozen ∪ delta = {frozen count > cap} ∪
-        // {delta-touched: frozen + delta count > cap} — the second term is
+        // buckets hot over left ∪ delta = {left count > cap} ∪
+        // {delta-touched: left + delta count > cap} — the second term is
         // the only one needing fresh counts, and only for delta's buckets
-        val crossing: Option[DataFrame] = deltaBucketCounts match {
+        val touched: Option[DataFrame] = deltaBucketCounts match {
           case Some(counts) =>
             // driver-resident delta occupancy: a bucket can cross the cap
-            // only if its delta count stacked on the frozen side's densest
-            // NON-hot bucket exceeds it (per-bucket frozen counts are ≤
-            // that max by definition; already-hot buckets are in frozenHot
+            // only if its delta count stacked on the left side's densest
+            // NON-hot bucket exceeds it (per-bucket left counts are ≤
+            // that max by definition; already-hot buckets are in leftHot
             // regardless) — so the probe ships only the SUSPECT buckets,
             // and the steady state (no suspects) skips the corpus-side
             // count probe entirely
-            val suspects = frozenMaxNonHot.fold(counts)(m =>
+            val suspects = leftMaxNonHot.fold(counts)(m =>
               counts.filter { case (_, dc) => dc + m > maxBucketSize })
             if (suspects.isEmpty) None
-            else {
-              val touched = spark.createDataFrame(suspects.toSeq.map {
-                case ((b, bkt), dc) => (b, bkt, dc)
-              }).toDF("__band", "__bucket", "__dc")
-              val fCnt = frozenBanded.join(
-                  touched.select("__band", "__bucket"),
-                  Seq("__band", "__bucket"), "left_semi")
-                .groupBy(col("__band"), col("__bucket"))
-                .agg(count(lit(1)).as("__fc"))
-              Some(touched.join(fCnt, Seq("__band", "__bucket"), "left")
-                .filter(col("__dc") + coalesce(col("__fc"), lit(0L)) > maxBucketSize)
-                .select(col("__band"), col("__bucket")))
-            }
-          case None => blD.map { d =>
-            val touched = d.groupBy(col("__band"), col("__bucket"))
-              .agg(count(lit(1)).as("__dc"))
-            val fCnt = frozenBanded.join(touched.select("__band", "__bucket"),
-                Seq("__band", "__bucket"), "left_semi")
-              .groupBy(col("__band"), col("__bucket"))
-              .agg(count(lit(1)).as("__fc"))
-            touched.join(fCnt, Seq("__band", "__bucket"), "left")
-              .filter(col("__dc") + coalesce(col("__fc"), lit(0L)) > maxBucketSize)
-              .select(col("__band"), col("__bucket"))
-          }
+            else Some(spark.createDataFrame(suspects.toSeq.map {
+              case ((b, bkt), dc) => (b, bkt, dc)
+            }).toDF("__band", "__bucket", "__dc"))
+          case None => blD.map(_.groupBy(col("__band"), col("__bucket"))
+            .agg(count(lit(1)).as("__dc")))
+        }
+        val crossing = touched.map { t =>
+          val fCnt = leftBanded.join(t.select("__band", "__bucket"),
+              Seq("__band", "__bucket"), "left_semi")
+            .groupBy(col("__band"), col("__bucket"))
+            .agg(count(lit(1)).as("__fc"))
+          t.join(fCnt, Seq("__band", "__bucket"), "left")
+            .filter(col("__dc") + coalesce(col("__fc"), lit(0L)) > maxBucketSize)
+            .select(col("__band"), col("__bucket"))
         }
         // ONE action, localize's single collect: the full hot set is tiny
         // (pathological buckets only), so both anti-joins then broadcast a
@@ -397,12 +347,12 @@ object MinHashLsh {
         // materialization, and the frame it RETURNS references only the
         // localized survivors and the candidate text scans.
         val hot = scope.localize(
-          crossing.fold(frozenHot)(frozenHot.union(_))
+          crossing.fold(leftHot)(leftHot.union(_))
             .union(hotBucketsOf(br0, maxBucketSize)).distinct())
         (bl0.join(hot, Seq("__band", "__bucket"), "left_anti"),
          br0.join(hot, Seq("__band", "__bucket"), "left_anti"))
       }
-    val sl = deltaSigs.fold(slFrozen)(slFrozen.unionByName(_))
+    val sl = deltaSigs.fold(sl0)(sl0.unionByName(_))
     // the estimate stage's corpus-side sigs, pruned to the candidate ids
     // (delta sigs union behind the pruned frozen read — a candidate id is
     // always in one of the two)
@@ -412,7 +362,7 @@ object MinHashLsh {
       shingleHashes, numHashes, threshold, minBands, bands, slSelect)
   }
 
-  /** The funnel's shared tail: banded collision candidates → signature-
+  /** The core's tail: banded collision candidates → signature-
     * agreement estimate → exact-Jaccard verify with candidate-id pushdown.
     * Scratch frames register with the caller's `scope`; the returned frame
     * references only the localized survivors and the text sources, so the
@@ -424,7 +374,7 @@ object MinHashLsh {
                             idCol: String, shingleHashes: Column,
                             numHashes: Int, threshold: Double,
                             minBands: Int, bands: Int,
-                            slSelect: Option[Seq[Any] => Option[DataFrame]] = None)
+                            slSelect: Option[Seq[Any] => Option[DataFrame]])
       : DataFrame = {
     val estimated = {
       val cand = bl.as("l").join(br.as("r"),
@@ -508,36 +458,45 @@ object MinHashLsh {
     incoming.join(dupIds, Seq(idCol), "left_anti")
   }
 
-  /** [[bipartitePairsPrecomputedLeft]] (same precomputed `rightSigs`
-    * contract: `signatureFrame(right, idCol, shingleHashes, numHashes)`'s
-    * rows, unchecked) with the corpus side's BANDED frame
-    * and hot-bucket set also precomputed (one banding explode + one
-    * hot-bucket shuffle per REFRESH instead of per batch — the per-batch
-    * corpus-side work drops from an O(corpus) groupBy shuffle to cached
-    * probes), plus the admitted-since-freeze delta as separate signatures.
-    * Output is identical to feeding (frozen ∪ delta) signatures through
-    * [[bipartitePairsPrecomputedLeft]] — including hot-bucket semantics:
-    * a bucket that crosses `maxBucketSize` only once the delta lands is
-    * re-detected per batch from the frozen counts of exactly the buckets
-    * the delta touches (spec-pinned, `MinHashLshSpec`).
+  /** [[bipartitePairsHashed]] against a corpus whose signatures, banded
+    * frame and hot-bucket set are PRECOMPUTED ([[signatureFrame]],
+    * [[bandedFrame]], [[hotBucketsOf]]; persistence caller-managed), plus
+    * the admitted-since-freeze `delta` as (`__id`, `__sig`, `__bb`) rows
+    * (the core's doc). A frozen gate pays one banding explode + one
+    * hot-bucket shuffle per REFRESH instead of per batch; a one-shot
+    * caller passes the three as lazy plans. Output is identical to
+    * [[bipartitePairsHashed]] over the (frozen ∪ delta) documents —
+    * including hot-bucket semantics: a bucket that crosses
+    * `maxBucketSize` only once the delta lands is re-detected per batch
+    * from the frozen counts of exactly the buckets the delta touches
+    * (spec-pinned, `FrozenBandedFunnelSpec`).
+    *
+    * `leftDocs` supplies the corpus TEXT for the exact-verify stage and
+    * is evaluated only when estimate survivors exist: at zero candidates
+    * the localized empty relation propagates and the source is never
+    * scanned — the property that lets a frozen-corpus ingest gate run
+    * whole batches without touching corpus storage. `rightSigs` feeds
+    * several funnel branches, so it should be cheap to re-read; nothing
+    * checks it, so it must be `signatureFrame(right, idCol, shingleHashes,
+    * numHashes)` or a frame with exactly its rows, or the funnel pairs the
+    * wrong documents.
     */
   def bipartitePairsFrozenBanded(frozenSigs: DataFrame, frozenBanded: DataFrame,
                                  frozenHot: DataFrame,
-                                 deltaSigs: Option[DataFrame],
+                                 delta: Option[DataFrame],
                                  leftDocs: => DataFrame, right: DataFrame,
                                  rightSigs: DataFrame,
                                  idCol: String, shingleHashes: Column,
                                  numHashes: Int = 64, bands: Int = 16,
                                  threshold: Double = 0.8, minBands: Int = 2,
                                  maxBucketSize: Long = 4096L,
-                                 deltaBanded: Option[DataFrame] = None,
                                  deltaBucketCounts: Option[Map[(Int, Long), Long]] = None,
                                  frozenMaxNonHot: Option[Long] = None,
                                  prunedSigsFor: Option[Seq[Any] => Option[DataFrame]] = None)
       : DataFrame =
     Scope.using { scope =>
-      bipartiteCoreFrozenBanded(scope, frozenSigs, frozenBanded, frozenHot,
-        deltaSigs, deltaBanded, deltaBucketCounts, frozenMaxNonHot, rightSigs,
+      bipartiteCore(scope, frozenSigs, frozenBanded, frozenHot,
+        delta, deltaBucketCounts, frozenMaxNonHot, rightSigs,
         leftDocs, right, idCol, shingleHashes, numHashes, bands, threshold,
         minBands, maxBucketSize, prunedSigsFor)
     }

@@ -298,7 +298,7 @@ object CorpusIngestSink {
     * (`FrozenGateSpec` pins equality and the scan count). Candidate
     * VERIFY text still reads the target — but only for batches with
     * estimate survivors, and only the candidate rows' shingles
-    * ([[graft.functions.MinHashLsh.bipartitePairsPrecomputedLeft]]'s
+    * ([[graft.functions.MinHashLsh.bipartitePairsFrozenBanded]]'s
     * zero-candidate short-circuit never touches storage at all). An
     * EXTERNAL writer changing the target between refreshes is the one
     * thing the frozen STATE cannot see — so the gate records the target's

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, max, min}
@@ -111,9 +112,7 @@ final class ParquetTarget(spark: SparkSession, dir: String) {
     * `keep` snapshot directories.
     */
   def expireSnapshots(keep: Int = 2): Seq[Int] = {
-    val cur = currentVersion.getOrElse(return Nil)
-    val versions = listVersions().filter(_ <= cur).sorted.reverse
-    val expire = versions.drop(math.max(1, keep))
+    val expire = versions.reverse.drop(math.max(1, keep))
     expire.foreach(v => deleteRecursively(versionDir(v)))
     expire
   }
@@ -191,9 +190,8 @@ final class ParquetTarget(spark: SparkSession, dir: String) {
     val stats = row.schema.fieldNames.zipWithIndex.map { case (n, i) =>
       (if (n == "__rows") "rows" else n) -> Option(row.get(i)).map(_.toString).getOrElse("null")
     }.toMap
-    val json = stats.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${k.replace("\"", "")}": "${v.replace("\"", "")}"""" }
-      .mkString("{", ", ", "}")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .writeValueAsString(new java.util.TreeMap[String, String](stats.asJava))
     Files.createDirectories(base)
     Files.write(base.resolve("_STATS.json"), json.getBytes(StandardCharsets.UTF_8))
     stats
@@ -209,8 +207,7 @@ final class ParquetTarget(spark: SparkSession, dir: String) {
     if (!Files.exists(base)) Nil
     else {
       val s = Files.list(base)
-      try s.iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-        .asScala_toSeq
+      try s.iterator().asScala
         .map(_.getFileName.toString)
         // strict digit match, not startsWith, and only names that fit an
         // Int: an operator-made 'v_3.bak' or a copy-tool leftover such as
@@ -218,16 +215,9 @@ final class ParquetTarget(spark: SparkSession, dir: String) {
         // next maintenance pass (and kill the stream with it)
         .filter(_.matches("v_\\d+"))
         .flatMap(_.stripPrefix("v_").toIntOption)
+        .toSeq
       finally s.close()
     }
-
-  private implicit class IterOps(it: java.util.Iterator[java.nio.file.Path]) {
-    def asScala_toSeq: Seq[java.nio.file.Path] = {
-      val b = Seq.newBuilder[java.nio.file.Path]
-      while (it.hasNext) b += it.next()
-      b.result()
-    }
-  }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit =
     if (Files.exists(p)) {

@@ -5,11 +5,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The frozen-banded funnel ([[MinHashLsh.bipartitePairsFrozenBanded]])
-  * must emit EXACTLY the pairs of the per-batch path fed (frozen ∪ delta)
-  * signatures — including hot-bucket semantics, whose only subtle case is
-  * a bucket that crosses `maxBucketSize` because of the DELTA: the frozen
-  * hot set alone would miss it, so the path re-counts exactly the buckets
-  * the delta touches against the cached frozen banding.
+  * must emit EXACTLY the pairs of [[MinHashLsh.bipartitePairsHashed]] over
+  * the (frozen ∪ delta) documents, which counts the whole hot set afresh —
+  * including hot-bucket semantics, whose only subtle case is a bucket that
+  * crosses `maxBucketSize` because of the DELTA: the frozen hot set alone
+  * would miss it, so the path re-counts exactly the buckets the delta
+  * touches against the cached frozen banding.
   */
 class FrozenBandedFunnelSpec extends SparkSpec {
   import spark.implicits._
@@ -37,6 +38,12 @@ class FrozenBandedFunnelSpec extends SparkSpec {
   private val sh = TextFunctions.shingleHashes(col("text"), 5)
   private def sigsOf(df: DataFrame): DataFrame =
     MinHashLsh.signatureFrame(df, "doc_id", sh, 64)
+  // the funnel's delta argument: signatures plus their band buckets
+  private def deltaOf(df: DataFrame): DataFrame =
+    sigsOf(df).withColumn("__bb", MinHashLsh.bandBuckets(col("__sig"), 16, 4))
+  private def perBatch(corpusDocs: DataFrame, cap: Long): Set[(Long, Long)] =
+    pairsOf(MinHashLsh.bipartitePairsHashed(corpusDocs, incoming, "doc_id", sh,
+      64, 16, 0.8, maxBucketSize = cap))
 
   private def pairsOf(df: DataFrame): Set[(Long, Long)] =
     df.select("id_left", "id_right").as[(Long, Long)].collect().toSet
@@ -51,11 +58,9 @@ class FrozenBandedFunnelSpec extends SparkSpec {
       val hot = graft.core.Checkpoints.localize(
         MinHashLsh.hotBucketsOf(banded, cap))
       val corpusDocs = delta.fold(frozenDocs)(frozenDocs.unionByName(_))
-      val legacy = pairsOf(MinHashLsh.bipartitePairsPrecomputedLeft(
-        delta.fold(fSigs)(d => fSigs.unionByName(sigsOf(d))), corpusDocs,
-        incoming, sigsOf(incoming), "doc_id", sh, 64, 16, 0.8, maxBucketSize = cap))
+      val legacy = perBatch(corpusDocs, cap)
       val frozenPath = pairsOf(MinHashLsh.bipartitePairsFrozenBanded(
-        fSigs, banded, hot, delta.map(sigsOf), corpusDocs, incoming,
+        fSigs, banded, hot, delta.map(deltaOf), corpusDocs, incoming,
         sigsOf(incoming), "doc_id", sh, 64, 16, 0.8, maxBucketSize = cap))
       (legacy, frozenPath)
     } finally {
@@ -104,25 +109,12 @@ class FrozenBandedFunnelSpec extends SparkSpec {
     val banded = MinHashLsh.bandedFrame(fSigs, 16, 64)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val dSigs = sigsOf(deltaDocs)
-      // driver-build the delta banding exactly as the gate's fold does
-      val dRows = dSigs.select(col("__id"),
-        MinHashLsh.bandBuckets(col("__sig"), 16, 4).as("__bb")).collect()
-      val bandedRows = dRows.flatMap { r =>
-        val bb = r.getSeq[Long](1)
-        bb.indices.map(b => org.apache.spark.sql.Row(r.getLong(0), b, bb(b)))
-      }
-      val dBanded = spark.createDataFrame(
-        java.util.Arrays.asList(bandedRows: _*),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("__band",
-            org.apache.spark.sql.types.IntegerType, nullable = false),
-          org.apache.spark.sql.types.StructField("__bucket",
-            org.apache.spark.sql.types.LongType, nullable = false))))
-      val dCounts = bandedRows.groupBy(r => (r.getInt(1), r.getLong(2)))
-        .map { case (k, rs) => k -> rs.length.toLong }
+      // the delta's per-bucket occupancy, counted driver-side from its
+      // collected band buckets exactly as the gate's fold does
+      val dDelta = deltaOf(deltaDocs)
+      val dCounts = dDelta.select("__bb").as[Seq[Long]].collect().toSeq
+        .flatMap(_.zipWithIndex.map { case (bkt, b) => (b, bkt) })
+        .groupBy(identity).map { case (k, vs) => k -> vs.size.toLong }
       val corpusDocs = frozenDocs.unionByName(deltaDocs)
       def run(cap: Long): (Set[(Long, Long)], Set[(Long, Long)]) = {
         val hot = graft.core.Checkpoints.localize(
@@ -133,13 +125,11 @@ class FrozenBandedFunnelSpec extends SparkSpec {
             case r if r.isNullAt(0) => 0L
             case r => r.getLong(0)
           }
-        val legacy = pairsOf(MinHashLsh.bipartitePairsPrecomputedLeft(
-          fSigs.unionByName(dSigs), corpusDocs, incoming, sigsOf(incoming),
-          "doc_id", sh, 64, 16, 0.8, maxBucketSize = cap))
+        val legacy = perBatch(corpusDocs, cap)
         val driverPath = pairsOf(MinHashLsh.bipartitePairsFrozenBanded(
-          fSigs, banded, hot, Some(dSigs), corpusDocs, incoming,
+          fSigs, banded, hot, Some(dDelta), corpusDocs, incoming,
           sigsOf(incoming), "doc_id",
-          sh, 64, 16, 0.8, maxBucketSize = cap, deltaBanded = Some(dBanded),
+          sh, 64, 16, 0.8, maxBucketSize = cap,
           deltaBucketCounts = Some(dCounts),
           frozenMaxNonHot = Some(maxNonHot)))
         (legacy, driverPath)

@@ -96,7 +96,8 @@ class FrozenSideFilesSpec extends SparkSpec {
       sideFileDir = Some(dir), sideFileMinRows = 0L)
     try {
       val delta = docs((200L until 205L).map(_ -> boilerText): _*)
-      val dSigs = MinHashLsh.signatureFrame(delta, "doc_id", sh, 64)
+      val dDelta = MinHashLsh.signatureFrame(delta, "doc_id", sh, 64)
+        .withColumn("__bb", MinHashLsh.bandBuckets(col("__sig"), 16, 4))
       val corpusAll = corpus.unionByName(delta)
       val incoming = docs(1L -> (boilerText + " appended"),
         2L -> (uniqueText + " appended"), 3L -> freshText)
@@ -106,12 +107,12 @@ class FrozenSideFilesSpec extends SparkSpec {
       def pairsOf(df: DataFrame): Set[(Long, Long)] =
         df.select("id_left", "id_right").as[(Long, Long)].collect().toSet
       val cached = pairsOf(MinHashLsh.bipartitePairsFrozenBanded(
-        frozen.sigs.get, bnd, hot, Some(dSigs), corpusAll, incoming,
+        frozen.sigs.get, bnd, hot, Some(dDelta), corpusAll, incoming,
         MinHashLsh.signatureFrame(incoming, "doc_id", sh, 64),
         "doc_id", sh, 64, 16, 0.8, maxBucketSize = 10L,
         frozenMaxNonHot = frozen.bandedMaxNonHot))
       val pruned = pairsOf(MinHashLsh.bipartitePairsFrozenBanded(
-        frozen.sigs.get, bnd, hot, Some(dSigs), corpusAll, incoming,
+        frozen.sigs.get, bnd, hot, Some(dDelta), corpusAll, incoming,
         MinHashLsh.signatureFrame(incoming, "doc_id", sh, 64),
         "doc_id", sh, 64, 16, 0.8, maxBucketSize = 10L,
         frozenMaxNonHot = frozen.bandedMaxNonHot,

@@ -116,6 +116,33 @@ class MinHashSpec extends SparkSpec {
     assert(pairs == Set((0L, 10L)), s"got $pairs")
   }
 
+  test("dedupAgainst runs within its job budget") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.ListenerBridge
+    val existing = docs.filter($"doc_id" =!= 1L)
+    val incoming = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog again and again!"), // near-dup of 0
+      (11L, "a genuinely new document with fresh subject matter and words"))
+      .toDF("doc_id", "text")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBridge.waitUntilListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val kept = try {
+      val k = MinHashLsh.dedupAgainst(existing, incoming, "doc_id",
+        TextFunctions.shingleHashes($"text", 5), numHashes = 32, bands = 8,
+        threshold = 0.8).select("doc_id").as[Long].collect().toSet
+      ListenerBridge.waitUntilListenerBusEmpty(spark)
+      k
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(kept == Set(11L), s"fixture drifted: $kept")
+    // an upper bound: 16 jobs now, 25 when the one-shot funnel built its
+    // hot-bucket set inline and each of the two anti-joins recomputed it
+    assert(jobs.get <= 16, s"dedupAgainst ran ${jobs.get} jobs, over its budget of 16")
+  }
+
   test("verify-stage candidate fetch pushes the id IN-filter into the parquet scan") {
     // the semi-join fallback restricts the rows shingled but still scans
     // the whole left source; with a small survivor set the candidate ids
@@ -132,21 +159,16 @@ class MinHashSpec extends SparkSpec {
       (10L, "the quick brown fox jumps over the lazy dog again and again!"))
       .toDF("doc_id", "text")
     val sh = TextFunctions.shingleHashes($"text", 5)
-    val sigs = MinHashLsh.signatureFrame(corpus, "doc_id", sh, 32)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val pairs = MinHashLsh.bipartitePairsPrecomputedLeft(sigs, corpus,
-        incoming, MinHashLsh.signatureFrame(incoming, "doc_id", sh, 32),
-        "doc_id", sh, numHashes = 32, bands = 8, threshold = 0.8)
-      assert(pairs.select($"id_left", $"id_right").as[(Long, Long)]
-        .collect().toSet == Set((0L, 10L)))
-      val plan = pairs.queryExecution.executedPlan.toString
-      // one candidate id folds isin → EqualTo; more stay an In — either
-      // way the predicate must appear under PushedFilters on the scan
-      assert(plan.contains("PushedFilters: [") &&
-        (plan.contains("In(doc_id") || plan.contains("EqualTo(doc_id")),
-        s"candidate ids must reach the scan as a pushed id filter:\n$plan")
-    } finally sigs.unpersist(false)
+    val pairs = MinHashLsh.bipartitePairsHashed(corpus, incoming, "doc_id", sh,
+      numHashes = 32, bands = 8, threshold = 0.8)
+    assert(pairs.select($"id_left", $"id_right").as[(Long, Long)]
+      .collect().toSet == Set((0L, 10L)))
+    val plan = pairs.queryExecution.executedPlan.toString
+    // one candidate id folds isin → EqualTo; more stay an In — either
+    // way the predicate must appear under PushedFilters on the scan
+    assert(plan.contains("PushedFilters: [") &&
+      (plan.contains("In(doc_id") || plan.contains("EqualTo(doc_id")),
+      s"candidate ids must reach the scan as a pushed id filter:\n$plan")
   }
 
   test("bipartite funnel leaves zero block-store state after consumption") {

@@ -62,12 +62,18 @@ class MaintenanceSpec extends SparkSpec {
   test("analyze computes rows, null counts, min/max and persists sidecar") {
     val dir = java.nio.file.Files.createTempDirectory("ana").toString
     val t = new ParquetTarget(spark, dir)
-    t.commit(Seq((1L, Some("a")), (2L, None), (3L, Some("c"))).toDF("id", "v"))
+    // `s` holds a quote, a backslash and a newline: the sidecar must
+    // still be valid JSON that reads back to exactly the returned map
+    t.commit(Seq((1L, Some("a"), "say \"hi\""), (2L, None, "C:\\new\\dir"),
+      (3L, Some("c"), "two\nlines")).toDF("id", "v", "s"))
     val stats = t.analyze()
     assert(stats("rows") == "3")
     assert(stats("nulls:v") == "1")
     assert(stats("min:id") == "1" && stats("max:id") == "3")
-    assert(t.readStats().exists(_.contains("\"rows\": \"3\"")))
+    assert(stats("min:s") == "C:\\new\\dir" && stats("max:s") == "two\nlines")
+    val persisted = graft.core.MiniJson.parse(t.readStats().get).asObj
+      .map { case (k, v) => k -> v.asStr }
+    assert(persisted == stats)
   }
 
   test("adaptive trigger sizing: row estimate, cap, partition clamp") {
