@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.core.{Checkpoints, Scope}
 
@@ -464,14 +464,16 @@ object CorpusPipeline {
     * bits outlives the freeze. The freeze's [[Scope]] owns the slim frame,
     * the broadcast and the banded cache; `release()` closes that scope.
     *
-    * This is the freeze-and-refresh device for streaming ingest: freeze
+    * This is the freeze-and-fold device for streaming ingest: freeze
     * once, gate many batches against (frozen + admitted-delta) state, and
-    * re-freeze on a cadence — corpus scans per K batches drop from O(K) to
-    * ⌈K/N⌉ ([[graft.streaming.CorpusIngestSink.FrozenGate]]).
+    * on a cadence fold the delta into new frozen state ([[foldDelta]]) —
+    * the corpus is read once per gate, not once per batch
+    * ([[graft.streaming.CorpusIngestSink.FrozenGate]]).
     */
   final class FrozenCorpus private[functions] (
       scope: Scope,
-      slim: DataFrame,
+      /** (`__id`, `__ck`, `__sig`[, `__emb`]), localCheckpointed */
+      private[functions] val slim: DataFrame,
       /** corpus rows at freeze time */
       val rows: Long,
       /** the Bloom filter over the frozen exact-dedup keys, serialized
@@ -481,13 +483,14 @@ object CorpusPipeline {
         * unpersisted on [[release]]
         */
       val bloomBcast: org.apache.spark.broadcast.Broadcast[Array[Byte]],
-      withSignatures: Boolean,
-      withEmbeddings: Boolean,
+      private[functions] val withSignatures: Boolean,
+      private[functions] val withEmbeddings: Boolean,
       /** banded (__id, __band, __bucket) frame of the frozen signatures,
         * persisted — present when frozen `withBanded`: the corpus-side
-        * banding explode + hot-bucket shuffle happen once per refresh,
-        * and every gated batch reuses them (cached probes instead of an
-        * O(corpus) shuffle per micro-batch)
+        * banding explode + hot-bucket shuffle happen once per freeze (a
+        * fold re-bands the slim frame with no shuffle), and every gated
+        * batch reuses them (cached probes instead of an O(corpus) shuffle
+        * per micro-batch)
         */
       private[functions] val bandedSlim: Option[DataFrame] = None,
       /** hot (band, bucket) pairs of the frozen banding, driver-localized */
@@ -495,7 +498,9 @@ object CorpusPipeline {
       /** max occupancy among the frozen side's NON-hot buckets — lets the
         * gate prove a delta cannot push any bucket over the cap
         * (maxDeltaOccupancy + this ≤ cap) and skip the per-batch count
-        * probe entirely; None when frozen without banding
+        * probe entirely; None when frozen without banding. Exact after a
+        * freeze; after a [[foldDelta]] an upper bound, which only makes
+        * the gate probe more buckets, never admit differently
         */
       val bandedMaxNonHot: Option[Long] = None,
       /** directory holding the freeze-time SIDE FILES (`keys/` sorted by
@@ -531,14 +536,15 @@ object CorpusPipeline {
       * lifetime: a fresh `read.parquet` per probe re-lists the directory
       * tree and re-reads a footer for schema EVERY batch — per-batch
       * driver work that grows with the prefix-partition count. The cached
-      * relation's file index is built once per refresh; per-batch probe
-      * filters still prune partitions/row groups at query planning.
+      * relation's file index is built once per freeze or fold, over a
+      * given schema ([[sideSchema]]); per-batch probe filters still prune
+      * partitions/row groups at query planning.
       */
     @transient private lazy val sideReadCache =
       scala.collection.mutable.Map.empty[String, DataFrame]
     private def sideRead(sub: String): DataFrame = sideReadCache.synchronized {
-      sideReadCache.getOrElseUpdate(sub,
-        slim.sparkSession.read.parquet(sideDir.get + "/" + sub))
+      sideReadCache.getOrElseUpdate(sub, slim.sparkSession.read
+        .schema(sideSchema(slim, sub)).parquet(sideDir.get + "/" + sub))
     }
     // How the value-level In reaches parquet (verified against Spark
     // 4.1.2 bytecode, ParquetFilters — the r17 verdict's premise is
@@ -617,9 +623,9 @@ object CorpusPipeline {
     *
     * Keys, signatures, the Bloom fpp, the banding and the hot-bucket cap
     * all come from [[GateGeometry]]. `withBanded` also persists the banded
-    * signature frame and its hot set. `sideFileDir` writes the `keys/` and `sigs/` side files once the
-    * corpus holds at least `sideFileMinRows` rows; `keys/` is split into
-    * P = clamp(rows / 500k, 8, 1024) `__pfx` directories.
+    * signature frame and its hot set. `sideFileDir` writes the `keys/` and
+    * `sigs/` side files once the corpus holds at least `sideFileMinRows`
+    * rows ([[writeFullSideFiles]]).
     */
   def freezeCorpus(standingCorpus: DataFrame, cfg: Config = Config(),
                    withSignatures: Boolean = true,
@@ -663,24 +669,20 @@ object CorpusPipeline {
       val (slim, rows) = scope.checkpointCounted(embeddings.fold(base)(e => base.join(
         e.select(col(cfg.idCol).as("__id"), col(cfg.embCol).as("__emb")),
         Seq("__id"), "left")))
-      val bloomBc = scope.broadcast(slim.sparkSession, BloomDedup.filterBytes(
-        if (rows == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, BloomFpp)
-        else BloomDedup.buildLongNonEmpty(slim, col("__ck"), rows, BloomFpp)))
+      val bloomBc = broadcastBloom(scope, slim, rows)
       val (bnd, hot, maxNonHot) =
         if (!withBanded) (None, None, None)
         else {
-          // the refresh-amortized banding: explode once, persist; the hot
+          // the freeze-amortized banding: explode once, persist; the hot
           // set's groupBy shuffle (the per-batch cost center the frozen
-          // gate removes) runs here, once per refresh, and materializes
+          // gate removes) runs here, once per freeze, and materializes
           // the banded cache as a side effect.
           // persist stays correct here: banded's plan reads slim's
           // CHECKPOINT (a LogicalRDD, no file-source path), so
           // refreshByPath cannot match this cache entry, and the columnar
           // cache format keeps the 16×-exploded frame ~3× smaller than
           // row-format checkpoint blocks would be
-          val banded = scope.persist(MinHashLsh.bandedFrame(
-            slim.select(col("__id"), col("__sig")).filter(col("__sig").isNotNull),
-            Bands, NumHashes))
+          val banded = scope.persist(bandedOf(slim))
           // the occupancy feeds two actions, then dies with a local scope
           // (the freeze's would hold it as long as the banded cache)
           Scope.using { tmp =>
@@ -697,64 +699,191 @@ object CorpusPipeline {
             (Some(banded), Some(hotLocal), Some(nonHotMax))
           }
         }
-      // SIDE FILES: sorted, small-row-group copies of the frozen keys and
-      // signatures, written once per refresh so every gated batch can read
-      // them PRUNED to its probe set. Written only above the row
-      // threshold: below it the cached frames are faster than any fixed
-      // job overhead (the same crossover argument as the gate itself).
-      // Cost: two write jobs off the already-cached frame, amortized over
-      // the refresh window.
-      //
-      // TWO pruning stages (r18, re-derived from Spark 4.1.2 bytecode —
-      // see the [[FrozenCorpus.pruned]] note):
-      //   1. keys carry a `__pfx = pmod(value, P)` DIRECTORY
-      //      partition — partition pruning evaluates the probe In set
-      //      exactly at listing time, any size, no statistics involved,
-      //      bounding even the LISTING and footer reads by the probes'
-      //      pfx classes;
-      //   2. within a directory, per-file sort gives narrow row-group
-      //      min/max ranges, and any probe set larger than the default
-      //      inFilterThreshold (10) reaches parquet as the NATIVE
-      //      set-based In predicate — exact row-group and dictionary
-      //      pruning at any probe size, no conf changes needed (and none
-      //      wanted: raising the threshold forces the OR-chain path,
-      //      which stack-overflows around 2k values).
-      // Together: a probe touches its pfx directory, and inside it only
-      // the row groups whose range holds its value — per-batch side IO
-      // ∝ probes × rowGroupRows, independent of corpus size.
-      val (side, pfxParts) =
-        if (sideFileDir.isEmpty || rows == 0L || rows < sideFileMinRows) (None, 0)
-        else {
-          val dir = sideFileDir.get
-          val blockOpt = "parquet.block.size"
-          val blockSz = (1L << 20).toString // ~50k narrow rows per group
-          // P scales with the corpus so directories stay coarse enough
-          // to list cheaply but fine enough that a steady batch's probe
-          // set touches a strict subset of them
-          val p = math.max(8L, math.min(1024L, rows / 500000L)).toInt
-          // HASH repartition on __pfx + sort-within-partitions, NOT
-          // repartitionByRange: range partitioning's boundary sampling
-          // was a measured super-linear term in the freeze; each pfx
-          // class lands whole in one task, so every directory gets ~one
-          // file, internally sorted for stage-2 row-group pruning
-          slim.select(col("__ck"), pmod(col("__ck"), lit(p.toLong)).cast("int").as("__pfx"))
-            .repartition(p, col("__pfx"))
-            .sortWithinPartitions(col("__pfx"), col("__ck"))
-            .write.option(blockOpt, blockSz).partitionBy("__pfx")
-            .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir + "/keys")
-          // sigs stay UNPARTITIONED: ids are caller-typed (strings
-          // included, no driver-replicable pfx), and candidate ids are
-          // append-ordered so the id-sorted groups already prune tightly
-          if (withSignatures)
-            slim.select(col("__id"), col("__sig")).filter(col("__sig").isNotNull)
-              .repartition(math.max(4L, math.min(256L, rows / 4000000L)).toInt, col("__id"))
-              .sortWithinPartitions(col("__id"))
-              .write.option(blockOpt, blockSz)
-              .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir + "/sigs")
-          (Some(dir), p)
-        }
+      val (side, pfxParts) = writeFullSideFiles(slim, rows, sideFileDir,
+        sideFileMinRows, withSignatures)
       new FrozenCorpus(scope, slim, rows, bloomBc, withSignatures,
         embeddings.isDefined, bnd, hot, maxNonHot, side, pfxParts)
+    }
+  }
+
+  /** The Bloom filter over a slim frame's `rows` keys, broadcast under
+    * `scope`. An empty frame gets an explicitly empty filter: Spark's
+    * `stat.bloomFilter` NPEs on zero rows, and every probe of the empty
+    * filter correctly answers "proven new".
+    */
+  private def broadcastBloom(scope: Scope, slim: DataFrame, rows: Long)
+      : org.apache.spark.broadcast.Broadcast[Array[Byte]] =
+    scope.broadcast(slim.sparkSession, BloomDedup.filterBytes(
+      if (rows == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, GateGeometry.BloomFpp)
+      else BloomDedup.buildLongNonEmpty(slim, col("__ck"), rows, GateGeometry.BloomFpp)))
+
+  /** The banded (`__id`, `__band`, `__bucket`) rows of a slim frame's
+    * signatures, under [[GateGeometry]].
+    */
+  private def bandedOf(slim: DataFrame): DataFrame = MinHashLsh.bandedFrame(
+    slim.select(col("__id"), col("__sig")).filter(col("__sig").isNotNull),
+    GateGeometry.Bands, GateGeometry.NumHashes)
+
+  /** The side-file schemas, given so a side read infers nothing: `keys/`
+    * holds `__ck` under its `__pfx` directories, `sigs/` the slim frame's
+    * (`__id`, `__sig`). Parquet reads every column back as nullable.
+    */
+  private def sideSchema(slim: DataFrame, sub: String)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    val fields =
+      if (sub == "keys") Seq(StructField("__ck", LongType), StructField("__pfx", IntegerType))
+      else slim.select(col("__id"), col("__sig")).schema.fields.toSeq
+    StructType(fields.map(_.copy(nullable = true)))
+  }
+
+  /** Write a slim frame's keys and signatures as SIDE FILES under `dir`:
+    * `keys/` hash-split into `pfx` `__pfx` directories, each sorted by
+    * `__ck`, and the non-null signatures as `sigFiles` id-sorted files in
+    * `sigs/`. A freeze overwrites both with its full copy; a fold appends
+    * its delta beside them under the same `pfx`.
+    *
+    * TWO pruning stages (r18, re-derived from Spark 4.1.2 bytecode — see
+    * the [[FrozenCorpus.pruned]] note):
+    *   1. keys carry a `__pfx = pmod(value, P)` DIRECTORY partition —
+    *      partition pruning evaluates the probe In set exactly at listing
+    *      time, any size, no statistics involved, bounding even the
+    *      LISTING and footer reads by the probes' pfx classes;
+    *   2. within a directory, per-file sort gives narrow row-group
+    *      min/max ranges, and any probe set larger than the default
+    *      inFilterThreshold (10) reaches parquet as the NATIVE set-based
+    *      In predicate — exact row-group and dictionary pruning at any
+    *      probe size, no conf changes needed (and none wanted: raising
+    *      the threshold forces the OR-chain path, which stack-overflows
+    *      around 2k values).
+    * Together: a probe touches its pfx directory, and inside it only the
+    * row groups whose range holds its value — per-batch side IO ∝ probes
+    * × rowGroupRows, independent of corpus size.
+    */
+  private def writeSideFiles(slim: DataFrame, dir: String, pfx: Int, sigFiles: Int,
+                             withSignatures: Boolean, append: Boolean): Unit = {
+    import org.apache.spark.sql.SaveMode
+    val blockOpt = "parquet.block.size"
+    val blockSz = (1L << 20).toString // ~50k narrow rows per group
+    // a full copy HASH-repartitions on the key + sorts within partitions,
+    // NOT repartitionByRange: range partitioning's boundary sampling was a
+    // measured super-linear term in the freeze; each pfx class lands whole
+    // in one task, so every directory gets ~one file, internally sorted
+    // for stage-2 row-group pruning. A fold's delta is small: one task
+    // writes it sorted, one file per directory, without a shuffle
+    def spread(df: DataFrame, n: Int, key: Column) =
+      if (append) df.coalesce(1) else df.repartition(n, key)
+    val mode = if (append) SaveMode.Append else SaveMode.Overwrite
+    val pfxCol = pmod(col("__ck"), lit(pfx.toLong)).cast("int").as("__pfx")
+    spread(slim.select(col("__ck"), pfxCol), pfx, col("__pfx"))
+      .sortWithinPartitions(col("__pfx"), col("__ck"))
+      .write.option(blockOpt, blockSz).partitionBy("__pfx")
+      .mode(mode).parquet(dir + "/keys")
+    // sigs stay UNPARTITIONED: ids are caller-typed (strings included, no
+    // driver-replicable pfx), and candidate ids are append-ordered so the
+    // id-sorted groups already prune tightly
+    if (withSignatures)
+      spread(slim.select(col("__id"), col("__sig")).filter(col("__sig").isNotNull),
+          sigFiles, col("__id"))
+        .sortWithinPartitions(col("__id"))
+        .write.option(blockOpt, blockSz)
+        .mode(mode).parquet(dir + "/sigs")
+  }
+
+  /** A freeze's side files: written in full ([[writeSideFiles]]) when
+    * `dir` is set and the slim frame's `rows` reach `minRows` — below it
+    * the cached frames are faster than any fixed job overhead (the same
+    * crossover argument as the gate itself). Returns the directory and its
+    * prefix-partition count P = clamp(rows / 500k, 8, 1024), which scales
+    * with the corpus so directories stay coarse enough to list cheaply but
+    * fine enough that a steady batch's probe set touches a strict subset
+    * of them; (None, 0) when nothing was written.
+    */
+  private def writeFullSideFiles(slim: DataFrame, rows: Long, dir: Option[String],
+                                 minRows: Long, withSignatures: Boolean): (Option[String], Int) =
+    if (dir.isEmpty || rows == 0L || rows < minRows) (None, 0)
+    else {
+      val p = math.max(8L, math.min(1024L, rows / 500000L)).toInt
+      writeSideFiles(slim, dir.get, p, math.max(4L, math.min(256L, rows / 4000000L)).toInt,
+        withSignatures, append = false)
+      (dir, p)
+    }
+
+  /** Fold an admitted `delta` ([[deltaProjection]] rows) into `frozen`:
+    * the state [[freezeCorpus]] would build over the frozen corpus plus
+    * the delta, made without reading, hashing or shuffling the corpus.
+    * `frozen` stays open; its owner releases it once this returns.
+    *   - slim: one counted localCheckpoint of frozen slim ∪ the delta's
+    *     (`__id`, `__ck`, `__sig`[, `__emb`]);
+    *   - Bloom filter: rebuilt from the new slim's keys at
+    *     [[GateGeometry.BloomFpp]], one job over block-resident longs, so
+    *     its sizing stays exact;
+    *   - banded frame: the rows of banded ∪ posexplode(delta `__bb`),
+    *     banded again from the new slim and persisted, so its plan stays
+    *     one checkpoint deep over any number of folds; its first read fills
+    *     it, the refresh batch's own funnel join;
+    *   - hot set: the frozen hot set plus the delta's buckets whose frozen
+    *     + delta count passes [[GateGeometry.MaxBucketSize]] — the funnel's
+    *     crossing probe ([[MinHashLsh.suspectBuckets]]), which counts only
+    *     suspect buckets and, with `deltaBucketCounts` known, usually none;
+    *   - max non-hot occupancy: an upper bound from the same counts, never
+    *     below the truth — a bucket that went hot may have held it, and an
+    *     uncounted bucket is priced at the frozen max plus its delta count;
+    *   - side files: the delta's keys appended under the frozen `__pfx`
+    *     layout, its signatures as one more id-sorted file; a state
+    *     without side files gets them in full ([[writeFullSideFiles]]).
+    * A failure releases everything this call made; side files may then
+    * hold a partial append, so the caller must drop `frozen` too (the
+    * next full freeze overwrites them).
+    */
+  private[graft] def foldDelta(frozen: FrozenCorpus, delta: DataFrame,
+                               deltaBucketCounts: Option[Map[(Int, Long), Long]],
+                               sideFileDir: Option[String],
+                               sideFileMinRows: Long): FrozenCorpus = {
+    import GateGeometry._
+    val spark = delta.sparkSession
+    Scope.closeOnFailure { scope =>
+      val (slim, rows) = scope.checkpointCounted(frozen.slim.unionByName(
+        delta.select(frozen.slim.columns.toSeq.map(col): _*)))
+      val bloomBc = broadcastBloom(scope, slim, rows)
+      val (bnd, hot, maxNonHot) = (frozen.banded, frozen.bandedMaxNonHot) match {
+        case (Some((oldBanded, oldHot)), Some(m)) =>
+          // the funnel's crossing probe, run once for the whole window:
+          // only suspect buckets are counted, against the filled frozen
+          // banding — usually none, and then no job runs
+          val suspects = MinHashLsh.suspectBuckets(spark,
+            Some(delta.select(posexplode(col("__bb")).as(Seq("__band", "__bucket")))),
+            deltaBucketCounts, Some(m), MaxBucketSize)
+          val (grown, countedMax) = suspects.fold((Seq.empty[Row], 0L)) { t =>
+            val n = col("__n")
+            val r = MinHashLsh.stackedOccupancy(oldBanded, t).agg(
+              collect_list(when(n > MaxBucketSize, struct(col("__band"), col("__bucket")))),
+              coalesce(max(when(n <= MaxBucketSize, n)), lit(0L))).head()
+            (r.getSeq[Row](0), r.getLong(1))
+          }
+          // an uncounted bucket holds at most m frozen rows plus its delta
+          // count, which stays within the cap or it would be a suspect
+          val uncountedMax = deltaBucketCounts.iterator.flatMap(_.valuesIterator)
+            .map(_ + m).filter(_ <= MaxBucketSize).maxOption.getOrElse(0L)
+          val h =
+            if (grown.isEmpty && oldHot.isLocal) oldHot
+            else scope.localize(oldHot.unionByName(spark.createDataFrame(
+              java.util.Arrays.asList(grown: _*), oldHot.schema)).distinct())
+          // banded again from the new slim; its first read fills the cache
+          (Some(scope.persist(bandedOf(slim))), Some(h),
+            Some(Seq(m, uncountedMax, countedMax).max))
+        case _ => (None, None, None)
+      }
+      val (side, pfxParts) = frozen.sideDir match {
+        case Some(dir) =>
+          writeSideFiles(delta, dir, frozen.sidePfx, 1, frozen.withSignatures,
+            append = true)
+          (Some(dir), frozen.sidePfx)
+        case None => writeFullSideFiles(slim, rows, sideFileDir, sideFileMinRows,
+          frozen.withSignatures)
+      }
+      new FrozenCorpus(scope, slim, rows, bloomBc, frozen.withSignatures,
+        frozen.withEmbeddings, bnd, hot, maxNonHot, side, pfxParts)
     }
   }
 

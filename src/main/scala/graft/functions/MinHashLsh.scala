@@ -267,10 +267,51 @@ object MinHashLsh {
       .filter(col("__bsz") > cap)
       .select(col("__band"), col("__bucket"))
 
+  /** The delta's (`__band`, `__bucket`, `__dc`) buckets that could cross
+    * `cap` once the delta lands on a left side whose densest non-hot
+    * bucket holds `leftMaxNonHot`. With the delta's occupancy known
+    * (driver-resident `deltaBucketCounts`), only the SUSPECTS — buckets
+    * whose delta count stacked on that max passes the cap (per-bucket left
+    * counts are ≤ it by definition; already-hot buckets stay hot
+    * regardless) — and None when there are none, the steady state.
+    * Without the counts, every bucket `deltaBanded` touches, counted on
+    * the executors.
+    */
+  private[functions] def suspectBuckets(spark: org.apache.spark.sql.SparkSession,
+      deltaBanded: Option[DataFrame],
+      deltaBucketCounts: Option[Map[(Int, Long), Long]],
+      leftMaxNonHot: Option[Long], cap: Long): Option[DataFrame] =
+    deltaBucketCounts match {
+      case Some(counts) =>
+        val suspects = leftMaxNonHot.fold(counts)(m =>
+          counts.filter { case (_, dc) => dc + m > cap })
+        if (suspects.isEmpty) None
+        else Some(spark.createDataFrame(suspects.toSeq.map {
+          case ((b, bkt), dc) => (b, bkt, dc)
+        }).toDF("__band", "__bucket", "__dc"))
+      case None => deltaBanded.map(_.groupBy(col("__band"), col("__bucket"))
+        .agg(count(lit(1)).as("__dc")))
+    }
+
+  /** Each suspect bucket's occupancy over left ∪ delta, `__n` = its delta
+    * count `__dc` + its count in `leftBanded`. The left side is counted by
+    * a semi-join to the suspects' rows and a groupBy of only them, so the
+    * shuffle is ∝ their occupancy, not the banded frame.
+    */
+  private[functions] def stackedOccupancy(leftBanded: DataFrame, suspects: DataFrame): DataFrame = {
+    val left = leftBanded.join(suspects.select(col("__band"), col("__bucket")),
+        Seq("__band", "__bucket"), "left_semi")
+      .groupBy(col("__band"), col("__bucket"))
+      .agg(count(lit(1)).as("__fc"))
+    suspects.join(left, Seq("__band", "__bucket"), "left")
+      .select(col("__band"), col("__bucket"),
+        (col("__dc") + coalesce(col("__fc"), lit(0L))).as("__n"))
+  }
+
   /** The one bipartite core. The LEFT side arrives as its signatures, its
     * banded frame and that frame's hot-bucket set — precomputed and cached
     * by the frozen gate (one banding explode + hot-bucket shuffle per
-    * refresh), or lazy plans for a one-shot call — plus an optional
+    * freeze), or lazy plans for a one-shot call — plus an optional
     * admitted DELTA: candidates come from (leftBanded ∪ banded(delta)) ⋈
     * right, and the hot set is reconstructed EXACTLY as it would be
     * computed over (left ∪ delta) — left-hot pairs are `leftHot`, and the
@@ -308,34 +349,13 @@ object MinHashLsh {
       else {
         // buckets hot over left ∪ delta = {left count > cap} ∪
         // {delta-touched: left + delta count > cap} — the second term is
-        // the only one needing fresh counts, and only for delta's buckets
-        val touched: Option[DataFrame] = deltaBucketCounts match {
-          case Some(counts) =>
-            // driver-resident delta occupancy: a bucket can cross the cap
-            // only if its delta count stacked on the left side's densest
-            // NON-hot bucket exceeds it (per-bucket left counts are ≤
-            // that max by definition; already-hot buckets are in leftHot
-            // regardless) — so the probe ships only the SUSPECT buckets,
-            // and the steady state (no suspects) skips the corpus-side
-            // count probe entirely
-            val suspects = leftMaxNonHot.fold(counts)(m =>
-              counts.filter { case (_, dc) => dc + m > maxBucketSize })
-            if (suspects.isEmpty) None
-            else Some(spark.createDataFrame(suspects.toSeq.map {
-              case ((b, bkt), dc) => (b, bkt, dc)
-            }).toDF("__band", "__bucket", "__dc"))
-          case None => blD.map(_.groupBy(col("__band"), col("__bucket"))
-            .agg(count(lit(1)).as("__dc")))
-        }
-        val crossing = touched.map { t =>
-          val fCnt = leftBanded.join(t.select("__band", "__bucket"),
-              Seq("__band", "__bucket"), "left_semi")
-            .groupBy(col("__band"), col("__bucket"))
-            .agg(count(lit(1)).as("__fc"))
-          t.join(fCnt, Seq("__band", "__bucket"), "left")
-            .filter(col("__dc") + coalesce(col("__fc"), lit(0L)) > maxBucketSize)
-            .select(col("__band"), col("__bucket"))
-        }
+        // the only one needing fresh counts, and only for the delta's
+        // suspect buckets; the steady state (no suspects) skips the
+        // corpus-side count probe entirely
+        val crossing = suspectBuckets(spark, blD, deltaBucketCounts,
+            leftMaxNonHot, maxBucketSize).map(t =>
+          stackedOccupancy(leftBanded, t).filter(col("__n") > maxBucketSize)
+            .select(col("__band"), col("__bucket")))
         // ONE action, localize's single collect: the full hot set is tiny
         // (pathological buckets only), so both anti-joins then broadcast a
         // precomputed LocalRelation instead of re-running the

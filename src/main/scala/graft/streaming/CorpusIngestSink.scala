@@ -33,9 +33,11 @@ import org.apache.spark.sql.types.StructType
   * 100 TB posture: per batch, [[processBatch]] scans the standing corpus
   * once (keys and signatures in one fused freeze scan); its text never
   * shuffles, and everything batch-sided is bounded by the batch. Where
-  * that scan dominates, [[FrozenGate]] freezes the gate state once per
-  * `refreshEvery` batches and gates the batches in between against the
-  * frozen state plus the admitted delta.
+  * that scan dominates, [[FrozenGate]] freezes the gate state once, gates
+  * every batch against the frozen state plus the admitted delta, and
+  * every `refreshEvery` batches folds that delta into the frozen state —
+  * the corpus is read again only after [[FrozenGate.close]] or a write
+  * the gate did not make.
   */
 object CorpusIngestSink {
 
@@ -89,7 +91,7 @@ object CorpusIngestSink {
   /** The corpus directory's data-file listing — (relative path, length,
     * mtime) of every `.parquet` file, RECURSIVE: `spark.read.parquet` does
     * partition discovery, so a co-writer landing rows in a subdirectory
-    * (a `partitionBy` append) changes what the next refresh reads and must
+    * (a `partitionBy` append) changes what the next freeze reads and must
     * change the listing too. One FS metadata call, no data read.
     */
   private[streaming] def listingEntries(spark: SparkSession, dir: String)
@@ -124,7 +126,7 @@ object CorpusIngestSink {
     * them), and with partition-style (`k=v`) subdirectories partition
     * discovery reads ONLY the nested files and DROPS the gate's own
     * top-level data (empirically checked on Spark 4.1). Neither can be
-    * absorbed by a refresh, so a nested change always throws.
+    * absorbed by a re-freeze, so a nested change always throws.
     */
   private[streaming] def isNested(relPath: String): Boolean =
     relPath.count(_ == '/') > 1
@@ -278,13 +280,19 @@ object CorpusIngestSink {
     }
   }
 
-  /** FREEZE-AND-REFRESH ingestion, the 100 TB posture of the object doc.
+  /** FREEZE-AND-FOLD ingestion, the 100 TB posture of the object doc.
     * Per-batch gating scans the standing corpus
     * once per micro-batch (the [[CorpusPipeline.freezeCorpus]] keys+
     * signatures pass); when the corpus dwarfs the batches, that scan IS
-    * the ingest cost. This gate freezes the corpus's gate state once,
-    * gates `refreshEvery` batches against it, and re-freezes on the
-    * cadence — K batches touch corpus storage ⌈K/N⌉ times instead of K.
+    * the ingest cost. This gate freezes the corpus's gate state once and
+    * gates every batch against it plus the admitted delta. Every
+    * `refreshEvery` batches it folds the delta into new frozen state
+    * ([[CorpusPipeline.foldDelta]]: no corpus read, no text hashing), so
+    * the refresh costs ∝ the window's admissions plus block-resident
+    * copies of the frozen state — K batches touch corpus storage ONCE
+    * instead of K times. The full freeze runs again only on the first
+    * batch after [[close]] (a failure reset included) and after a listing
+    * change.
     *
     * The staleness trade costs NOTHING here, because the only writer of
     * the corpus is this gate: rows admitted since the freeze are folded
@@ -295,7 +303,9 @@ object CorpusIngestSink {
     * stays a lineage-truncated checkpoint for the same reason — and every
     * batch gates against frozen + delta, which IS the current corpus. So
     * admissions are bit-identical to per-batch re-freezing at ANY cadence
-    * (`FrozenGateSpec` pins equality and the scan count). Candidate
+    * (`FrozenGateSpec` pins equality and the scan count), and a fold of
+    * frozen + delta is the state a freeze of the corpus would build
+    * (`FrozenGateFoldSpec`). Candidate
     * VERIFY text still reads the target — but only for batches with
     * estimate survivors, and only the candidate rows' shingles
     * ([[graft.functions.MinHashLsh.bipartitePairsFrozenBanded]]'s
@@ -304,22 +314,24 @@ object CorpusIngestSink {
     * thing the frozen STATE cannot see — so the gate records the target's
     * RECURSIVE file listing (relative path/length/mtime, one metadata
     * call) at every freeze, and compares the current listing with it
-    * before each gated batch AND immediately before each own append
+    * before each gated batch and each fold, AND immediately before each
+    * own append
     * (closing the gate-to-append race). The next expected listing is the
     * last VALIDATED one plus the files the append added — so even a
     * co-write landing inside a re-gated attempt's skipped re-check is
     * caught by the next batch. The gate has one behaviour on a change:
     * a TOP-LEVEL difference (a new, removed or rewritten file) counts
     * `arcane.stream.ingest.external_writes` and re-freezes — mid-batch it
-    * also re-gates the batch — while a change in a SUBDIRECTORY throws,
+    * also re-gates the batch, and at a scheduled refresh it replaces the
+    * fold — while a change in a SUBDIRECTORY throws,
     * because no re-freeze can absorb it ([[isNested]] — the corpus read
     * either ignores nested files or, for partition-style ones, drops the
     * top-level data). Two documented blind windows remain: a writer that
     * bypasses the listing entirely (an in-place same-size same-mtime
     * overwrite), and a NEW external file landing during the gate's own
-    * append (indistinguishable from the append's own files until the
-    * next scheduled refresh) — co-writers needing stronger guarantees need
-    * per-batch gating.
+    * append (indistinguishable from the append's own files, and so
+    * invisible until the next full freeze) — co-writers needing stronger
+    * guarantees need per-batch gating.
     *
     * Compaction is an explicit call, [[compact]], made between batches:
     * it rewrites every top-level file, so the listing check above re-freezes
@@ -335,14 +347,13 @@ object CorpusIngestSink {
     * frame materializes in one collect
     * ([[graft.core.Checkpoints.localize]]), the admitted count comes from
     * the job that checkpoints the survivors, and the candidate-verify read
-    * reuses the schema the freeze resolved. Measured at sf0.1/local[32]
-    * (corpus ≈ 4k docs) the bookkeeping DOMINATES — per-batch gating is ~2× faster —
-    * because scanning a few thousand cached rows is cheaper than any
-    * fixed job overhead. The gate is for the regime it was built for:
-    * standing corpus ≫ batch (millions of rows and up), where one
-    * freeze scan costs minutes and the delta fold stays seconds. Below
-    * that crossover, use [[processBatch]] (which since r15 also runs a
-    * single fused freeze scan per batch).
+    * reuses the schema the freeze resolved. At a few thousand corpus docs
+    * that fixed bookkeeping is comparable to a whole corpus scan, so the
+    * gate is for the regime it was built for: standing corpus ≫ batch
+    * (millions of rows and up), where one freeze scan costs minutes and
+    * the delta fold stays seconds. Below that crossover, use
+    * [[processBatch]] (which also runs a single fused freeze scan per
+    * batch).
     *
     * The MinHash/Bloom geometry of the freeze, the funnel and the delta
     * fold is the one constant [[CorpusPipeline.GateGeometry]].
@@ -409,8 +420,10 @@ object CorpusIngestSink {
       */
     private val deltaDriverRows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     private var deltaSchema: org.apache.spark.sql.types.StructType = null
-    /** owns the frozen corpus and over-budget fold checkpoints; closed by [[close]] */
-    private val window = new Scope
+    /** owns the frozen corpus and the refresh window's over-budget fold
+      * checkpoints; closed by [[close]], replaced by a refresh fold
+      */
+    private var window = new Scope
     /** over-budget folds only: executor-resident localCheckpoint frames
       * (owned by [[window]]) that the delta unions. The rare fallback —
       * the combined delta plan grows only with THESE, never with
@@ -422,10 +435,11 @@ object CorpusIngestSink {
       * current listing with THIS set, never with a raw pre-append
       * listing: on a re-gated attempt the pre-append listing may already
       * contain a second co-writer's files, and folding them into
-      * "expected" would absorb that write until the scheduled refresh
-      * (the r17 advisory's blind window) — kept outside, the NEXT batch's
-      * pre-gate check detects it. A set comparison is exact: no hash can
-      * collide, and each file's length and mtime still take part
+      * "expected" would absorb that write for good, since a fold never
+      * re-reads the corpus (the r17 advisory's blind window) — kept
+      * outside, the NEXT batch's pre-gate check detects it. A set
+      * comparison is exact: no hash can collide, and each file's length
+      * and mtime still take part
       */
     private var expectedEntries: Set[(String, Long, Long)] = Set.empty
     /** Test seam: applied to the delta projection right before it is
@@ -448,7 +462,13 @@ object CorpusIngestSink {
       */
     private[streaming] var corpusReader
         : (SparkSession, String, DataFrame, Option[StructType]) => DataFrame = standingOf
+    /** Test seam: applied to the window's delta right before a scheduled
+      * refresh folds it into the frozen state, so specs can fail the fold.
+      */
+    private[streaming] var refreshFoldTap: DataFrame => DataFrame = identity
     private[streaming] def isFrozen: Boolean = frozen != null
+    private[streaming] def frozenState: CorpusPipeline.FrozenCorpus = frozen
+    private def sideFileDir = Some(targetDir.stripSuffix("/") + "__gatestate")
 
     /** True when `current` differs from the validated listing at top
       * level; a change in a subdirectory throws [[nestedWriteError]].
@@ -479,13 +499,13 @@ object CorpusIngestSink {
       */
     def processBatch(batch: DataFrame): Long = {
       val spark = batch.sparkSession
-      if (frozen == null || sinceRefresh >= refreshEvery) refresh(spark, batch)
+      if (frozen == null) refresh(spark, batch)
       else if (listingChanged(listingEntries(spark, targetDir), "since the last freeze")) {
         // somebody else wrote the corpus since the freeze: frozen + delta
         // no longer IS the corpus, and gating against it would re-admit
         // the co-writer's duplicates
         externalWriteDetected(spark, batch)
-      }
+      } else if (sinceRefresh >= refreshEvery) refreshByFold()
       gateAndAppend(spark, batch, reGated = false)
     }
 
@@ -652,6 +672,10 @@ object CorpusIngestSink {
     def foreachBatchFn: (DataFrame, Long) => Unit =
       (batch, _) => { processBatch(batch); () }
 
+    /** The FULL freeze: read the corpus and build its gate state from the
+      * text. Runs on the first batch, after [[close]] and after a listing
+      * change; a scheduled refresh folds instead ([[refreshByFold]]).
+      */
     private def refresh(spark: SparkSession, schemaDonor: DataFrame): Unit = {
       close()
       val corpus = corpusReader(spark, targetDir, schemaDonor, None)
@@ -660,22 +684,61 @@ object CorpusIngestSink {
         embeddings =
           if (semanticAgainstThreshold.isDefined) cfg.embeddings else None,
         // banded freeze state: the corpus-side banding explode + hot-bucket
-        // shuffle amortize over the refresh window instead of recurring per
-        // batch — the O(corpus)-shuffle-per-batch term the r16 crossover
-        // measurement exposed (BENCH_VARIANCE_r16.md)
+        // shuffle run once per freeze instead of recurring per batch — the
+        // O(corpus)-shuffle-per-batch term the r16 crossover measurement
+        // exposed (BENCH_VARIANCE_r16.md)
         withBanded = againstThreshold.isDefined,
-        sideFileDir = Some(targetDir.stripSuffix("/") + "__gatestate"),
+        sideFileDir = sideFileDir,
         sideFileMinRows = sideFileMinRows)
       window.onClose(fresh.release())
       frozen = fresh
       corpusSchema = Some(corpus.schema)
-      sinceRefresh = 0
       // recorded AFTER the freeze materialized (freezeCorpus counts the
       // slim frame eagerly): a writer landing between the scan and this
       // listing is a benign race — the next batch's check catches it
       expectedEntries = listingEntries(spark, targetDir)
+      installed()
+    }
+
+    /** The SCHEDULED refresh, once the listing check has proven that
+      * frozen + delta is still the corpus: fold the window's delta into
+      * new frozen state ([[CorpusPipeline.foldDelta]]) — no corpus read,
+      * no text hashing, no corpus shuffle — then release the old state and
+      * the delta. A window that admitted nothing folds without a job. A
+      * failure drops all gate state, so the next batch freezes in full.
+      */
+    private def refreshByFold(): Unit = {
+      try delta.foreach { d =>
+        val folded = CorpusPipeline.foldDelta(frozen, refreshFoldTap(d),
+          deltaBucketCounts, sideFileDir, sideFileMinRows)
+        val old = window
+        window = new Scope
+        window.onClose(folded.release())
+        frozen = folded
+        resetDelta()
+        // the old frozen state and the window's delta checkpoints, only
+        // now that the new state has materialized
+        old.close()
+      } catch {
+        case t: Throwable => close(); throw t
+      }
+      GraftMetrics.inc(GraftMetrics.IngestRefreshFolds)
+      installed()
+    }
+
+    /** Frozen state is installed, by a full freeze or a fold. */
+    private def installed(): Unit = {
+      sinceRefresh = 0
       GraftMetrics.inc(GraftMetrics.IngestFreezes)
       GraftMetrics.gauge(GraftMetrics.IngestCorpusRows, frozen.rows)
+    }
+
+    private def resetDelta(): Unit = {
+      deltaParts.clear()
+      delta = None
+      deltaDriverRows.clear()
+      deltaSchema = null
+      deltaBucketCounts = Some(Map.empty)
     }
 
     /** Release every frozen + delta resource. The gate re-freezes on the
@@ -684,11 +747,7 @@ object CorpusIngestSink {
     def close(): Unit = {
       frozen = null
       corpusSchema = None
-      deltaParts.clear()
-      delta = None
-      deltaDriverRows.clear()
-      deltaSchema = null
-      deltaBucketCounts = Some(Map.empty)
+      resetDelta()
       window.close()
     }
   }

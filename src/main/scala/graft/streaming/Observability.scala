@@ -54,7 +54,10 @@ object GraftMetrics {
   // corpus-ingest gate (CorpusIngestSink.FrozenGate)
   val IngestRowsAdmitted = "arcane.stream.ingest.rows_admitted"
   val IngestBatches = "arcane.stream.ingest.batches"
+  // frozen state installed, full or folded: one per refresh
   val IngestFreezes = "arcane.stream.ingest.freezes"
+  // the refreshes that folded the admitted delta instead of reading the corpus
+  val IngestRefreshFolds = "arcane.stream.ingest.refresh_folds"
   val IngestCompactions = "arcane.stream.ingest.compactions"
   val IngestCorpusRows = "arcane.stream.ingest.corpus_rows"
   // a top-level listing change the gate did not write; a compaction run

@@ -218,7 +218,9 @@ class FrozenGateHardeningSpec extends SparkSpec {
       }
     def squat(dir: String) = java.nio.file.Paths.get(dir.stripSuffix("/") + "__gatestate")
     // (boundary, gate already frozen before the failing call, side files
-    // on, arm, disarm, failing batch, expected message)
+    // on, arm, disarm, failing batch, expected message); every gate
+    // refreshes every 10 batches but the refresh-fold one, whose failing
+    // batch is its scheduled refresh
     type Arm = (CorpusIngestSink.FrozenGate, String) => Unit
     val plain = df(4L -> baseD)
     // the repartition keeps the optimizer from folding the UDF into the
@@ -242,12 +244,17 @@ class FrozenGateHardeningSpec extends SparkSpec {
       ("pre-append window", true, false,
         (g, _) => g.preAppendTap = () => throw new RuntimeException("injected: pre-append"),
         (g, _) => g.preAppendTap = () => (),
-        plain, Some("injected: pre-append")))
+        plain, Some("injected: pre-append")),
+      ("refresh fold", true, true,
+        (g, _) => g.refreshFoldTap = _ => throw new RuntimeException("injected: refresh fold"),
+        (g, _) => g.refreshFoldTap = identity,
+        plain, Some("injected: refresh fold")))
 
     for ((boundary, warm, sideFiles, arm, disarm, failing, message) <- cases) {
       val dir = Files.createTempDirectory("fg_fault").toString
       def gate(d: String) = {
-        val g = new CorpusIngestSink.FrozenGate(d, cfg, refreshEvery = 10,
+        val g = new CorpusIngestSink.FrozenGate(d, cfg,
+          refreshEvery = if (boundary == "refresh fold") 1 else 10,
           sideFileMinRows = if (sideFiles) 0L else Long.MaxValue)
         g.corpusReader = reader
         g
@@ -257,9 +264,12 @@ class FrozenGateHardeningSpec extends SparkSpec {
       finally seed.close()
       val g = gate(dir)
       try {
+        // what the session held before the gate froze, and before the
+        // failing call: a failure that drops the gate's state must fall
+        // back to the first, any other to the second
+        val (rddsCold, entriesCold) = (sc.getPersistentRDDs.keySet.toSet, numCachedEntries(spark))
         if (warm) assert(g.processBatch(df(3L -> baseC)) == 1L)
-        val rddsBefore = sc.getPersistentRDDs.keySet.toSet
-        val entriesBefore = numCachedEntries(spark)
+        val (rddsWarm, entriesWarm) = (sc.getPersistentRDDs.keySet.toSet, numCachedEntries(spark))
         arm(g, dir)
         val e = intercept[Exception](g.processBatch(failing))
         message.foreach { m =>
@@ -268,6 +278,8 @@ class FrozenGateHardeningSpec extends SparkSpec {
             s"$boundary: unexpected failure $e")
         }
         disarm(g, dir)
+        val (rddsBefore, entriesBefore) =
+          if (g.isFrozen) (rddsWarm, entriesWarm) else (rddsCold, entriesCold)
         // an RDD orphaned by a failed checkpoint is unreachable and leaves
         // the context's weak registry once collected; a PINNED leak never
         def leaked = { System.gc(); sc.getPersistentRDDs.keySet.toSet -- rddsBefore }

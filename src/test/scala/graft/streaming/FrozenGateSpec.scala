@@ -2,14 +2,14 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.functions.CorpusPipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import java.nio.file.Files
 
-/** Freeze-and-refresh ingest gate: admissions must be bit-identical to
+/** Freeze-and-fold ingest gate: admissions must be bit-identical to
   * per-batch gating at ANY refresh cadence (frozen + delta IS the corpus),
-  * while corpus reads drop from one-per-batch to one-per-refresh.
+  * while corpus reads drop from one per batch to one per gate.
   */
 class FrozenGateSpec extends SparkSpec {
   import spark.implicits._
@@ -73,51 +73,99 @@ class FrozenGateSpec extends SparkSpec {
       "closed gates must leave no persisted RDDs behind")
   }
 
-  test("K batches touch the corpus ceil(K/N) times; clean batches gate with zero corpus reads") {
-    // six batches, each one fresh doc + one exact dup of an earlier doc —
-    // exact dups die in the Bloom/sliver/delta stage, so the near-dup
-    // funnel never produces estimate survivors and candidate-verify never
-    // evaluates its corpus source: every corpus read IS a freeze
-    val texts = Seq(baseA, baseB, baseC, baseD,
-      "fifth distinct prose about adaptive query execution and partition pruning",
-      "sixth distinct prose describing bloom filters and banded minhash funnels")
-    val six = texts.zipWithIndex.map { case (tx, i) =>
-      val fresh = Seq((i * 10L + 1L, tx, "web"))
-      val dup = if (i == 0) Nil
-        else Seq((i * 10L + 2L, texts(i - 1), "web"))
-      (fresh ++ dup).toDF("doc_id", "text", "source")
-    }
+  // six batches, each one fresh doc + one exact dup of an earlier doc —
+  // exact dups die in the Bloom/sliver/delta stage, so the near-dup funnel
+  // never produces estimate survivors and candidate-verify never evaluates
+  // its corpus source: every corpus read IS a full freeze
+  private val sixTexts = Seq(baseA, baseB, baseC, baseD,
+    "fifth distinct prose about adaptive query execution and partition pruning",
+    "sixth distinct prose describing bloom filters and banded minhash funnels")
+  private def six: Seq[DataFrame] = sixTexts.zipWithIndex.map { case (tx, i) =>
+    val fresh = Seq((i * 10L + 1L, tx, "web"))
+    val dup = if (i == 0) Nil
+      else Seq((i * 10L + 2L, sixTexts(i - 1), "web"))
+    (fresh ++ dup).toDF("doc_id", "text", "source")
+  }
 
-    def runCounted(refreshEvery: Int): (Seq[Long], Long, String) = {
-      val dir = Files.createTempDirectory(s"fg_scan_$refreshEvery").toString
-      var reads = 0L
-      val counting = (s: SparkSession, d: String, donor: DataFrame,
+  /** A gate over a fresh directory whose corpus reads are counted. */
+  private def countedGate(refreshEvery: Int): (CorpusIngestSink.FrozenGate, String, () => Long) = {
+    val dir = Files.createTempDirectory(s"fg_scan_$refreshEvery").toString
+    var reads = 0L
+    val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = refreshEvery)
+    g.corpusReader = (s: SparkSession, d: String, donor: DataFrame,
                       schema: Option[StructType]) => {
-        reads += 1; CorpusIngestSink.standingOf(s, d, donor, schema)
-      }
-      val g = new CorpusIngestSink.FrozenGate(dir, cfg, refreshEvery = refreshEvery)
-      g.corpusReader = counting
+      reads += 1; CorpusIngestSink.standingOf(s, d, donor, schema)
+    }
+    (g, dir, () => reads)
+  }
+
+  test("K batches read the corpus once per gate at any cadence; clean batches gate with zero corpus reads") {
+    def runCounted(refreshEvery: Int): (Seq[Long], Long, String) = {
+      val (g, dir, reads) = countedGate(refreshEvery)
       val admitted = try six.map(g.processBatch) finally g.close()
-      (admitted, reads, dir)
+      (admitted, reads(), dir)
     }
 
     val freezesBefore = GraftMetrics.counter(GraftMetrics.IngestFreezes)
+    val foldsBefore = GraftMetrics.counter(GraftMetrics.IngestRefreshFolds)
     val admittedBefore = GraftMetrics.counter(GraftMetrics.IngestRowsAdmitted)
     val (aN1, readsN1, d1) = runCounted(1)
     val (aN3, readsN3, d3) = runCounted(3)
     val (aN6, readsN6, d6) = runCounted(6)
     // the arcane.stream.ingest.* surface mirrors the gate's actual work:
-    // 6+2+1 freezes and 3×6 admitted rows across the three cadences
+    // 6+2+1 refreshes, of which 5+1+0 folded the delta instead of reading
+    // the corpus, and 3×6 admitted rows across the three cadences
     assert(GraftMetrics.counter(GraftMetrics.IngestFreezes) - freezesBefore == 9L)
+    assert(GraftMetrics.counter(GraftMetrics.IngestRefreshFolds) - foldsBefore == 6L)
     assert(GraftMetrics.counter(GraftMetrics.IngestRowsAdmitted) - admittedBefore == 18L)
     assert(GraftMetrics.gaugeValue(GraftMetrics.IngestCorpusRows).exists(_ >= 0L))
 
     assert(aN1 == Seq(1L, 1L, 1L, 1L, 1L, 1L), s"fixture drifted: $aN1")
     assert(aN3 == aN1 && aN6 == aN1, "admissions must not depend on the cadence")
     assert(corpusOf(d3) == corpusOf(d1) && corpusOf(d6) == corpusOf(d1))
-    assert(readsN1 == 6L, s"per-batch cadence must read once per batch, got $readsN1")
-    assert(readsN3 == 2L, s"ceil(6/3)=2 corpus reads expected, got $readsN3")
-    assert(readsN6 == 1L, s"ceil(6/6)=1 corpus read expected, got $readsN6")
+    // only the first freeze reads the corpus; every scheduled refresh folds
+    assert(readsN1 == 1L, s"refreshEvery=1 must read the corpus once, got $readsN1")
+    assert(readsN3 == 1L, s"refreshEvery=3 must read the corpus once, got $readsN3")
+    assert(readsN6 == 1L, s"refreshEvery=6 must read the corpus once, got $readsN6")
+  }
+
+  test("a co-write landing just before a scheduled refresh takes the full freeze, not the fold") {
+    val (g, dir, reads) = countedGate(3)
+    val extBefore = GraftMetrics.counter(GraftMetrics.IngestExternalWrites)
+    val foldsBefore = GraftMetrics.counter(GraftMetrics.IngestRefreshFolds)
+    val freezesBefore = GraftMetrics.counter(GraftMetrics.IngestFreezes)
+    try {
+      assert(six.take(3).map(g.processBatch) == Seq(1L, 1L, 1L))
+      // batch 4 is the scheduled refresh; a co-writer lands doc 100 first
+      Seq((100L, sixTexts(4), "web")).toDF("doc_id", "text", "source")
+        .withColumn("split", org.apache.spark.sql.functions.lit("train"))
+        .write.mode(SaveMode.Append).parquet(dir)
+      // doc 41 duplicates the co-written text: only a full freeze sees it
+      assert(g.processBatch(Seq((41L, sixTexts(4), "web"), (43L, baseD, "web"))
+        .toDF("doc_id", "text", "source")) == 1L,
+        "the co-writer's duplicate must be rejected, the fresh doc admitted")
+      assert(reads() == 2L, s"the co-write must force a second corpus read, got ${reads()}")
+      assert(GraftMetrics.counter(GraftMetrics.IngestExternalWrites) - extBefore == 1L)
+      assert(GraftMetrics.counter(GraftMetrics.IngestRefreshFolds) - foldsBefore == 0L)
+      assert(GraftMetrics.counter(GraftMetrics.IngestFreezes) - freezesBefore == 2L)
+    } finally g.close()
+    assert(corpusOf(dir).map(_._1) == Set(1L, 11L, 21L, 43L, 100L))
+  }
+
+  test("refreshEvery=2 over four batches: the freeze counter ticks on batches 1 and 3, and 3 folds") {
+    val (g, _, reads) = countedGate(2)
+    try {
+      val ticks = six.take(4).map { b =>
+        val freezes0 = GraftMetrics.counter(GraftMetrics.IngestFreezes)
+        val folds0 = GraftMetrics.counter(GraftMetrics.IngestRefreshFolds)
+        assert(g.processBatch(b) == 1L)
+        (GraftMetrics.counter(GraftMetrics.IngestFreezes) - freezes0,
+          GraftMetrics.counter(GraftMetrics.IngestRefreshFolds) - folds0)
+      }
+      assert(ticks == Seq((1L, 0L), (0L, 0L), (1L, 1L), (0L, 0L)),
+        s"(freezes, folds) per batch: $ticks")
+      assert(reads() == 1L)
+    } finally g.close()
   }
 
   test("candidate verify reads the corpus only when estimate survivors exist") {

@@ -10,10 +10,10 @@ import java.nio.file.Files
 /** Measures the [[CorpusIngestSink.FrozenGate]] crossover at its DESIGN
   * regime — standing corpus ≫ micro-batch — which the sf0.1 fixtures
   * (4k-doc corpora) cannot express: there the gate's fixed delta-fold
-  * bookkeeping dominates and per-batch gating is ~2× faster (the honest
-  * negative documented in r15). This harness seeds a corpus of `--corpus`
-  * synthetic docs (default 500k, pairwise-distinct shingle sets so the
-  * near-dup funnel stays candidate-proportional), then pushes `--batches`
+  * bookkeeping is comparable to a whole corpus scan. This harness seeds a
+  * corpus of `--corpus` synthetic docs (default 500k, pairwise-distinct
+  * shingle sets so the near-dup funnel stays candidate-proportional),
+  * then pushes `--batches`
   * micro-batches of `--batchRows` docs (5% exact duplicates of corpus
   * rows, exercising the Bloom/sliver path) through per-batch gating vs the
   * frozen gate, and prints wall-clock + admissions for both.
@@ -128,7 +128,8 @@ object FrozenGateCrossover {
         }
       }
 
-    // --- frozen mode: ceil(K/N) freezes, delta folds in between
+    // --- frozen mode: one freeze, then a refresh fold every refreshEvery
+    // batches
     val (admittedF, secF, steadyMedian) =
       if (mode == "perbatch") (expectAdmitted, Double.NaN, Double.NaN)
       else {
@@ -149,8 +150,8 @@ object FrozenGateCrossover {
             n
           }.sum finally gate.close()
         }
-        // steady state = batches that did NOT pay a freeze (b0 and every
-        // refreshEvery-th batch re-freeze) — the corpus-size-decoupling
+        // steady state = batches that did NOT pay a refresh (b0 freezes,
+        // every refreshEvery-th batch folds) — the corpus-size-decoupling
         // claim is about THESE
         val steady = (0 until nBatches).filterNot(_ % refreshEvery == 0)
           .map(perBatch).sorted
