@@ -33,7 +33,7 @@ object MinHashLsh {
     */
   private val CandidateIdPushdownCap = 8192
 
-  /** Distinct values of `colNames` read DRIVER-SIDE from an
+  /** Distinct values of `colName` read DRIVER-SIDE from an
     * already-localized survivor frame — zero Spark jobs: after
     * [[Checkpoints.localize]] the frame is a LocalRelation whose rows sit
     * on the driver, so extracting the candidate ids must not cost a
@@ -42,27 +42,22 @@ object MinHashLsh {
     * >4M-pair checkpoint fallback (not local) or the id set exceeds the
     * cap — callers then keep the semi-join, which never needed the ids.
     */
-  private def localizedIds(df: DataFrame, colNames: Seq[String],
+  private def localizedIds(df: DataFrame, colName: String,
                            cap: Int): Option[Seq[Any]] = {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     df.queryExecution.analyzed match {
       case lr: LocalRelation =>
-        val idx = colNames.map(n => lr.output.indexWhere(_.name == n))
-        if (idx.exists(_ < 0)) None
+        val i = lr.output.indexWhere(_.name == colName)
+        if (i < 0) None
         else {
-          val types = idx.map(i => lr.output(i).dataType)
+          val t = lr.output(i).dataType
           val out = scala.collection.mutable.LinkedHashSet.empty[Any]
           val it = lr.data.iterator
           while (it.hasNext) {
             val row = it.next()
-            var j = 0
-            while (j < idx.length) {
-              if (!row.isNullAt(idx(j)))
-                out += CatalystTypeConverters.convertToScala(
-                  row.get(idx(j), types(j)), types(j))
-              j += 1
-            }
+            if (!row.isNullAt(i))
+              out += CatalystTypeConverters.convertToScala(row.get(i, t), t)
             if (out.size > cap) return None
           }
           Some(out.toSeq)
@@ -106,17 +101,22 @@ object MinHashLsh {
     * The wide shingle arrays enter only at stage 3, so the shuffles move
     * kilobytes of keys/signatures per document, never the corpus text.
     *
-    * Resource lifecycle: the signature frame feeds three plan branches
-    * (banding + both sides of the estimate join), so it is persisted for the
-    * duration of the candidate search — ~0.5 KB/doc, ~50 GB cluster-wide for
-    * a 100M-doc corpus — and released by the call's [[graft.core.Scope]]
-    * once the (small) estimate-survivor set has been materialized into a
-    * driver-local relation ([[graft.core.Checkpoints.localize]]: one
-    * collect job, no block-store state).
+    * Resource lifecycle: this is the bipartite core's SELF mode — the
+    * corpus on both sides of one index. The signature frame feeds the
+    * banding and both sides of the estimate join, so it is persisted for
+    * the duration of the candidate search — ~0.5 KB/doc, ~50 GB
+    * cluster-wide for a 100M-doc corpus. With the hot-bucket cap on (the
+    * default) the hot set is localized first, so ONE job computes every
+    * signature into that cache and the candidate search reads it back,
+    * instead of several concurrent stages each filling it. The cache is
+    * released by the call's [[graft.core.Scope]] once the (small)
+    * estimate-survivor set has been materialized into a driver-local
+    * relation ([[graft.core.Checkpoints.localize]]: one collect job, no
+    * block-store state).
     * The returned frame therefore holds no cached state: downstream actions
-    * re-read only the candidate documents' shingles (semi-join pushdown),
-    * never the full corpus. The call does eager work proportional to
-    * corpus + collisions; the exact-verify stage stays lazy.
+    * re-read only the candidate documents' shingles (IN-filter or
+    * semi-join pushdown), never the full corpus. The call does eager work
+    * proportional to corpus + collisions; the exact-verify stage stays lazy.
     */
   def nearDupPairs(df: DataFrame, idCol: String, shingles: Column,
                    numHashes: Int = 64, bands: Int = 16,
@@ -134,90 +134,25 @@ object MinHashLsh {
   def nearDupPairsHashed(df: DataFrame, idCol: String, shingleHashes: Column,
                          numHashes: Int = 64, bands: Int = 16,
                          threshold: Double = 0.8, minBands: Int = 2,
-                         maxBucketSize: Long = 4096L): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val estimated = Scope.using { scope =>
-      val sigs = scope.persist(df
-        .select(col(idCol).as("__id"), signatureOfHashes(shingleHashes, numHashes).as("__sig"))
-        // null shingle arrays never produced exploded rows in the aggregate
-        // formulation; keep those documents out of the banding here too
-        .filter(col("__sig").isNotNull))
-      val banded0 = sigs.select(col("__id"),
-        posexplode(bandBuckets(col("__sig"), bands, r)).as(Seq("__band", "__bucket")))
-      // Hot-bucket guard: a bucket of B documents emits B²/2 candidate rows,
-      // so ONE boilerplate cluster (licenses, templated pages) in a 100 TB
-      // corpus can dominate the whole join. Buckets above the cap are
-      // excluded via anti-join against the (small by construction) hot set.
-      // Recall-safe for genuine near-dups: a pair at j >= threshold collides
-      // in ~j^r · bands independent bands (≈6.6 of 16 at the defaults), so
-      // it still meets `minBands` unless EVERY shared bucket is a
-      // mega-cluster — i.e. the pair is boilerplate, which exact/fingerprint
-      // dedup upstream catches at a fraction of the cost. 0 disables.
-      val banded =
-        if (maxBucketSize <= 0L) banded0
-        else {
-          val hot = banded0.groupBy(col("__band"), col("__bucket"))
-            .agg(count(lit(1)).as("__bsz"))
-            .filter(col("__bsz") > maxBucketSize)
-            .select(col("__band"), col("__bucket"))
-          banded0.join(hot, Seq("__band", "__bucket"), "left_anti")
-        }
-      val cand = banded.as("l").join(banded.as("r"),
-          col("l.__band") === col("r.__band") &&
-          col("l.__bucket") === col("r.__bucket") &&
-          col("l.__id") < col("r.__id"))
-        .groupBy(col("l.__id").as("id_a"), col("r.__id").as("id_b"))
-        .agg(count(lit(1)).as("__nbands"))
-        .filter(col("__nbands") >= math.min(minBands, bands))
-        .select(col("id_a"), col("id_b"))
-      val survivors = cand
-        .join(sigs.select(col("__id").as("id_a"), col("__sig").as("sig_a")), "id_a")
-        .join(sigs.select(col("__id").as("id_b"), col("__sig").as("sig_b")), "id_b")
-        .withColumn("__est",
-          size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), p => p))
-            .cast("double") / numHashes)
-        .filter(col("__est") >= threshold - 0.2)
-        .select(col("id_a"), col("id_b"))
-      // materialize the survivor set (∝ near-dup pairs, tiny vs corpus) so
-      // the signature cache can be released now instead of leaking past the
-      // call; `localize` collects it in ONE job into a driver-local
-      // relation with ZERO block-store footprint, falling back to a plain
-      // checkpoint only above its 4M-pair guard
-      Checkpoints.localize(survivors)
-    }
-    // Exact verification touches only candidate documents: the id
-    // restriction lands ON THE SCAN as a pushed IN filter when the
-    // survivor set is small (read driver-side off the localized frame —
-    // zero extra jobs; row groups then prune by id statistics instead of
-    // a full text pass), with the semi-join as the over-cap /
-    // checkpoint-fallback path — identical rows either way, shingling
-    // cost ∝ candidates regardless.
-    val candSh = localizedIds(estimated, Seq("id_a", "id_b"), CandidateIdPushdownCap)
-      .map(ids => df.filter(SetFilters.probeFilter(col(idCol), ids)))
-      .getOrElse {
-        val candIds = estimated
-          .select(explode(array(col("id_a"), col("id_b"))).as("__cid")).distinct()
-        df.join(candIds, col(idCol) === col("__cid"), "left_semi")
-      }
-      .select(col(idCol).as("__id"), shingleHashes.as("__sh"))
-    estimated
-      .join(candSh.select(col("__id").as("id_a"), col("__sh").as("sh_a")), "id_a")
-      .join(candSh.select(col("__id").as("id_b"), col("__sh").as("sh_b")), "id_b")
-      .withColumn("jaccard", round(TextFunctions.jaccard(col("sh_a"), col("sh_b")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
+                         maxBucketSize: Long = 4096L): DataFrame =
+    Scope.using { scope =>
+      val sigs = scope.persist(signatureFrame(df, idCol, shingleHashes, numHashes))
+      val banded = bandedFrame(sigs, bands, numHashes)
+      bipartiteCore(scope, sigs, banded, hotBucketsOf(banded, maxBucketSize), None, None, None,
+        sigs, df, df, idCol, shingleHashes, numHashes, bands, threshold,
+        minBands, maxBucketSize, None, selfJoin = true)
+    }.select(col("id_left").as("id_a"), col("id_right").as("id_b"), col("jaccard"))
 
   /** Cross-corpus near-duplicate pairs — the increment-vs-existing shape:
     * every (id_left, id_right) with exact shingle Jaccard >= `threshold`,
     * candidates from banded LSH ACROSS the two frames (left and right meet
-    * only through shared band buckets, never left × right). Same
-    * three-stage funnel, recall math, and lifecycle as [[nearDupPairsHashed]];
-    * the hot-bucket cap excludes a bucket when EITHER side exceeds it (a
-    * bucket hot on one side alone already multiplies the join). This is
-    * how a new crawl is deduplicated against the corpus already ingested
-    * without re-pairing the existing corpus with itself.
+    * only through shared band buckets, never left × right). The core's
+    * bipartite mode, [[nearDupPairsHashed]] being its self mode: the same
+    * three-stage funnel, recall math, and lifecycle; the hot-bucket cap
+    * excludes a bucket when EITHER side exceeds it (a bucket hot on one
+    * side alone already multiplies the join). This is how a new crawl is
+    * deduplicated against the corpus already ingested without re-pairing
+    * the existing corpus with itself.
     */
   def bipartitePairsHashed(left: DataFrame, right: DataFrame, idCol: String,
                            shingleHashes: Column, numHashes: Int = 64,
@@ -238,10 +173,15 @@ object MinHashLsh {
     * cadence) and fed to [[bipartitePairsFrozenBanded]] across many
     * micro-batches — the freeze-and-refresh trade of staleness for scan
     * count. Persistence is the caller's.
+    *
+    * The signature is bound by a one-element explode before the null
+    * filter: a filter over a projected column is pushed below the
+    * projection, so it would hash and sign each document a second time.
     */
   def signatureFrame(df: DataFrame, idCol: String, shingleHashes: Column,
                      numHashes: Int = 64): DataFrame = df
-    .select(col(idCol).as("__id"), signatureOfHashes(shingleHashes, numHashes).as("__sig"))
+    .select(col(idCol).as("__id"),
+      explode(array(signatureOfHashes(shingleHashes, numHashes))).as("__sig"))
     .filter(col("__sig").isNotNull)
 
   /** The banded (id, band, bucket) frame of a [[signatureFrame]]-shaped
@@ -260,6 +200,15 @@ object MinHashLsh {
 
   /** (band, bucket) pairs whose occupancy exceeds `cap` — one groupBy
     * shuffle over the banded frame.
+    *
+    * The hot-bucket guard: a bucket of B documents emits B²/2 candidate
+    * rows, so ONE boilerplate cluster (licenses, templated pages) in a
+    * 100 TB corpus can dominate the whole join. Recall-safe for genuine
+    * near-dups: a pair at j >= threshold collides in ~j^r · bands
+    * independent bands (≈6.6 of 16 at the defaults), so it still meets
+    * `minBands` unless EVERY shared bucket is a mega-cluster — i.e. the
+    * pair is boilerplate, which exact/fingerprint dedup upstream catches
+    * at a fraction of the cost.
     */
   private[functions] def hotBucketsOf(banded: DataFrame, cap: Long): DataFrame =
     banded.groupBy(col("__band"), col("__bucket"))
@@ -308,8 +257,9 @@ object MinHashLsh {
         (col("__dc") + coalesce(col("__fc"), lit(0L))).as("__n"))
   }
 
-  /** The one bipartite core. The LEFT side arrives as its signatures, its
-    * banded frame and that frame's hot-bucket set — precomputed and cached
+  /** The one LSH core, in two modes. BIPARTITE (left ⋈ right): the LEFT
+    * side arrives as its signatures, its banded frame and that frame's
+    * hot-bucket set — precomputed and cached
     * by the frozen gate (one banding explode + hot-bucket shuffle per
     * freeze), or lazy plans for a one-shot call — plus an optional
     * admitted DELTA: candidates come from (leftBanded ∪ banded(delta)) ⋈
@@ -321,6 +271,13 @@ object MinHashLsh {
     * bit-identical to gating against (left ∪ delta) at any cadence
     * (FrozenGateSpec pins the equality; `FrozenBandedFunnelSpec` pins the
     * hot-bucket crossing case).
+    *
+    * SELF (`selfJoin`, [[nearDupPairsHashed]]): one corpus joined with
+    * itself over one index — the right side IS the left (`sr` is `sl0`,
+    * `right` is `leftDocs`, no delta), so the banding is exploded once,
+    * its hot set is localized once, the candidate join keeps `l < r`, and
+    * both verify-stage fetches take the IN pushdown, each for its own
+    * side's ids.
     *
     * `delta` carries (`__id`, `__sig`, `__bb`) rows, `__bb` being
     * `bandBuckets(__sig, bands, numHashes / bands)` — the frozen gate's
@@ -336,13 +293,14 @@ object MinHashLsh {
       leftDocs: => DataFrame, right: DataFrame, idCol: String,
       shingleHashes: Column, numHashes: Int, bands: Int, threshold: Double,
       minBands: Int, maxBucketSize: Long,
-      prunedSigsFor: Option[Seq[Any] => Option[DataFrame]]): DataFrame = {
+      prunedSigsFor: Option[Seq[Any] => Option[DataFrame]],
+      selfJoin: Boolean = false): DataFrame = {
     val spark = leftBanded.sparkSession
     val deltaSigs = delta.map(_.select(col("__id"), col("__sig"))
       .filter(col("__sig").isNotNull))
     val blD = delta.map(_.select(col("__id"),
       posexplode(col("__bb")).as(Seq("__band", "__bucket"))))
-    val br0 = bandedFrame(sr, bands, numHashes)
+    val br0 = if (selfJoin) leftBanded else bandedFrame(sr, bands, numHashes)
     val bl0 = blD.fold(leftBanded)(leftBanded.unionByName(_))
     val (bl, br) =
       if (maxBucketSize <= 0L) (bl0, br0)
@@ -367,7 +325,8 @@ object MinHashLsh {
         // materialization, and the frame it RETURNS references only the
         // localized survivors and the candidate text scans.
         val hot = scope.localize(
-          crossing.fold(leftHot)(leftHot.union(_))
+          if (selfJoin) leftHot
+          else crossing.fold(leftHot)(leftHot.union(_))
             .union(hotBucketsOf(br0, maxBucketSize)).distinct())
         (bl0.join(hot, Seq("__band", "__bucket"), "left_anti"),
          br0.join(hot, Seq("__band", "__bucket"), "left_anti"))
@@ -379,7 +338,7 @@ object MinHashLsh {
     val slSelect = prunedSigsFor.map(f => (ids: Seq[Any]) =>
       f(ids).map(fp => deltaSigs.fold(fp)(fp.unionByName(_))))
     bipartiteTail(scope, bl, br, sl, sr, leftDocs, right, idCol,
-      shingleHashes, numHashes, threshold, minBands, bands, slSelect)
+      shingleHashes, numHashes, threshold, minBands, bands, slSelect, selfJoin)
   }
 
   /** The core's tail: banded collision candidates → signature-
@@ -394,12 +353,13 @@ object MinHashLsh {
                             idCol: String, shingleHashes: Column,
                             numHashes: Int, threshold: Double,
                             minBands: Int, bands: Int,
-                            slSelect: Option[Seq[Any] => Option[DataFrame]])
-      : DataFrame = {
+                            slSelect: Option[Seq[Any] => Option[DataFrame]],
+                            selfJoin: Boolean): DataFrame = {
     val estimated = {
+      val sameBucket = col("l.__band") === col("r.__band") &&
+        col("l.__bucket") === col("r.__bucket")
       val cand = bl.as("l").join(br.as("r"),
-          col("l.__band") === col("r.__band") &&
-          col("l.__bucket") === col("r.__bucket"))
+          if (selfJoin) sameBucket && col("l.__id") < col("r.__id") else sameBucket)
         .groupBy(col("l.__id").as("id_left"), col("r.__id").as("id_right"))
         .agg(count(lit(1)).as("__nbands"))
         .filter(col("__nbands") >= math.min(minBands, bands))
@@ -414,7 +374,7 @@ object MinHashLsh {
       val (candEff, slEff) = slSelect match {
         case Some(f) =>
           val cl = scope.localize(cand)
-          val pruned = localizedIds(cl, Seq("id_left"), CandidateIdPushdownCap)
+          val pruned = localizedIds(cl, "id_left", CandidateIdPushdownCap)
             .flatMap(f)
           (cl, pruned.getOrElse(sl))
         case None => (cand, sl)
@@ -446,16 +406,18 @@ object MinHashLsh {
     // (PushedFilters: In(id, ...)), pruning row groups by id statistics —
     // read off the local relation with zero extra jobs; the semi-join
     // stays as the over-cap / checkpoint-fallback path. Identical rows
-    // either way: filter-by-ids == semi-join on those ids.
-    val shL = localizedIds(estimated, Seq("id_left"), CandidateIdPushdownCap)
-      .map(ids => leftDocs.filter(SetFilters.probeFilter(col(idCol), ids)))
-      .getOrElse(
-        leftDocs.join(estimated.select(col("id_left").as("__cid")).distinct(),
+    // either way: filter-by-ids == semi-join on those ids. In self mode
+    // the right side is the same source and takes the same pushdown for
+    // its own ids; the bipartite right side (the batch) keeps the
+    // semi-join.
+    def candidateShingles(docs: DataFrame, side: String, pushdown: Boolean): DataFrame =
+      (if (pushdown) localizedIds(estimated, side, CandidateIdPushdownCap) else None)
+        .map(ids => docs.filter(SetFilters.probeFilter(col(idCol), ids)))
+        .getOrElse(docs.join(estimated.select(col(side).as("__cid")).distinct(),
           col(idCol) === col("__cid"), "left_semi"))
-      .select(col(idCol).as("__id"), shingleHashes.as("__sh"))
-    val shR = right.join(estimated.select(col("id_right").as("__cid")).distinct(),
-        col(idCol) === col("__cid"), "left_semi")
-      .select(col(idCol).as("__id"), shingleHashes.as("__sh"))
+        .select(col(idCol).as("__id"), shingleHashes.as("__sh"))
+    val shL = candidateShingles(leftDocs, "id_left", pushdown = true)
+    val shR = candidateShingles(right, "id_right", pushdown = selfJoin)
     estimated
       .join(shL.select(col("__id").as("id_left"), col("__sh").as("sh_l")), "id_left")
       .join(shR.select(col("__id").as("id_right"), col("__sh").as("sh_r")), "id_right")

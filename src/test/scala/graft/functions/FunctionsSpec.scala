@@ -143,6 +143,44 @@ class MinHashSpec extends SparkSpec {
     assert(jobs.get <= 16, s"dedupAgainst ran ${jobs.get} jobs, over its budget of 16")
   }
 
+  test("nearDupPairsHashed hashes each document once and runs within its job budget") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.ListenerBridge
+    // a parquet source, so the optimizer cannot fold the counted column
+    // into a driver-side local relation
+    val dir = java.nio.file.Files.createTempDirectory("selfjoin").toString + "/docs"
+    docs.write.parquet(dir)
+    val evals = spark.sparkContext.longAccumulator("shingle-hash evaluations")
+    val counted = udf { (h: Seq[Long]) => evals.add(1); h }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBridge.waitUntilListenerBusEmpty(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val (signed, pairs) = try {
+      // the funnel runs eagerly up to its localized survivors; the exact
+      // verify stage runs with the collect
+      val funnel = MinHashLsh.nearDupPairsHashed(spark.read.parquet(dir), "doc_id",
+        counted(TextFunctions.shingleHashes($"text", 5)), numHashes = 32, bands = 8,
+        threshold = 0.8)
+      val s = evals.value
+      val p = funnel.select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
+      ListenerBridge.waitUntilListenerBusEmpty(spark)
+      (s, p)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(pairs == Set((0L, 1L)), s"fixture drifted: $pairs")
+    // once per document for the signature pass: 8 when the null-signature
+    // filter was pushed under the signature projection and re-ran it
+    assert(signed == 4L, s"the signature pass hashed $signed times for 4 documents")
+    // then once per verify-stage candidate: 0 on the left, 1 on the right
+    assert(evals.value - signed == 2L,
+      s"the verify stage hashed ${evals.value - signed} times for 2 candidates")
+    // an upper bound: 12 jobs now, 19 when the self-join built its hot set
+    // inline and several stages filled the signature cache at once
+    assert(jobs.get <= 12, s"nearDupPairsHashed ran ${jobs.get} jobs, over its budget of 12")
+  }
+
   test("verify-stage candidate fetch pushes the id IN-filter into the parquet scan") {
     // the semi-join fallback restricts the rows shingled but still scans
     // the whole left source; with a small survivor set the candidate ids

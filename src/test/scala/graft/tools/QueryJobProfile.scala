@@ -15,11 +15,12 @@ import scala.collection.mutable
   * time) also survive the shared VM's band noise, which wall-clock does
   * not (BENCH_VARIANCE_r17 §1).
   *
-  * Run: `sbt "Test/runMain graft.tools.QueryJobProfile <query> [repeat]"`.
+  * Run: `sbt "Test/runMain graft.tools.QueryJobProfile <query>[,<query>...] [repeat]"`
+  * — several comma-separated queries run one after another in one JVM.
   */
 object QueryJobProfile {
   def main(args: Array[String]): Unit = {
-    val name = args.headOption.getOrElse("ingest_lifecycle")
+    val names = args.headOption.getOrElse("ingest_lifecycle").split(',').map(_.trim).filter(_.nonEmpty)
     val repeat = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = LocalSession()
@@ -53,8 +54,7 @@ object QueryJobProfile {
       }
     })
 
-    val fn = graft.SparkEntry.queries(name)
-    (1 to repeat).foreach { r =>
+    for (name <- names; fn = graft.SparkEntry.queries(name); r <- 1 to repeat) {
       jobs.synchronized(jobs.clear())
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
